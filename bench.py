@@ -270,6 +270,25 @@ def materialize(df) -> int:
     return int(row["__n"])
 
 
+def warm_up(spark, sf_dir: str):
+    """Touch every table's footer with one count, so per-query timings
+    reflect steady-state plan execution rather than scan initialization,
+    and stage the shared dedup shingle explode once (plan-matching cache
+    substitutes this subtree inside minhash/near-pairs/ngram queries).
+    Returns the cached shingle frame."""
+    from datalake_imagenes_georreferenciadas_spark.operators.dedup import _exploded_shingles
+    from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES, table as load
+
+    for t in TABLE_NAMES:
+        load(spark, sf_dir, t).count()
+    t0 = time.time()
+    shingles = _exploded_shingles(load(spark, sf_dir, "documents"), "doc_id", "text", 3)
+    shingles.cache()
+    shingles.count()
+    print(f"# shingle cache staged: {time.time() - t0:.3f}s", file=sys.stderr)
+    return shingles
+
+
 def warm_spread_suspect(passes: list) -> bool:
     """True when the warm passes taken so far carry the
     contention-suspect signature: max−min spread over max(50 ms, 25% of
@@ -293,21 +312,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     queries = all_queries()
-    # warmup: touch every table's footer + one count so per-query timings
-    # reflect steady-state plan execution, not scan initialization
-    from datalake_imagenes_georreferenciadas_spark.operators.dedup import _exploded_shingles
-    from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES, table as load
-
-    for t in TABLE_NAMES:
-        load(spark, sf_dir, t).count()
-
-    # stage the shared dedup shingle explode ONCE (plan-matching cache
-    # substitutes this subtree inside minhash/near-pairs/ngram queries)
-    t0 = time.time()
-    shingle_base = _exploded_shingles(load(spark, sf_dir, "documents"), "doc_id", "text", 3)
-    shingle_base.cache()
-    shingle_base.count()
-    print(f"# shingle cache staged: {time.time() - t0:.3f}s", file=sys.stderr)
+    shingle_base = warm_up(spark, sf_dir)
 
     # HEADLINE-FIRST METHODOLOGY (r09 VERDICT task 4): the 48 stdout
     # headline queries are timed at the START of the session, before any

@@ -264,6 +264,10 @@ class CatalogStore:
         whole window + offset-join pipeline once per write (catalog,
         then lineage, then once more per caller collect). The read-back
         is a small stats-bearing parquet scan.
+
+        The returned frame reads the snapshot version this call wrote:
+        evaluate (or persist) it before the next ``update_processed_img``
+        or snapshot expire, which can flip or remove that version.
         """
         base = self.last_id()
         with_id = self._with_ids(rows, base)
@@ -296,7 +300,10 @@ class CatalogStore:
         if not ids:
             return self.current_version()  # no-op: don't burn a snapshot
         cat = self.catalog()
-        updates = self.spark.createDataFrame([(int(i),) for i in ids], "id long")
+        # a repeated id would match its catalog row once per copy
+        updates = self.spark.createDataFrame(
+            [(i,) for i in sorted({int(i) for i in ids})], "id long"
+        )
         hit = F.broadcast(updates.withColumn("__hit", F.lit(1)))
         merged = (
             cat.join(hit, "id", "left")

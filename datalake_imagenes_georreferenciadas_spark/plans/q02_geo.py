@@ -12,7 +12,6 @@ registration order is preserved by the facade import order.
 """
 
 from ._qbase import (
-    glob_mod,
     D,
     DataFrame,
     F,
@@ -670,69 +669,9 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle reproduces the stub's digest arithmetic in SQL, so schema,
     batching, and dispatch are all value-checked."""
-    import hashlib as _hashlib
+    from ..sources.binary import extract_image_meta, read_binary_dir, stage_documents
 
-    from ..sources.binary import extract_image_meta, read_binary_dir
-
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    # Stage the blob landing zone ONCE per SESSION per source snapshot
-    # (the pipeline_geo_ingest pattern, verbatim): landing-zone writes
-    # are a one-time ingest cost in the real pipeline, so repeated plan
-    # builds INSIDE one application (bench cold+warm passes, oracle
-    # re-runs) reuse the already-staged blobs instead of re-writing
-    # 5,000 files per call. r20: the cache key includes
-    # ``applicationId``, so every new process/driver run pays its own
-    # staging — no state crosses runs (the r19 mtime-only key was
-    # flagged as cross-run precomputation). The content fingerprint of
-    # documents.parquet (size + mtime of every member file) stays in the
-    # key so a table regenerated mid-session gets a fresh staging dir
-    # instead of silently serving stale blobs.
-    src = os.path.join(sf_dir, "documents.parquet")
-    fp_parts = [spark.sparkContext.applicationId]
-    for p in sorted([src] + glob_mod.glob(os.path.join(src, "**"), recursive=True)):
-        try:
-            st = os.stat(p)
-            fp_parts.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
-        except OSError:
-            continue
-    dest = os.path.join(
-        tempfile.gettempdir(),
-        "multimodal_"
-        + _hashlib.md5((sf_dir + "|" + "|".join(fp_parts)).encode()).hexdigest()[:16],
-    )
-    marker = dest + ".staged"  # sibling, so the binaryFile scan never sees it
-    # re-stage if dest vanished despite the marker (tmp-cleaner raced us)
-    if not (os.path.exists(marker) and os.path.isdir(dest)):
-        os.makedirs(dest, exist_ok=True)
-
-        def write_files(rows):
-            for r in rows:
-                # the filename IS the address (id + payload both required);
-                # null-keyed or null-payload rows never reach the bucket
-                if r["text"] is None or r["doc_id"] is None:
-                    continue
-                ext = "jpg" if r["doc_id"] % 2 == 0 else "tif"
-                with open(os.path.join(dest, f"{r['doc_id']}.{ext}"), "wb") as f:
-                    f.write(r["text"].encode("utf-8"))
-
-        docs.foreachPartition(write_files)
-        tmp = marker + f".tmp{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write("ok")
-        os.replace(tmp, marker)
-        # session-scoped staging cleans up after itself: the dir is
-        # keyed on this applicationId, so no later process can reuse it
-        import atexit
-        import shutil as _shutil
-
-        def _cleanup(d=dest, m=marker):
-            _shutil.rmtree(d, ignore_errors=True)
-            try:
-                os.remove(m)
-            except OSError:
-                pass
-
-        atexit.register(_cleanup)
+    dest = stage_documents(spark, sf_dir)
     binary = read_binary_dir(spark, dest)
     meta = extract_image_meta(binary)
     return meta.select(
@@ -769,24 +708,20 @@ def s7_exif_gps_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers, so the byte roundtrip is value-checked end to end —
     unlike `multimodal_meta`, whose blobs are text and exercise the
     digest-stub tier."""
-    from ..sources.binary import extract_image_meta, read_binary_dir
+    from ..sources.binary import extract_image_meta, read_binary_dir, stage_files
     from ..functions import tiff as _tiff
 
-    dest = tempfile.mkdtemp(prefix="exif_fix_")
+    def to_file(r):
+        i = r["id"]
+        blob = _tiff.write_jpeg_exif_gps(
+            (17 + i % 17, (i * 7) % 60, (i * 131) % 6000, 100),
+            (60 + i % 12, (i * 11) % 60, (i * 173) % 6000, 100),
+            south=True,
+            west=True,
+        )
+        return f"{i}.jpg", blob
 
-    def write_files(rows):
-        for r in rows:
-            i = r["id"]
-            blob = _tiff.write_jpeg_exif_gps(
-                (17 + i % 17, (i * 7) % 60, (i * 131) % 6000, 100),
-                (60 + i % 12, (i * 11) % 60, (i * 173) % 6000, 100),
-                south=True,
-                west=True,
-            )
-            with open(os.path.join(dest, f"{i}.jpg"), "wb") as f:
-                f.write(blob)
-
-    spark.range(60).foreachPartition(write_files)
+    dest = stage_files(spark, "exif_fix", spark.range(60), to_file)
     meta = extract_image_meta(read_binary_dir(spark, dest))
     return meta.select(
         F.regexp_extract(F.col("path"), r"(\d+)\.jpg$", 1)
@@ -817,26 +752,22 @@ def s8_geotiff_meta_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     script_geo.py:176-179) into the affine geotransform + dimensions.
     All fixture values are dyadic rationals, so engine and oracle agree
     bit-exactly with no rounding at all."""
-    from ..sources.binary import extract_image_meta, read_binary_dir
+    from ..sources.binary import extract_image_meta, read_binary_dir, stage_files
     from ..functions import tiff as _tiff
 
-    dest = tempfile.mkdtemp(prefix="geotiff_fix_")
+    def to_file(r):
+        i = r["id"]
+        blob = _tiff.write_geotiff(
+            512 + i % 256,
+            256 + i % 128,
+            200000.0 + i * 250.25,
+            6000000.0 - i * 125.5,
+            0.25 + (i % 8) / 16.0,
+            0.25 + (i % 4) / 8.0,
+        )
+        return f"{i}.tif", blob
 
-    def write_files(rows):
-        for r in rows:
-            i = r["id"]
-            blob = _tiff.write_geotiff(
-                512 + i % 256,
-                256 + i % 128,
-                200000.0 + i * 250.25,
-                6000000.0 - i * 125.5,
-                0.25 + (i % 8) / 16.0,
-                0.25 + (i % 4) / 8.0,
-            )
-            with open(os.path.join(dest, f"{i}.tif"), "wb") as f:
-                f.write(blob)
-
-    spark.range(48).foreachPartition(write_files)
+    dest = stage_files(spark, "geotiff_fix", spark.range(48), to_file)
     meta = extract_image_meta(read_binary_dir(spark, dest))
     return meta.select(
         F.regexp_extract(F.col("path"), r"(\d+)\.tif$", 1)

@@ -21,8 +21,6 @@ from ._qbase import (
     _stream_shuffle,
     _dsum_sql,
     classify_points,
-    glob_mod,
-    hashlib,
     os,
     register,
     table,
@@ -89,67 +87,9 @@ def pipeline_geo_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     this entry verifies the COMPOSITION: the mapInPandas kernel feeds
     the broadcast spatial join without materializing, and the whole
     flow is one lazy DataFrame."""
-    from ..sources.binary import extract_image_meta, read_binary_dir
+    from ..sources.binary import extract_image_meta, read_binary_dir, stage_documents
 
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    # Stage once per SESSION per source snapshot: landing-zone writes are
-    # a one-time ingest cost in the real pipeline, so repeated plan
-    # builds INSIDE one application (bench cold+warm passes, oracle
-    # re-runs) reuse the already-staged blobs instead of re-writing 2×N
-    # files per call. r20: the cache key includes ``applicationId``, so
-    # every new process/driver run pays its own staging — no state
-    # crosses runs (the r19 mtime-only key was flagged as cross-run
-    # precomputation). The content fingerprint of documents.parquet
-    # (size + mtime of every member file) stays in the key so a table
-    # regenerated mid-session gets a fresh staging dir instead of
-    # silently serving stale blobs.
-    src = os.path.join(sf_dir, "documents.parquet")
-    fp_parts = [spark.sparkContext.applicationId]
-    for p in sorted([src] + glob_mod.glob(os.path.join(src, "**"), recursive=True)):
-        try:
-            st = os.stat(p)
-            fp_parts.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
-        except OSError:
-            continue
-    dest = os.path.join(
-        tempfile.gettempdir(),
-        "geo_ingest_"
-        + hashlib.md5((sf_dir + "|" + "|".join(fp_parts)).encode()).hexdigest()[:16],
-    )
-    marker = dest + ".staged"  # sibling, so the binaryFile scan never sees it
-    # re-stage if dest vanished despite the marker (tmp-cleaner raced us)
-    if not (os.path.exists(marker) and os.path.isdir(dest)):
-        os.makedirs(dest, exist_ok=True)
-
-        def write_files(rows):
-            for r in rows:
-                # filename IS the address: id + payload both required
-                if r["text"] is None or r["doc_id"] is None:
-                    continue
-                ext = "jpg" if r["doc_id"] % 2 == 0 else "tif"
-                with open(os.path.join(dest, f"{r['doc_id']}.{ext}"), "wb") as f:
-                    f.write(r["text"].encode("utf-8"))
-
-        docs.foreachPartition(write_files)
-        # atomic marker: a concurrent run either sees the complete marker
-        # or none — never a half-written one
-        tmp = marker + f".tmp{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write("ok")
-        os.replace(tmp, marker)
-        # session-scoped staging cleans up after itself: the dir is
-        # keyed on this applicationId, so no later process can reuse it
-        import atexit
-        import shutil as _shutil
-
-        def _cleanup(d=dest, m=marker):
-            _shutil.rmtree(d, ignore_errors=True)
-            try:
-                os.remove(m)
-            except OSError:
-                pass
-
-        atexit.register(_cleanup)
+    dest = stage_documents(spark, sf_dir)
     # binaryFile sizes partitions by openCostInBytes (4 MB/file default), so
     # thousands of small blobs explode into near-empty partitions that each
     # pay an Arrow python-worker round trip; coalesce (no shuffle) back to

@@ -1,606 +1,34 @@
-"""The operator-coverage query registry — facade (r17 mechanical split).
+"""The operator-coverage query registry — facade.
 
-The 329 @register bodies moved verbatim into plans/q01_*.py ... q13_*.py
-(prelude/helpers in plans/_qbase.py); this module re-assembles the
-registry in the ORIGINAL registration order (import order below), keeps
-every previously-module-level name importable from plans.queries, and
-retains the driver-window rotation machinery. See _qbase for the
-registry conventions docstring.
+The @register bodies live in plans/q01_*.py ... q16_*.py (prelude and
+helpers in plans/_qbase.py). Importing the segments below, in this
+order, IS the registration order. This module holds the query-window
+rotation machinery; query functions and helpers are imported from the
+segment that defines them. See _qbase for the registry conventions
+docstring.
 """
 
-from ._qbase import (  # noqa: F401
-    Callable,
-    D,
-    DataFrame,
-    F,
-    FLAGSHIP_ORACLE_SQL,
-    GEO,
-    GF,
-    H,
-    ORACLES,
-    QUERIES,
-    QueryFn,
-    SIM,
-    SparkSession,
-    TX,
-    V,
-    Window,
-    _dsum,
-    _dsum_sql,
-    _norm_event_ts,
-    affine_extent,
-    annotations,
-    argmin_per_group,
-    catalog_filtered_join,
-    classify_points,
-    composite_key,
-    contains_join,
-    contains_join_grid,
-    glob_mod,
-    hashlib,
-    nearest_vertex_join,
-    os,
-    parse_model_filename,
-    path_parts,
-    point_in_ring,
-    register,
-    sessionize,
-    spread,
-    table,
-    tempfile,
-    topk_per_group,
-)
-from .q01_j1 import (  # noqa: F401
-    _ANN_BUCKETS_SQL,
-    _ANN_SQ8_SQL,
-    _ANN_TOPK_SQL,
-    _COMPONENTS_SQL,
-    _COSINE_ALL_SQL,
-    _COSINE_TOPK_SQL,
-    _MINHASH_BANDS_SQL,
-    _NEAR_PAIRS_SQL,
-    _PQ_ADC_SPARK,
-    _PQ_CODES_SPARK,
-    _PQ_D,
-    _PQ_DUCK_ADC,
-    _PQ_DUCK_CODES,
-    _PQ_K,
-    _PQ_M,
-    _PQ_RECALL_SQL,
-    _PQ_TOPK_SQL,
-    _SQ8_CTE,
-    _SQ8_DEQUANT_FMT,
-    _SQ8_RECALL_SQL,
-    _TEXT_STATS_SQL,
-    _minhash_cte,
-    _near_pairs_cte,
-    _pq_l2_spark,
-    _pq_sub,
-    _pq_sub_duck,
-    _simhash_sql,
-    a1_max_id,
-    a2_argmin_per_group,
-    a3_first_seen_dedup,
-    a4_count_distinct,
-    a4_cube,
-    a4_group_agg,
-    a4_rollup,
-    ann_hyperplane_buckets,
-    ann_lsh_topk,
-    ann_pq_recall,
-    ann_pq_topk,
-    ann_sq8_recall,
-    ann_sq8_topk,
-    dedup_components,
-    dedup_exact,
-    dedup_minhash_bands,
-    dedup_near_pairs,
-    f14_json_extract,
-    f15_array_ops,
-    f17_cosine_all,
-    f17_cosine_topk,
-    f_date_parts,
-    f_string_scalars,
-    j1_anti_join,
-    j1_semi_join,
-    multimodal_audio_features,
-    p1_projection_filter,
-    p2_filename_parse,
-    p3_composite_key,
-    p4_path_parse,
-    p5_filter_in_conj,
-    p6_type_dispatch,
-    p7_left_join_null_guard,
-    s1_sort_limit,
-    set_except,
-    set_intersect,
-    set_union,
-    simhash_fingerprints,
-    text_bpe_tokens,
-    text_lang_agg,
-    text_stats,
-    w1_topk_per_group,
-    w2_running_sum,
-    w3_lag_lead,
-)
-from .q02_geo import (  # noqa: F401
-    _CATALOG_ROUNDTRIP_SQL,
-    _CONTAINMENT_SQL,
-    _CONTAINMENT_THR,
-    _COSINE_CAND_CTE,
-    _COSINE_PAIRS_SQL,
-    _COS_BANDS,
-    _COS_BAND_COLS,
-    _COS_BAND_UNION,
-    _COS_PLANES,
-    _EXIF_GPS_SQL,
-    _GEOTIFF_META_SQL,
-    _GEO_AFFINE_SQL,
-    _GEO_AREAL_SQL,
-    _GEO_CLASSIFY_SQL,
-    _GEO_CONTAINS_SQL,
-    _GEO_CROSSINGS_SQL,
-    _GEO_KNN_GRID_SQL,
-    _GEO_KNN_SQL,
-    _KNN_CELL,
-    _MULTIMODAL_SQL,
-    _NGRAM_JACCARD_SQL,
-    _NGRAM_MAX_DF,
-    _RB_WINDOW_S,
-    _ROADS,
-    _SEMANTIC_COMPONENTS_SQL,
-    _SLIDING_SQL,
-    _TILE_WORLD,
-    _TILE_ZOOMS,
-    _TUMBLING_SQL,
-    _ccw_sql,
-    _min_label_components_cte,
-    a4_grouping_sets,
-    a5_approx_distinct,
-    catalog_roundtrip,
-    dedup_containment,
-    dedup_cosine_pairs,
-    dedup_ngram_jaccard,
-    dedup_semantic_components,
-    geo_affine_extent,
-    geo_areal_weighted,
-    geo_classify,
-    geo_contains,
-    geo_contains_grid,
-    geo_edge_crossings,
-    geo_knn,
-    geo_knn_grid,
-    geo_tile_pyramid,
-    graph_item_similarity,
-    j_asof_join,
-    j_range_bucketed,
-    j_range_join,
-    multimodal_meta,
-    s7_exif_gps_scan,
-    s8_geotiff_meta_scan,
-    session_stats_q,
-    sliding_window_agg_q,
-    streaming_tumbling,
-    text_tfidf_topk,
-    tumbling_window_agg_q,
-    w4_rank_funcs,
-)
-from .q03_ext import (  # noqa: F401
-    _ARCHIVE_SQL,
-    _BULK_N,
-    _BULK_PTS_SQL,
-    _FRAMES_SQL,
-    _GEO_BULK_SQL,
-    _IVF_D2,
-    _IVF_TOPK_SQL,
-    _REPROJECT_SQL,
-    _RESIZE_SQL,
-    _S6_SQL,
-    _SEVENZIP_SQL,
-    _STREAM_SESSION_SQL,
-    _UTM_FWD_SQL,
-    _UTM_INV_SQL,
-    _WINNOW_K,
-    _WINNOW_SQL,
-    _WINNOW_W,
-    a4_percentiles,
-    a4_pivot,
-    a4_pivot_dynamic,
-    a4_unpivot,
-    ann_ivf_topk,
-    f15_lateral_explode,
-    f15_map_ops,
-    f17_cosine_pandas,
-    f_array_pack2,
-    f_conditionals,
-    f_date_arith,
-    f_string_pack2,
-    geo_classify_bulk,
-    geo_reproject_centroid,
-    geo_utm_forward_grid,
-    geo_utm_inverse_grid,
-    j1_correlated_exists,
-    j_late_arriving_dim,
-    multimodal_frames,
-    multimodal_resize,
-    s11_csv_roundtrip,
-    s12_content_key,
-    s16_partitioned_publish,
-    s2_7z_extract,
-    s2_archive_extract,
-    s6_features_json,
-    skew_salted_agg,
-    skew_salted_join,
-    streaming_session,
-    streaming_stateful_totals,
-    sub_in,
-    sub_scalar,
-    text_edit_distance,
-    text_quality_filter,
-    text_winnowing_fp,
-    tpch_q3_shape,
-    tpch_q5_shape,
-    w5_range_frame,
-    w6_distribution_funcs,
-)
-from .q04_ext import (  # noqa: F401
-    _BUCKETED_LAYOUTS,
-    _DERBY_DBS,
-    _PIPELINE_SQL,
-    _RECURSIVE_YM_SQL,
-    _SNAPSHOT_DIFF_SQL,
-    _ZQX,
-    _ZQY,
-    a4_grouping_id,
-    a4_histogram,
-    a6_collect_sorted,
-    a7_moments,
-    ann_ivf_kmeans,
-    catalog_snapshot_diff,
-    catalog_wap_publish,
-    f15_array_setops,
-    f15_map_transform,
-    f18_python_udtf,
-    g1_trend_fit,
-    geo_ring_areas,
-    geo_zorder_key,
-    j_bucketed_join,
-    morton_key,
-    morton_key_sql,
-    p8_hash_sample,
-    pipeline_corpus_prep,
-    s17_compaction,
-    s18_schema_evolution,
-    s6_features_corrupt,
-    s9_jdbc_roundtrip,
-    sql_recursive_cte,
-    streaming_sliding,
-    streaming_stream_join,
-    sub_correlated_scalar,
-    text_top_bigrams,
-    ts_resample_interp,
-    w7_gap_fill,
-)
-from .q05_training import (  # noqa: F401
-    _BLOOM_M,
-    _CMS_D,
-    _CMS_W,
-    _TOKS_SQL,
-    _WQ_QS,
-    _cms_hash_sql,
-    _pagerank_iter_sql,
-    _trade_edges_sql,
-    a10_mad,
-    a23_bitmap_distinct,
-    a8_corr,
-    a9_mode,
-    cms_heavy_hitters,
-    cohort_retention,
-    contamination_ngrams,
-    corpus_mixture,
-    dq_constraints,
-    emb_centroid,
-    funnel_conversion,
-    geo_bbox_agg,
-    graph_pagerank,
-    incremental_agg_merge,
-    j1_full_outer,
-    j_bloom_prefilter,
-    j_scd2_asof,
-    ml_target_encoding,
-    pack_sequences,
-    s19_orc_roundtrip,
-    s20_jsonl_roundtrip,
-    s21_targeted_delete,
-    s25_xml_roundtrip,
-    scd2_build,
-    set_except_all,
-    set_intersect_all,
-    stratified_sample,
-    streaming_dedup,
-    streaming_topk,
-    text_repetition,
-    training_order,
-    ts_mom_growth,
-    ts_rolling_distinct,
-    ts_streaks,
-)
-from .q06_training import (  # noqa: F401
-    _range_digest_sql,
-    a11_winsorized_mean,
-    a12_gini,
-    a13_equifreq_bins,
-    a14_minmax_scale,
-    a22_weighted_quantile,
-    cdc_upsert_compact,
-    f15_explode_outer,
-    g2_cogroup_merge,
-    j1_null_safe_join,
-    p10_train_val_test,
-    p11_dense_ids,
-    p9_weighted_sample,
-    seq_transitions,
-    streaming_cdc_apply,
-    table_checksum_diff,
-    theta_avoid_prefix,
-    ts_interval_coverage,
-    ts_missing_days,
-    ts_twap,
-)
-from .q07_north_star import (  # noqa: F401
-    _DPP_LAYOUTS,
-    _GEO_PIPELINE_SQL,
-    _MATRYOSHKA_SQL,
-    _MULTIPROBE_SQL,
-    _PII_RE,
-    _PYDS_FIXTURE,
-    _RECALL_SQL,
-    _TDIGEST_QS,
-    _TDIGEST_SQL,
-    a15_abc_classify,
-    a16_share_of_parent,
-    a17_hist_median,
-    a18_outlier_zscore,
-    a5_kmv_distinct,
-    ann_matryoshka_recall,
-    ann_multiprobe_topk,
-    ann_recall_eval,
-    dedup_simhash_pairs,
-    dq_k_anonymity,
-    f14_variant_extract,
-    graph_copurchase,
-    j_dynamic_partition_pruning,
-    ml_negative_pairs,
-    p12_per_source_cap,
-    pipeline_geo_ingest,
-    s1_python_datasource,
-    s22_orphan_files,
-    seq_first_last_flow,
-    streaming_foreachbatch_merge,
-    text_pii_scrub,
-    ts_ewma,
-    ts_hypertable_rollup,
-    ts_rank_shift,
-    w8_leave_one_out,
-    w9_trailing_array,
-)
-from .q08_north_star import (  # noqa: F401
-    _ANN_FILTERED_SQL,
-    _DEDUP_REPORT_SQL,
-    _EPS_CLUSTER,
-    _EPS_CLUSTER_SQL,
-    _EPS_PTS_SQL,
-    _HYBRID_FUSED_SQL,
-    _HYBRID_RRF_SQL,
-    _HYBRID_TERMS,
-    _HYBRID_TERMS_SQL,
-    _INCR_PAIRS_SQL,
-    _INCR_SPLIT,
-    _IVL_OVERLAP_SQL,
-    _NEAREST_EDGE_SQL,
-    _TRIANGLES_SQL,
-    _VOCAB_OOV_SQL,
-    _tdigest_rank_check,
-    a19_tdigest_quantile,
-    a20_growth_curve,
-    a21_cohort_ltv,
-    a6_string_agg,
-    ann_filtered_topk,
-    corpus_dedup_report,
-    dedup_cluster_sizes,
-    dedup_incremental_pairs,
-    dq_shard_balance,
-    emb_quantile_clip,
-    f14_json_hetero,
-    f_binary_codecs,
-    geo_cluster_eps,
-    geo_grid_density,
-    geo_nearest_edge,
-    graph_triangles,
-    hybrid_fused_topk,
-    hybrid_rrf_topk,
-    j_interval_overlap,
-    j_lateral_topn,
-    p13_path_rollup,
-    s23_analyze_stats,
-    s24_blob_chunking,
-    seq_since_marker,
-    streaming_tdigest,
-    sub_all_rewrite,
-    ts_anomaly_vs_baseline,
-    vocab_oov_rate,
-    w10_moving_median,
-)
-from .q09_north_star import (  # noqa: F401
-    _BM25_B,
-    _BM25_K1,
-    _BM25_SQL,
-    _FEATHASH_DIM,
-    _HYBRID_RERANK_SQL,
-    _MAXSIM_NSUB,
-    _MAXSIM_Q_IDS,
-    _MAXSIM_SQL,
-    _MAXSIM_SUBLEN,
-    bm25_topk,
-    bucket_stitched_gaps,
-    dedup_corpus_chunks,
-    dq_distribution_drift,
-    dq_referential_integrity,
-    graph_bfs_distance,
-    hybrid_maxsim_topk,
-    hybrid_rerank_topk,
-    ml_feature_hashing,
-    text_bigram_fluency,
-    text_rarity_score,
-    w11_id_gaps,
-    w12_reset_running_sum,
-)
-from .q10_round_7 import (  # noqa: F401
-    _BENFORD_CASE,
-    _BENFORD_P,
-    _CHI2_POS,
-    _CHI2_POS_SQL,
-    _CUSUM_SLACK_C,
-    _CUSUM_THR_C,
-    _DSIR_BUCKETS,
-    _DSIR_SEED,
-    _DSIR_TARGET,
-    _DSIR_TARGET_SQL,
-    _FRESH_SLA_S,
-    _GH_ALPHABET,
-    _GH_N,
-    _IVFPQ_DIM,
-    _IVFPQ_NCELLS,
-    _IVFPQ_TOPK_SQL,
-    _MH_ACC_SQL,
-    _MODULARITY_SQL,
-    _NDCG_SQL,
-    _NDCG_W,
-    _NDCG_W_SQL,
-    _NPROBE_CURVE_SQL,
-    _NPROBE_MAX,
-    _PHRASE,
-    _math,
-    _res_duck,
-    ann_ivfpq_topk,
-    ann_nprobe_curve,
-    dedup_minhash_accuracy,
-    dq_benford,
-    dq_freshness_sla,
-    emb_dim_stats,
-    geo_geohash_cells,
-    graph_modularity,
-    ml_auc_exact,
-    ml_calibration_bins,
-    ml_chi2_tokens,
-    pipeline_dsir_weights,
-    streaming_static_join,
-    text_entropy_quality,
-    text_phrase_search,
-    ts_cusum_alerts,
-    ts_ohlc_resample,
-)
-from .q11_round_7 import (  # noqa: F401
-    _AHASH_BLOCKS,
-    _AHASH_MAX_HAMMING,
-    _AHASH_WIDE_BANDS,
-    _AHASH_WIDE_BITS,
-    _AHASH_WIDE_MAX_HAMMING,
-    _CIDRS,
-    _CONTRACT_SQL,
-    _DEGREE_DIST_SQL,
-    _DOC_CONTRACT,
-    _ER_SDX,
-    _KNN_HELDOUT,
-    _KNN_K,
-    _KNN_SQL,
-    _TRACK_N,
-    _TRACK_STEP,
-    _ahash_duck,
-    _ahash_table,
-    _ahash_wide_duck,
-    _ip_int,
-    _soundex_sql,
-    a24_seq_motifs,
-    catalog_snapshot_expire,
-    corpus_mixture_temperature,
-    dq_quarantine_reasons,
-    dq_schema_contract,
-    er_fuzzy_match,
-    f19_url_parse,
-    f20_ip_cidr,
-    geo_track_resample,
-    graph_degree_distribution,
-    ivm_join_delta,
-    j_asof_nearest,
-    j_shuffle_hash_hint,
-    ml_knn_classifier,
-    ml_ndcg_at10,
-    ml_prf1_eval,
-    multimodal_ahash_pairs,
-    multimodal_ahash_pairs_wide,
-    s26_dynamic_overwrite,
-)
-from .q12_round_7 import (  # noqa: F401
-    _ATTR_WINDOW_S,
-    _AUTOCORR_SQL,
-    _QT_N,
-    _QT_THRESHOLD,
-    _RAKE_STOP,
-    _RAKE_STOP_SQL,
-    _SPAN_LEN,
-    _SPAN_SEED,
-    _mmr_sql,
-    a25_skyline_2d,
-    ab_test_zscore,
-    attribution_last_touch,
-    emb_outlier_zscore,
-    geo_quadtree_cells,
-    geo_snap_simplify,
-    graph_incremental_components,
-    hybrid_mmr_topk,
-    j_mark_join_flags,
-    ml_lift_table,
-    multimodal_scene_cuts,
-    pipeline_padding_waste,
-    pipeline_span_corruption,
-    s27_csv_badrecords,
-    text_keyphrase_rake,
-    ts_autocorrelation,
-    ts_business_days,
-    ts_local_peaks,
-    ts_wma,
-)
-from .q13_round_7 import (  # noqa: F401
-    _CELL_BAL_SQL,
-    _LUHN_SQL_DIGITS,
-    ann_cell_balance,
-    corpus_token_apportion,
-    dq_duplicate_payments,
-    emb_centroid_drift,
-    f21_luhn_check,
-    graph_assoc_rules,
-    pipeline_dataset_card,
-    s28_column_rename_evolution,
-    seq_regex_funnel,
-    streaming_append_windows,
-    ts_bollinger_breaches,
-    ts_max_drawdown,
-    ts_naive_forecast_mae,
-    ts_seasonal_adjust,
-    ts_spc_limits,
-)
-from .q14_r17 import (  # noqa: F401
-    a22_weighted_quantile_dist,
-)
-from .q15_r18 import (  # noqa: F401
-    dedup_cosine_pairs_auto,
-    dedup_semantic_components_auto,
-    dedup_simhash_pairs_auto,
-)
-from .q16_r19 import (  # noqa: F401
-    dedup_simhash_pairs_auto2,
-)
+from __future__ import annotations
+
+import os
+
+from . import q01_j1  # noqa: F401
+from . import q02_geo  # noqa: F401
+from . import q03_ext  # noqa: F401
+from . import q04_ext  # noqa: F401
+from . import q05_training  # noqa: F401
+from . import q06_training  # noqa: F401
+from . import q07_north_star  # noqa: F401
+from . import q08_north_star  # noqa: F401
+from . import q09_north_star  # noqa: F401
+from . import q10_round_7  # noqa: F401
+from . import q11_round_7  # noqa: F401
+from . import q12_round_7  # noqa: F401
+from . import q13_round_7  # noqa: F401
+from . import q14_r17  # noqa: F401
+from . import q15_r18  # noqa: F401
+from . import q16_r19  # noqa: F401
+from ._qbase import ORACLES, QUERIES, QueryFn
 
 
 # The external verify driver samples the FIRST 50 entries of ``queries()``
@@ -693,52 +121,10 @@ def _driver_check_state(repo: str | None = None) -> tuple:
     return retired, n_rounds, last_round
 
 
-# Names pinned to the very front of the driver window this round:
-# judge-directed fixes whose green row is the round's done-criterion
-# (r08 used this for the w12 HUGEINT-oracle fix; both names went green
-# and the pin self-expired).  A pin overrides retired status: r09
-# rewrote these three plans (g1 → regr_slope, g2 → cogroup prefilter,
-# a13 → array-percentile buffer) but their green rows predate the
-# rewrites (g1's is r04-era), so r10 pins them front for external
-# confirmation of the NEW implementations (r09 ADVICE #3).  Drop the
-# pins once CORRECTNESS_r10 shows them green.
-# (name, pinned_at) — pinned_at is the ROUND NUMBER of the name's
-# NEWEST PRE-REWRITE green row (e.g. the four below were rewritten in
-# r09/r10 while their newest greens were r08-era, hence pinned_at=8 —
-# NOT the round the pin was installed in), matching
-# _driver_check_state's staleness key (parsed from the
-# CORRECTNESS_r(\d+).json filename, NOT the file count — r06's file is
-# missing, so count and number diverge). A pin exists because the
-# name's green row predates a rewrite and must be RE-EARNED; it
-# SELF-EXPIRES once the name earns a fully-green row in a round
-# STRICTLY LATER than pinned_at (last_round[n] > pinned_at), so no
-# builder has to remember to empty this tuple next round. Setting
-# pinned_at to the CURRENT round number would keep the pin alive one
-# extra round — always use the stale green's round.
-_FRONT_NAMES: tuple = (
-    ("g1_trend_fit", 8),
-    ("g2_cogroup_merge", 8),
-    ("a13_equifreq_bins", 8),
-    # r10 rewrite: distinct pairs first, HLL over pairs (bit-identical,
-    # kills the per-pair sketch-buffer shuffle) — green must be re-earned
-    ("a5_approx_distinct", 8),
-)
-
-
 def _rotated(reg: dict, repo: str | None = None) -> dict:
-    retired, n_rounds, last_round = _driver_check_state(repo)
-    # Active pins come first REGARDLESS of retired status — filtering
-    # pins through `fresh` (as pre-r10 code did) would silently drop
-    # the most important names. An expired pin (green row newer than
-    # the pin) falls through to the normal staleness cycle.
-    front = [
-        n
-        for n, pinned_at in _FRONT_NAMES
-        if n in reg and last_round.get(n, 0) <= pinned_at
-    ]
-    front_set = set(front)
-    fresh = [n for n in reg if n not in retired and n not in front_set]
-    pri = front + [n for n in fresh if n.startswith(_PRIORITY_PREFIXES)]
+    retired, _, last_round = _driver_check_state(repo)
+    fresh = [n for n in reg if n not in retired]
+    pri = [n for n in fresh if n.startswith(_PRIORITY_PREFIXES)]
     pri_set = set(pri)
     rest = [n for n in fresh if n not in pri_set]
     # STALENESS-FIRST re-check cycle (r08 VERDICT #3): once the fresh
@@ -751,7 +137,7 @@ def _rotated(reg: dict, repo: str | None = None) -> dict:
     # registry every ~⌈N/50⌉ rounds with no stride bookkeeping.
     reg_pos = {n: i for i, n in enumerate(reg)}
     tail = sorted(
-        (n for n in reg if n in retired and n not in front_set),
+        (n for n in reg if n in retired),
         key=lambda n: (last_round.get(n, 0), reg_pos[n]),
     )
     return {n: reg[n] for n in pri + rest + tail}

@@ -24,13 +24,20 @@ Reference parity:
 
 from __future__ import annotations
 
+import atexit
+import glob as glob_mod
 import hashlib
 import io
-from collections.abc import Iterator
+import os
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..tables import table
 
 # Importable-optional REAL decode bodies (VERDICT r1 #6): when PIL/GDAL
 # exist the kernels decode for real; when the import fails — or a given
@@ -110,6 +117,101 @@ def read_binary_dir(spark: SparkSession, path: str, glob: str | None = None) -> 
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     return reader.load(path)
+
+
+#: name prefix of every staging dir; the owner's pid follows it
+STAGE_PREFIX = "blob_stage_"
+#: (applicationId, key) -> the dir this process staged for it
+_STAGED: dict[tuple, str] = {}
+
+
+def _pid_running(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # alive, owned by another user
+        return True
+    return True
+
+
+def _remove_orphans(tmp: str) -> None:
+    """Remove the staging dirs of processes that died before their exit
+    hook ran (a crashed or killed run)."""
+    for entry in os.listdir(tmp):
+        if not entry.startswith(STAGE_PREFIX):
+            continue
+        pid = entry[len(STAGE_PREFIX):].split("_", 1)[0]
+        if pid.isdigit() and int(pid) > 0 and not _pid_running(int(pid)):
+            shutil.rmtree(os.path.join(tmp, entry), ignore_errors=True)
+
+
+def stage_files(
+    spark: SparkSession,
+    key: str,
+    rows: DataFrame,
+    to_file: Callable[..., tuple[str, bytes] | None],
+) -> str:
+    """Write one file per row of ``rows`` into a temp dir and return it.
+
+    ``to_file(row)`` gives the ``(file name, bytes)`` pair, or None to
+    skip the row. The dir is staged once per Spark application and
+    ``key``: repeated plan builds in one application (bench passes,
+    oracle re-runs) reuse it, and a new application stages its own. A
+    dir removed under us (a tmp cleaner) is staged again. The dir name
+    carries this process's pid; the dirs are removed when the process
+    exits, and staging removes any that a dead process left behind."""
+    k = (spark.sparkContext.applicationId, key)
+    dest = _STAGED.get(k)
+    if dest is not None and os.path.isdir(dest):
+        return dest
+    tmp = tempfile.gettempdir()
+    _remove_orphans(tmp)
+    digest = hashlib.md5(repr(k).encode()).hexdigest()[:16]
+    dest = os.path.join(tmp, f"{STAGE_PREFIX}{os.getpid()}_{digest}")
+    os.makedirs(dest, exist_ok=True)
+
+    def write(part):
+        for r in part:
+            out = to_file(r)
+            if out is not None:
+                with open(os.path.join(dest, out[0]), "wb") as fh:
+                    fh.write(out[1])
+
+    rows.foreachPartition(write)
+    _STAGED[k] = dest
+    return dest
+
+
+@atexit.register
+def _remove_staged() -> None:
+    for d in _STAGED.values():
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def _document_file(r):
+    # the filename IS the address: id and payload are both required
+    if r["doc_id"] is None or r["text"] is None:
+        return None
+    ext = "jpg" if r["doc_id"] % 2 == 0 else "tif"
+    return f"{r['doc_id']}.{ext}", r["text"].encode("utf-8")
+
+
+def stage_documents(spark: SparkSession, sf_dir: str) -> str:
+    """The image landing zone: one ``<doc_id>.jpg|tif`` blob per
+    documents row (``.jpg`` for even ids) holding the row's text. The
+    key fingerprints documents.parquet (size and mtime of every member
+    file), so a table regenerated mid-application is staged afresh."""
+    src = os.path.join(sf_dir, "documents.parquet")
+    fp = [sf_dir]
+    for p in sorted([src] + glob_mod.glob(os.path.join(src, "**"), recursive=True)):
+        try:
+            st = os.stat(p)
+        except OSError:
+            continue
+        fp.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    return stage_files(spark, "|".join(fp), docs, _document_file)
 
 
 def _decode_image_stub(content: bytes, path: str) -> dict:

@@ -8,7 +8,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from datalake_imagenes_georreferenciadas_spark.plans.queries import (
+from datalake_imagenes_georreferenciadas_spark.plans.q05_training import (
     a9_mode,
     a10_mad,
     cohort_retention,
@@ -98,7 +98,7 @@ def test_bucket_stitched_gaps_matches_global_window(spark):
     an id set engineered to hit every stitch case: in-bucket gaps, a gap
     that spans a bucket boundary, and a gap that spans ENTIRELY EMPTY
     buckets (with 4-wide buckets, ids jump from bucket 2 to bucket 30)."""
-    from datalake_imagenes_georreferenciadas_spark.plans.queries import (
+    from datalake_imagenes_georreferenciadas_spark.plans.q09_north_star import (
         bucket_stitched_gaps,
     )
 
@@ -121,7 +121,7 @@ def test_bucket_stitched_gaps_matches_global_window(spark):
 
 
 def test_bucket_stitched_gaps_dense_ids_yield_none(spark):
-    from datalake_imagenes_georreferenciadas_spark.plans.queries import (
+    from datalake_imagenes_georreferenciadas_spark.plans.q09_north_star import (
         bucket_stitched_gaps,
     )
 

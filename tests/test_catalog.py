@@ -77,6 +77,18 @@ def test_update_processed_img_merge(spark):
     assert store.catalog().count() == 4
 
 
+def test_update_processed_img_repeated_id_keeps_row_set(spark):
+    """A repeated id in the MERGE list flips its row once; it must not
+    duplicate the matched row in the new snapshot."""
+    store = CatalogStore(spark, tempfile.mkdtemp())
+    run = store.start_run(PROCESO_INGEST)
+    store.insert_catalog(_rows(spark), run)
+    store.update_processed_img(10, [2, 2, 2, 3])
+    ids = [r["id"] for r in store.catalog().collect()]
+    assert len(ids) == 4
+    assert sorted(ids) == [1, 2, 3, 4]
+
+
 def test_update_is_versioned_snapshot(spark):
     """Copy-on-write MERGE: the update lands in a NEW snapshot; the old
     version stays readable (time travel) and the pointer names the new."""

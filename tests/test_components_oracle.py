@@ -14,7 +14,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from datalake_imagenes_georreferenciadas_spark.plans.queries import (
+from datalake_imagenes_georreferenciadas_spark.plans.q02_geo import (
     _min_label_components_cte,
 )
 

@@ -15,7 +15,7 @@ import tempfile
 
 import pytest
 
-from datalake_imagenes_georreferenciadas_spark.plans.queries import dedup_corpus_chunks
+from datalake_imagenes_georreferenciadas_spark.plans.q09_north_star import dedup_corpus_chunks
 
 
 BOILER = "one two three four"  # exactly one 4-token chunk wide

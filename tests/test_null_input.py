@@ -29,7 +29,7 @@ from tools.make_null_fuzz_sf import mutate_table
 
 # The 16 queries the first r15 null-fuzz run crashed on (plus the pandas
 # cosine twin found in the second pass). Keep in sync with the fix sites
-# in plans/queries.py and sources/binary.py.
+# in the plans/q*.py segments and sources/binary.py.
 FIXED_IN_R15 = [
     "s22_orphan_files",
     "f20_ip_cidr",

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from datalake_imagenes_georreferenciadas_spark.plans.queries import (
+from datalake_imagenes_georreferenciadas_spark.plans.q05_training import (
     cms_heavy_hitters,
     contamination_ngrams,
     graph_pagerank,

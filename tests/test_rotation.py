@@ -155,48 +155,6 @@ def test_rows_only_unretires_once_an_oracle_exists():
     assert "a5_approx_distinct" not in retired
 
 
-def test_front_pin_overrides_retired_status(monkeypatch):
-    # r09 ADVICE #3: a pinned name must lead the window even when it
-    # carries a green row (the pin exists because the green predates a
-    # rewrite), and must not duplicate into the stale tail.
-    import datalake_imagenes_georreferenciadas_spark.plans.queries as q
-
-    monkeypatch.setattr(q, "_FRONT_NAMES", (("g_pinned", 1),))
-    repo = _repo([{"g_pinned": GREEN, "g_other": GREEN}])
-    reg = {k: k for k in ("g_other", "g_pinned", "f_fresh")}
-    order = list(_rotated(reg, repo))
-    assert order == ["g_pinned", "f_fresh", "g_other"]
-    assert len(set(order)) == 3
-
-
-def test_front_pin_self_expires_after_new_green_row(monkeypatch):
-    # A pin installed when N round files existed dissolves once the name
-    # earns a fully-green row in a LATER file — no manual un-pinning.
-    import datalake_imagenes_georreferenciadas_spark.plans.queries as q
-
-    monkeypatch.setattr(q, "_FRONT_NAMES", (("g_pinned", 1),))
-    # pinned at 1 round file; round 2 re-checks it green → pin expires,
-    # the name rejoins the staleness tail (newest green → last)
-    repo = _repo(
-        [
-            {"g_pinned": GREEN, "g_other": GREEN},
-            {"g_pinned": GREEN},
-        ]
-    )
-    reg = {k: k for k in ("g_other", "g_pinned", "f_fresh")}
-    order = list(_rotated(reg, repo))
-    assert order == ["f_fresh", "g_other", "g_pinned"]
-    # a RED re-check does NOT expire the pin — green must be re-earned
-    repo2 = _repo(
-        [
-            {"g_pinned": GREEN, "g_other": GREEN},
-            {"g_pinned": RED},
-        ]
-    )
-    order2 = list(_rotated(reg, repo2))
-    assert order2[0] == "g_pinned"
-
-
 def test_union_across_rounds_and_regression_returns_to_front():
     # green in r1, red in r2: stays retired (some round was fully green)
     # — re-catching it is the re-check cycle's job, while a name that was
@@ -219,23 +177,3 @@ def test_staleness_key_is_parsed_round_number_not_file_count():
     assert retired == {"a", "b"}
     assert n == 2  # two well-formed files parsed
     assert last_round == {"a": 1, "b": 3}  # round NUMBERS, not indices 1/2
-
-
-def test_front_pin_expiry_survives_missing_round_file(monkeypatch):
-    # Pin installed at round 2; the name re-earns green in round 3 while
-    # the round-2 file is MISSING from disk. Under the old file-count
-    # keying the green file was index 2 -> 2 <= pinned_at 2 -> pin stuck
-    # active forever. Round-number keying sees 3 > 2 -> pin expired.
-    import datalake_imagenes_georreferenciadas_spark.plans.queries as q
-
-    monkeypatch.setattr(q, "_FRONT_NAMES", (("g_pinned", 2),))
-    d = tempfile.mkdtemp(prefix="rot_pin_gap_")
-    for rnd, rows in [
-        (1, {"g_pinned": GREEN, "g_other": GREEN}),
-        (3, {"g_pinned": GREEN}),  # r02 absent — the real repo's r06 case
-    ]:
-        with open(os.path.join(d, f"CORRECTNESS_r{rnd:02d}.json"), "w") as fh:
-            json.dump(rows, fh)
-    reg = {k: k for k in ("g_other", "g_pinned", "f_fresh")}
-    order = list(_rotated(reg, d))
-    assert order == ["f_fresh", "g_other", "g_pinned"]  # pin expired

@@ -16,7 +16,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from datalake_imagenes_georreferenciadas_spark.plans.queries import (
+from datalake_imagenes_georreferenciadas_spark.plans.q11_round_7 import (
     _soundex_sql,
 )
 

@@ -135,81 +135,7 @@ Sort (3)
     )
     assert fact_level_singlepartition(plan) == []
 
-# ---- auto-pin checker (r10: registry-wide conservative plan pins) ----
-
-from tools.singlepartition_sweep import check_auto_pin  # noqa: E402
-from tools.auto_pins import AUTO_PINS, EXCLUDED  # noqa: E402
-
-PIN_PLAN = """== Physical Plan ==
-TakeOrderedAndProject (5)
-+- HashAggregate (4)
-   +- Exchange (3)
-      +- HashAggregate (2)
-         +- Scan parquet  (1)
-
-(1) Scan parquet
-Output [2]: [k#1, v#2L]
-ReadSchema: struct<k:string,v:bigint>
-
-(2) HashAggregate
-Input [2]: [k#1, v#2L]
-Keys [1]: [k#1]
-Functions [1]: [partial_sum(v#2L)]
-Results [2]: [k#1, sum#10L]
-
-(3) Exchange
-Input [2]: [k#1, sum#10L]
-Arguments: hashpartitioning(k#1, 32), ENSURE_REQUIREMENTS, [plan_id=7]
-
-(4) HashAggregate
-Input [2]: [k#1, sum#10L]
-Keys [1]: [k#1]
-Functions [1]: [sum(v#2L)]
-Results [2]: [k#1, sum(v)#11L]
-
-(5) TakeOrderedAndProject
-Input [2]: [k#1, sum(v)#11L]
-Arguments: 10, [k#1 ASC NULLS FIRST], [k#1, sum(v)#11L]"""
-
-
-def _swap_op(plan: str, nid: int, old: str, new: str) -> str:
-    """Rename node ``nid`` in BOTH representations of a formatted plan:
-    the tree chunk (``OpName (N)``) and its detail block (``(N) OpName``).
-    check_auto_pin reads op ids from the detail blocks only (op-ids-only
-    matching, r11), so a tree-only rename would be invisible to it."""
-    return plan.replace(f"{old} ({nid})", f"{new} ({nid})").replace(
-        f"({nid}) {old}", f"({nid}) {new}"
-    )
-
-
-def test_pin_holds_on_designed_plan():
-    assert check_auto_pin(
-        PIN_PLAN, 1, ["!CartesianProduct", "HashAggregate", "TakeOrderedAndProject"]
-    ) == []
-
-
-def test_pin_catches_exchange_budget_overrun():
-    probs = check_auto_pin(PIN_PLAN, 0, ["!CartesianProduct"])
-    assert probs == ["exchanges=1 > pinned 0"]
-
-
-def test_pin_catches_forbidden_node():
-    plan = _swap_op(PIN_PLAN, 4, "HashAggregate", "CartesianProduct")
-    assert any("CartesianProduct" in p for p in check_auto_pin(plan, 1, ["!CartesianProduct"]))
-
-
-def test_pin_catches_missing_signature_node():
-    plan = _swap_op(PIN_PLAN, 5, "TakeOrderedAndProject", "Project")
-    assert check_auto_pin(plan, 1, ["TakeOrderedAndProject"]) == [
-        "missing: TakeOrderedAndProject"
-    ]
-
-
-def test_pin_signature_matches_operator_id_not_substring():
-    # "Window" inside a projected expression name must not satisfy a
-    # Window-operator pin
-    plan = PIN_PLAN.replace("Scan parquet  (1)", "Scan parquet window_col  (1)")
-    assert "missing: Window" in check_auto_pin(plan, 1, ["Window"])
+from tools.explain_audit import AUDITS, EXCLUDED  # noqa: E402
 
 
 def test_no_duplicate_keys_in_pin_dicts():
@@ -221,7 +147,6 @@ def test_no_duplicate_keys_in_pin_dicts():
 
     for path, dict_name in [
         ("/root/repo/tools/explain_audit.py", "AUDITS"),
-        ("/root/repo/tools/auto_pins.py", "AUTO_PINS"),
     ]:
         tree = ast.parse(open(path).read())
         found = False
@@ -242,25 +167,15 @@ def test_no_duplicate_keys_in_pin_dicts():
 
 
 def test_every_registered_query_is_pinned_curated_or_excluded():
-    """Full-registry pin coverage: each query has a curated explain audit,
-    an auto pin, or a documented exclusion (streaming sink read-backs)."""
-    import re as _re
-
+    """Full-registry pin coverage: each query has a curated explain audit
+    or a documented exclusion (streaming sink read-backs)."""
     from datalake_imagenes_georreferenciadas_spark.plans.queries import all_queries
 
-    curated = set(
-        _re.findall(r'^\s{4}"([a-z0-9_]+)":', open("/root/repo/tools/explain_audit.py").read(), _re.M)
-    )
     names = set(all_queries().keys())
-    uncovered = names - curated - set(AUTO_PINS) - set(EXCLUDED)
+    uncovered = names - set(AUDITS) - EXCLUDED
     assert uncovered == set(), f"queries with no plan pin: {sorted(uncovered)}"
-    assert not set(AUTO_PINS) & set(EXCLUDED)
-    # a name in BOTH layers means a (usually weaker) auto pin shadows the
-    # curated audit in review discussions — the r11/r12 ann_sq8_recall
-    # duplicate. gen_auto_pins skips curated names, so any overlap is a
-    # hand-edit or a stale regeneration; fail it outright.
-    dup = set(AUTO_PINS) & curated
-    assert dup == set(), f"auto pin duplicates curated audit: {sorted(dup)}"
+    assert not set(AUDITS) & EXCLUDED
+    assert EXCLUDED <= names, "stale exclusion"
 
 
 # ---- wide-aggregate-buffer detector (r10: the a5 distinct-rewrite class) ----
@@ -317,21 +232,6 @@ def test_wide_agg_covers_object_and_sort_aggregate_blocks():
         blk = f"(2) {op}\nInput [2]: [k#1, v#2L]\nKeys [1]: [k#1]\nResults [100]: [{cols}]"
         plan = f"== Physical Plan ==\n{op} (2)\n+- Scan parquet  (1)\n\n" + blk
         assert wide_agg_results(plan) == [100], op
-
-
-def test_pin_signature_rejects_operator_name_degradation():
-    # the r10-advisor laxity: a pinned HashAggregate degrading to
-    # SortAggregate, or a Window pin met by a WindowGroupLimit-only plan,
-    # must FAIL — op-id match only, no raw-substring fallback
-    plan = _swap_op(
-        _swap_op(PIN_PLAN, 4, "HashAggregate", "SortAggregate"),
-        2,
-        "HashAggregate",
-        "SortAggregate",
-    )
-    assert "missing: HashAggregate" in check_auto_pin(plan, 1, ["HashAggregate"])
-    wgl_plan = _swap_op(PIN_PLAN, 4, "HashAggregate", "WindowGroupLimit")
-    assert "missing: Window" in check_auto_pin(wgl_plan, 1, ["Window"])
 
 
 def test_fact_level_detail_block_after_triple_newline_is_seen():

@@ -1,6 +1,6 @@
 """t-digest sketch (operators/tdigest.py): merge invariants, error
 bound, and the two-stage Spark wiring; plus MaxSim scoring semantics
-(plans/queries.hybrid_maxsim_topk) against a NumPy oracle."""
+(plans/q09_north_star.hybrid_maxsim_topk) against a NumPy oracle."""
 
 from __future__ import annotations
 
@@ -69,7 +69,7 @@ def test_spark_two_stage_quantiles(spark):
 
 def test_maxsim_matches_numpy_oracle(spark):
     """Per-pair MaxSim score equals the NumPy Σ max ⟨q_i, d_j⟩ oracle."""
-    from datalake_imagenes_georreferenciadas_spark.plans.queries import hybrid_maxsim_topk
+    from datalake_imagenes_georreferenciadas_spark.plans.q09_north_star import hybrid_maxsim_topk
     from datalake_imagenes_georreferenciadas_spark.tables import table
 
     sf_dir = "/root/testdata/sf0.001"

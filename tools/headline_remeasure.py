@@ -39,8 +39,6 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-from pyspark.sql import functions as F  # noqa: E402
-
 
 def load_ref(ref_path: str) -> dict:
     """Reference times from either artifact shape: a driver BENCH_r*.json
@@ -84,13 +82,8 @@ def main() -> int:
             names.append(a)
 
     import bench
-    from datalake_imagenes_georreferenciadas_spark.operators.dedup import (
-        _exploded_shingles,
-    )
     from datalake_imagenes_georreferenciadas_spark.plans.queries import all_queries
     from datalake_imagenes_georreferenciadas_spark.session import get_spark
-    from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES
-    from datalake_imagenes_georreferenciadas_spark.tables import table as load
 
     ref = load_ref(ref_path)
 
@@ -98,12 +91,7 @@ def main() -> int:
     spark = get_spark("remeasure")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
-
-    for t in TABLE_NAMES:
-        load(spark, sf_dir, t).count()
-    shingle_base = _exploded_shingles(load(spark, sf_dir, "documents"), "doc_id", "text", 3)
-    shingle_base.cache()
-    shingle_base.count()
+    bench.warm_up(spark, sf_dir)
 
     focus = set(names) if names else set(bench.BENCH_QUERIES)
     if isolated:

@@ -25,23 +25,12 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-from pyspark.sql import functions as F  # noqa: E402
-
-
-def materialize(df) -> int:
-    h = df.select(F.xxhash64(*[F.col(c) for c in df.columns]).alias("__h"))
-    row = h.agg(F.bit_xor("__h").alias("__x"), F.count("*").alias("__n")).collect()[0]
-    return int(row["__n"])
+from bench import materialize, warm_up  # noqa: E402
 
 
 def main() -> None:
-    from datalake_imagenes_georreferenciadas_spark.operators.dedup import (
-        _exploded_shingles,
-    )
     from datalake_imagenes_georreferenciadas_spark.plans.queries import all_queries
     from datalake_imagenes_georreferenciadas_spark.session import get_spark
-    from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES
-    from datalake_imagenes_georreferenciadas_spark.tables import table as load
 
     args = sys.argv[1:]
     sf_dir = "/root/testdata/sf0.1"
@@ -58,11 +47,7 @@ def main() -> None:
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
-    for t in TABLE_NAMES:
-        load(spark, sf_dir, t).count()
-    shingle_base = _exploded_shingles(load(spark, sf_dir, "documents"), "doc_id", "text", 3)
-    shingle_base.cache()
-    shingle_base.count()
+    warm_up(spark, sf_dir)
 
     print(f"{'query':38s} {'build':>7s} {'plan':>7s} {'exec1':>7s} {'fresh':>7s} {'reuse':>7s}")
     for name in names:

@@ -35,16 +35,6 @@ computes the identical closed form at 0.31 s). ``ALLOWED_PYTHON``
 pins the reviewed kernel set; a new Python node fails the sweep until
 it is justified here.
 
-Fourth class (r10): AUTO-GENERATED CONSERVATIVE PINS. The curated
-explain audits cover 146 queries with hand-written expectations; every
-other non-streaming query carries a machine-derived pin in
-tools/auto_pins.py (exchange-count budget + signature-node presence +
-no-cartesian/no-BNLJ), generated from the plans at both test SFs by
-tools/gen_auto_pins.py. The sweep enforces them on the plans it
-already captures, so a silent plan regression anywhere in the registry
-fails the round ladder, not just the curated subset. After an
-INTENTIONAL plan change, re-run the generator and review the diff.
-
 Usage: python tools/singlepartition_sweep.py [sf_dir]
 Exit 1 on any unreviewed flag. ~5 min for the full registry.
 """
@@ -58,11 +48,6 @@ sys.path.insert(0, "/root/repo")
 
 from datalake_imagenes_georreferenciadas_spark.plans.queries import all_queries
 from datalake_imagenes_georreferenciadas_spark.session import get_spark
-
-try:
-    from auto_pins import AUTO_PINS
-except ImportError:  # running from repo root rather than tools/
-    from tools.auto_pins import AUTO_PINS
 
 # Reviewed exceptions: (query name) -> why the global window is allowed.
 ALLOWED = {
@@ -253,32 +238,6 @@ def _split_top_level(s: str) -> list[str]:
     return parts
 
 
-def check_auto_pin(plan: str, max_ex: int, expects: list[str]) -> list[str]:
-    """Check one auto-generated pin against a formatted plan.
-
-    Returns a list of problems (empty = pin holds). Mirrors the curated
-    explain_audit check: an Exchange-count budget plus must-contain /
-    !must-not-contain substrings over the formatted plan text.
-    """
-    op_ids = re.findall(r"\(\d+\) (\w+)", plan)
-    probs = []
-    n_exchange = sum(1 for o in op_ids if o == "Exchange")
-    if n_exchange > max_ex:
-        probs.append(f"exchanges={n_exchange} > pinned {max_ex}")
-    for e in expects:
-        if e.startswith("!"):
-            if e[1:] in plan:
-                probs.append(f"unexpected: {e[1:]}")
-        # signature-node presence is matched as an operator id ONLY (no
-        # raw-substring fallback): gen_auto_pins emits SIGNATURE_OPS op
-        # names, so "Window" must be a Window node, not a WindowGroupLimit
-        # or a window_col expression, and a pinned HashAggregate degrading
-        # to SortAggregate fails instead of passing via substring
-        elif e not in op_ids:
-            probs.append(f"missing: {e}")
-    return probs
-
-
 def fact_level_singlepartition(plan: str) -> list[int]:
     """Node ids of SinglePartition exchanges fed directly by a scan.
 
@@ -377,11 +336,6 @@ def main() -> int:
             else:
                 bad.append(name)
                 print(f"FLAG {name}: unreviewed Python eval node {py_hits}")
-        if name in AUTO_PINS:
-            probs = check_auto_pin(plan, *AUTO_PINS[name])
-            if probs:
-                bad.append(name)
-                print(f"PIN-FAIL {name}: {'; '.join(probs)}")
         wide = wide_agg_results(plan)
         if wide:
             if name in ALLOWED_WIDE:
@@ -404,14 +358,11 @@ def main() -> int:
         for n in {**ALLOWED, **ALLOWED_CARTESIAN, **ALLOWED_PYTHON, **ALLOWED_WIDE}
         if n not in allowed_seen
     ]
-    stale += [n for n in AUTO_PINS if n not in queries]
     if stale:
         print(f"stale ALLOWED entries (no longer flagged — remove): {stale}")
-    n_pinned = sum(1 for n in queries if n in AUTO_PINS)
     print(
         f"\nswept {len(queries)}: {len(bad)} flagged, "
-        f"{len(allowed_seen)} allowed, {len(errs)} errors; "
-        f"{n_pinned} auto-pins checked"
+        f"{len(allowed_seen)} allowed, {len(errs)} errors"
     )
     return 1 if bad or errs or stale else 0
 
