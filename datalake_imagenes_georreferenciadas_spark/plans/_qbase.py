@@ -19,12 +19,15 @@ from __future__ import annotations
 
 import glob as glob_mod
 import hashlib
+import math
 import os
 import tempfile
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..functions import geo as GEO
 from ..functions import hashing as H
@@ -37,7 +40,8 @@ from ..operators import similarity as SIM
 from ..operators.sessionize import sessionize
 from ..operators.spatial import classify_points, contains_join, contains_join_grid, nearest_vertex_join
 from ..operators.topk import argmin_per_group, topk_per_group
-from ..tables import spread, table
+from ..sources.binary import scratch_dir, stage_dir
+from ..tables import norm_event_ts, spread, table
 from . import geo_fixture as GF
 from .flagship import FLAGSHIP_ORACLE_SQL, catalog_filtered_join
 
@@ -57,77 +61,127 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-def _scaled_stream_partitions(
-    spark: SparkSession, n_bytes: int, per_partition: int = 64 << 20
-) -> int:
+def events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> tuple[DataFrame, str]:
+    """The events table as a file-stream source: ``(stream, dir)``.
+
+    The raw file schema may hold ``ts`` as INT64 nanos, so the stream
+    reads it as long and then normalizes ``ts`` exactly as the batch
+    path does (:func:`tables.norm_event_ts`). The file stream source
+    wants a directory, so the events file is symlinked ``copies`` times
+    into one (two copies replay every event: an at-least-once
+    upstream). The dir is staged once per Spark application, ``sf_dir``
+    and ``copies``, and removed at exit. Pass it to :func:`drain` so
+    the run sizes its partitions from the input."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    src = os.path.join(sf_dir, "events.parquet")
+
+    def link(d: str) -> None:
+        for i in range(copies):
+            os.symlink(src, os.path.join(d, f"{i}.parquet"))
+
+    d = stage_dir(spark, ("events_stream", sf_dir, copies), link)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(d)
+    return norm_event_ts(stream), d
+
+
+def shard_stream(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet files under ``path`` as a file stream read one file
+    per micro-batch (maxFilesPerTrigger=1), so a sharded fixture drives
+    a real multi-batch trajectory instead of one degenerate batch."""
+    return (
+        spark.readStream.schema(spark.read.parquet(path).schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(path)
+    )
+
+
+def _stream_partitions(spark: SparkSession, sources: tuple[str, ...]) -> int:
     """Shuffle/state-store partition count for a one-shot availableNow
-    streaming replay, derived from the staged input size instead of the
-    session constant (r19; guide §2.2 "fewer, larger partitions" + the
-    §2 directive to make partitioning scale-adaptive). Streaming
-    aggregations get NO AQE coalescing, so every micro-batch commits one
-    state-store instance per shuffle partition — at the bench's few-MB
-    fixtures a fixed 32 means 32 near-empty state commits per batch
-    (measured: streaming_stream_join 5.9 s → 2.2 s, append_windows
-    7.5 s → 3.5 s at the derived value, results hash-identical). One
+    streaming replay, derived from the size of its ``sources`` (staged
+    stream dirs or files; symlinks are followed, since the fixtures
+    symlink the parquet inputs) instead of the session constant (r19;
+    guide §2.2 "fewer, larger partitions" + the §2 directive to make
+    partitioning scale-adaptive). Streaming aggregations get NO AQE
+    coalescing, so every micro-batch commits one state-store instance
+    per shuffle partition — at the bench's few-MB fixtures a fixed 32
+    means 32 near-empty state commits per batch, and a stream-stream
+    join keeps one join-state store per shuffle partition PER SIDE, so
+    there it meant 64 (measured: streaming_stream_join 5.9 s → 2.2 s,
+    append_windows' 4 micro-batches 7.5 s → 3.5 s at the derived value,
+    results hash-identical). The derived count also sizes the shuffles
+    that foreachBatch merges and state writes run per batch. One
     partition per ~64 MB of input, floored at 4 for pipeline overlap,
     capped at 4× the session parallelism (past that, per-task state is
     bounded by input splitting anyway) — on a 100 TB replay the derived
     value grows to the cap, scaling with the cluster."""
-    import math
-
+    n = 0
+    for p in sources:
+        if os.path.isfile(p):
+            n += os.path.getsize(p)
+            continue
+        for root, _dirs, files in os.walk(p, followlinks=True):
+            for f in files:
+                try:
+                    n += os.path.getsize(os.path.join(root, f))
+                except OSError:
+                    pass
     cores = spark.sparkContext.defaultParallelism
-    return max(4, min(4 * cores, math.ceil(max(n_bytes, 1) / per_partition)))
+    return max(4, min(4 * cores, math.ceil(max(n, 1) / (64 << 20))))
 
 
-class _stream_shuffle:
-    """Context manager: set ``spark.sql.shuffle.partitions`` to the
-    input-derived streaming value for the duration of one streaming
-    query run, then restore the session value (the surrounding batch
-    queries keep their own setting). ``paths`` are the staged stream
-    source dirs/files; symlinks are followed (the fixtures symlink the
-    parquet inputs)."""
-
-    def __init__(self, spark: SparkSession, *paths: str):
-        self.spark = spark
-        n = 0
-        for p in paths:
-            if os.path.isfile(p):
-                n += os.path.getsize(p)
-                continue
-            for root, _dirs, files in os.walk(p, followlinks=True):
-                for f in files:
-                    fp = os.path.join(root, f)
-                    try:
-                        n += os.path.getsize(fp)
-                    except OSError:
-                        pass
-        self.n_bytes = n
-
-    def __enter__(self):
-        self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(_scaled_stream_partitions(self.spark, self.n_bytes)),
-        )
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
-        return False
+def _run_available_now(
+    spark: SparkSession, writer: DataStreamWriter, sources: tuple[str, ...]
+) -> None:
+    """Start ``writer`` with an availableNow trigger and wait for it to
+    finish, with ``spark.sql.shuffle.partitions`` set from ``sources``
+    for the run only: the session value comes back afterwards, also when
+    the stream fails, so the surrounding batch queries keep their own
+    setting."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(_stream_partitions(spark, sources)))
+    try:
+        writer.trigger(availableNow=True).start().awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def _norm_event_ts(df: DataFrame) -> DataFrame:
-    """Normalize a raw ``events`` read's ``ts`` to session-zone TIMESTAMP —
-    same contract as tables.table: INT64 nanos (legacy generator) become a
-    µs timestamp via integer division; TIMESTAMP_NTZ (µs generator) is cast
-    into the UTC-pinned session zone. Streaming reads go through this too,
-    since their explicit file schema mirrors whatever the generator wrote."""
-    ts_type = dict(df.dtypes).get("ts")
-    if ts_type == "bigint":
-        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    if ts_type == "timestamp_ntz":
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+def drain(df: DataFrame, mode: str, *sources: str) -> DataFrame:
+    """Run the streaming ``df`` over all the input its source holds now
+    (availableNow) into a memory sink in output ``mode``, and return the
+    sink's rows. The sink's session view is dropped once the frame has
+    resolved, so calls add no views; the frame still reads every row.
+    ``sources`` size the run's partitions (:func:`_stream_partitions`)."""
+    spark = df.sparkSession
+    name = f"drain_{uuid.uuid4().hex[:8]}"
+    writer = df.writeStream.outputMode(mode).format("memory").queryName(name)
+    _run_available_now(spark, writer, sources)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
+
+
+def drain_batches(df: DataFrame, fn: Callable[[DataFrame, int], None], *sources: str) -> None:
+    """Run the streaming ``df`` over all the input its source holds now
+    (availableNow), handing each micro-batch to ``fn(batch_df,
+    batch_id)`` (foreachBatch), checkpointed in a fresh
+    :func:`scratch_dir`. ``sources`` size the run's partitions
+    (:func:`_stream_partitions`)."""
+    writer = df.writeStream.foreachBatch(fn).option("checkpointLocation", scratch_dir("ckpt_"))
+    _run_available_now(df.sparkSession, writer, sources)
+
+
+def publish_state(df: DataFrame, state_dir: str) -> None:
+    """Copy-on-write state table step: write ``df`` as a new version dir
+    under ``state_dir`` and re-point the ``cur`` symlink to it. The flip
+    is atomic-ish — the new link is made beside the old one and renamed
+    over it, so a reader of ``cur`` sees the old or the new version."""
+    nxt = os.path.join(state_dir, f"v_{uuid.uuid4().hex[:8]}")
+    df.write.parquet(nxt)
+    tmp = os.path.join(state_dir, "cur.tmp")
+    if os.path.islink(tmp):
+        os.unlink(tmp)
+    os.symlink(nxt, tmp)
+    os.replace(tmp, os.path.join(state_dir, "cur"))
 
 
 def _dsum(col: F.Column) -> F.Column:

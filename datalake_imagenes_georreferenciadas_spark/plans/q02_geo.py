@@ -23,14 +23,13 @@ from ._qbase import (
     Window,
     _dsum,
     _dsum_sql,
-    _norm_event_ts,
-    _stream_shuffle,
     affine_extent,
     classify_points,
     contains_join,
     contains_join_grid,
+    drain,
+    events_stream,
     nearest_vertex_join,
-    os,
     register,
     sessionize,
     table,
@@ -551,20 +550,10 @@ def streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME tumbling aggregate executed as a Structured Streaming query
     (file source, availableNow trigger, complete-mode memory sink) — proves
     batch/stream semantic parity, checked against the same oracle."""
-    import uuid
-
-    # raw file schema has ts as INT64 nanos (see tables.table); stream-read
-    # it as long, then convert exactly as the batch path does. The file
-    # stream source wants a directory, so symlink the single file into one.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stream_dir = tempfile.mkdtemp(prefix="events_stream_")
-    os.symlink(src, os.path.join(stream_dir, "events.parquet"))
-    stream = spark.readStream.format("parquet").schema(raw_schema).load(stream_dir)
-    stream = _norm_event_ts(stream).filter(F.col("ts").isNotNull())
+    stream, src = events_stream(spark, sf_dir)
     agg = (
-        stream.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
+        stream.filter(F.col("ts").isNotNull())
+        .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), _dsum(F.col("value")).alias("sum_value"))
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_start_epoch"),
@@ -573,19 +562,7 @@ def streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"stream_tumbling_{uuid.uuid4().hex[:8]}"
-    # r19: input-derived state-store partitioning for the one-shot
-    # replay (see _qbase._scaled_stream_partitions)
-    with _stream_shuffle(spark, stream_dir):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete", src)
 
 
 # ======================================================================

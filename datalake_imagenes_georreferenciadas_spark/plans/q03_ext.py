@@ -31,10 +31,10 @@ from ._qbase import (
     Window,
     _dsum,
     _dsum_sql,
-    _norm_event_ts,
-    _stream_shuffle,
     affine_extent,
     classify_points,
+    drain,
+    events_stream,
     os,
     register,
     spread,
@@ -147,17 +147,10 @@ def streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle applies Spark's initial-watermark late cut (rows before
     epoch 0 are late by definition in the single-file batch; r19), so
     the extreme axis verifies value-exactly."""
-    import uuid
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stream_dir = tempfile.mkdtemp(prefix="events_sess_")
-    os.symlink(src, os.path.join(stream_dir, "events.parquet"))
-    stream = spark.readStream.format("parquet").schema(raw_schema).load(stream_dir)
-    stream = _norm_event_ts(stream).filter(F.col("ts").isNotNull())
+    stream, src = events_stream(spark, sf_dir)
     agg = (
-        stream.withWatermark("ts", "1 minute")
+        stream.filter(F.col("ts").isNotNull())
+        .withWatermark("ts", "1 minute")
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n"), _dsum(F.col("value")).alias("sum_value"))
         .select(
@@ -167,18 +160,7 @@ def streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"stream_session_{uuid.uuid4().hex[:8]}"
-    # r19: input-derived state-store partitioning (guide §2.2)
-    with _stream_shuffle(spark, stream_dir):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete", src)
 
 
 # ======================================================================
@@ -1542,37 +1524,18 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     the `matches_batch` boolean the oracle expects to be uniformly true
     — the exactly-once accumulation claim is thereby externally checked,
     not just pytest-verified (test_streaming.py covers multi-batch)."""
-    import uuid
-
     from ..streaming.stateful import running_totals
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stream_dir = tempfile.mkdtemp(prefix="events_stateful_")
-    os.symlink(src, os.path.join(stream_dir, "events.parquet"))
-    stream = spark.readStream.format("parquet").schema(raw_schema).load(stream_dir)
-    totals = running_totals(stream.select("event_type", "value"))
-    name = f"stateful_totals_{uuid.uuid4().hex[:8]}"
-    # r19: input-derived state-store partitioning (guide §2.2)
-    with _stream_shuffle(spark, stream_dir):
-        q = (
-            totals.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    stream, src = events_stream(spark, sf_dir)
+    state = drain(running_totals(stream.select("event_type", "value")), "update", src)
     batch = (
-        spark.read.parquet(src)
+        table(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(F.count("*").alias("b_n"), F.sum("value").alias("b_sum"))
     )
     # null-SAFE join key (r16): a null event_type is a legitimate group
     # in BOTH the state op and the batch twin; a plain equi-join would
     # split it into two unmatched rows (null never equals null).
-    state = spark.table(name)
     return (
         state.join(
             F.broadcast(batch),

@@ -31,8 +31,8 @@ from ._qbase import (
     Window,
     _dsum,
     _dsum_sql,
-    _norm_event_ts,
-    _stream_shuffle,
+    drain,
+    events_stream,
     os,
     register,
     table,
@@ -369,17 +369,8 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream joins, solved the Structured Streaming way. availableNow over
     one batch ⇒ the result equals the batch interval join the oracle
     runs."""
-    import uuid
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stream_dir = tempfile.mkdtemp(prefix="events_ssj_")
-    os.symlink(src, os.path.join(stream_dir, "events.parquet"))
-
-    def side(event_type: str, id_alias: str, ts_alias: str):
-        s = spark.readStream.format("parquet").schema(raw_schema).load(stream_dir)
-        s = _norm_event_ts(s)
+    def side(s: DataFrame, event_type: str, id_alias: str, ts_alias: str):
         return (
             s.filter(F.col("event_type") == event_type)
             .select(
@@ -390,8 +381,10 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withWatermark(ts_alias, "1 hour")
         )
 
-    purchases = side("purchase", "p_id", "p_ts")
-    views = side("view", "view_id", "v_ts")
+    purchases, src = events_stream(spark, sf_dir)
+    views, _ = events_stream(spark, sf_dir)
+    purchases = side(purchases, "purchase", "p_id", "p_ts")
+    views = side(views, "view", "view_id", "v_ts")
     joined = purchases.join(
         views,
         F.expr(
@@ -400,21 +393,7 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "inner",
     ).select("p_id", "view_id", F.col("p_id_user").alias("user_id"))
-    name = f"stream_join_{uuid.uuid4().hex[:8]}"
-    # r19: input-derived state-store partitioning — the stream-stream
-    # join keeps one join-state store per shuffle partition PER SIDE, so
-    # the fixed 32 cost 64 near-empty state commits per batch here
-    # (measured 5.9 s → 2.2 s, hash-identical; guide §2.2)
-    with _stream_shuffle(spark, stream_dir):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain(joined, "append", src)
 
 
 # ======================================================================
@@ -749,17 +728,10 @@ def streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     query (file source, availableNow, complete-mode memory sink) —
     batch/stream parity against the same oracle as
     ``sliding_window_agg``."""
-    import uuid
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stream_dir = tempfile.mkdtemp(prefix="events_sliding_")
-    os.symlink(src, os.path.join(stream_dir, "events.parquet"))
-    stream = spark.readStream.format("parquet").schema(raw_schema).load(stream_dir)
-    stream = _norm_event_ts(stream).filter(F.col("ts").isNotNull())
+    stream, src = events_stream(spark, sf_dir)
     agg = (
-        stream.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
+        stream.filter(F.col("ts").isNotNull())
+        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n"))
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_start_epoch"),
@@ -767,18 +739,7 @@ def streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    name = f"stream_sliding_{uuid.uuid4().hex[:8]}"
-    # r19: input-derived state-store partitioning (guide §2.2)
-    with _stream_shuffle(spark, stream_dir):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete", src)
 
 
 @register(

@@ -16,8 +16,8 @@ from ._qbase import (
     Window,
     _dsum,
     _dsum_sql,
-    _norm_event_ts,
-    _stream_shuffle,
+    drain,
+    events_stream,
     os,
     register,
     spread,
@@ -611,7 +611,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once ingest under at-least-once delivery: the SAME events
-    file is fed to the stream TWICE (two symlinks — a replayed upstream),
+    file is fed to the stream TWICE (two copies — a replayed upstream),
     and dropDuplicatesWithinWatermark(event_id) reduces it to the exact
     event set (oracle = per-type counts of the un-duplicated table
     restricted to ts >= epoch 0 — Spark's initial-watermark late cut,
@@ -619,40 +619,18 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     store holds only ids within the lateness horizon, not the full
     history — the scalable form of the reference's unguarded
     double-insert (SURVEY §2.9)."""
-    import uuid
-
     from ..streaming.windows import dedup_within_watermark
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stream_dir = tempfile.mkdtemp(prefix="events_dup_stream_")
-    os.symlink(src, os.path.join(stream_dir, "a.parquet"))
-    os.symlink(src, os.path.join(stream_dir, "b.parquet"))
+    stream, src = events_stream(spark, sf_dir, copies=2)
     # r16 contract: exactly-once identity dedup needs BOTH an identity
     # (a NULL event_id would collapse every null-id row into one state
     # entry) and an event time (the watermark can't admit a null ts) —
     # rows lacking either are bad-records, excluded on both sides.
-    stream = spark.readStream.format("parquet").schema(raw_schema).load(stream_dir)
-    stream = (
-        _norm_event_ts(stream)
-        .filter(F.col("event_id").isNotNull() & F.col("ts").isNotNull())
-    )
+    stream = stream.filter(F.col("event_id").isNotNull() & F.col("ts").isNotNull())
     deduped = dedup_within_watermark(stream, watermark_minutes=60).select(
         "event_id", "event_type"
     )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    # r19: input-derived state-store partitioning (guide §2.2)
-    with _stream_shuffle(spark, stream_dir):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).groupBy("event_type").agg(F.count("*").alias("n"))
+    return drain(deduped, "append", src).groupBy("event_type").agg(F.count("*").alias("n"))
 
 
 @register(
@@ -956,17 +934,10 @@ def streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming state — the live-dashboard "what's trending now" shape.
     The streaming side holds only (window × type) state; the rank runs
     over that tiny aggregate, never the event stream."""
-    import uuid
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stream_dir = tempfile.mkdtemp(prefix="events_topk_stream_")
-    os.symlink(src, os.path.join(stream_dir, "events.parquet"))
-    stream = spark.readStream.format("parquet").schema(raw_schema).load(stream_dir)
-    stream = _norm_event_ts(stream).filter(F.col("ts").isNotNull())
+    stream, src = events_stream(spark, sf_dir)
     agg = (
-        stream.groupBy(F.window("ts", "60 minutes").alias("w"), "event_type")
+        stream.filter(F.col("ts").isNotNull())
+        .groupBy(F.window("ts", "60 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n"))
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_start_epoch"),
@@ -974,22 +945,11 @@ def streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    name = f"stream_topk_{uuid.uuid4().hex[:8]}"
-    # r19: input-derived state-store partitioning (guide §2.2)
-    with _stream_shuffle(spark, stream_dir):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     w = Window.partitionBy("window_start_epoch").orderBy(
         F.col("n").desc(), F.col("event_type").asc_nulls_first()
     )
     return (
-        spark.table(name)
+        drain(agg, "complete", src)
         .select("window_start_epoch", "event_type", "n", F.row_number().over(w).alias("rn"))
         .filter(F.col("rn") <= 2)
         .select("window_start_epoch", "event_type", "n")

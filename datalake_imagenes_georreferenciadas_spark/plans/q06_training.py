@@ -13,11 +13,13 @@ from ._qbase import (
     SparkSession,
     Window,
     _dsum,
-    _stream_shuffle,
+    drain_batches,
     os,
+    publish_state,
     register,
+    scratch_dir,
+    shard_stream,
     table,
-    tempfile,
 )
 from .q05_training import _WQ_QS
 
@@ -338,9 +340,7 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction until they win or lose, they are never dropped early.
     Complements cdc_upsert_compact (the batch read-side compaction of
     the same log shape)."""
-    import uuid
-
-    base = tempfile.mkdtemp(prefix="scdc_")
+    base = scratch_dir("scdc_")
     stream_dir = os.path.join(base, "in")
     state_dir = os.path.join(base, "state")
     log = table(spark, sf_dir, "events").select(
@@ -354,7 +354,6 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("value", 6).alias("value"),
     )
     log.repartition(4).write.parquet(stream_dir)
-    schema = spark.read.parquet(stream_dir).schema
 
     applied: set[int] = set()
     w_latest = Window.partitionBy("user_id").orderBy(
@@ -378,35 +377,14 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         src = batch_df
         if os.path.isdir(cur_dir):
             src = ss.read.parquet(cur_dir).unionByName(batch_df)
-        merged = (
+        publish_state(
             src.withColumn("rn", F.row_number().over(w_latest))
             .filter(F.col("rn") == 1)
-            .drop("rn")
+            .drop("rn"),
+            state_dir,
         )
-        nxt = os.path.join(state_dir, f"v_{uuid.uuid4().hex[:8]}")
-        merged.write.parquet(nxt)
-        tmp = cur_dir + ".tmp"
-        if os.path.islink(tmp):
-            os.unlink(tmp)
-        os.symlink(nxt, tmp)
-        os.replace(tmp, cur_dir)
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .load(stream_dir)
-    )
-    # r19: input-derived shuffle partitioning for the per-batch merge
-    # windows and state writes (guide §2.2)
-    with _stream_shuffle(spark, stream_dir):
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain_batches(shard_stream(spark, stream_dir), merge, stream_dir)
     return (
         spark.read.parquet(os.path.join(state_dir, "cur"))
         .filter(F.col("op") != "D")

@@ -18,11 +18,14 @@ from ._qbase import (
     V,
     Window,
     _dsum,
-    _stream_shuffle,
     _dsum_sql,
     classify_points,
+    drain_batches,
     os,
+    publish_state,
     register,
+    scratch_dir,
+    shard_stream,
     table,
     tempfile,
     topk_per_group,
@@ -443,14 +446,11 @@ def streaming_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent; the final state must equal the one-shot batch
     aggregate the oracle computes. Four micro-batches exercise the
     read-merge-write loop for real, not a single-batch degenerate."""
-    import uuid
-
-    base = tempfile.mkdtemp(prefix="febm_")
+    base = scratch_dir("febm_")
     stream_dir = os.path.join(base, "in")
     state_dir = os.path.join(base, "state")
     ev = table(spark, sf_dir, "events").select("event_type", F.round("value", 4).alias("value"))
     ev.repartition(4).write.parquet(stream_dir)
-    schema = spark.read.parquet(stream_dir).schema
 
     applied: set[int] = set()
 
@@ -476,31 +476,9 @@ def streaming_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         else:
             merged = part
-        nxt = os.path.join(state_dir, f"v_{uuid.uuid4().hex[:8]}")
-        merged.write.parquet(nxt)
-        # atomic-ish pointer flip: re-link 'cur' to the new version
-        tmp_link = cur_dir + ".tmp"
-        if os.path.islink(tmp_link):
-            os.unlink(tmp_link)
-        os.symlink(nxt, tmp_link)
-        os.replace(tmp_link, cur_dir)
+        publish_state(merged, state_dir)
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .load(stream_dir)
-    )
-    # r19: input-derived shuffle partitioning for the per-batch merge
-    # aggregates and state writes (guide §2.2)
-    with _stream_shuffle(spark, stream_dir):
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain_batches(shard_stream(spark, stream_dir), merge, stream_dir)
     return (
         spark.read.parquet(os.path.join(state_dir, "cur"))
         .select(

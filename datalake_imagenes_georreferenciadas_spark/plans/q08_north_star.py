@@ -17,12 +17,13 @@ from ._qbase import (
     V,
     Window,
     _dsum,
-    _stream_shuffle,
+    drain_batches,
     os,
     register,
+    scratch_dir,
+    shard_stream,
     spread,
     table,
-    tempfile,
 )
 from .q01_j1 import _COMPONENTS_SQL, _near_pairs_cte
 from .q03_ext import _BULK_N, _BULK_PTS_SQL
@@ -131,7 +132,7 @@ def streaming_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the full batch table."""
     from ..operators import tdigest as TD
 
-    base = tempfile.mkdtemp(prefix="stdg_")
+    base = scratch_dir("stdg_")
     stream_dir = os.path.join(base, "in")
     cent_dir = os.path.join(base, "centroids")
     # non-null contract shared with a19_tdigest_quantile (r16)
@@ -141,7 +142,6 @@ def streaming_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("value")
     )
     ev.repartition(4).write.parquet(stream_dir)
-    schema = spark.read.parquet(stream_dir).schema
 
     applied: set[int] = set()
 
@@ -154,22 +154,7 @@ def streaming_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
             return
         TD.sketch(batch_df, "value").write.parquet(out)
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .load(stream_dir)
-    )
-    # r19: input-derived shuffle partitioning for the per-batch sketch
-    # writes (guide §2.2)
-    with _stream_shuffle(spark, stream_dir):
-        q = (
-            stream.writeStream.foreachBatch(add_digest)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain_batches(shard_stream(spark, stream_dir), add_digest, stream_dir)
     cent = (
         spark.read.option("recursiveFileLookup", "true")
         .schema("mean double, weight double")

@@ -16,13 +16,11 @@ from ._qbase import (
     Window,
     _dsum,
     _dsum_sql,
-    _norm_event_ts,
-    _stream_shuffle,
-    os,
+    drain,
+    events_stream,
     register,
     spread,
     table,
-    tempfile,
 )
 from .q01_j1 import (
     _PQ_ADC_SPARK,
@@ -418,15 +416,7 @@ def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch boundaries. Oracle: the same join as one batch SQL. At
     100 TB of stream the static side is still dimension-sized — the
     join never shuffles the stream."""
-    import uuid
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stream_dir = tempfile.mkdtemp(prefix="events_dimjoin_")
-    os.symlink(src, os.path.join(stream_dir, "events.parquet"))
-    stream = spark.readStream.format("parquet").schema(raw_schema).load(stream_dir)
-    stream = _norm_event_ts(stream)
+    stream, src = events_stream(spark, sf_dir)
     dim = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     # the static dim is customer — linear-in-SF, so unhinted: per-batch
     # planning broadcasts it while small and shuffles the batch when not
@@ -436,18 +426,7 @@ def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = joined.groupBy("c_mktsegment").agg(
         F.count("*").alias("n"), _dsum(F.col("value")).alias("sum_value")
     )
-    name = f"stream_dimjoin_{uuid.uuid4().hex[:8]}"
-    # r19: input-derived state-store partitioning (guide §2.2)
-    with _stream_shuffle(spark, stream_dir):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete", src)
 
 
 _CUSUM_SLACK_C = 500  # 5.00 drift allowance per observation, in cents

@@ -31,7 +31,7 @@ import io
 import os
 import shutil
 import tempfile
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Hashable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -123,6 +123,8 @@ def read_binary_dir(spark: SparkSession, path: str, glob: str | None = None) -> 
 STAGE_PREFIX = "blob_stage_"
 #: (applicationId, key) -> the dir this process staged for it
 _STAGED: dict[tuple, str] = {}
+#: every dir this process made; removed at exit
+_OWNED: list[str] = []
 
 
 def _pid_running(pid: int) -> bool:
@@ -146,46 +148,61 @@ def _remove_orphans(tmp: str) -> None:
             shutil.rmtree(os.path.join(tmp, entry), ignore_errors=True)
 
 
+def scratch_dir(tag: str = "") -> str:
+    """A fresh empty dir ``$TMPDIR/blob_stage_<pid>_<tag><random>``.
+
+    The name carries this process's pid; the dir is removed when the
+    process exits, and making one removes any that a dead process left
+    behind. Use it for per-call fixtures that must not be shared across
+    calls (each call redoes the same work)."""
+    tmp = tempfile.gettempdir()
+    _remove_orphans(tmp)
+    d = tempfile.mkdtemp(prefix=f"{STAGE_PREFIX}{os.getpid()}_{tag}", dir=tmp)
+    _OWNED.append(d)
+    return d
+
+
+def stage_dir(spark: SparkSession, key: Hashable, fill: Callable[[str], None]) -> str:
+    """A :func:`scratch_dir` made and filled (``fill(dir)``) once per
+    Spark application and ``key``: repeated plan builds in one
+    application (bench passes, oracle re-runs) reuse it, and a new
+    application stages its own. A dir removed under us (a tmp cleaner)
+    is staged again."""
+    k = (spark.sparkContext.applicationId, key)
+    dest = _STAGED.get(k)
+    if dest is None or not os.path.isdir(dest):
+        dest = scratch_dir()
+        fill(dest)
+        _STAGED[k] = dest
+    return dest
+
+
 def stage_files(
     spark: SparkSession,
     key: str,
     rows: DataFrame,
     to_file: Callable[..., tuple[str, bytes] | None],
 ) -> str:
-    """Write one file per row of ``rows`` into a temp dir and return it.
+    """Write one file per row of ``rows`` into a :func:`stage_dir` for
+    ``key`` and return it. ``to_file(row)`` gives the ``(file name,
+    bytes)`` pair, or None to skip the row."""
 
-    ``to_file(row)`` gives the ``(file name, bytes)`` pair, or None to
-    skip the row. The dir is staged once per Spark application and
-    ``key``: repeated plan builds in one application (bench passes,
-    oracle re-runs) reuse it, and a new application stages its own. A
-    dir removed under us (a tmp cleaner) is staged again. The dir name
-    carries this process's pid; the dirs are removed when the process
-    exits, and staging removes any that a dead process left behind."""
-    k = (spark.sparkContext.applicationId, key)
-    dest = _STAGED.get(k)
-    if dest is not None and os.path.isdir(dest):
-        return dest
-    tmp = tempfile.gettempdir()
-    _remove_orphans(tmp)
-    digest = hashlib.md5(repr(k).encode()).hexdigest()[:16]
-    dest = os.path.join(tmp, f"{STAGE_PREFIX}{os.getpid()}_{digest}")
-    os.makedirs(dest, exist_ok=True)
+    def fill(dest: str) -> None:
+        def write(part):
+            for r in part:
+                out = to_file(r)
+                if out is not None:
+                    with open(os.path.join(dest, out[0]), "wb") as fh:
+                        fh.write(out[1])
 
-    def write(part):
-        for r in part:
-            out = to_file(r)
-            if out is not None:
-                with open(os.path.join(dest, out[0]), "wb") as fh:
-                    fh.write(out[1])
+        rows.foreachPartition(write)
 
-    rows.foreachPartition(write)
-    _STAGED[k] = dest
-    return dest
+    return stage_dir(spark, key, fill)
 
 
 @atexit.register
 def _remove_staged() -> None:
-    for d in _STAGED.values():
+    for d in _OWNED:
         shutil.rmtree(d, ignore_errors=True)
 
 

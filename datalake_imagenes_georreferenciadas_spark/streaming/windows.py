@@ -1,9 +1,8 @@
 """Windowed / watermarked streaming aggregation over events (SURVEY §2.9 EXT).
 
-Tumbling, sliding, and session windows with watermarks — the streaming
-twins of operators.sessionize. Tests drive these with a file source +
-``trigger(availableNow=True)`` + memory sink, asserting batch-by-batch
-results (SURVEY §5.2.5).
+Tumbling windows with a watermark, and watermark-bounded dedup. Tests
+drive these with a file source + ``trigger(availableNow=True)`` + memory
+sink, asserting batch-by-batch results (SURVEY §5.2.5).
 """
 
 from __future__ import annotations
@@ -21,40 +20,6 @@ def tumbling_counts(
         .groupBy(F.window("ts", f"{minutes} minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n", "sum_value")
-    )
-
-
-def sliding_counts(
-    events: DataFrame, minutes: int = 10, slide_minutes: int = 5, watermark_minutes: int = 30
-) -> DataFrame:
-    """Sliding-window counts (overlapping windows)."""
-    return (
-        events.withWatermark("ts", f"{watermark_minutes} minutes")
-        .groupBy(
-            F.window("ts", f"{minutes} minutes", f"{slide_minutes} minutes").alias("w"),
-            "event_type",
-        )
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
-
-
-def session_counts(
-    events: DataFrame, gap_minutes: int = 30, watermark_minutes: int = 60
-) -> DataFrame:
-    """Session-window aggregation (``session_window`` — state-store-backed
-    in streaming; identical call shape in batch)."""
-    return (
-        events.withWatermark("ts", f"{watermark_minutes} minutes")
-        .groupBy(F.session_window("ts", f"{gap_minutes} minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "user_id",
-            "n_events",
-            "sum_value",
-        )
     )
 
 

@@ -31,11 +31,11 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
-def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table as a DataFrame (lazy parquet scan).
-
-    ``events.ts`` is normalized to a session-zone (UTC) TIMESTAMP whatever
-    the generator wrote:
+def norm_event_ts(df: DataFrame) -> DataFrame:
+    """Normalize a raw ``events`` read's ``ts`` to a session-zone (UTC)
+    TIMESTAMP whatever the generator wrote. Batch reads (:func:`table`)
+    and stream reads (whose explicit file schema mirrors the file) both
+    go through it:
 
     - TIMESTAMP(NANOS): the vectorized reader rejects it; read nanos as
       long (legacy conf, runtime-settable) and convert with integer
@@ -46,16 +46,21 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       session-zone type (session tz is pinned UTC, so the instant is
       unchanged and matches DuckDB's naive read).
     """
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one testdata table as a DataFrame (lazy parquet scan);
+    ``events.ts`` goes through :func:`norm_event_ts`."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
+        return norm_event_ts(spark.read.parquet(path))
     return spark.read.parquet(path)
 
 

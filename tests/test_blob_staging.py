@@ -1,5 +1,6 @@
-"""sources.binary staging: one dir per application and key, removed at
-exit, and dirs of dead owners swept on the next stage."""
+"""sources.binary staging: keyed dirs made once per application and key,
+per-call scratch dirs, all removed at exit, and dirs of dead owners swept
+on the next stage."""
 
 from __future__ import annotations
 
@@ -60,7 +61,8 @@ def test_staged_dirs_are_removed_at_exit(tmp_path):
         "spark = (SparkSession.builder.master('local[2]')"
         ".config('spark.ui.enabled', 'false')"
         ".config('spark.sql.session.timeZone', 'UTC').getOrCreate())\n"
-        "for name in ('s8_geotiff_meta_scan', 'pipeline_geo_ingest'):\n"
+        "for name in ('s8_geotiff_meta_scan', 'pipeline_geo_ingest', 'streaming_tumbling',\n"
+        "             'streaming_dedup', 'streaming_tdigest', 'streaming_append_windows'):\n"
         "    QUERIES[name](spark, sys.argv[1]).collect()\n"
         "print(len([e for e in os.listdir(tempfile.gettempdir())"
         f" if e.startswith({STAGE_PREFIX!r})]))\n"
@@ -79,6 +81,9 @@ def test_staged_dirs_are_removed_at_exit(tmp_path):
         timeout=600,
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    assert out.stdout.split()[-1] == "2"  # the fixture and the landing zone
+    # keyed: the fixture, the landing zone, the 1- and 2-copy events
+    # streams; per call: tdigest's shards and its checkpoint,
+    # append_windows' split and source
+    assert out.stdout.split()[-1] == "8"
     leaked = sorted(e for e in os.listdir(tmp) if not e.startswith(SPARK_TMP_PREFIXES))
     assert leaked == []

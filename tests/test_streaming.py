@@ -6,11 +6,13 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from datalake_imagenes_georreferenciadas_spark.catalog.store import CatalogStore
 from datalake_imagenes_georreferenciadas_spark.operators.sessionize import sessionize
 from datalake_imagenes_georreferenciadas_spark.streaming.ingest import start_file_ingest
+from datalake_imagenes_georreferenciadas_spark.tables import DEFAULT_SF_DIR as SF
 
 SRC_SCHEMA = "img_id long, codigo string, ruta_resultado string"
 
@@ -117,3 +119,42 @@ def test_stateful_running_totals_accumulate_across_batches(spark, tmp_path):
     got2 = run_batch("st_b2")
     # only keys present in batch 2 emit; 'a' carries state from batch 1
     assert got2 == {"a": (3, 7.0), "c": (1, 0.5)}
+
+
+@pytest.mark.skipif(not os.path.isdir(SF), reason="sf0.001 test data missing")
+def test_memory_sink_queries_leave_no_session_view(spark):
+    """A registered memory-sink query drops its sink's view once the
+    result frame has resolved; the frame still reads every row."""
+    from datalake_imagenes_georreferenciadas_spark.plans.queries import QUERIES
+
+    before = sorted(t.name for t in spark.catalog.listTables())
+    counts = [QUERIES["streaming_tumbling"](spark, SF).count() for _ in range(2)]
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    assert counts[0] == counts[1] > 0
+
+
+def test_drain_batches_restores_shuffle_partitions_when_the_batch_fails(spark, tmp_path):
+    from pyspark.errors import StreamingQueryException
+
+    from datalake_imagenes_georreferenciadas_spark.plans._qbase import (
+        drain_batches,
+        shard_stream,
+    )
+
+    src = str(tmp_path / "in")
+    spark.range(10).write.parquet(src)
+    seen = []
+
+    def fail(batch_df, _bid):
+        seen.append(batch_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        raise RuntimeError("batch failed")
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try:
+        with pytest.raises(StreamingQueryException):
+            drain_batches(shard_stream(spark, src), fail, src)
+        assert seen == ["4"]  # the run's input-derived value (floor of 4)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
