@@ -12,7 +12,7 @@ as DataFrame/SQL plans over Parquet, plus LLM-data-pipeline extensions
 Blueprint: /root/repo/SURVEY.md. Subpackages:
 
 - ``session``    — tuned SparkSession bootstrap
-- ``tables``     — testdata table loading / temp-view registration
+- ``tables``     — testdata table loading
 - ``functions``  — scalar/column function library (strings, geo, text,
                    vectors, cross-engine hashing)
 - ``operators``  — composed plan shapes (dedup, similarity, spatial joins,

@@ -130,15 +130,11 @@ def unique_places(features: list[dict]) -> list[str]:
     return list(seen)
 
 
-def _classify(points: DataFrame, polys: DataFrame) -> DataFrame:
-    return classify_points(points, polys)
-
-
 def get_predio_centroide(points: DataFrame, polys: DataFrame) -> DataFrame:
     """script_geo.get_predio_centroide (80-107) — containment test with
     nearest-vertex fallback, per point, as ONE plan (and unlike the
     reference, the containment result is actually used — §2.11 bug 1)."""
-    return _classify(points, polys)
+    return classify_points(points, polys)
 
 
 def polygono_mascercano(points: DataFrame, polys: DataFrame) -> DataFrame:

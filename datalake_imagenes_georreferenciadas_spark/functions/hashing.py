@@ -106,15 +106,6 @@ def minhash_signature(shingle_col: Column, num_hashes: int = 16) -> Column:
     )
 
 
-def minhash_signature_sql(shingles_expr: str, num_hashes: int = 16) -> str:
-    """DuckDB twin of :func:`minhash_signature`."""
-    return (
-        f"[list_min([('0x' || substring(md5(s::VARCHAR || ':' || sh), 1, {HASH_HEX_CHARS}))::BIGINT "
-        f"FOR sh IN ({shingles_expr})]) "
-        f"FOR s IN generate_series(0, {num_hashes - 1})]"
-    )
-
-
 def lsh_bands(sig: Column, bands: int, rows_per_band: int) -> Column:
     """Group a MinHash signature into band keys: md5 over each band slice.
 
@@ -137,12 +128,4 @@ def lsh_bands(sig: Column, bands: int, rows_per_band: int) -> Column:
                 ),
             )
         ),
-    )
-
-
-def lsh_bands_sql(sig_expr: str, bands: int, rows_per_band: int) -> str:
-    """DuckDB twin of :func:`lsh_bands`."""
-    return (
-        f"[md5(b::VARCHAR || '|' || array_to_string(list_transform(list_slice({sig_expr}, b*{rows_per_band}+1, (b+1)*{rows_per_band}), v -> v::VARCHAR), ',')) "
-        f"FOR b IN generate_series(0, {bands - 1})]"
     )

@@ -21,7 +21,6 @@ import glob as glob_mod
 import hashlib
 import math
 import os
-import tempfile
 import uuid
 from collections.abc import Callable
 
@@ -29,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from ..catalog.store import CatalogStore
 from ..functions import geo as GEO
 from ..functions import hashing as H
 from ..functions import text as TX
@@ -182,6 +182,33 @@ def publish_state(df: DataFrame, state_dir: str) -> None:
         os.unlink(tmp)
     os.symlink(nxt, tmp)
     os.replace(tmp, os.path.join(state_dir, "cur"))
+
+
+def documents_catalog(spark: SparkSession, sf_dir: str) -> CatalogStore:
+    """A fresh :class:`CatalogStore` in a per-call :func:`scratch_dir`
+    holding one run (``id_proceso`` 0) that inserted every document as a
+    catalog row: ``indice`` ``C<doc_id % 10>_<lang>_X_A``, ``ruta_resultado``
+    ``lake/BR/C<doc_id % 10>/<doc_id>.jpg`` (so ids follow
+    ``row_number`` over that pair) and ``id_tipo_img`` 0 for even
+    ``doc_id``, 3 for odd."""
+    codigo = F.concat(F.lit("C"), (F.col("doc_id") % 10).cast("string"))
+    rows = table(spark, sf_dir, "documents").select(
+        F.concat_ws("_", codigo, F.col("lang"), F.lit("X"), F.lit("A")).alias("indice"),
+        codigo.alias("codigo"),
+        F.upper(F.col("source")).alias("nombre_predio"),
+        F.col("lang").alias("seccion"),
+        F.col("source").alias("especie"),
+        F.lit("A").alias("apl"),
+        F.when(F.col("doc_id") % 2 == 0, 0).otherwise(3).cast("int").alias("id_tipo_img"),
+        F.lit(0).cast("int").alias("id_proceso"),
+        F.concat(
+            F.lit("lake/BR/"), codigo, F.lit("/"), F.col("doc_id").cast("string"), F.lit(".jpg")
+        ).alias("ruta_resultado"),
+        F.current_timestamp().alias("fecha"),
+    )
+    store = CatalogStore(spark, scratch_dir("catalog_"))
+    store.insert_catalog(rows, store.start_run(0))
+    return store
 
 
 def _dsum(col: F.Column) -> F.Column:

@@ -27,13 +27,13 @@ from ._qbase import (
     classify_points,
     contains_join,
     contains_join_grid,
+    documents_catalog,
     drain,
     events_stream,
     nearest_vertex_join,
     register,
     sessionize,
     table,
-    tempfile,
 )
 
 # ======================================================================
@@ -588,28 +588,7 @@ def catalog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's flagship filtered retrieval (mysql_process.py:67-74) on the
     real domain tables. Deterministic ids via row_number over the business
     key, so the whole pipeline is oracle-reproducible."""
-    from ..catalog.store import CatalogStore
-
-    docs = table(spark, sf_dir, "documents")
-    codigo = F.concat(F.lit("C"), (F.col("doc_id") % 10).cast("string"))
-    rows = docs.select(
-        F.concat_ws("_", codigo, F.col("lang"), F.lit("X"), F.lit("A")).alias("indice"),
-        codigo.alias("codigo"),
-        F.upper(F.col("source")).alias("nombre_predio"),
-        F.col("lang").alias("seccion"),
-        F.col("source").alias("especie"),
-        F.lit("A").alias("apl"),
-        F.when(F.col("doc_id") % 2 == 0, 0).otherwise(3).cast("int").alias("id_tipo_img"),
-        F.lit(0).cast("int").alias("id_proceso"),
-        F.concat(
-            F.lit("lake/BR/"), codigo, F.lit("/"), F.col("doc_id").cast("string"), F.lit(".jpg")
-        ).alias("ruta_resultado"),
-        F.current_timestamp().alias("fecha"),
-    )
-    store = CatalogStore(spark, tempfile.mkdtemp(prefix="catalog_rt_"))
-    run_id = store.start_run(0)
-    store.insert_catalog(rows, run_id)
-    return store.filtered_paths(0, [0, 3], "C3_es_X_A")
+    return documents_catalog(spark, sf_dir).filtered_paths(0, [0, 3], "C3_es_X_A")
 
 
 # ======================================================================
@@ -1099,17 +1078,14 @@ def w4_rank_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a4_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (beyond rollup/cube)."""
-    import uuid
-
-    view = f"__gs_lineitem_{uuid.uuid4().hex[:8]}"
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView(view)
     return spark.sql(
         f"""
         SELECT l_returnflag, l_linestatus, count(*) AS n,
                {_dsum_sql('l_quantity')} AS sum_qty
-        FROM {view}
+        FROM {{lineitem}}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
+        """,
+        lineitem=table(spark, sf_dir, "lineitem"),
     )
 
 

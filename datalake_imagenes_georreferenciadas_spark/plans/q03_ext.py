@@ -37,9 +37,9 @@ from ._qbase import (
     events_stream,
     os,
     register,
+    scratch_dir,
     spread,
     table,
-    tempfile,
 )
 from .q01_j1 import _COSINE_ALL_SQL
 
@@ -72,7 +72,7 @@ def s11_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiLine=true makes a single CSV file non-splittable — fine here
     and at 100 TB, where parallelism comes from many files, not from
     splitting one."""
-    dest = os.path.join(tempfile.mkdtemp(prefix="csv_sink_"), "events_csv")
+    dest = os.path.join(scratch_dir("csv_sink_"), "events_csv")
     ev = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     (
         ev.write.mode("overwrite")
@@ -389,7 +389,7 @@ def s16_partitioned_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions), then a partition-PRUNED read back (only lang=es files are
     scanned; .explain shows PartitionFilters). Aggregate must equal the
     oracle's direct filter — proving the codec + pruning lose nothing."""
-    dest = os.path.join(tempfile.mkdtemp(prefix="publish_"), "docs_by_lang")
+    dest = os.path.join(scratch_dir("publish_"), "docs_by_lang")
     # path safety: a partition value becomes a DIRECTORY NAME — a dirty
     # multi-KB category blows up the writer (Mkdirs ENAMETOOLONG), so
     # unpublishable categories go to the bad-records channel. Value-
@@ -693,16 +693,13 @@ def a4_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sub_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar subquery (Catalyst turns it into a broadcast one-row join)."""
-    import uuid
-
-    view = f"__sq_orders_{uuid.uuid4().hex[:8]}"
-    table(spark, sf_dir, "orders").createOrReplaceTempView(view)
     return spark.sql(
-        f"""
-        SELECT o_orderkey,
-               round(o_totalprice / (SELECT avg(o_totalprice) FROM {view}), 6) AS price_ratio
-        FROM {view} WHERE o_totalprice > 400000
         """
+        SELECT o_orderkey,
+               round(o_totalprice / (SELECT avg(o_totalprice) FROM {orders}), 6) AS price_ratio
+        FROM {orders} WHERE o_totalprice > 400000
+        """,
+        orders=table(spark, sf_dir, "orders"),
     )
 
 
@@ -715,16 +712,13 @@ def sub_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sub_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-subquery (planned as a left-semi join)."""
-    import uuid
-
-    sfx = uuid.uuid4().hex[:8]
-    table(spark, sf_dir, "orders").createOrReplaceTempView(f"__sq2_orders_{sfx}")
-    table(spark, sf_dir, "customer").createOrReplaceTempView(f"__sq2_customer_{sfx}")
     return spark.sql(
-        f"""
-        SELECT o_orderkey, o_custkey FROM __sq2_orders_{sfx}
-        WHERE o_custkey IN (SELECT c_custkey FROM __sq2_customer_{sfx} WHERE c_acctbal > 9000)
         """
+        SELECT o_orderkey, o_custkey FROM {orders}
+        WHERE o_custkey IN (SELECT c_custkey FROM {customer} WHERE c_acctbal > 9000)
+        """,
+        orders=table(spark, sf_dir, "orders"),
+        customer=table(spark, sf_dir, "customer"),
     )
 
 
@@ -1069,7 +1063,7 @@ def s6_features_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.files import read_features_json
 
-    d = tempfile.mkdtemp(prefix="features_json_")
+    d = scratch_dir("features_json_")
     for p in GF.POLYS:
         rec = {k: v for k, v in p.items() if k != "rings"}
         rec["rings"] = [
@@ -1266,18 +1260,15 @@ def w6_distribution_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j1_correlated_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS with a cross-table predicate (decorrelated by
     Catalyst into a left-semi join with a non-equi condition)."""
-    import uuid
-
-    sfx = uuid.uuid4().hex[:8]
-    table(spark, sf_dir, "customer").createOrReplaceTempView(f"__ce_c_{sfx}")
-    table(spark, sf_dir, "orders").createOrReplaceTempView(f"__ce_o_{sfx}")
     return spark.sql(
-        f"""
-        SELECT c.c_custkey, c.c_acctbal FROM __ce_c_{sfx} c
-        WHERE EXISTS (SELECT 1 FROM __ce_o_{sfx} o
+        """
+        SELECT c.c_custkey, c.c_acctbal FROM {customer} c
+        WHERE EXISTS (SELECT 1 FROM {orders} o
                       WHERE o.o_custkey = c.c_custkey
                         AND o.o_totalprice > c.c_acctbal * 50)
-        """
+        """,
+        customer=table(spark, sf_dir, "customer"),
+        orders=table(spark, sf_dir, "orders"),
     )
 
 
@@ -1292,17 +1283,14 @@ def j1_correlated_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def f15_lateral_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL VIEW posexplode via SQL — the generator/UDTF surface."""
-    import uuid
-
-    view = f"__lv_emb_{uuid.uuid4().hex[:8]}"
-    table(spark, sf_dir, "embeddings").createOrReplaceTempView(view)
     return spark.sql(
-        f"""
+        """
         SELECT vec_id, pos + 1 AS pos, round(val, 4) AS val
-        FROM {view}
+        FROM {embeddings}
         LATERAL VIEW posexplode(slice(transform(embedding, x -> round(cast(x AS double), 4)), 1, 4)) t AS pos, val
         WHERE vec_id < 20
-        """
+        """,
+        embeddings=table(spark, sf_dir, "embeddings"),
     )
 
 
@@ -1342,7 +1330,7 @@ def s2_archive_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in docs.filter(F.col("doc_id") % 10 < 2).collect()
         if r["text"] is not None  # null payloads never reach the bucket
     }
-    d = tempfile.mkdtemp(prefix="s2_archives_")
+    d = scratch_dir("s2_archives_")
     zbuf = io.BytesIO()
     with zipfile.ZipFile(zbuf, "w") as zf:
         for i in sorted(k for k in sub if k % 10 == 0):
@@ -1400,7 +1388,7 @@ def s2_7z_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in docs.filter(F.col("doc_id") % 10 == 2).collect()
         if r["text"] is not None  # null payloads never reach the bucket
     }
-    d = tempfile.mkdtemp(prefix="s2_sevenzip_")
+    d = scratch_dir("s2_sevenzip_")
     members = [
         (f"doc_{i}.txt", sub[i].encode("utf-8")) for i in sorted(sub)
     ]

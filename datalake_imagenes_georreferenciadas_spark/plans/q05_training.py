@@ -20,9 +20,9 @@ from ._qbase import (
     events_stream,
     os,
     register,
+    scratch_dir,
     spread,
     table,
-    tempfile,
 )
 
 # ======================================================================
@@ -684,7 +684,7 @@ def s19_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, proving the format round-trip is lossless. Exercises the
     second columnar format a lake engine must speak."""
     orders = table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    out = os.path.join(tempfile.mkdtemp(prefix="orc_rt_"), "orders_f")
+    out = os.path.join(scratch_dir("orc_rt_"), "orders_f")
     orders.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     return back.groupBy("o_orderpriority").agg(
@@ -1197,7 +1197,7 @@ def s20_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_acctbal") > 0)
         .select("c_custkey", "c_mktsegment", "c_acctbal")
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="jsonl_rt_"), "customers")
+    out = os.path.join(scratch_dir("jsonl_rt_"), "customers")
     cust.write.mode("overwrite").json(out)
     back = spark.read.schema(
         "c_custkey bigint, c_mktsegment string, c_acctbal double"
@@ -1240,7 +1240,7 @@ def s25_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("s_acctbal") >= 0)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="xml_rt_"), "suppliers")
+    out = os.path.join(scratch_dir("xml_rt_"), "suppliers")
     sup.write.mode("overwrite").option("rowTag", "supplier").format("xml").save(out)
     back = (
         spark.read.schema(
@@ -1281,7 +1281,7 @@ def s21_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
     dels = ev.select("user_id").distinct().filter(F.col("user_id") % 13 == 0)
     survivors = ev.join(F.broadcast(dels), "user_id", "left_anti")
-    out = os.path.join(tempfile.mkdtemp(prefix="gdpr_del_"), "events_v2")
+    out = os.path.join(scratch_dir("gdpr_del_"), "events_v2")
     survivors.write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
     return back.groupBy("event_type").agg(

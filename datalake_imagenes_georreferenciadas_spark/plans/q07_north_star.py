@@ -26,8 +26,8 @@ from ._qbase import (
     register,
     scratch_dir,
     shard_stream,
+    stage_dir,
     table,
-    tempfile,
     topk_per_group,
 )
 from .q01_j1 import _simhash_sql
@@ -270,9 +270,6 @@ def w9_trailing_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PYDS_FIXTURE: dict[str, str] = {}
-
-
 @register(
     "s1_python_datasource",
     """
@@ -308,9 +305,7 @@ def s1_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import tiff as _tiff
     from ..sources.pyds import register_exifscan
 
-    dest = _PYDS_FIXTURE.get(sf_dir)
-    if dest is None:
-        dest = tempfile.mkdtemp(prefix="pyds_fix_")
+    def write(dest: str) -> None:
         for i in range(40):
             with open(os.path.join(dest, f"{i}.jpg"), "wb") as f:
                 f.write(
@@ -332,7 +327,8 @@ def s1_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
                         0.25 + (i % 4) / 8.0,
                     )
                 )
-        _PYDS_FIXTURE[sf_dir] = dest
+
+    dest = stage_dir(spark, ("pyds", sf_dir), write)
     register_exifscan(spark)
     scan = spark.read.format("exifscan").option("numPartitions", "8").load(dest)
     return (
@@ -350,11 +346,6 @@ def s1_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("checksum"),
         )
     )
-
-
-# One partitioned fact layout + month-dim parquet per (session, sf_dir)
-# — a standing lake layout, like _BUCKETED_LAYOUTS and _DERBY_DBS.
-_DPP_LAYOUTS: dict[str, str] = {}
 
 
 @register(
@@ -380,13 +371,11 @@ def j_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot apply; at runtime Spark turns the dim's surviving keys into a
     partition filter on the fact scan (`dynamicpruningexpression` in
     the formatted plan, asserted by tools/explain_audit.py) and reads 3
-    of ~80 partitions instead of all of them. Layout written once per
-    session (standing-table posture, like the bucketed join)."""
-    import uuid
+    of ~80 partitions instead of all of them. Layout staged once per
+    application and sf_dir (standing-table posture, like the bucketed
+    join)."""
 
-    base = _DPP_LAYOUTS.get(sf_dir)
-    if base is None:
-        base = os.path.join(tempfile.mkdtemp(prefix="dpp_"), uuid.uuid4().hex[:8])
+    def write(base: str) -> None:
         li = table(spark, sf_dir, "lineitem").select(
             "l_extendedprice",
             F.date_format("l_shipdate", "yyyy-MM").alias("ship_month"),
@@ -405,7 +394,8 @@ def j_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
         dim.write.parquet(os.path.join(base, "dim"))
-        _DPP_LAYOUTS[sf_dir] = base
+
+    base = stage_dir(spark, ("dpp", sf_dir), write)
     # Explicit schemas: a zero-row source writes no data files, and the
     # layout's schema is a contract, not something to re-infer per read.
     fact = spark.read.schema("l_extendedprice double, ship_month string").parquet(
@@ -742,17 +732,13 @@ def ts_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarser granularities come almost free once the finest is paid for,
     and each level is independently mergeable for incremental refresh
     (the `incremental_agg_merge` pattern)."""
-    import uuid
-
     ev = table(spark, sf_dir, "events").select(
         F.unix_timestamp(F.date_trunc("day", "ts")).alias("day_epoch"),
         F.unix_timestamp(F.date_trunc("hour", "ts")).alias("hour_epoch"),
         "value",
     )
-    name = f"__htr_{uuid.uuid4().hex[:8]}"
-    ev.createOrReplaceTempView(name)
     return spark.sql(
-        f"""
+        """
         SELECT CASE WHEN grouping(hour_epoch) = 1 THEN 'day' ELSE 'hour' END
                  AS granularity,
                day_epoch,
@@ -760,9 +746,10 @@ def ts_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS hour_epoch,
                count(*) AS n,
                CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        FROM {name}
+        FROM {ev}
         GROUP BY GROUPING SETS ((day_epoch), (day_epoch, hour_epoch))
-        """
+        """,
+        ev=ev,
     )
 
 
@@ -868,7 +855,7 @@ def s22_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") < 200)
         .select("doc_id", "text")
     )
-    dest = tempfile.mkdtemp(prefix="orphan_scan_")
+    dest = scratch_dir("orphan_scan_")
 
     def write_files(rows):
         for r in rows:

@@ -253,23 +253,21 @@ def j_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the subquery per outer row (the per-row loop a naive engine would
     run). Same semantics as `w1_topk_per_group`, exercised through the
     LATERAL SQL path."""
-    import uuid
-
-    sfx = uuid.uuid4().hex[:8]
-    for t in ("region", "nation", "customer"):
-        table(spark, sf_dir, t).createOrReplaceTempView(f"__lat_{t}_{sfx}")
     return spark.sql(
-        f"""
+        """
         SELECT r.r_name, t.n_name, t.n_customers
-        FROM __lat_region_{sfx} r, LATERAL (
+        FROM {region} r, LATERAL (
           SELECT n.n_name, count(*) AS n_customers
-          FROM __lat_nation_{sfx} n
-          JOIN __lat_customer_{sfx} c ON c.c_nationkey = n.n_nationkey
+          FROM {nation} n
+          JOIN {customer} c ON c.c_nationkey = n.n_nationkey
           WHERE n.n_regionkey = r.r_regionkey
           GROUP BY n.n_name
           ORDER BY n_customers DESC, n.n_name
           LIMIT 2) t
-        """
+        """,
+        region=table(spark, sf_dir, "region"),
+        nation=table(spark, sf_dir, "nation"),
+        customer=table(spark, sf_dir, "customer"),
     )
 
 

@@ -16,11 +16,12 @@ from ._qbase import (
     Window,
     _dsum,
     _dsum_sql,
+    documents_catalog,
     os,
     register,
+    scratch_dir,
     spread,
     table,
-    tempfile,
 )
 from .q01_j1 import _near_pairs_cte
 from .q10_round_7 import _NDCG_SQL, _NDCG_W
@@ -190,7 +191,7 @@ def s26_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate must equal the oracle's expected post-restatement state.
     At 100 TB only the restated partition is rewritten; the others are
     never opened."""
-    dest = os.path.join(tempfile.mkdtemp(prefix="dynover_"), "orders_by_prio")
+    dest = os.path.join(scratch_dir("dynover_"), "orders_by_prio")
     # path safety (same posture as s16): a partition value is a
     # directory name; dirty multi-KB priorities go to the bad-records
     # channel, mirrored in the oracle's length guard
@@ -434,32 +435,7 @@ def catalog_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical cardinality (copy-on-write replaces rows)."""
     import shutil
 
-    from ..catalog.store import CatalogStore
-
-    docigo = F.concat(F.lit("C"), (F.col("doc_id") % 10).cast("string"))
-    rows = table(spark, sf_dir, "documents").select(
-        F.concat_ws("_", docigo, F.col("lang"), F.lit("X"), F.lit("A")).alias(
-            "indice"
-        ),
-        docigo.alias("codigo"),
-        F.lit("P").alias("nombre_predio"),
-        F.lit("S").alias("seccion"),
-        F.lit("E").alias("especie"),
-        F.lit("A").alias("apl"),
-        F.lit(0).cast("int").alias("id_tipo_img"),
-        F.lit(0).cast("int").alias("id_proceso"),
-        F.concat(
-            F.lit("lake/BR/"),
-            docigo,
-            F.lit("/"),
-            F.col("doc_id").cast("string"),
-            F.lit(".jpg"),
-        ).alias("ruta_resultado"),
-        F.current_timestamp().alias("fecha"),
-    )
-    store = CatalogStore(spark, tempfile.mkdtemp(prefix="catalog_expire_"))
-    run_id = store.start_run(0)
-    store.insert_catalog(rows, run_id)
+    store = documents_catalog(spark, sf_dir)
     # r19 (guide §5 driver discipline / §1.2 don't recompute): ONE id
     # collect; the %10 slicing is a pure function of the ids. r20: read
     # the ids back from the just-written v0 snapshot instead of

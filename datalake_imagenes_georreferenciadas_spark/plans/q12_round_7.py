@@ -19,9 +19,9 @@ from ._qbase import (
     _dsum_sql,
     os,
     register,
+    scratch_dir,
     spread,
     table,
-    tempfile,
 )
 from .q01_j1 import _COMPONENTS_SQL
 from .q05_training import _TOKS_SQL
@@ -955,7 +955,7 @@ def s27_csv_badrecords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey", "o_totalprice", "o_orderstatus")
         .collect()
     )
-    d = tempfile.mkdtemp(prefix="csv_bad_")
+    d = scratch_dir("csv_bad_")
     path = os.path.join(d, "feed.csv")
     with open(path, "w", newline="") as fh:
         w = csv.writer(fh)

@@ -22,7 +22,6 @@ from ._qbase import (
     shard_stream,
     spread,
     table,
-    tempfile,
 )
 from .q10_round_7 import _IVFPQ_NCELLS
 
@@ -418,7 +417,7 @@ def s28_column_rename_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderkey").isNotNull())
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    root = tempfile.mkdtemp(prefix="rename_evo_")
+    root = scratch_dir("rename_evo_")
     old_dir = os.path.join(root, "v_old")
     new_dir = os.path.join(root, "v_new")
     o.filter(F.col("o_orderkey") % 2 == 0).select(
@@ -1094,12 +1093,6 @@ def corpus_token_apportion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-
-
-_LUHN_SQL_DIGITS = (
-    "list_transform(range(1, len(pan) + 1), "
-    "i -> CAST(substring(pan, len(pan) - i + 1, 1) AS BIGINT))"
-)
 
 
 @register(

@@ -1,22 +1,17 @@
-"""File readers/sinks beyond parquet (SURVEY S5/S6/S9/S11/S12/S16).
+"""File readers beyond parquet (SURVEY S5/S6).
 
-- CSV sink (S11): the reference appends a header line to ``indices.csv``
-  and never writes rows (script_geo.py:158-160, §2.11 bug 3); the intent
-  — a header'd CSV of classification records — is one ``df.write.csv``.
-- JSON feature scan (S6): ``spark.read.json`` with explicit schema.
-- JDBC (S9/S13): pass-through helpers; no database in this container, so
-  they only assemble the reader/writer (tested for plan shape, not I/O).
-- Content-addressed copy sink (S12/S16): ``foreachPartition`` writer that
-  lays blobs out ``<clase>/<codigo>/<md5(content)>.<ext>`` — the data-lake
-  layout of download_list_images.py:44-55 with the content-key fix.
+- JSON feature scan (S6): ``spark.read.json`` with an explicit schema,
+  over the ring schema of every (Multi)Polygon shell and hole (S5).
+
+The CSV, ORC, JSONL, XML and JDBC sinks and scans are plain
+``DataFrameReader`` / ``DataFrameWriter`` calls inside the registered
+queries that exercise them (``s11_csv_roundtrip``, ``s19_orc_roundtrip``,
+``s9_jdbc_roundtrip``, ...).
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, DataFrameReader, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 RING_SCHEMA = T.ArrayType(
@@ -45,53 +40,3 @@ def read_features_json(spark: SparkSession, path: str) -> DataFrame:
     schema — no inference pass over 100 TB."""
     return spark.read.schema(FEATURE_SCHEMA).json(path)
 
-
-def write_indices_csv(df: DataFrame, path: str) -> None:
-    """S11: the indices.csv sink (header + rows — fixing §2.11 bug 3)."""
-    df.write.mode("overwrite").option("header", True).csv(path)
-
-
-def jdbc_reader(spark: SparkSession, url: str, table: str, **options: str) -> DataFrameReader:
-    """S9: assemble a JDBC reader (driver pushdown handles the reference's
-    INFORMATION_SCHEMA peek; no DB in-container, so unexecuted)."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader
-
-
-def write_content_addressed(
-    df: DataFrame,
-    dest_root: str,
-    content_col: str = "content",
-    clase_col: str = "clase",
-    codigo_col: str = "codigo",
-    ext_col: str = "ext",
-) -> DataFrame:
-    """S12: distributed content-addressed blob sink.
-
-    Each partition writes its own blobs (no driver collect); key is
-    ``md5(content)`` — true content addressing. Returns (path_written,
-    content_key) rows for catalog insertion.
-    """
-    keyed = df.withColumn("content_key", F.md5(F.col(content_col)))
-
-    def write_partition(rows):
-        for r in rows:
-            d = os.path.join(dest_root, r[clase_col], r[codigo_col])
-            os.makedirs(d, exist_ok=True)
-            p = os.path.join(d, f"{r['content_key']}.{r[ext_col]}")
-            with open(p, "wb") as f:
-                f.write(bytes(r[content_col]))
-
-    keyed.foreachPartition(write_partition)
-    return keyed.select(
-        F.concat_ws(
-            "/",
-            F.lit(dest_root.rstrip("/")),
-            F.col(clase_col),
-            F.col(codigo_col),
-            F.concat(F.col("content_key"), F.lit("."), F.col(ext_col)),
-        ).alias("ruta_resultado"),
-        F.col("content_key"),
-    )

@@ -77,16 +77,3 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n, *keys) if keys else df.repartition(n)
-
-
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Load every testdata table; returns name → DataFrame."""
-    return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Load tables and register each as a temp view for the SQL surface."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
