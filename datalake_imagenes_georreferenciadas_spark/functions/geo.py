@@ -13,10 +13,10 @@ Reference cites (/root/reference/script_geo.py):
 - F13 euclidean distance / nearest point — 92, 118-124, 136
 
 CRS reprojection (F9, ``convertirCoordenadas`` 42-61) is a dimension-prep
-step done once at polygon load — see :func:`reproject_utm_to_wgs84_approx`
-(a pandas_udf wrapping pyproj is the production path; pyproj isn't in this
-container, so the vectorized affine approximation stands in and the UDF
-shape is identical).
+step done once at polygon load, as column arithmetic too:
+:func:`reproject_utm_to_wgs84_approx` (closed-form approximation) and
+:func:`reproject_utm_to_wgs84_exact` (Snyder's transverse-Mercator
+series) replace pyproj's row-at-a-time transformer.
 """
 
 from __future__ import annotations
@@ -112,46 +112,13 @@ def dist2(ax: Column, ay: Column, bx: Column, by: Column) -> Column:
     return (ax - bx) * (ax - bx) + (ay - by) * (ay - by)
 
 
-try:  # importable-optional real reprojection (VERDICT r1 #6)
-    import pyproj as _pyproj
-except ImportError:  # container has no pyproj — approximation path
-    _pyproj = None
-
-
-def reproject_utm_to_wgs84(x: Column, y: Column, zone: int = 18, south: bool = True) -> Column:
-    """F9: UTM→WGS84 as ``struct<lon,lat>``.
-
-    When pyproj is importable this is the production body — a vectorized
-    Arrow pandas_udf over ``Transformer.from_crs`` (the reference's
-    ``convertirCoordenadas``, script_geo.py:33-61, done columnar instead
-    of row-at-a-time). Otherwise it falls back to the deterministic
-    closed-form approximation, which is also the cross-engine twin the
-    DuckDB oracles reproduce (``geo_reproject_centroid`` pins the approx
-    variant explicitly for that reason).
-    """
-    if _pyproj is None:
-        return reproject_utm_to_wgs84_approx(x, y, zone, south)
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    epsg = (32700 if south else 32600) + zone
-
-    def _conv(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
-        tr = _pyproj.Transformer.from_crs(f"EPSG:{epsg}", "EPSG:4326", always_xy=True)
-        lon, lat = tr.transform(xs.to_numpy(), ys.to_numpy())
-        return pd.DataFrame({"lon": lon, "lat": lat})
-
-    # explicit return-type form: hint inference breaks under
-    # `from __future__ import annotations`
-    return pandas_udf(_conv, "lon double, lat double")(x, y)
-
-
 def reproject_utm_to_wgs84_approx(x: Column, y: Column, zone: int = 18, south: bool = True) -> Column:
-    """F9 stand-in: inverse-Mercator-style approximation of UTM→WGS84.
+    """F9: inverse-Mercator-style approximation of UTM→WGS84 as
+    ``struct<lon,lat>``.
 
-    The deterministic closed-form twin of :func:`reproject_utm_to_wgs84`
-    — pure column arithmetic both engines reproduce bit-for-bit, used by
-    the oracles and as the fallback when pyproj isn't importable.
+    Pure column arithmetic both engines reproduce bit-for-bit; the
+    oracles replay it. :func:`reproject_utm_to_wgs84_exact` is the
+    accurate series when metres matter.
     """
     # central meridian of the UTM zone; simple equirectangular inverse
     lon0 = F.lit(float(zone * 6 - 183))

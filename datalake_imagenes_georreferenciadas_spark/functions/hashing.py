@@ -1,4 +1,4 @@
-"""Cross-engine deterministic hashing, shingling, and MinHash signatures.
+"""Cross-engine deterministic hashing, shingling, and LSH band keys.
 
 The reference's only hash use is ``md5(os.urandom(32))`` as a (buggy —
 random, not content-derived) object key (download_list_images.py:45); we
@@ -79,30 +79,6 @@ def shingles_sql(text_expr: str, k: int = 3) -> str:
     return (
         f"(CASE WHEN len({toks}) < {k} THEN [] "
         f"ELSE list_transform(list_zip({slices}), z -> {joined}) END)"
-    )
-
-
-def minhash_signature(shingle_col: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature: per seed, the min :func:`hash64` over shingles.
-
-    Returns ``array<bigint>`` of length ``num_hashes`` (nulls when the
-    shingle set is empty). Nested higher-order functions — still a single
-    codegen'd projection per row.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda s: F.array_min(
-            F.transform(
-                shingle_col,
-                lambda sh: F.conv(
-                    F.substring(
-                        F.md5(F.concat(s.cast("string"), F.lit(":"), sh)), 1, HASH_HEX_CHARS
-                    ),
-                    16,
-                    10,
-                ).cast("bigint"),
-            )
-        ),
     )
 
 

@@ -2,10 +2,10 @@
 
 The reference extracts EXIF GPS from JPEGs (``gpsphoto.getGPSData``,
 script_geo.py:170-171) and geotransforms from GeoTIFFs
-(``gdal.Open(...).GetGeoTransform()``, script_geo.py:176-179). Neither
-PIL nor GDAL is installable in this container — but the METADATA layer
-of both formats is plain TIFF tag structure (byte-order header + IFD
-entry walk + typed values), fully parseable with ``struct``:
+(``gdal.Open(...).GetGeoTransform()``, script_geo.py:176-179). The
+METADATA layer of both formats is plain TIFF tag structure (byte-order
+header + IFD entry walk + typed values), fully parseable with
+``struct``:
 
 - a JPEG's EXIF block is a TIFF stream embedded in the APP1 segment;
   GPS coordinates live in a GPS sub-IFD as RATIONAL triples (deg, min,
@@ -14,12 +14,12 @@ entry walk + typed values), fully parseable with ``struct``:
   (ModelPixelScale 33550, ModelTiepoint 33922) next to the standard
   ImageWidth/ImageLength tags.
 
-So S7/S8 don't need the heavyweight decoders for the metadata path at
-all: these parsers run the REAL byte-level extraction (both byte
-orders), and PIL/GDAL remain optional upgrades only for pixel decode.
-The writers emit minimal spec-shaped files (sorted IFD tags, correct
-offsets) so fixtures exercise the parsers end-to-end with
-deterministic, oracle-computable coordinates.
+So S7/S8 need no image library: these parsers are the engine's one
+metadata decoder (``sources.binary._decode_image``) and run the real
+byte-level extraction in both byte orders. The writers emit minimal
+spec-shaped files (sorted IFD tags, correct offsets) so fixtures
+exercise the parsers end-to-end with deterministic, oracle-computable
+coordinates.
 """
 
 from __future__ import annotations

@@ -28,7 +28,7 @@ Everything is built on the cross-engine md5 hash family
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import (
@@ -519,6 +519,27 @@ def components_from_edges(
     return labels
 
 
+def _sign_votes(h: str, prefix: str, num_bits: int) -> tuple[list[Column], Column]:
+    """SimHash bit votes over the hash column ``h``: the per-bit
+    ``sum(±1)`` aggregates (aliased ``<prefix><b>``) and the expression
+    packing the positive votes into a BIGINT. Parsed from SQL strings,
+    not composed through ~10 py4j calls per bit (r19)."""
+    votes = [
+        F.expr(
+            f"sum(CASE WHEN (shiftright({h}, {b}) & 1) = 1 THEN 1 ELSE -1 END)"
+        ).alias(f"{prefix}{b}")
+        for b in range(num_bits)
+    ]
+    pack = F.expr(
+        " + ".join(
+            f"(CASE WHEN {prefix}{b} > 0 THEN CAST({1 << b} AS BIGINT) "
+            f"ELSE CAST(0 AS BIGINT) END)"
+            for b in range(num_bits)
+        )
+    )
+    return votes, pack
+
+
 def simhash_table(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -535,27 +556,13 @@ def simhash_table(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("__t")
     )
     h = ex.select(F.col(id_col), hash64(F.col("__t"), seed=0).alias("__h"))
-    # r19 (guide §1.2 per-task/driver work): the per-bit vote aggregates
-    # and the fingerprint pack are parsed from SQL strings instead of
-    # composed through ~10 py4j calls per bit — same expression nodes,
-    # same results (hash-verified), ~1 s less driver time per query
-    # construction at 32 bits (simhash_pairs fresh 2.76 s → 1.78 s; an
-    # eager-checkpoint variant of the fingerprint table was also tried
-    # and rejected — stats loss made the band self-join slower combined).
-    votes = [
-        F.expr(
-            f"sum(CASE WHEN (shiftright(__h, {b}) & 1) = 1 THEN 1 ELSE -1 END)"
-        ).alias(f"__b{b}")
-        for b in range(num_bits)
-    ]
+    # r19 (guide §1.2 per-task/driver work): SQL-string votes save ~1 s
+    # of driver time per query construction at 32 bits (simhash_pairs
+    # fresh 2.76 s → 1.78 s; an eager-checkpoint variant of the
+    # fingerprint table was also tried and rejected — stats loss made
+    # the band self-join slower combined).
+    votes, fp = _sign_votes("__h", "__b", num_bits)
     g = h.groupBy(id_col).agg(*votes)
-    fp = F.expr(
-        " + ".join(
-            f"(CASE WHEN __b{b} > 0 THEN CAST({1 << b} AS BIGINT) "
-            f"ELSE CAST(0 AS BIGINT) END)"
-            for b in range(num_bits)
-        )
-    )
     return (
         df.select(F.col(id_col))
         .join(g, id_col, "left")
@@ -798,23 +805,10 @@ def simhash_banded_table(
             )
         ).alias("bh"),
     ).select(F.col(id_col), F.col("bh.b").alias("b"), F.col("bh.h").alias("h"))
-    # r19: votes + key pack parsed from SQL strings (same nodes, same
-    # results — see simhash_table; at the 24-bit probe width the py4j
-    # saving is ~3× the 32-bit case)
-    votes = [
-        F.expr(
-            f"sum(CASE WHEN (shiftright(h, {j}) & 1) = 1 THEN 1 ELSE -1 END)"
-        ).alias(f"__s{j}")
-        for j in range(band_bits)
-    ]
+    # at the 24-bit probe width the SQL-string votes save ~3× the
+    # 32-bit case's py4j time
+    votes, key = _sign_votes("h", "__s", band_bits)
     g = lanes.groupBy(id_col, "b").agg(*votes)
-    key = F.expr(
-        " + ".join(
-            f"(CASE WHEN __s{j} > 0 THEN CAST({1 << j} AS BIGINT) "
-            f"ELSE CAST(0 AS BIGINT) END)"
-            for j in range(band_bits)
-        )
-    )
     wide = g.select(F.col(id_col), F.col("b"), key.alias("k")).groupBy(id_col).agg(
         F.array(
             *[

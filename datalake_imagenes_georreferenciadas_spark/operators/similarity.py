@@ -54,45 +54,33 @@ def _plane_matrix(num_planes: int, dim: int) -> tuple[tuple[float, ...], ...]:
 
 
 def hyperplane_signature(
-    vec: Column, num_planes: int = 8, dim: int = 64, plane_offset: int = 0
+    vec_col: str, num_planes: int = 8, dim: int = 64, plane_offset: int = 0
 ) -> Column:
-    """Sign pattern of the vector against ``num_planes`` hyperplanes,
-    packed into a BIGINT bucket id. ``dim`` must equal the vector length
-    (the plane matrix is a plan-time literal). ``plane_offset`` selects a
-    disjoint slice of the global plane family, so band ``b`` of a banded
-    scheme gets independent hash functions via
-    ``plane_offset=b*planes_per_band``.
+    """Sign pattern of the vector column ``vec_col`` against
+    ``num_planes`` hyperplanes, packed into a BIGINT bucket id. ``dim``
+    must equal the vector length (the plane matrix is a plan-time
+    literal). ``plane_offset`` selects a disjoint slice of the global
+    plane family, so band ``b`` of a banded scheme gets independent hash
+    functions via ``plane_offset=b*planes_per_band``.
 
     r19 (guide §1.2 per-task work / §4.1): the expression tree is built
     by PARSING ONE SQL STRING instead of composing ~1,300 Column nodes
     through py4j — the py4j round-trips were ~1.3 s of driver time per
     QUERY CONSTRUCTION (paid on every bench pass and every real job
     submission), dwarfing the execution itself at any corpus size where
-    planning matters. The parsed tree is node-for-node the SAME
-    aggregate/zip_with left-fold as before (same literals, same
-    fold-from-0.0 order, same null semantics), so every registered
-    bucket id is bit-identical — verified by direct old-vs-new column
-    equality on clean + degenerate vectors and the full oracle suite.
+    planning matters. The parsed tree is an aggregate/zip_with left-fold
+    per plane (fold from 0.0, same null semantics as the DuckDB twin).
     Measured (sf0.1, 4 bands × 5 planes, fresh pass incl. construction):
     2.08 s → 0.78 s; a scalar-unrolled codegen variant was also tried
     and REJECTED — its multi-thousand-node tree cost more in per-pass
-    codegen than it saved per row (4.1 s fresh). Callers that pass a
-    computed (non-attribute) vector expression fall back to the
-    identical Column-built tree."""
-    # r20 (ADVICE): gate the SQL splice on a strict identifier regex
-    # (optionally dot-qualified) instead of the loose isalnum() check —
-    # leading-digit/unicode names are NOT valid unquoted SQL and failed
-    # at parse time instead of falling back; backtick-quote each path
-    # segment so any admitted name round-trips; and guard the private
-    # ``_jc`` access (absent under Spark Connect) with a try/except that
-    # falls back to the identical Column-built tree.
-    try:
-        name = vec._jc.toString()
-    except Exception:
-        return _hyperplane_signature_hof(vec, num_planes, dim, plane_offset)
-    segs = name.split(".")
+    codegen than it saved per row (4.1 s fresh).
+
+    ``vec_col`` is a column name, optionally dot-qualified; each segment
+    must be a plain identifier and is backtick-quoted in the splice, so
+    any other name raises ``ValueError`` instead of reaching the parser."""
+    segs = vec_col.split(".")
     if not all(re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", s) for s in segs):
-        return _hyperplane_signature_hof(vec, num_planes, dim, plane_offset)
+        raise ValueError(f"hyperplane_signature: not a column name: {vec_col!r}")
     quoted = ".".join(f"`{s}`" for s in segs)
     planes = _plane_matrix(plane_offset + num_planes, dim)
     parts = []
@@ -107,28 +95,6 @@ def hyperplane_signature(
             f"ELSE CAST(0 AS BIGINT) END)"
         )
     return F.expr("CAST(0 AS BIGINT) + " + " + ".join(parts))
-
-
-def _hyperplane_signature_hof(
-    vec: Column, num_planes: int = 8, dim: int = 64, plane_offset: int = 0
-) -> Column:
-    """The pre-r19 higher-order-function formulation — kept as the
-    fallback for callers that pass a computed (non-attribute) vector
-    expression, where splicing into a SQL string isn't possible. Result
-    bits are identical to the unrolled path (same fold order)."""
-    planes = _plane_matrix(plane_offset + num_planes, dim)
-    bucket = F.lit(0).cast("bigint")
-    for p in range(num_planes):
-        plane = F.array(*[F.lit(c) for c in planes[plane_offset + p]])
-        proj = F.aggregate(
-            F.zip_with(vec, plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(proj >= 0, F.lit(1 << p).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-    return bucket
 
 
 def hyperplane_signature_sql(
@@ -310,7 +276,7 @@ def cosine_near_pairs(
         F.col(data_id),
         *[
             hyperplane_signature(
-                F.col(vec_col),
+                vec_col,
                 planes_per_band,
                 dim,
                 plane_offset=band * planes_per_band,
@@ -424,11 +390,11 @@ def lsh_ann_topk(
     """Approximate top-k: equi-join on hyperplane bucket, then exact cosine
     + window inside the bucket. Recall trades off with ``num_planes``; at
     scale add multi-probe (flip one bit) unions."""
-    d = data.withColumn("__bucket", hyperplane_signature(F.col(vec_col), num_planes, dim))
+    d = data.withColumn("__bucket", hyperplane_signature(vec_col, num_planes, dim))
     q = queries.select(
         F.col(query_id),
         F.col(vec_col).alias("__qv"),
-        hyperplane_signature(F.col(vec_col), num_planes, dim).alias("__bucket"),
+        hyperplane_signature(vec_col, num_planes, dim).alias("__bucket"),
     )
     scored = d.join(F.broadcast(q), "__bucket").select(
         query_id,

@@ -672,7 +672,7 @@ def ann_hyperplane_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").isNotNull()
     )
     return emb.select(
-        "vec_id", SIM.hyperplane_signature(F.col("embedding"), 6).alias("bucket")
+        "vec_id", SIM.hyperplane_signature("embedding", 6).alias("bucket")
     )
 
 

@@ -453,8 +453,8 @@ FROM (
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image-resize kernel contract (SURVEY §2.10 multimodal family):
     binary column → Arrow-batched mapInPandas thumbnail kernel
-    (sources/binary.py resize_images — REAL ``PIL.resize`` when the
-    wheel exists, deterministic digest-slice stub in this container) →
+    (sources/binary.py resize_images — the deterministic digest-slice
+    thumbnail stub) →
     per-image (width, height, byte length, content digest). The oracle
     replays the stub's digest chain in hex-string space (byte slicing
     aligns to hex pairs), so schema, batch plumbing, and binary-out

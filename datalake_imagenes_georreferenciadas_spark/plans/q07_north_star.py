@@ -915,7 +915,7 @@ def ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = emb.select(
         "vec_id",
-        SIM.hyperplane_signature(F.col("embedding"), 6).alias("bucket"),
+        SIM.hyperplane_signature("embedding", 6).alias("bucket"),
         "embedding",
     )
     q = b.filter(F.col("vec_id").isin(0, 1, 2)).select(

@@ -7,17 +7,20 @@ structs, read via Spark's ``binaryFile`` source:
       → (path, modificationTime, length, content BINARY)
 
 Decode / feature-extract kernels run as Arrow-batched ``mapInPandas``
-generators — the Spark-side plumbing (schema, batch shape, partitioning)
-is real and tested; the pixel decode itself is STUBBED (no PIL/GDAL in
-this container) behind ``_decode_image_stub``, a deterministic fake
-derived from the content bytes, exactly where a PIL/gdal call would go.
+generators. Image metadata has one decoder: the stdlib TIFF/EXIF walker
+(``functions.tiff``) reads EXIF GPS from JPEGs and the geotransform and
+dimensions from GeoTIFFs. Bytes it cannot parse (the synthetic landing
+zone holds text, not images) get ``_decode_image_stub``, a deterministic
+fake derived from the content digest that the oracles replay. Pixel
+work (resize, frame sampling, audio features) has no decoder here and
+runs as digest stubs with the same Spark-side contract.
 
 Reference parity:
 - S1 object-store list+fetch (download_list_images.py:17-25) → binaryFile
   scan (the listing, download loop, and temp-dir lifecycle all collapse
   into the source).
-- S7 EXIF GPS extract (script_geo.py:170-171) → :func:`extract_exif_gps`.
-- S8 raster geotransform read (script_geo.py:175-179) → :func:`extract_raster_meta`.
+- S7 EXIF GPS extract (script_geo.py:170-171) and S8 raster
+  geotransform read (script_geo.py:175-179) → :func:`extract_image_meta`.
 - P6 type dispatch BR/TIF (script_geo.py:167-175) → expression dispatch on
   extension + decode success, not exception control flow.
 """
@@ -39,76 +42,10 @@ from pyspark.sql import functions as F
 
 from ..tables import table
 
-# Importable-optional REAL decode bodies (VERDICT r1 #6): when PIL/GDAL
-# exist the kernels decode for real; when the import fails — or a given
-# blob doesn't decode — they fall back to the deterministic digest stub.
-# Module-level flags so the mapInPandas closures (pickled by reference)
-# resolve them on executors without re-probing per batch.
-try:
-    from PIL import Image as _PILImage
-except ImportError:  # container has no PIL — stub path
-    _PILImage = None
-try:
-    from osgeo import gdal as _gdal
-except ImportError:  # container has no GDAL — stub path
-    _gdal = None
-
-#: EXIF tag id of the GPS IFD
-_GPSINFO_TAG = 34853
-
 IMAGE_META_SCHEMA = (
     "path string, length long, clase string, lat double, lon double, "
     "gt array<double>, cols int, rows int"
 )
-
-
-def _exif_gps_real(content: bytes):
-    """S7 real body: EXIF GPS via PIL (the reference's
-    ``gpsphoto.getGPSData``, script_geo.py:170-171). Returns (lat, lon)
-    or None when the bytes don't decode or carry no GPS IFD — the caller
-    then falls back to the stub, keeping output deterministic for
-    non-image inputs."""
-    try:
-        exif = _PILImage.open(io.BytesIO(content)).getexif()
-        gps = exif.get_ifd(_GPSINFO_TAG) if exif else None
-    except Exception:
-        return None
-    if not gps:
-        return None
-
-    def _deg(v, ref: str, neg: str):
-        try:
-            d, m, s = (float(x) for x in v)
-        except (TypeError, ValueError):
-            return None
-        out = d + m / 60.0 + s / 3600.0
-        return -out if ref in neg else out
-
-    lat = _deg(gps.get(2), str(gps.get(1, "")), "S") if gps.get(2) else None
-    lon = _deg(gps.get(4), str(gps.get(3, "")), "W") if gps.get(4) else None
-    if lat is None or lon is None:
-        return None
-    return lat, lon
-
-
-def _raster_meta_real(content: bytes):
-    """S8 real body: geotransform + dims via GDAL's in-memory filesystem
-    (the reference's ``gdal.Open(...).GetGeoTransform()``,
-    script_geo.py:176-179). Returns (gt, cols, rows) or None."""
-    name = f"/vsimem/{hashlib.md5(content).hexdigest()}"
-    try:
-        _gdal.FileFromMemBuffer(name, bytes(content))
-        ds = _gdal.Open(name)
-        if ds is None:
-            return None
-        return list(ds.GetGeoTransform()), ds.RasterXSize, ds.RasterYSize
-    except Exception:
-        return None
-    finally:
-        try:
-            _gdal.Unlink(name)
-        except Exception:
-            pass
 
 
 def read_binary_dir(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
@@ -232,14 +169,9 @@ def stage_documents(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _decode_image_stub(content: bytes, path: str) -> dict:
-    """Deterministic fake decode — STAND-IN for PIL/GPSPhoto/GDAL.
-
-    Real implementation: ``gpsphoto.getGPSData`` for JPG EXIF
-    (script_geo.py:170) and ``gdal.Open(...).GetGeoTransform()`` for
-    GeoTIFF (script_geo.py:176-179). Not installed in this container, so
-    metadata is derived from a content digest: same plumbing, stable
-    outputs, clearly fake values.
-    """
+    """Deterministic fake decode for bytes the TIFF/EXIF walker cannot
+    parse: metadata derived from a content digest — stable outputs,
+    clearly fake values, reproducible by the oracles."""
     digest = hashlib.md5(content).digest()
 
     def frac(i: int) -> float:
@@ -266,12 +198,11 @@ def _decode_image_stub(content: bytes, path: str) -> dict:
 
 
 def _decode_image(content: bytes, path: str) -> dict:
-    """Per-row decode dispatch, three tiers: library kernel (PIL/GDAL)
-    when importable AND the bytes decode → pure-stdlib TIFF/EXIF parser
-    (functions.tiff — ALWAYS available, the real byte-level metadata
-    extraction) → deterministic digest stub. Mirrors the reference's
-    try/except dispatch (script_geo.py:167-175) so a corrupt blob
-    degrades instead of failing the task — and keeps the digest-twin
+    """Per-row decode dispatch, two tiers: the stdlib TIFF/EXIF parser
+    (functions.tiff — EXIF GPS for ``.jpg``/``.jpeg``, geotransform and
+    dims otherwise), then the deterministic digest stub. Mirrors the
+    reference's try/except dispatch (script_geo.py:167-175) so a corrupt
+    blob degrades instead of failing the task — and keeps the digest-twin
     oracle valid on synthetic (non-image) fixtures."""
     from ..functions import tiff as _tiff
 
@@ -286,9 +217,7 @@ def _decode_image(content: bytes, path: str) -> dict:
         }
     content = bytes(content)
     if path.lower().endswith((".jpg", ".jpeg")):
-        gps = _exif_gps_real(content) if _PILImage is not None else None
-        if gps is None:
-            gps = _tiff.parse_exif_gps(content)
+        gps = _tiff.parse_exif_gps(content)
         if gps is not None:
             return {
                 "clase": "BR",
@@ -299,9 +228,7 @@ def _decode_image(content: bytes, path: str) -> dict:
                 "rows": None,
             }
     else:
-        meta = _raster_meta_real(content) if _gdal is not None else None
-        if meta is None:
-            meta = _tiff.parse_tiff_meta(content)
+        meta = _tiff.parse_tiff_meta(content)
         if meta is not None:
             return {
                 "clase": "TIF",
@@ -344,7 +271,7 @@ def content_key(df: DataFrame, content_col: str = "content") -> DataFrame:
 
 # ---- north-star multimodal kernels (resize / frame-sample) --------------
 #
-# Real decoders (PIL/ffmpeg) aren't in this container; the *Spark-side
+# No pixel or video decoder is in the environment; the *Spark-side
 # contract* — Arrow batch shape, output schema, partition-parallel map — is
 # the engine surface. Each stub derives deterministic output from the bytes
 # so tests can assert end-to-end through mapInPandas.
@@ -359,30 +286,18 @@ def _resize_stub(b: bytes, width: int, height: int) -> bytes:
 
 
 def _resize_one(b: bytes, width: int, height: int) -> bytes | None:
-    """REAL resize when PIL is importable and the bytes decode (PNG-encoded
-    thumbnail); digest stub otherwise — same binary-out contract. A NULL
-    payload (undecoded/missing blob in a dirty corpus) yields NULL out,
-    the same null propagation the SQL twin's md5(NULL) has."""
-    if b is None:
-        return None
-    if _PILImage is not None:
-        try:
-            img = _PILImage.open(io.BytesIO(bytes(b)))
-            out = io.BytesIO()
-            img.resize((width, height)).save(out, format="PNG")
-            return out.getvalue()
-        except Exception:
-            pass
-    return _resize_stub(b, width, height)
+    """Digest-stub thumbnail. A NULL payload (undecoded/missing blob in a
+    dirty corpus) yields NULL out, the same null propagation the SQL
+    twin's md5(NULL) has."""
+    return None if b is None else _resize_stub(b, width, height)
 
 
 def resize_images(binary_df: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
     """Image resize as an Arrow-batched mapInPandas kernel.
 
-    Real body (``PIL.Image.open(...).resize(...)`` → PNG bytes) when PIL
-    is importable and the blob decodes; deterministic digest-slice stub
-    otherwise, so plumbing (batch iteration, binary-in/binary-out,
-    schema) is exercised identically in both environments.
+    The thumbnail is the deterministic digest-slice stub; the plumbing
+    (batch iteration, binary-in/binary-out, schema) is the real contract
+    a pixel decoder would plug into.
     """
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

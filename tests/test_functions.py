@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from datalake_imagenes_georreferenciadas_spark.functions.strings import (
@@ -160,7 +161,13 @@ def test_lsh_ann_recall_contains_self(spark):
 
 def test_hyperplane_signature_deterministic(spark):
     data = _emb(spark, n=5, dim=8)
-    a = [r["b"] for r in data.select(hyperplane_signature(F.col("embedding"), 4, 8).alias("b")).collect()]
-    b = [r["b"] for r in data.select(hyperplane_signature(F.col("embedding"), 4, 8).alias("b")).collect()]
+    a = [r["b"] for r in data.select(hyperplane_signature("embedding", 4, 8).alias("b")).collect()]
+    b = [r["b"] for r in data.select(hyperplane_signature("embedding", 4, 8).alias("b")).collect()]
     assert a == b
     assert all(0 <= v < 16 for v in a)
+
+
+def test_hyperplane_signature_rejects_non_identifier_names():
+    for bad in ("1embedding", "emb-1", "emb`)", "a..b", ""):
+        with pytest.raises(ValueError):
+            hyperplane_signature(bad, 4, 8)

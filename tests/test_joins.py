@@ -123,7 +123,7 @@ def test_banded_lsh_bucket_occupancy_bounded(spark):
         occ = (
             df.select(
                 hyperplane_signature(
-                    F.col("embedding"), 5, 16, plane_offset=band * 5
+                    "embedding", 5, 16, plane_offset=band * 5
                 ).alias("b")
             )
             .groupBy("b")

@@ -67,10 +67,13 @@ ALLOWED: dict[tuple[str, str], int] = {
     # 2 sites: the @udtf(returnType=...) decorator + spark.udtf.register
     # (the register form is counted since the r10 scanner tightening)
     ("plans/q04_ext.py", "f18_python_udtf"): 2,  # the UDTF surface itself
-    # gated production path: pyproj reprojection (ImportError-guarded;
-    # the exact Snyder TM column expressions are the in-container path)
-    ("functions/geo.py", "reproject_utm_to_wgs84"): 1,
 }
+
+# One body per kernel: a second body picked by an import probe never runs
+# where its library is missing, and a private py4j handle read ties the
+# package to the classic gateway (absent under Spark Connect).
+PROBE_EXCEPTIONS = {"ImportError", "ModuleNotFoundError"}
+PRIVATE_HANDLES = {"_jc", "_jdf", "_jvm", "_jsc"}
 
 
 def _scan(files, root: Path):
@@ -161,6 +164,49 @@ def test_allowlist_has_no_stale_entries():
     found, _ = _scan(sorted(PKG.rglob("*.py")), PKG)
     stale = [k for k in ALLOWED if k not in found]
     assert not stale, f"allowlist entries with no call site: {stale}"
+
+
+def _second_bodies(files, root: Path) -> list[tuple[str, int, str]]:
+    """(module, line, name) of every ``except ImportError`` /
+    ``ModuleNotFoundError`` handler and every private py4j handle read."""
+    found = []
+    for f in files:
+        rel = str(f.relative_to(root))
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.ExceptHandler) and node.type is not None:
+                types = node.type.elts if isinstance(node.type, ast.Tuple) else [node.type]
+                for t in types:
+                    name = t.attr if isinstance(t, ast.Attribute) else getattr(t, "id", None)
+                    if name in PROBE_EXCEPTIONS:
+                        found.append((rel, node.lineno, name))
+            elif isinstance(node, ast.Attribute) and node.attr in PRIVATE_HANDLES:
+                found.append((rel, node.lineno, node.attr))
+    return found
+
+
+def test_no_import_probes_or_private_handles():
+    found = _second_bodies(sorted(PKG.rglob("*.py")), PKG)
+    assert not found, (
+        "import-probed second bodies or private py4j handle reads "
+        f"(keep one body per kernel): {found}"
+    )
+
+
+def test_second_body_scanner_catches_probes_and_handles(tmp_path):
+    f = tmp_path / "m.py"
+    f.write_text(
+        "try:\n    import PIL\nexcept ImportError:\n    PIL = None\n"
+        "try:\n    import osgeo\nexcept (OSError, builtins.ModuleNotFoundError):\n    pass\n"
+        "def f(col, df):\n    return col._jc.toString(), df._jdf, df.sparkSession._jvm\n"
+        "try:\n    pass\nexcept Exception:\n    pass\n"
+    )
+    assert sorted(_second_bodies([f], tmp_path)) == [
+        ("m.py", 3, "ImportError"),
+        ("m.py", 7, "ModuleNotFoundError"),
+        ("m.py", 10, "_jc"),
+        ("m.py", 10, "_jdf"),
+        ("m.py", 10, "_jvm"),
+    ]
 
 
 def _scan_src(src: str, tmp_path):

@@ -16,10 +16,12 @@ formatted mode under AQE prints bare operator names).
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from tools.singlepartition_sweep import fact_level_singlepartition
 
@@ -146,7 +148,7 @@ def test_no_duplicate_keys_in_pin_dicts():
     import ast
 
     for path, dict_name in [
-        ("/root/repo/tools/explain_audit.py", "AUDITS"),
+        (os.path.join(REPO, "tools", "explain_audit.py"), "AUDITS"),
     ]:
         tree = ast.parse(open(path).read())
         found = False

@@ -28,7 +28,8 @@ import tempfile
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import pyarrow as pa
 import pyarrow.parquet as pq

@@ -37,7 +37,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def load_ref(ref_path: str) -> dict:
@@ -45,7 +46,7 @@ def load_ref(ref_path: str) -> dict:
     (``parsed.queries``) or a bench-written BENCH_DETAIL.json
     (``queries_warm``). Absolute paths pass through (git-extracted
     copies of a past round's detail live outside the repo)."""
-    path = ref_path if os.path.isabs(ref_path) else os.path.join("/root/repo", ref_path)
+    path = ref_path if os.path.isabs(ref_path) else os.path.join(REPO, ref_path)
     with open(path) as fh:
         doc = json.load(fh)
     if "parsed" in doc:

@@ -24,10 +24,12 @@ Usage: python tools/lsh_density_spotcheck.py [--runs 2] [--with-registered]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from tools.scaling_ladder import scaled_dir  # noqa: E402
 

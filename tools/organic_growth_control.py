@@ -34,7 +34,8 @@ import time
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 STRIDE = 10_000_000  # same per-copy key stride as make_scaled_sf
 

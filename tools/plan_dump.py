@@ -17,7 +17,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from datalake_imagenes_georreferenciadas_spark.plans.queries import all_queries
 from datalake_imagenes_georreferenciadas_spark.session import get_spark
@@ -36,7 +37,7 @@ def main() -> None:
     names = args
     # r20: dumps land in the current optimization round's dir (override
     # with PLAN_DUMP_DIR for ad-hoc captures)
-    out_dir = os.environ.get("PLAN_DUMP_DIR", "/root/repo/plans/r20")
+    out_dir = os.environ.get("PLAN_DUMP_DIR", os.path.join(REPO, "plans", "r20"))
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plan_dump")
     spark.sparkContext.setLogLevel("ERROR")

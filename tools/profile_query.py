@@ -20,10 +20,12 @@ Usage: python tools/profile_query.py [--sf DIR] [--k 3] name [name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import materialize, warm_up  # noqa: E402
 

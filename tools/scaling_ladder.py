@@ -27,7 +27,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # The 20+ most expensive families from BENCH_DETAIL.json (r15 close),
 # minus fixture-construction-dominated and streaming machinery-cost
@@ -69,7 +70,7 @@ def scaled_dir(k: int, base: str = "/root/testdata/sf0.1") -> str:
         subprocess.run(
             [sys.executable, "tools/make_scaled_sf.py", d, str(k), base],
             check=True,
-            cwd="/root/repo",
+            cwd=REPO,
         )
     return d
 
@@ -124,7 +125,7 @@ def main() -> int:
             rec[str(k)] = round(best, 3)
             print(f"{name} k={k}: {best:.2f}s", flush=True)
         out[name] = {"t": rec}
-    path = os.path.join("/root/repo", "scaling_ladder.json")
+    path = os.path.join(REPO, "scaling_ladder.json")
     # scoped re-runs MERGE into the existing file (a named re-measure
     # must not drop the other families' committed numbers), and the
     # merge is PER-K: a --ks 16 extension adds a point to a family's

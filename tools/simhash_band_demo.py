@@ -26,10 +26,12 @@ Prints one markdown table row per (k, setting) for SCALING.md.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from tools.scaling_ladder import scaled_dir  # noqa: E402
 

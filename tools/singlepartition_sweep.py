@@ -41,10 +41,12 @@ Exit 1 on any unreviewed flag. ~5 min for the full registry.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from datalake_imagenes_georreferenciadas_spark.plans.queries import all_queries
 from datalake_imagenes_georreferenciadas_spark.session import get_spark

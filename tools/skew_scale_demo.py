@@ -27,7 +27,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from tools.scaling_ladder import scaled_dir  # noqa: E402
 
@@ -55,7 +56,7 @@ def skewed_scaled_dir(k: int = 4) -> str:
         subprocess.run(
             [sys.executable, "tools/make_skewed_sf.py", d, base],
             check=True,
-            cwd="/root/repo",
+            cwd=REPO,
         )
     return d
 

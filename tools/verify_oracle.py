@@ -15,11 +15,13 @@ Usage: python tools/verify_oracle.py [--json OUT.json] [--allowlist AXIS]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb
 
@@ -51,7 +53,6 @@ def load_allowlist(axis: str) -> dict[str, str]:
     ``[spark_error] DESIGNED fail-fast: ...``) pinning the EXPECTED
     failure kind; see expected_kinds()."""
     import json
-    import os
 
     path = os.path.join(os.path.dirname(__file__), "fuzz_allowlist.json")
     with open(path) as fh:
