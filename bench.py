@@ -274,8 +274,10 @@ def warm_up(spark, sf_dir: str):
     """Touch every table's footer with one count, so per-query timings
     reflect steady-state plan execution rather than scan initialization,
     and stage the shared dedup shingle explode once (plan-matching cache
-    substitutes this subtree inside minhash/near-pairs/ngram queries).
-    Returns the cached shingle frame."""
+    substitutes this subtree in the MinHash signature branch and the
+    n-gram/containment inverted index; MinHash-LSH verification reads
+    per-document shingle arrays, outside it). Returns the cached shingle
+    frame."""
     from datalake_imagenes_georreferenciadas_spark.operators.dedup import _exploded_shingles
     from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES, table as load
 

@@ -4,14 +4,16 @@ Five dedup families, all shuffle-conscious:
 
 - exact: hash-groupBy on content digest — one shuffle, map-side partial agg.
 - MinHash-LSH: shingle → minhash signature → band keys → equi-join on band
-  → verify Jaccard. The band join turns the O(n²) similarity join into a
-  shuffle-partitionable equi-join; at 100 TB the candidate set per band
-  bucket stays small as long as bands×rows is tuned to the target
+  → verify the exact Jaccard of the candidates' distinct shingle arrays
+  (one row per document). The band join turns the O(n²) similarity join
+  into a shuffle-partitionable equi-join; at 100 TB the candidate set per
+  band bucket stays small as long as bands×rows is tuned to the target
   threshold (standard s-curve tuning).
 - SimHash: sign-aggregated token-hash fingerprint; near-dups share the
   fingerprint (or a banded prefix at scale).
-- n-gram Jaccard: exact pairwise Jaccard on shingle sets, restricted to
-  LSH candidates (never all-pairs).
+- n-gram Jaccard (and its asymmetric twin, containment): exact pairwise
+  scores on shingle sets, restricted to docs sharing a shingle by an
+  inverted-index self-join (never all-pairs).
 - embedding cosine: see operators.similarity.
 
 MinHash and SimHash are **explode → groupBy(min/sum)** plans rather than
@@ -94,6 +96,18 @@ def _minhash_coeffs(num_hashes: int) -> list[tuple[int, int, int]]:
 _MINHASH_MOD = 2**60
 
 
+def _minhash_sql(num_hashes: int, array_fn: str) -> tuple[list[str], str]:
+    """SQL text of the MinHash aggregate over base-hash halves ``lo``/``hi``:
+    the ``min((a*lo + b*hi + c) % 2^60) AS h{s}`` list, and the signature
+    built from the ``h{s}`` columns with ``array_fn`` (``array`` in Spark,
+    ``list_value`` in DuckDB) — one text for the operator and its oracle."""
+    mins = [
+        f"min(({a} * lo + {b} * hi + {c}) % {_MINHASH_MOD}) AS h{s}"
+        for s, (a, b, c) in enumerate(_minhash_coeffs(num_hashes))
+    ]
+    return mins, f"{array_fn}({', '.join(f'h{s}' for s in range(num_hashes))})"
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -112,33 +126,21 @@ def minhash_signatures(
     Spark, DuckDB, and Python). 16 partial-aggregated mins; one shuffle on
     the doc id. Docs with fewer than k tokens get a null ``__sig``.
     """
-    coeffs = _minhash_coeffs(num_hashes)
-    base = df.select(F.col(id_col), shingles(F.col(text_col), k).alias("__shingles"))
+    mins, sig_arr = _minhash_sql(num_hashes, "array")
     ex = _exploded_shingles(df, id_col, text_col, k)
     h = ex.select(
         F.col(id_col),
-        (hash64(F.col("__sh"), seed=0) % F.lit(2**30)).alias("__lo"),
-        F.shiftright(hash64(F.col("__sh"), seed=0), 30).alias("__hi"),
+        (hash64(F.col("__sh"), seed=0) % F.lit(2**30)).alias("lo"),
+        F.shiftright(hash64(F.col("__sh"), seed=0), 30).alias("hi"),
     )
-    aggs = [
-        F.min(
-            (F.lit(a) * F.col("__lo") + F.lit(b) * F.col("__hi") + F.lit(c))
-            % F.lit(_MINHASH_MOD)
-        ).alias(f"__h{s}")
-        for s, (a, b, c) in enumerate(coeffs)
-    ]
-    sig = (
-        h.groupBy(id_col)
-        .agg(*aggs)
-        .select(
-            F.col(id_col),
-            F.array(*[F.col(f"__h{s}") for s in range(num_hashes)]).alias("__sig"),
-        )
+    sig = h.groupBy(id_col).agg(*map(F.expr, mins)).select(
+        F.col(id_col), F.expr(sig_arr).alias("__sig")
     )
     if not keep_shingles:
         # docs with <k tokens have no exploded rows → absent here, exactly
         # the null-__sig rows the joined variant would filter anyway
         return sig
+    base = df.select(F.col(id_col), shingles(F.col(text_col), k).alias("__shingles"))
     return base.join(sig, id_col, "left")
 
 
@@ -174,10 +176,12 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash-LSH banding + exact Jaccard verify.
 
-    Plan shape: explode band keys → self equi-join on the band hash →
-    distinct candidate pairs → verify with exact shingle-set Jaccard →
-    threshold. The only shuffles are the band join and the distinct — no
-    cross join anywhere.
+    Plan shape: explode band keys → one exchange on the band → self
+    equi-join of that exchange → distinct candidate pairs → verify with
+    the exact Jaccard of each side's DISTINCT shingle array → threshold.
+    The shingle explode runs once (the signature branch); verification
+    joins the candidates to one shingle array per document — no cross
+    join anywhere.
 
     ``new_from`` makes the join INCREMENTAL: only pairs whose larger id is
     ≥ the split survive, i.e. new-batch×corpus and new×new — corpus-
@@ -187,9 +191,11 @@ def minhash_lsh_pairs(
     full index scan while the probe side shrinks to the new batch — the
     ingest-time dedup gate shape (hash the delta, probe the index).
     """
-    sig = with_minhash(
-        df, text_col, k, num_hashes, bands, id_col, keep_shingles=False
-    ).select(F.col(id_col), F.explode(F.col("__bands")).alias("band"))
+    sig = (
+        with_minhash(df, text_col, k, num_hashes, bands, id_col, keep_shingles=False)
+        .select(F.col(id_col), F.explode(F.col("__bands")).alias("band"))
+        .repartition("band")
+    )
     left = sig.select(F.col(id_col).alias("a_id"), "band")
     right = sig.select(F.col(id_col).alias("b_id"), "band")
     if new_from is not None:
@@ -200,66 +206,45 @@ def minhash_lsh_pairs(
         .select("a_id", "b_id")
         .dropDuplicates(["a_id", "b_id"])
     )
-    # count-based exact-Jaccard verification: shingle arrays never cross a
-    # shuffle — candidates join against the exploded DISTINCT shingle
-    # rows, intersections counted, sizes joined in. The candidate set is
-    # corpus-derived (band collisions grow ~N²/2^bits), so it carries NO
-    # broadcast hint — AQE converts to broadcast at runtime iff it fits
-    # (r07 VERDICT: a forced hint removes AQE's fallback and OOMs the
-    # driver on a pathological corpus)
-    ex = _exploded_shingles(df, id_col, text_col, k).distinct()
-    sizes = ex.groupBy(id_col).agg(F.count("*").alias("__n"))
-    ex_a = ex.select(F.col(id_col).alias("a_id"), F.col("__sh"))
-    ex_b = ex.select(F.col(id_col).alias("b_id"), F.col("__sh"))
-    inter = (
-        cand
-        .join(ex_a, "a_id")
-        .join(ex_b, ["b_id", "__sh"])
-        .groupBy("a_id", "b_id")
-        .agg(F.count("*").alias("__inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("a_id"), F.col("__n").alias("__na"))
-    sb = sizes.select(F.col(id_col).alias("b_id"), F.col("__n").alias("__nb"))
+    # the candidate set is corpus-derived (band collisions grow
+    # ~N²/2^bits), so neither verify join carries a broadcast hint — AQE
+    # converts to broadcast at runtime iff it fits (r07 VERDICT: a forced
+    # hint removes AQE's fallback and OOMs the driver on a pathological
+    # corpus)
+    sets = df.select(F.col(id_col), F.array_distinct(shingles(F.col(text_col), k)))
+    inter = F.size(F.array_intersect("__sa", "__sb"))
     return (
-        inter.join(sa, "a_id")
-        .join(sb, "b_id")
-        .withColumn(
-            "jaccard",
+        cand.join(sets.toDF("a_id", "__sa"), "a_id")
+        .join(sets.toDF("b_id", "__sb"), "b_id")
+        .select(
+            "a_id",
+            "b_id",
             F.round(
-                F.col("__inter")
+                inter
                 / F.greatest(
-                    (F.col("__na") + F.col("__nb") - F.col("__inter")).cast("double"),
-                    F.lit(1.0),
+                    (F.size("__sa") + F.size("__sb") - inter).cast("double"), F.lit(1.0)
                 ),
                 6,
-            ),
+            ).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("a_id", "b_id", "jaccard")
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    jaccard_threshold: float = 0.5,
-    max_doc_freq: int | None = None,
+def _shingle_intersections(
+    df: DataFrame, id_col: str, text_col: str, k: int, max_doc_freq: int | None
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity join (dedup family #4).
-
-    Fully aggregative plan — no arrays cross the shuffle: explode DISTINCT
-    shingles, self equi-join on the shingle (only docs sharing a shingle
-    ever pair — a word-level inverted index), count intersections per
-    pair, then ``|A∩B| / (|A|+|B|-|A∩B|)``.
+    """(a_id, b_id, __inter, __na, __nb): shared-shingle counts of every
+    unordered pair sharing a shingle, with both distinct-shingle set
+    sizes — the inverted-index self-join behind n-gram Jaccard and
+    containment.
 
     ``max_doc_freq`` is the hot-shingle guard for scale: shingles present
     in more than that many documents (stop-phrases) are anti-joined out of
     the inverted index BEFORE the self-join — one such key otherwise pairs
     every co-containing doc quadratically (df=1M docs → 5·10^11 candidate
     rows from a single shuffle key). Sizes are computed over the SAME
-    capped index, so the Jaccard stays internally consistent on the
+    capped index, so the scores stay internally consistent on the
     reduced shingle universe (stop-shingles carry no signal for near-dup
     anyway). The hot-key list is a tiny aggregate — AQE broadcasts the
     anti-join side at runtime. ``None`` = exact, uncapped.
@@ -284,7 +269,8 @@ def ngram_jaccard_pairs(
     # r20 adjudication (VERDICT item 1): the driver's r19 0.87× was host
     # noise — 3 interleaved fresh-cold-session rounds each measured the
     # checkpoint FASTER than the revert (1.68/1.83/1.98 s vs
-    # 1.90/2.29/2.48 s isolated warm). KEPT.
+    # 1.90/2.29/2.48 s isolated warm; containment 2/3 rounds faster).
+    # KEPT.
     ex = ex.localCheckpoint(eager=True)
     sizes = ex.groupBy(id_col).agg(F.count("*").alias("__n"))
     inter = (
@@ -296,9 +282,27 @@ def ngram_jaccard_pairs(
     )
     sa = sizes.select(F.col(id_col).alias("a_id"), F.col("__n").alias("__na"))
     sb = sizes.select(F.col(id_col).alias("b_id"), F.col("__n").alias("__nb"))
+    return inter.join(sa, "a_id").join(sb, "b_id")
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 3,
+    jaccard_threshold: float = 0.5,
+    max_doc_freq: int | None = None,
+) -> DataFrame:
+    """Exact n-gram Jaccard similarity join (dedup family #4).
+
+    Fully aggregative plan — no arrays cross the shuffle: explode DISTINCT
+    shingles, self equi-join on the shingle (only docs sharing a shingle
+    ever pair — a word-level inverted index), count intersections per
+    pair, then ``|A∩B| / (|A|+|B|-|A∩B|)``. ``max_doc_freq`` caps hot
+    shingles (see :func:`_shingle_intersections`).
+    """
     return (
-        inter.join(sa, "a_id")
-        .join(sb, "b_id")
+        _shingle_intersections(df, id_col, text_col, k, max_doc_freq)
         .withColumn(
             "jaccard",
             F.round(
@@ -334,33 +338,8 @@ def containment_pairs(
     both directions are computed from the single count, and a pair is
     emitted when EITHER direction clears ``threshold``.
     """
-    ex = _exploded_shingles(df, id_col, text_col, k).distinct()
-    if max_doc_freq is not None:
-        hot = (
-            ex.groupBy("__sh")
-            .agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") > max_doc_freq)
-            .select("__sh")
-        )
-        ex = ex.join(hot, "__sh", "left_anti")
-    # r19: one materialization of the capped index for its three
-    # consumers (see ngram_jaccard_pairs — identical rationale; r20
-    # adjudication kept it on the same fresh-cold-session evidence,
-    # 2/3 rounds faster with the checkpoint).
-    ex = ex.localCheckpoint(eager=True)
-    sizes = ex.groupBy(id_col).agg(F.count("*").alias("__n"))
-    inter = (
-        ex.alias("a")
-        .join(ex.alias("b"), "__sh")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
-        .agg(F.count("*").alias("__inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("a_id"), F.col("__n").alias("__na"))
-    sb = sizes.select(F.col(id_col).alias("b_id"), F.col("__n").alias("__nb"))
     return (
-        inter.join(sa, "a_id")
-        .join(sb, "b_id")
+        _shingle_intersections(df, id_col, text_col, k, max_doc_freq)
         .withColumn(
             "cont_a", F.round(F.col("__inter") / F.col("__na").cast("double"), 6)
         )

@@ -1133,14 +1133,9 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_cte(num_hashes: int = 16, bands: int = 4, k: int = 3) -> str:
     """Shared CTE prefix mirroring the explode+groupBy MinHash plan —
     tokenize/shingle once, ONE md5 per shingle, per-seed affine-derived
-    mins (same coefficients as operators.dedup)."""
+    mins (the min list and signature SQL of operators.dedup)."""
     rpb = num_hashes // bands
-    coeffs = D._minhash_coeffs(num_hashes)
-    mins = ", ".join(
-        f"min(({a} * lo + {b} * hi + {c}) % {D._MINHASH_MOD}) AS h{s}"
-        for s, (a, b, c) in enumerate(coeffs)
-    )
-    arr = "[" + ", ".join(f"h{s}" for s in range(num_hashes)) + "]"
+    mins, arr = D._minhash_sql(num_hashes, "list_value")
     band_list = "[" + ", ".join(
         f"md5('{b}|' || array_to_string("
         f"list_transform(sig[{b * rpb + 1}:{(b + 1) * rpb}], v -> v::VARCHAR), ','))"
@@ -1155,7 +1150,7 @@ hsh AS (
          ('0x' || substring(md5('0:' || sh), 1, {H.HASH_HEX_CHARS}))::BIGINT % 1073741824 AS lo,
          ('0x' || substring(md5('0:' || sh), 1, {H.HASH_HEX_CHARS}))::BIGINT >> 30 AS hi
   FROM ex),
-mh AS (SELECT doc_id, {mins} FROM hsh GROUP BY doc_id),
+mh AS (SELECT doc_id, {', '.join(mins)} FROM hsh GROUP BY doc_id),
 sigt AS (SELECT doc_id, {arr} AS sig FROM mh),
 bandt AS (SELECT doc_id, {band_list} AS bands FROM sigt)
 """

@@ -32,26 +32,33 @@ def test_exact_dedup_idempotent(spark):
     assert twice.count() == once.count()
 
 
-def test_minhash_signature_matches_naive(spark):
+def _py_shingles(text, k=3):
+    if text is None:
+        return []
+    toks = text.lower().split()
+    return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
+
+
+def _py_minhash(sh, num_hashes):
+    """md5 replica of the MinHash signature: one base hash per shingle,
+    per-seed affine mins over its 30-bit halves."""
     from datalake_imagenes_georreferenciadas_spark.operators.dedup import (
         _MINHASH_MOD,
         _minhash_coeffs,
     )
 
+    base = [int(hashlib.md5(f"0:{g}".encode()).hexdigest()[:15], 16) for g in sh]
+    return [
+        min((a * (h % 2**30) + b * (h >> 30) + c) % _MINHASH_MOD for h in base)
+        for a, b, c in _minhash_coeffs(num_hashes)
+    ]
+
+
+def test_minhash_signature_matches_naive(spark):
     text = "the quick brown fox jumps over the lazy dog"
     df = _docs(spark, [(1, text)])
     sig = minhash_signatures(df, num_hashes=4).collect()[0]["__sig"]
-    toks = text.lower().split()
-    sh = [" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)]
-    coeffs = _minhash_coeffs(4)
-    for s, (a, b, c) in enumerate(coeffs):
-        expected = min(
-            (
-                lambda h: (a * (h % 2**30) + b * (h >> 30) + c) % _MINHASH_MOD
-            )(int(hashlib.md5(f"0:{g}".encode()).hexdigest()[:15], 16))
-            for g in sh
-        )
-        assert sig[s] == expected
+    assert sig == _py_minhash(_py_shingles(text), 4)
 
 
 def test_minhash_short_doc_null_sig(spark):
@@ -355,3 +362,103 @@ def test_simhash_pairs_widened_bands_subset_of_registered(spark):
     assert all((a % 5) == (b % 5) for a, b in wide)
     expected_dups = {(a, b) for a in range(40) for b in range(a + 1, 40) if a % 5 == b % 5}
     assert expected_dups <= wide
+
+
+#: repeated shingles (array_distinct matters), a doc shorter than k,
+#: NULL texts, identical texts and one-word variants
+_LSH_CORPUS = [
+    (1, "a b c a b c a b c d"),
+    (2, "a b c a b c d"),
+    (3, "too short"),
+    (4, "too short"),
+    (5, None),
+    (6, None),
+    (7, "uno dos tres cuatro cinco seis siete ocho nueve diez"),
+    (8, "uno dos tres cuatro cinco seis siete ocho nueve diez"),
+    (9, "uno dos tres cuatro cinco seis siete ocho nueve once"),
+    (10, "cero dos tres cuatro cinco seis siete ocho nueve diez"),
+    (11, "uno dos tres cuatro cinco seis siete ocho nueve diez"),
+    (12, "a b c a b c a b c d e"),
+    (13, "totally unrelated words only here now"),
+]
+
+
+def _py_lsh_pairs(rows, threshold, num_hashes=16, bands=4, new_from=None):
+    """Pure-Python MinHash-LSH pairs: md5 band keys → candidates sharing a
+    band → exact Jaccard of the distinct shingle sets, rounded half-up."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    rpb = num_hashes // bands
+    sets, keys = {}, {}
+    for i, text in rows:
+        sh = _py_shingles(text)
+        sets[i] = set(sh)
+        if sh:
+            sig = _py_minhash(sh, num_hashes)
+            keys[i] = {
+                hashlib.md5(
+                    f"{b}|{','.join(map(str, sig[b * rpb : (b + 1) * rpb]))}".encode()
+                ).hexdigest()
+                for b in range(bands)
+            }
+    out = {}
+    for a in keys:
+        for b in keys:
+            if a < b and keys[a] & keys[b] and (new_from is None or b >= new_from):
+                inter = len(sets[a] & sets[b])
+                j = inter / max(len(sets[a]) + len(sets[b]) - inter, 1.0)
+                j = float(Decimal(repr(j)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+                if j >= threshold:
+                    out[(a, b)] = j
+    return out
+
+
+def test_lsh_pairs_match_python_exact_jaccard(spark):
+    """minhash_lsh_pairs == a pure-Python exact Jaccard over the same LSH
+    candidates, full and incremental, on a corpus with repeated
+    shingles, short docs, NULL texts and identical texts."""
+    df = spark.createDataFrame(_LSH_CORPUS, "doc_id long, text string")
+    for threshold in (0.0, 0.5):
+        for new_from in (None, 9):
+            got = {
+                (r["a_id"], r["b_id"]): r["jaccard"]
+                for r in minhash_lsh_pairs(
+                    df, jaccard_threshold=threshold, new_from=new_from
+                ).collect()
+            }
+            assert got == _py_lsh_pairs(_LSH_CORPUS, threshold, new_from=new_from)
+    full = _py_lsh_pairs(_LSH_CORPUS, 0.0)
+    # the repeated-shingle docs share the same distinct set; duplicates pair
+    assert full[(1, 2)] == 1.0 and full[(7, 8)] == 1.0
+    assert not {p for p in full if {3, 4, 5, 6} & set(p)}
+
+
+def test_lsh_pairs_explode_shingles_once(spark):
+    """The shingle explode runs once per query (the signature branch):
+    verification reads one shingle set per document, both band-join
+    sides share one exchange, and no broadcast carries exploded
+    shingles."""
+    df = spark.createDataFrame(_LSH_CORPUS, "doc_id long, text string")
+    pairs = minhash_lsh_pairs(df, jaccard_threshold=0.0)
+    pairs.collect()
+    plan = pairs._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()  # the final plan, query stages included
+    lines = plan.toString().splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    def shingle_explode(line):
+        return "Generate explode(" in line and "arrays_zip" in line
+
+    assert sum(map(shingle_explode, lines)) <= 1, "\n".join(lines)
+    for i, line in enumerate(lines):
+        if "BroadcastExchange" in line:
+            d = depth(line)
+            sub = []
+            for nxt in lines[i + 1 :]:
+                if depth(nxt) <= d:
+                    break
+                sub.append(nxt)
+            assert not any(map(shingle_explode, sub)), "\n".join(lines)
