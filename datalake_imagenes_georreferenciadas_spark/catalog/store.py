@@ -176,23 +176,24 @@ class CatalogStore:
         the runs table stays exactly-once under crash-replay."""
         # r19 (guide §5 — the driver should do almost no data work): a
         # store with no runs file yet has nothing to look up; skipping
-        # the two empty-relation aggregate jobs saves ~0.5 s per fresh
-        # store lifecycle (the catalog fixture queries build one per run)
-        have_runs = os.path.exists(self._path("runs"))
-        if batch_id is not None and have_runs:
+        # the empty-relation aggregate job saves ~0.5 s per fresh store
+        # lifecycle (the catalog fixture queries build one per run). The
+        # replay lookup and the next id come from ONE aggregate job.
+        run_id = 1
+        if os.path.exists(self._path("runs")):
             row = (
                 self.runs()
-                .filter(F.col("batch_id") == batch_id)
-                .agg(F.min("id_ejecucion").alias("m"))
+                .agg(
+                    F.min(
+                        F.when(F.col("batch_id") == batch_id, F.col("id_ejecucion"))
+                    ).alias("replay"),
+                    F.max("id_ejecucion").alias("m"),
+                )
                 .collect()[0]
             )
-            if row["m"] is not None:
-                return int(row["m"])
-        if have_runs:
-            row = self.runs().agg(F.max("id_ejecucion").alias("m")).collect()[0]
+            if row["replay"] is not None:
+                return int(row["replay"])
             run_id = (int(row["m"]) if row["m"] is not None else 0) + 1
-        else:
-            run_id = 1
         run = self.spark.createDataFrame(
             [(run_id, id_proceso, batch_id)],
             "id_ejecucion long, id_proceso int, batch_id long",

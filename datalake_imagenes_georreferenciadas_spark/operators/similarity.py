@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine
 from ..tables import spread
+from .dedup import band_pairs
 from .topk import topk_per_group
 
 #: deterministic pseudo-random hyperplane components derived from md5 of
@@ -254,7 +255,7 @@ def cosine_near_pairs(
     # r19 (guide §2.3 "shuffle keys, not payloads" / §8 "decide with small
     # rows, move big rows once" / §2.5 unsplittable-input rebalance): the
     # band self-join and the candidate pair-dedup now shuffle only
-    # (id, band, bucket) rows — the ~0.5 KB embedding payload no longer
+    # (id, band key) rows — the ~0.5 KB embedding payload no longer
     # rides through the ×num_bands band exchange and the dedup exchange; it
     # is re-attached by id from the ORIGINAL scan (which carries size
     # statistics, so the planner keeps broadcast strategies) only for the
@@ -284,26 +285,15 @@ def cosine_near_pairs(
             for band in range(num_bands)
         ],
     )
-    bands = keyed.select(
-        F.col(data_id),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band"),
-                        F.col(f"__s{band}").alias("bucket"),
-                    )
-                    for band in range(num_bands)
-                ]
-            )
-        ).alias("__bk"),
-    ).select(data_id, F.col("__bk.band").alias("__band"), F.col("__bk.bucket").alias("__bucket"))
-    left = bands.select(F.col(data_id).alias("a_id"), "__band", "__bucket")
-    right = bands.select(F.col(data_id).alias("b_id"), "__band", "__bucket")
-    cand = (
-        left.join(right, ["__band", "__bucket"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .dropDuplicates(["a_id", "b_id"])
+    cand = band_pairs(
+        keyed,
+        data_id,
+        F.array(
+            *[
+                F.lit(band << planes_per_band).bitwiseOR(F.col(f"__s{band}"))
+                for band in range(num_bands)
+            ]
+        ),
     )
     va = data.select(F.col(data_id).alias("a_id"), F.col(vec_col).alias("__va"))
     vb = data.select(F.col(data_id).alias("b_id"), F.col(vec_col).alias("__vb"))

@@ -45,7 +45,6 @@ from .topk import argmin_per_group
 def contains_join(
     points: DataFrame,
     polys: DataFrame,
-    point_id: str = "img_id",
     x_col: str = "lon",
     y_col: str = "lat",
     ring_col: str = "rings",
@@ -63,7 +62,6 @@ def contains_join_grid(
     points: DataFrame,
     polys: DataFrame,
     eps: float = 0.5,
-    point_id: str = "img_id",
     x_col: str = "lon",
     y_col: str = "lat",
     ring_col: str = "rings",

@@ -1168,17 +1168,24 @@ def dedup_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", F.explode("__bands").alias("band"))
 
 
-def _near_pairs_cte(threshold: float = 0.1, new_from: int | None = None) -> str:
-    """CTE prefix ending in ``pairs`` = verified MinHash-LSH near-dup
-    pairs above ``threshold`` (shared by the pairs query and the
-    connected-components oracle). ``new_from`` mirrors the incremental
-    probe-side split of ``minhash_lsh_pairs``."""
+def _lsh_cand_cte(new_from: int | None = None) -> str:
+    """``_minhash_cte`` plus ``cand`` = the distinct MinHash-LSH
+    candidate pairs, the oracle twin of ``operators.dedup.band_pairs``.
+    ``new_from`` mirrors the incremental probe-side split of
+    ``minhash_lsh_pairs``."""
     probe = f" AND b.doc_id >= {new_from}" if new_from is not None else ""
     return _minhash_cte() + f""",
 expl AS (SELECT doc_id, unnest(bands) AS band FROM bandt),
 cand AS (
   SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM expl a JOIN expl b ON a.band = b.band AND a.doc_id < b.doc_id{probe}),
+  FROM expl a JOIN expl b ON a.band = b.band AND a.doc_id < b.doc_id{probe})"""
+
+
+def _near_pairs_cte(threshold: float = 0.1, new_from: int | None = None) -> str:
+    """CTE prefix ending in ``pairs`` = verified MinHash-LSH near-dup
+    pairs above ``threshold`` (shared by the pairs query and the
+    connected-components oracle)."""
+    return _lsh_cand_cte(new_from) + f""",
 verified AS (
   SELECT c.a_id, c.b_id,
          round(len(list_filter(list_distinct(sa.shingles), s -> list_contains(sb.shingles, s)))::DOUBLE

@@ -30,7 +30,7 @@ from .q01_j1 import (
     _PQ_DUCK_CODES,
     _PQ_K,
     _PQ_M,
-    _minhash_cte,
+    _lsh_cand_cte,
     _near_pairs_cte,
     _pq_sub,
     _pq_sub_duck,
@@ -990,12 +990,8 @@ def geo_geohash_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _MH_ACC_SQL = (
-    _minhash_cte()
+    _lsh_cand_cte()
     + """,
-expl AS (SELECT doc_id, unnest(bands) AS band FROM bandt),
-cand AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM expl a JOIN expl b ON a.band = b.band AND a.doc_id < b.doc_id),
 est AS (
   SELECT c.a_id, c.b_id,
          CAST(len(list_filter(range(0, 16),
@@ -1041,14 +1037,7 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three consumers (band explode + both verify sides) — checkpoint
     # the signature index once, as a production index store would
     s = D.with_minhash(docs, "text", 3, 16, 4, keep_shingles=True).localCheckpoint()
-    b = s.select("doc_id", F.explode("__bands").alias("band"))
-    cand = (
-        b.select(F.col("doc_id").alias("a_id"), "band")
-        .join(b.select(F.col("doc_id").alias("b_id"), "band"), "band")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .dropDuplicates(["a_id", "b_id"])
-    )
+    cand = D.band_pairs(s, "doc_id", F.col("__bands"))
     side = s.select(
         "doc_id",
         F.col("__sig").alias("sig"),

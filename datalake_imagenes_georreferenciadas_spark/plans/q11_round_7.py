@@ -828,29 +828,13 @@ def multimodal_ahash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (< ~10⁴ assets, where everything fits anyway); at any production
     corpus size — let alone 100 TB — use the wide variant."""
     h = _ahash_table(spark, sf_dir)
-    bands = h.select(
+    cand = D.band_pairs(
+        h,
         "doc_id",
-        "ahash",
-        F.explode(F.sequence(F.lit(0), F.lit(6))).alias("band_idx"),
-    ).select(
-        "doc_id",
-        "ahash",
-        "band_idx",
-        F.expr("shiftright(ahash, band_idx * 9) % 512").alias("band_val"),
-    )
-    cand = (
-        bands.select(
-            F.col("doc_id").alias("a_id"), "band_idx", "band_val"
-        )
-        .join(
-            bands.select(
-                F.col("doc_id").alias("b_id"), "band_idx", "band_val"
-            ),
-            ["band_idx", "band_val"],
-        )
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .dropDuplicates(["a_id", "b_id"])
+        F.expr(
+            "transform(sequence(0, 6), b -> "
+            "shiftleft(CAST(b AS BIGINT), 9) | (shiftright(ahash, b * 9) & 511))"
+        ),
     )
     ha = h.select(F.col("doc_id").alias("a_id"), F.col("ahash").alias("h_a"))
     hb = h.select(F.col("doc_id").alias("b_id"), F.col("ahash").alias("h_b"))

@@ -4,6 +4,8 @@
 from __future__ import annotations
 
 import tempfile
+import time
+import uuid
 
 from pyspark.sql import functions as F
 
@@ -42,6 +44,54 @@ def test_run_ids_monotonic(spark):
     assert store.start_run(PROCESO_INGEST) == 1
     assert store.start_run(PROCESO_INGEST) == 2
     assert store.runs().count() == 2
+
+
+def _jobs_in_group(spark, group, fn):
+    """(fn(), number of Spark jobs ``fn`` ran), counted by job group. The
+    status store is fed asynchronously, so wait until the count holds."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    seen, deadline = -1, time.time() + 10
+    while time.time() < deadline:
+        n = len(st.getJobIdsForGroup(group))
+        if n == seen:
+            break
+        seen = n
+        time.sleep(0.5)
+    return out, seen
+
+
+def test_start_run_replay_and_next_id_from_one_aggregate(spark):
+    """A replayed ``batch_id`` reuses its run id, a new batch gets
+    max+1, and each call answers both questions with ONE aggregate over
+    the runs table (a new batch adds only the append write of its run
+    row). One aggregate's job count is measured, not assumed: AQE runs
+    its shuffle-map stage as a job of its own."""
+    store = CatalogStore(spark, tempfile.mkdtemp())
+    assert store.start_run(PROCESO_INGEST, batch_id=7) == 1
+    assert store.start_run(PROCESO_INGEST, batch_id=8) == 2
+    tag = uuid.uuid4().hex
+    _, one_agg = _jobs_in_group(
+        spark, f"agg_{tag}", lambda: store.runs().agg(F.max("id_ejecucion")).collect()
+    )
+    run, jobs = _jobs_in_group(
+        spark, f"replay_{tag}", lambda: store.start_run(PROCESO_INGEST, batch_id=7)
+    )
+    assert (run, jobs) == (1, one_agg)
+    run, jobs = _jobs_in_group(
+        spark, f"new_{tag}", lambda: store.start_run(PROCESO_INGEST, batch_id=9)
+    )
+    assert (run, jobs) == (3, one_agg + 1)
+    assert store.start_run(PROCESO_INGEST) == 4
+    assert sorted(
+        (r["id_ejecucion"], r["batch_id"]) for r in store.runs().collect()
+    ) == [(1, 7), (2, 8), (3, 9), (4, None)]
 
 
 def test_insert_allocates_ids_and_lineage(spark):

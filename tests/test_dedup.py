@@ -3,10 +3,12 @@
 from __future__ import annotations
 
 import hashlib
+import re
 
 from pyspark.sql import functions as F
 
 from datalake_imagenes_georreferenciadas_spark.operators.dedup import (
+    band_pairs,
     exact_dedup,
     minhash_lsh_pairs,
     minhash_signatures,
@@ -462,3 +464,83 @@ def test_lsh_pairs_explode_shingles_once(spark):
                     break
                 sub.append(nxt)
             assert not any(map(shingle_explode, sub)), "\n".join(lines)
+
+
+# (id, band keys): a NULL array, NULL keys, a key repeated within a doc,
+# single-doc buckets, a pair sharing two keys and a NULL id
+_BAND_ROWS = [
+    (1, [10, 11]),
+    (2, [10, 12]),
+    (3, [12, 12]),
+    (4, None),
+    (5, [None, 13]),
+    (6, [None, 14]),
+    (7, [13, 11]),
+    (8, [99]),
+    (9, [10, 11]),
+    (None, [10]),
+]
+
+
+def _py_band_pairs(rows, new_from=None):
+    keys = {i: {k for k in ks or [] if k is not None} for i, ks in rows if i is not None}
+    return {
+        (a, b)
+        for a in keys
+        for b in keys
+        if a < b and keys[a] & keys[b] and (new_from is None or b >= new_from)
+    }
+
+
+def test_band_pairs_match_python_any_shared_key(spark):
+    """band_pairs == every a<b pair sharing any non-NULL key, each pair
+    once; a probe filter on b_id keeps the same answer as the Python
+    twin's split."""
+    df = spark.createDataFrame(_BAND_ROWS, "doc_id long, ks array<bigint>")
+    pairs = band_pairs(df, "doc_id", F.col("ks"))
+    assert pairs.columns == ["a_id", "b_id"]
+    got = [(r["a_id"], r["b_id"]) for r in pairs.collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == _py_band_pairs(_BAND_ROWS)
+    assert {(1, 2), (1, 9), (2, 3), (5, 7)} <= set(got)
+    probe = pairs.filter(F.col("b_id") >= 5).collect()
+    assert {(r["a_id"], r["b_id"]) for r in probe} == _py_band_pairs(_BAND_ROWS, 5)
+
+
+def test_minhash_band_join_is_skew_split(spark):
+    """On a hot-bucket corpus (90% identical texts, one band key per band
+    holds most rows), AQE splits the band self-join of
+    minhash_lsh_pairs — nothing forces a repartition on the band key
+    that would hide the join's skew from it."""
+    texts = [
+        "hot bucket text shared by most of the corpus today" if i % 10 else f"cold doc {i} words {i * 7} here {i * 13}"
+        for i in range(400)
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1k",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+        "spark.sql.shuffle.partitions": "32",
+        # a multi-task map side, as at scale: one coalesced task cannot split
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        pairs = minhash_lsh_pairs(df, jaccard_threshold=0.9)
+        assert len(pairs.collect()) == 360 * 359 // 2
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        plan = plan.split("== Initial Plan ==")[0]
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    band_joins = re.findall(r"SortMergeJoin(\(skew=true\))? \[(?:__)?band#", plan)
+    assert band_joins, plan
+    assert all(band_joins), plan

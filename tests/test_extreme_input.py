@@ -30,7 +30,8 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from tools.make_extreme_sf import TABLES, mutate_table
+from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES
+from tools.make_extreme_sf import mutate_table
 
 FIXED_IN_R15 = [
     "f14_variant_extract",
@@ -56,7 +57,7 @@ def extreme_sf(tmp_path_factory):
 
     d = str(tmp_path_factory.mktemp("extreme_sf"))
     src = "/root/testdata/sf0.001"
-    for t in TABLES:
+    for t in TABLE_NAMES:
         pq.write_table(
             mutate_table(os.path.join(src, f"{t}.parquet"), t),
             os.path.join(d, f"{t}.parquet"),
@@ -104,22 +105,10 @@ R17_EXTREME_CONTRACTS = [
 def test_r17_contract_value_matches_oracle_on_extreme_input(
     spark, extreme_sf, name
 ):
-    import duckdb
-
     from __spark_entry__ import oracle_sql, queries
-    from tools.verify_oracle import row_key
+    from tools.verify_oracle import duck_rows, duck_views, spark_rows
 
-    sdf = queries()[name](spark, extreme_sf)
-    cols = sorted(sdf.columns)
-    srows = sorted(row_key(tuple(r[c] for c in cols)) for r in sdf.collect())
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{extreme_sf}/{t}.parquet'"
-        )
-    res = con.sql(oracle_sql()[name])
-    dsort = sorted(range(len(res.columns)), key=lambda i: res.columns[i])
-    drows = sorted(
-        row_key(tuple(row[i] for i in dsort)) for row in res.fetchall()
-    )
+    con = duck_views(extreme_sf)
+    _, srows = spark_rows(queries()[name](spark, extreme_sf))
+    _, drows = duck_rows(con.sql(oracle_sql()[name]))
     assert srows == drows

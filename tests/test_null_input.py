@@ -24,7 +24,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from tools.make_null_fuzz_sf import TABLES, main as _unused_main  # noqa: F401
+from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES
 from tools.make_null_fuzz_sf import mutate_table
 
 # The 16 queries the first r15 null-fuzz run crashed on (plus the pandas
@@ -58,7 +58,7 @@ def null_sf(tmp_path_factory):
 
     d = str(tmp_path_factory.mktemp("null_sf"))
     src = "/root/testdata/sf0.001"
-    for t in TABLES:
+    for t in TABLE_NAMES:
         out = mutate_table(os.path.join(src, f"{t}.parquet"), t, 0.03)
         pq.write_table(out, os.path.join(d, f"{t}.parquet"))
     return d

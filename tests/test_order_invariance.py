@@ -21,7 +21,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from tools.make_shuffled_sf import TABLES
+from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES
 
 SRC = "/root/testdata/sf0.001"
 
@@ -47,7 +47,7 @@ def shuffled_sf(tmp_path_factory):
     import pyarrow.parquet as pq
 
     d = str(tmp_path_factory.mktemp("shuffled_sf"))
-    for t in TABLES:
+    for t in TABLE_NAMES:
         tbl = pq.read_table(os.path.join(SRC, f"{t}.parquet"))
         rng = np.random.default_rng(zlib.crc32(f"test_shuffle:{t}".encode()))
         pq.write_table(

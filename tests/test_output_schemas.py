@@ -136,17 +136,10 @@ def test_all_oracles_emit_driver_safe_types():
     in round 5 and was latent in ``w12_reset_running_sum`` until round
     8; CAST(... AS BIGINT) / AS DOUBLE in the oracle SQL fixes it.
     Binding (not executing) resolves types, so the scan is cheap."""
-    import duckdb
-
     from datalake_imagenes_georreferenciadas_spark.plans.queries import ORACLES
+    from tools.verify_oracle import duck_views
 
-    con = duckdb.connect()
-    tables = (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split()
-    for t in tables:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    con = duck_views(SF)
     bad: list[str] = []
     for name, sql in ORACLES.items():
         rel = con.sql(sql)  # binds and type-resolves; lazy, no execution

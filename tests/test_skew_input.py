@@ -24,7 +24,8 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from tools.make_skewed_sf import TABLES, mutate_table
+from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES
+from tools.make_skewed_sf import mutate_table
 
 RATE = 0.30
 
@@ -37,7 +38,7 @@ def skewed_sf(tmp_path_factory):
 
     d = str(tmp_path_factory.mktemp("skewed_sf"))
     src = "/root/testdata/sf0.001"
-    for t in TABLES:
+    for t in TABLE_NAMES:
         pq.write_table(
             mutate_table(os.path.join(src, f"{t}.parquet"), t, RATE),
             os.path.join(d, f"{t}.parquet"),

@@ -8,9 +8,9 @@
 - only the FIRST ``n`` (default 50) entries of ``queries()`` — the
   driver's per-round cap — so this checks exactly the window the next
   CORRECTNESS_r{N}.json will grade, i.e. the names rotation fronts;
-- DuckDB oracle compare identical to tools/verify_oracle.py
-  (``fetchall``, not ``.df()`` — pandas widens nullable BIGINT→float64
-  and NULL→NaN, creating false mismatches).
+- the DuckDB oracle compare of tools/verify_oracle.py (its
+  ``check_query``: ``fetchall``, not ``.df()`` — pandas widens nullable
+  BIGINT→float64 and NULL→NaN, creating false mismatches).
 
 Usage: python tools/driver_sim.py [sf_dir] [n_front]
 """
@@ -36,8 +36,6 @@ def main() -> int:
     spark = SparkSession.builder.master("local[32]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    import duckdb
-
     from __spark_entry__ import entry, oracle_sql, queries
     import verify_oracle as V
 
@@ -46,65 +44,13 @@ def main() -> int:
     assert n >= 0
 
     qs, oracles = queries(), oracle_sql()
-    front = list(qs)[:n_front]
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
-    import time
-    import traceback
-
-    n_pass = n_fail = 0
-    for name in front:
-        t0 = time.time()
-        try:
-            sdf = qs[name](spark, sf_dir)
-            cols = sorted(sdf.columns)
-            srows = sorted(
-                V.row_key(tuple(r[c] for c in cols)) for r in sdf.collect()
-            )
-        except Exception:
-            print(f"FAIL {name}: SPARK ERROR")
-            traceback.print_exc(limit=8)
-            n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"pass {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s)")
-            n_pass += 1
-            continue
-        try:
-            res = con.sql(oracles[name])
-            dcols_raw = res.columns
-            dsort = sorted(range(len(dcols_raw)), key=lambda i: dcols_raw[i])
-            dcols = sorted(dcols_raw)
-            drows = sorted(
-                V.row_key(tuple(row[i] for i in dsort)) for row in res.fetchall()
-            )
-        except Exception:
-            print(f"FAIL {name}: DUCKDB ERROR")
-            traceback.print_exc(limit=8)
-            n_fail += 1
-            continue
-        if cols != dcols:
-            print(f"FAIL {name}: schema spark={cols} duck={dcols}")
-            n_fail += 1
-        elif srows != drows:
-            diffs = [i for i, (a, b) in enumerate(zip(srows, drows)) if a != b]
-            print(
-                f"FAIL {name}: rows spark={len(srows)} duck={len(drows)}, "
-                f"{len(diffs)} differing"
-            )
-            if diffs:
-                i = diffs[0]
-                print(f"  spark: {srows[i]}")
-                print(f"  duck : {drows[i]}")
-            n_fail += 1
-        else:
-            print(f"pass {name} ({len(srows)} rows, {time.time()-t0:.1f}s)")
-            n_pass += 1
+    con = V.duck_views(sf_dir)
+    results = [
+        V.check_query(spark, con, name, qs[name], sf_dir, oracles.get(name))
+        for name in list(qs)[:n_front]
+    ]
+    n_fail = sum(r["status"] == "fail" for r in results)
+    n_pass = len(results) - n_fail
     print(f"\nfront-{n_front} under DEFAULT session: {n_pass} pass, {n_fail} fail")
     return 1 if n_fail else 0
 

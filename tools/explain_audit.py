@@ -88,7 +88,7 @@ AUDITS: dict[str, tuple[int, list[str]]] = {
     "emb_centroid": (1, ["Generate", "HashAggregate", "!BroadcastHashJoin", "!SortMergeJoin"]),
     # incremental dedup gate: the new-batch split must push below the band
     # join into the probe-side parquet scan (hash the delta, probe the index)
-    "dedup_incremental_pairs": (5, ["GreaterThanOrEqual(doc_id,400)", "BroadcastHashJoin", "!SortMergeJoin", "!CartesianProduct"]),
+    "dedup_incremental_pairs": (4, ["GreaterThanOrEqual(doc_id,400)", "BroadcastHashJoin", "!SortMergeJoin", "!CartesianProduct"]),
     # filtered vector search: metadata predicate prunes the scan BEFORE any
     # vector math; queries broadcast
     "ann_filtered_topk": (2, ["EqualTo(label,3)", "BroadcastNestedLoopJoin", "!SortMergeJoin"]),
@@ -454,7 +454,7 @@ AUDITS: dict[str, tuple[int, list[str]]] = {
     "sub_all_rewrite": (1, ["BroadcastHashJoin", "!SortMergeJoin", "!CartesianProduct"]),
     # dedup report composite: every family's candidate/verify join stays
     # hash-shaped; one-row totals ride BNLJ; never a cartesian
-    "corpus_dedup_report": (8, ["BroadcastHashJoin", "!CartesianProduct", "!SortMergeJoin"]),
+    "corpus_dedup_report": (7, ["BroadcastHashJoin", "!CartesianProduct", "!SortMergeJoin"]),
     # per-user trend fit: JVM-side regr_slope (r09 rewrite of the former
     # grouped-map kernel) — ONE user_id exchange feeds both the min()
     # window and the final aggregate; no Python anywhere in the plan
@@ -525,7 +525,7 @@ AUDITS: dict[str, tuple[int, list[str]]] = {
     "j1_full_outer": (2, ["SortMergeJoin FullOuter", "!BroadcastHashJoin", "!CartesianProduct"]),
     # MinHash banding: candidate pairs via band-bucket equi-joins
     # (broadcast at test SF), shingle explode bounded by Generate
-    "dedup_near_pairs": (5, ["BroadcastHashJoin", "Generate", "!SortMergeJoin", "!CartesianProduct"]),
+    "dedup_near_pairs": (4, ["BroadcastHashJoin", "Generate", "!SortMergeJoin", "!CartesianProduct"]),
     # exact n-gram Jaccard: staged shingle index feeds hot/sizes/pair
     # branches — all joins keyed, no all-pairs anywhere. r19: the capped
     # index is materialized once behind an eager localCheckpoint (it fed

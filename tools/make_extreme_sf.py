@@ -28,9 +28,10 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES
 
 # char-count 24, utf-8 byte-count 60, includes a combining mark (é as
 # e+U+0301), CJK, an astral-plane emoji, and a bidi-neutral arabic word
@@ -83,7 +84,7 @@ def main() -> int:
     dest = sys.argv[1]
     src = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
     os.makedirs(dest, exist_ok=True)
-    for table in TABLES:
+    for table in TABLE_NAMES:
         out = mutate_table(os.path.join(src, f"{table}.parquet"), table)
         pq.write_table(out, os.path.join(dest, f"{table}.parquet"))
         print(f"{table}: {out.num_rows} rows")

@@ -27,9 +27,10 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES
 
 
 def null_mask(table: str, col: str, n: int, rate: float) -> np.ndarray:
@@ -59,7 +60,7 @@ def main() -> int:
     src = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
     rate = float(sys.argv[3]) if len(sys.argv) > 3 else 0.03
     os.makedirs(dest, exist_ok=True)
-    for table in TABLES:
+    for table in TABLE_NAMES:
         out = mutate_table(os.path.join(src, f"{table}.parquet"), table, rate)
         pq.write_table(out, os.path.join(dest, f"{table}.parquet"))
         n_null = sum(out.column(i).null_count for i in range(out.num_columns))

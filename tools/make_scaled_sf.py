@@ -43,6 +43,11 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES
+
 STRIDE = 10_000_000
 
 # int64 surrogate keys offset per copy (col -> offset multiplier is
@@ -134,11 +139,7 @@ def main() -> int:
     dest, k = sys.argv[1], int(sys.argv[2])
     src = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
     os.makedirs(dest, exist_ok=True)
-    tables = (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split()
-    for name in tables:
+    for name in TABLE_NAMES:
         out = inflate_table(os.path.join(src, f"{name}.parquet"), name, k)
         pq.write_table(out, os.path.join(dest, f"{name}.parquet"))
         print(f"{name}: {out.num_rows} rows")

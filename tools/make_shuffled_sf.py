@@ -22,9 +22,10 @@ import zlib
 import numpy as np
 import pyarrow.parquet as pq
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES
 
 
 def main() -> int:
@@ -34,7 +35,7 @@ def main() -> int:
     dest = sys.argv[1]
     src = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
     os.makedirs(dest, exist_ok=True)
-    for table in TABLES:
+    for table in TABLE_NAMES:
         t = pq.read_table(os.path.join(src, f"{table}.parquet"))
         rng = np.random.default_rng(zlib.crc32(f"shuffle:{table}".encode()))
         perm = rng.permutation(t.num_rows)

@@ -30,9 +30,10 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES
 
 HOT = {
     "lineitem": {"l_partkey": 1, "l_suppkey": 1},
@@ -92,7 +93,7 @@ def main() -> int:
     src = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
     rate = float(sys.argv[3]) if len(sys.argv) > 3 else 0.30
     os.makedirs(dest, exist_ok=True)
-    for table in TABLES:
+    for table in TABLE_NAMES:
         out = mutate_table(os.path.join(src, f"{table}.parquet"), table, rate)
         pq.write_table(out, os.path.join(dest, f"{table}.parquet"))
         print(f"{table}: {out.num_rows} rows")

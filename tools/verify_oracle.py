@@ -26,6 +26,7 @@ sys.path.insert(0, REPO)
 import duckdb
 
 from datalake_imagenes_georreferenciadas_spark.session import get_spark
+from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES
 from __spark_entry__ import oracle_sql, queries
 
 
@@ -41,6 +42,82 @@ def norm_cell(v):
 
 def row_key(row):
     return tuple(norm_cell(v) for v in row)
+
+
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per lake table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def spark_rows(sdf) -> tuple[list[str], list[tuple]]:
+    """(sorted column names, sorted normalized rows) of a Spark result."""
+    cols = sorted(sdf.columns)
+    return cols, sorted(row_key(tuple(r[c] for c in cols)) for r in sdf.collect())
+
+
+def duck_rows(res) -> tuple[list[str], list[tuple]]:
+    """The same for a DuckDB relation, columns matched by name. Fetched
+    with ``fetchall`` — pandas would widen nullable BIGINT to float64."""
+    order = sorted(range(len(res.columns)), key=lambda i: res.columns[i])
+    return sorted(res.columns), sorted(
+        row_key(tuple(row[i] for i in order)) for row in res.fetchall()
+    )
+
+
+def check_query(spark, con, name: str, fn, sf_dir: str, oracle: str | None) -> dict:
+    """Run one query and its oracle, print ``pass``/``FAIL`` and return
+    ``{status, kind[, rows]}``: kind is ``match``/``rows_only`` on a
+    pass, else ``spark_error``/``duckdb_error``/``schema``/``rows``/
+    ``value``."""
+    t0 = time.time()
+    try:
+        cols, srows = spark_rows(fn(spark, sf_dir))
+    except Exception:
+        print(f"FAIL {name}: SPARK ERROR")
+        traceback.print_exc(limit=8)
+        return {"status": "fail", "kind": "spark_error"}
+    if oracle is None:
+        print(f"pass {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s)")
+        return {"status": "pass", "kind": "rows_only", "rows": len(srows)}
+    try:
+        res = con.sql(oracle)
+        # The driver fetches the DuckDB side via Arrow/pandas, which
+        # widens non-int64 integer types (HUGEINT from sum(INTEGER),
+        # unsigned ints, ...) to float64 — hash-mismatching against
+        # Spark's int64 even when values are equal. Flag those here so
+        # the local fetchall() (which hides the widening) can't lie.
+        widened = [
+            f"{c}:{t}"
+            for c, t in zip(res.columns, (str(t) for t in res.types))
+            if t.split("(")[0]
+            in {"HUGEINT", "UHUGEINT", "UINTEGER", "UBIGINT"}
+            or t.startswith("DECIMAL")
+        ]
+        if widened:
+            print(f"WARN {name}: oracle emits non-int64/decimal {widened} "
+                  "— driver pandas fetch will widen; CAST in the SQL")
+        dcols, drows = duck_rows(res)
+    except Exception:
+        print(f"FAIL {name}: DUCKDB ERROR")
+        traceback.print_exc(limit=8)
+        return {"status": "fail", "kind": "duckdb_error"}
+    if cols != dcols:
+        print(f"FAIL {name}: schema spark={cols} duck={dcols}")
+        return {"status": "fail", "kind": "schema"}
+    if len(srows) != len(drows):
+        print(f"FAIL {name}: rows spark={len(srows)} duck={len(drows)}")
+        return {"status": "fail", "kind": "rows"}
+    if srows != drows:
+        diffs = [i for i, (a, b) in enumerate(zip(srows, drows)) if a != b]
+        print(f"FAIL {name}: {len(diffs)} differing rows; first: ")
+        print(f"  spark: {srows[diffs[0]]}")
+        print(f"  duck : {drows[diffs[0]]}")
+        return {"status": "fail", "kind": "value"}
+    print(f"pass {name} ({len(srows)} rows, {time.time()-t0:.1f}s)")
+    return {"status": "pass", "kind": "match", "rows": len(srows)}
 
 
 def load_allowlist(axis: str) -> dict[str, str]:
@@ -100,85 +177,18 @@ def main() -> int:
     results: dict[str, dict] = {}
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duck_views(sf_dir)
 
     qs, oracles = queries(), oracle_sql()
     unknown = only - set(qs)
     if unknown:
         print(f"unknown queries on argv: {' '.join(sorted(unknown))}", file=sys.stderr)
         return 2
-    n_pass = n_fail = 0
     for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            cols = sorted(sdf.columns)
-            srows = sorted(row_key(tuple(r[c] for c in cols)) for r in sdf.collect())
-        except Exception:
-            print(f"FAIL {name}: SPARK ERROR")
-            traceback.print_exc(limit=8)
-            results[name] = {"status": "fail", "kind": "spark_error"}
-            n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"pass {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s)")
-            results[name] = {"status": "pass", "kind": "rows_only", "rows": len(srows)}
-            n_pass += 1
-            continue
-        try:
-            res = con.sql(oracles[name])
-            dcols_raw = res.columns
-            # The driver fetches the DuckDB side via Arrow/pandas, which
-            # widens non-int64 integer types (HUGEINT from sum(INTEGER),
-            # unsigned ints, ...) to float64 — hash-mismatching against
-            # Spark's int64 even when values are equal. Flag those here so
-            # the local fetchall() (which hides the widening) can't lie.
-            widened = [
-                f"{c}:{t}"
-                for c, t in zip(dcols_raw, (str(t) for t in res.types))
-                if t.split("(")[0]
-                in {"HUGEINT", "UHUGEINT", "UINTEGER", "UBIGINT"}
-                or t.startswith("DECIMAL")
-            ]
-            if widened:
-                print(f"WARN {name}: oracle emits non-int64/decimal {widened} "
-                      "— driver pandas fetch will widen; CAST in the SQL")
-            dsort = sorted(range(len(dcols_raw)), key=lambda i: dcols_raw[i])
-            dcols = sorted(dcols_raw)
-            drows = sorted(row_key(tuple(row[i] for i in dsort)) for row in res.fetchall())
-        except Exception:
-            print(f"FAIL {name}: DUCKDB ERROR")
-            traceback.print_exc(limit=8)
-            results[name] = {"status": "fail", "kind": "duckdb_error"}
-            n_fail += 1
-            continue
-        kind = None
-        if cols != dcols:
-            print(f"FAIL {name}: schema spark={cols} duck={dcols}")
-            kind = "schema"
-        elif len(srows) != len(drows):
-            print(f"FAIL {name}: rows spark={len(srows)} duck={len(drows)}")
-            kind = "rows"
-        elif srows != drows:
-            diffs = [i for i, (a, b) in enumerate(zip(srows, drows)) if a != b]
-            print(f"FAIL {name}: {len(diffs)} differing rows; first: ")
-            i = diffs[0]
-            print(f"  spark: {srows[i]}")
-            print(f"  duck : {drows[i]}")
-            kind = "value"
-        if kind is None:
-            print(f"pass {name} ({len(srows)} rows, {time.time()-t0:.1f}s)")
-            results[name] = {"status": "pass", "kind": "match", "rows": len(srows)}
-            n_pass += 1
-        else:
-            results[name] = {"status": "fail", "kind": kind}
-            n_fail += 1
+        if not only or name in only:
+            results[name] = check_query(spark, con, name, fn, sf_dir, oracles.get(name))
+    n_fail = sum(r["status"] == "fail" for r in results.values())
+    n_pass = len(results) - n_fail
     print(f"\n{n_pass} pass, {n_fail} fail")
     if json_out:
         with open(json_out, "w") as fh:
