@@ -675,7 +675,7 @@ def simhash_pairs_auto(
     copy-correlated scaled axis (alpha_tail 1.50 — make_scaled_sf's
     cross-copy token correlation grows candidates x2.42 per doubling
     while per-candidate cost stays flat x1.09; the same dial on a
-    decorrelated control reads 0.49, tools/organic_growth_control.py).
+    decorrelated control reads 0.49, c0dc757:tools/organic_growth_control.py).
     The unwaived auto rows are the cosine/semantic ones.
 
     The count contract is the TOTAL row count of ``df`` as given —
@@ -706,7 +706,7 @@ def simhash_band_candidates(
     """Candidate pairs ``(a_id, b_id, fa, fb)`` sharing at least one
     whole band of the fingerprint — the (only) stage of simhash dedup
     whose cost depends on bucket density, factored out so the scale
-    demo (tools/simhash_band_demo.py) can count candidates at each band
+    demo (c0dc757:tools/simhash_band_demo.py) can count candidates at each band
     width. Band ``b``'s key is ``(b << band_bits) | band``, one
     :func:`band_pairs` equi-join; never a cross join.
 

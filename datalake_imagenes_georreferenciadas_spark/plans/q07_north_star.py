@@ -370,7 +370,7 @@ def j_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     (quarter = '1995-Q4') that only the DIM carries, so static pruning
     cannot apply; at runtime Spark turns the dim's surviving keys into a
     partition filter on the fact scan (`dynamicpruningexpression` in
-    the formatted plan, asserted by tools/explain_audit.py) and reads 3
+    the formatted plan, asserted by tools/plan_audit.py) and reads 3
     of ~80 partitions instead of all of them. Layout staged once per
     application and sf_dir (standing-table posture, like the bucketed
     join)."""

@@ -183,7 +183,7 @@ def dedup_simhash_pairs_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-band join cost/row) constant at every scale. Ladder k=1..16:
     WAIVED on the copy-correlated scaled axis (alpha_tail 1.50, output
     growth from cross-copy token correlation — decorrelated control
-    0.49, tools/organic_growth_control.py; the cosine/semantic auto
+    0.49, c0dc757:tools/organic_growth_control.py; the cosine/semantic auto
     rows are the unwaived ones). The answer stays EXACT at the derived
     width: 4 bands >
     hamming 3, so pigeonhole makes the band join recall-lossless and

@@ -9,6 +9,7 @@ derived from ``__file__``.
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -48,3 +49,19 @@ def test_literal_sys_path_scanner():
         'import sys\nsys.path.insert(0, "/srv/checkout")\n'
         "sys.path.insert(0, str(Path(__file__).parent))\n"
     ) == [2]
+
+
+# A deleted tool is named with the commit it last lived in, as
+# ``<rev>:tools/x.py`` (what ``git show`` takes); the lookbehind skips it.
+_TOOL_PATH = re.compile(r"(?<![\w:/])tools/\w+\.py")
+
+
+def test_run_docs_name_only_existing_tools():
+    assert _TOOL_PATH.findall("run tools/a.py, not c0dc757:tools/b.py") == ["tools/a.py"]
+    missing = sorted(
+        f"{doc}: {path}"
+        for doc in ("README.md", "SCALING.md", ".claude/skills/verify/SKILL.md")
+        for path in set(_TOOL_PATH.findall((REPO / doc).read_text()))
+        if not (REPO / path).exists()
+    )
+    assert not missing, f"docs name tools that do not exist: {missing}"

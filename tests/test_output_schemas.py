@@ -7,6 +7,8 @@ The external driver canonicalizes every query result through pandas
    level — array/map/struct cells raise ``TypeError: unhashable type``
    inside the driver's canon (this red-rowed ``a6_collect_sorted`` in
    round 5). Serialize nested values (concat_ws / to_json) instead.
+   tools/verify_oracle.py checks this for every query it runs
+   (tests/test_plan_audit.py).
 2. The bench stdout JSON line must fit the driver's 2,000-byte
    stdout-tail capture — an oversized line is truncated at the head and
    becomes unparseable (rounds 2, 3 and 5 all lost their official bench
@@ -19,32 +21,9 @@ import json
 import sys
 from pathlib import Path
 
-import pytest
-
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import types as T
-
 SF = "/root/testdata/sf0.001"
-
-_FORBIDDEN = (T.ArrayType, T.MapType, T.StructType, T.NullType)
-
-
-def test_all_query_outputs_are_atomic(spark):
-    """Build every registered query at sf0.001 and reject any top-level
-    array/map/struct/null output column (driver canon cannot hash it)."""
-    from datalake_imagenes_georreferenciadas_spark.plans.queries import all_queries
-
-    bad: list[str] = []
-    for name, fn in all_queries().items():
-        df = fn(spark, SF)
-        for field in df.schema.fields:
-            if isinstance(field.dataType, _FORBIDDEN):
-                bad.append(f"{name}.{field.name}: {field.dataType.simpleString()}")
-    assert not bad, (
-        "non-atomic output columns (driver canon would red-row these): "
-        + "; ".join(bad)
-    )
 
 
 def test_bench_stdout_line_fits_driver_capture():

@@ -11,8 +11,8 @@ under test.
 Closed-form arithmetic must stay in ``pyspark.sql.functions``:
 g1_trend_fit computed least-squares slopes inside a grouped
 applyInPandas kernel at 12x the cost of the built-in ``regr_slope``
-before its r09 rewrite. tools/singlepartition_sweep.py enforces the
-same invariant at the PHYSICAL-PLAN level per round (ALLOWED_PYTHON);
+before its r09 rewrite. tools/verify_oracle.py enforces the same
+invariant at the PHYSICAL-PLAN level (tools/plan_audit.ALLOWED_PYTHON);
 this test pins the SOURCE-level call sites by (module, enclosing
 function) so a new kernel fails the suite immediately — adding an
 entry here is the review step: state why no built-in can express it.

@@ -37,7 +37,7 @@ WAIVERS = {
     # SimHash pigeonhole bands have a fixed bucket space per band the
     # same way; the band-WIDENING scale path is demonstrated in
     # SCALING.md (r17: k=8 at 60-bit/15-bit-band = ×2.5 cost for ×8
-    # data vs ×13.6 at the registered 32/8; tools/simhash_band_demo.py)
+    # data vs ×13.6 at the registered 32/8; c0dc757:tools/simhash_band_demo.py)
     "dedup_simhash_pairs": "fixed-width pigeonhole-band bucket density; band width scales with log n (demonstrated r17; the 60/15 setting is REGISTERED as dedup_simhash_pairs_wide, ladder alpha_tail 0.68 at its k=8 design density and 1.14 at k=16 — density-matched through k=16, under the gate at every measured point)",
     # the registered k=8-density-matched settings measured PAST their
     # design density: the k=16 segment re-enters the fixed-p quadratic
@@ -47,7 +47,7 @@ WAIVERS = {
     "dedup_cosine_pairs_scaled": "4x8 is density-matched FOR k=8 (alpha_tail 1.13 there, unwaived); the 8->16 segment reads 1.99 by the fixed-p law - planes=9 is the measured k=16 dial",
     "dedup_semantic_components_scaled": "same mechanism one stage later: 1.20 at its k=8 design density, 1.89 on the 8->16 segment; planes=9 is the measured k=16 dial",
     # NOT a dial failure — an AXIS property, decomposed by measurement
-    # (r18, tools/organic_growth_control.py + SCALING.md §auto-density):
+    # (r18, c0dc757:tools/organic_growth_control.py + SCALING.md §auto-density):
     # make_scaled_sf's every-3rd-word salting leaves TOKEN-VOTE simhash
     # fingerprints correlated across copies (it was calibrated for
     # 5-shingle jaccard, where salting kills 87% of shingles), so

@@ -1,5 +1,6 @@
-"""Unit tests for the sweep's plan-text walker
-(tools.singlepartition_sweep.fact_level_singlepartition).
+"""Unit tests for the plan-text walkers of tools/plan_audit.py: the
+scale-shape sweep's fact-level SinglePartition walker, the adaptive-plan
+views and node counts, the wide-aggregate detector and the pin tables.
 
 Synthetic formatted-plan text, no Spark needed. The r09 ADVICE found a
 false negative: the walk broke out of the whole subtree at the FIRST
@@ -23,7 +24,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from tools.singlepartition_sweep import fact_level_singlepartition
+from tools.plan_audit import fact_level_singlepartition
 
 
 def _plan(tree: str, *blocks: str) -> str:
@@ -55,6 +56,24 @@ Sort (5)
         SP_BLOCK.format(4),
     )
     assert fact_level_singlepartition(plan) == []
+
+
+def test_codegen_marked_barrier_shields_its_subtree():
+    # an executed plan marks whole-stage-codegen nodes with "* "
+    plan = _plan(
+        """== Physical Plan ==
+AdaptiveSparkPlan (7)
++- == Final Plan ==
+   * HashAggregate (6)
+   +- ShuffleQueryStage (5), Statistics(sizeInBytes=56.0 B, rowCount=1)
+      +- Exchange (4)
+         +- * HashAggregate (3)
+            +- * ColumnarToRow (2)
+               +- Scan parquet  (1)""",
+        SP_BLOCK.format(4),
+    )
+    assert fact_level_singlepartition(plan) == []
+    assert fact_level_singlepartition(plan.replace("* HashAggregate (3)", "* Project (3)")) == [4]
 
 
 def test_multi_branch_sibling_scan_is_not_shielded():
@@ -137,7 +156,8 @@ Sort (3)
     )
     assert fact_level_singlepartition(plan) == []
 
-from tools.explain_audit import AUDITS, EXCLUDED  # noqa: E402
+from tools import plan_audit  # noqa: E402
+from tools.plan_audit import AUDITS, STREAM_JOBS  # noqa: E402
 
 
 def test_no_duplicate_keys_in_pin_dicts():
@@ -147,9 +167,16 @@ def test_no_duplicate_keys_in_pin_dicts():
     every pin dict so the class can't recur."""
     import ast
 
-    for path, dict_name in [
-        (os.path.join(REPO, "tools", "explain_audit.py"), "AUDITS"),
-    ]:
+    path = os.path.join(REPO, "tools", "plan_audit.py")
+    for dict_name in (
+        "AUDITS",
+        "STREAM_JOBS",
+        "SPREAD",
+        "ALLOWED",
+        "ALLOWED_CARTESIAN",
+        "ALLOWED_PYTHON",
+        "ALLOWED_WIDE",
+    ):
         tree = ast.parse(open(path).read())
         found = False
         for node in ast.walk(tree):
@@ -168,21 +195,134 @@ def test_no_duplicate_keys_in_pin_dicts():
         assert found, f"{dict_name} assignment not found in {path}"
 
 
-def test_every_registered_query_is_pinned_curated_or_excluded():
-    """Full-registry pin coverage: each query has a curated explain audit
-    or a documented exclusion (streaming sink read-backs)."""
+def test_every_registered_query_is_pinned():
+    """Full-registry pin coverage: every query has a plan audit, except
+    the streaming sink read-backs, which carry a job budget only."""
     from datalake_imagenes_georreferenciadas_spark.plans.queries import all_queries
 
     names = set(all_queries().keys())
-    uncovered = names - set(AUDITS) - EXCLUDED
-    assert uncovered == set(), f"queries with no plan pin: {sorted(uncovered)}"
-    assert not set(AUDITS) & EXCLUDED
-    assert EXCLUDED <= names, "stale exclusion"
+    assert len(names) == 338
+    assert names - set(AUDITS) - set(STREAM_JOBS) == set(), "queries with no pin"
+    assert set(AUDITS) | set(STREAM_JOBS) <= names, "pin for an unregistered name"
+    assert not set(AUDITS) & set(STREAM_JOBS)
+    assert set(STREAM_JOBS) == {
+        "streaming_append_windows",
+        "streaming_cdc_apply",
+        "streaming_dedup",
+        "streaming_foreachbatch_merge",
+        "streaming_session",
+        "streaming_sliding",
+        "streaming_stateful_totals",
+        "streaming_static_join",
+        "streaming_stream_join",
+        "streaming_topk",
+        "streaming_tumbling",
+    }
+
+
+# ---- views of an executed adaptive plan ----
+
+# a8_corr as it prints once run: a Final and an Initial subtree sharing
+# the Scan id (1); the round-robin spread exchange is (3) / (13).
+_A8_TREE = """== Physical Plan ==
+AdaptiveSparkPlan (18)
++- == Final Plan ==
+   ResultQueryStage (11)
+   +- * Project (10)
+      +- * HashAggregate (9)
+         +- AQEShuffleRead (8)
+            +- ShuffleQueryStage (7), Statistics(sizeInBytes=2.3 KiB, rowCount=12)
+               +- Exchange (6)
+                  +- * HashAggregate (5)
+                     +- ShuffleQueryStage (4), Statistics(sizeInBytes=234.4 KiB, rowCount=6.00E+3)
+                        +- Exchange (3)
+                           +- * Project (2)
+                              +- Scan parquet  (1)
++- == Initial Plan ==
+   Project (17)
+   +- HashAggregate (16)
+      +- Exchange (15)
+         +- HashAggregate (14)
+            +- Exchange (13)
+               +- Project (12)
+                  +- Scan parquet  (1)"""
+
+_A8_BLOCKS = {
+    1: "Scan parquet \nLocation: InMemoryFileIndex [file:/data/sf0.001/lineitem.parquet]",
+    3: "Exchange\nArguments: RoundRobinPartitioning(4), REPARTITION_BY_NUM, [plan_id=50]",
+    5: "HashAggregate [codegen id : 2]\nKeys [1]: [l_returnflag#8]\nResults [12]: [l_returnflag#8]",
+    6: "Exchange\nArguments: hashpartitioning(l_returnflag#8, 32), ENSURE_REQUIREMENTS",
+    9: "HashAggregate [codegen id : 3]\nKeys [1]: [l_returnflag#8]\nResults [7]: [l_returnflag#8]",
+    13: "Exchange\nArguments: RoundRobinPartitioning(4), REPARTITION_BY_NUM, [plan_id=27]",
+    14: "HashAggregate\nKeys [1]: [l_returnflag#8]\nResults [12]: [l_returnflag#8]",
+    15: "Exchange\nArguments: hashpartitioning(l_returnflag#8, 32), ENSURE_REQUIREMENTS",
+    16: "HashAggregate\nKeys [1]: [l_returnflag#8]\nResults [7]: [l_returnflag#8]",
+    18: "AdaptiveSparkPlan\nArguments: isFinalPlan=true",
+}
+
+
+def _a8_plan(blocks: dict[int, str] = _A8_BLOCKS, tree: str = _A8_TREE) -> str:
+    details = "\n\n".join(f"({i}) {b}" for i, b in sorted(blocks.items()))
+    return tree + "\n\n\n" + details + "\n"
+
+
+def test_counts_cover_only_the_final_subtree():
+    plan = _a8_plan()
+    final, initial = plan_audit.views(plan)
+    assert plan_audit.counts(final) == (2, 0, {"lineitem": 1})
+    assert plan_audit.counts(initial) == (2, 0, {"lineitem": 1})
+    # every "(N) Exchange" block of the whole string: the Initial Plan
+    # comes on top of the final one
+    assert plan_audit.counts(plan)[0] == 4
+    assert "Exchange (13)" in initial and "Exchange (13)" not in final
+    assert "(13) Exchange" in initial and "(13) Exchange" not in final
+    assert "(3) Exchange" in final and "(3) Exchange" not in initial
+    assert "(1) Scan parquet" in final and "(1) Scan parquet" in initial
+
+
+def test_unadapted_plan_is_its_own_final_and_initial_view():
+    plan = "== Physical Plan ==\nProject (2)\n+- Scan parquet  (1)\n\n\n" + "\n\n".join(
+        ["(1) Scan parquet \nLocation: InMemoryFileIndex [file:/d/orders.parquet]", "(2) Project"]
+    )
+    assert plan_audit.views(plan) == (plan, plan)
+    assert plan_audit.counts(plan) == (0, 0, {"orders": 1})
+
+
+def _without_round_robin() -> str:
+    # spread() as a no-op: the scan feeds the partial aggregate directly
+    dropped = ("(3)", "(4)", "(13)")  # the round-robin exchanges and stage
+    tree = "\n".join(
+        line for line in _A8_TREE.splitlines() if not any(d in line for d in dropped)
+    )
+    return _a8_plan({i: b for i, b in _A8_BLOCKS.items() if i not in (3, 13)}, tree)
+
+
+def test_a8_corr_round_robin_is_required_only_below_parallelism():
+    jobs = AUDITS["a8_corr"][0]
+    assert plan_audit.audit("a8_corr", _a8_plan(), jobs, 4, {"lineitem": 1}) == []
+    plan = _without_round_robin()
+    assert "RoundRobinPartitioning" not in plan
+    assert plan_audit.audit("a8_corr", plan, jobs, 4, {"lineitem": 1}) == [
+        "missing: RoundRobinPartitioning (lineitem scans as 1 < 4 partitions)"
+    ]
+    # a scan already at the session's parallelism: spread() is a no-op
+    assert plan_audit.audit("a8_corr", plan, jobs, 4, {"lineitem": 4}) == []
+    assert plan_audit.audit("a8_corr", plan, jobs, 1, {"lineitem": 1}) == []
+
+
+def test_budgets_reject_extra_final_nodes_and_jobs():
+    jobs = AUDITS["a8_corr"][0]
+    blocks = dict(_A8_BLOCKS)
+    blocks[2] = "Generate\nArguments: explode(x#1)"
+    probs = plan_audit.audit("a8_corr", _a8_plan(blocks), jobs + 1, 4, {"lineitem": 1})
+    assert probs == ["generates=1 > 0", f"jobs={jobs + 1} > {jobs}"]
+    assert plan_audit.audit("streaming_tumbling", "", STREAM_JOBS["streaming_tumbling"], 4, {}) == []
+    assert plan_audit.audit("no_such_query", "", 0, 4, {}) == ["no pin in tools/plan_audit.py"]
 
 
 # ---- wide-aggregate-buffer detector (r10: the a5 distinct-rewrite class) ----
 
-from tools.singlepartition_sweep import wide_agg_results  # noqa: E402
+from tools.plan_audit import wide_agg_results  # noqa: E402
 
 
 def _agg_node(n_results: int, node_id: int = 2) -> str:
@@ -251,7 +391,7 @@ Sort (3)
 
 # ---- structural ALLOWED_WIDE waiver (r12 ADVICE medium) ----
 
-from tools.singlepartition_sweep import wide_agg_key_violations  # noqa: E402
+from tools.plan_audit import wide_agg_key_violations  # noqa: E402
 
 
 def _keyed_agg(n_results: int, keys: list) -> str:
@@ -362,7 +502,7 @@ _keys = st.recursive(_plain, _wrap, max_leaves=6)
 
 @given(st.lists(_keys, min_size=1, max_size=5))
 def test_split_top_level_roundtrips_bracketed_keys(keys):
-    from tools.singlepartition_sweep import _split_top_level
+    from tools.plan_audit import _split_top_level
 
     joined = ", ".join(keys)
     assert [p.strip() for p in _split_top_level(joined)] == keys
@@ -374,7 +514,7 @@ def test_split_top_level_clamps_negative_depth_on_stray_closer():
     # keys after the stray closer silently merged (fail-safe: the merged
     # key fails the waiver fullmatch → false FLAG, never a false pass,
     # but the flag text was opaque). Clamped at 0, later commas split.
-    from tools.singlepartition_sweep import _split_top_level
+    from tools.plan_audit import _split_top_level
 
     parts = [p.strip() for p in _split_top_level("substr(s, ''), ')', a#1, b#2")]
     assert parts == ["substr(s, '')", "')'", "a#1", "b#2"]

@@ -1,6 +1,9 @@
 """Local mini-driver: run every queries() entry against its oracle_sql()
 twin in DuckDB at a given sf and report row-count / schema / value-set
 mismatches — a faster feedback loop than waiting for the driver round.
+The same pass audits each query that ran: its output columns must be
+atomic, and its executed plan and Spark job count must meet its pins in
+tools/plan_audit.py.
 
 Usage: python tools/verify_oracle.py [--json OUT.json] [--allowlist AXIS]
                                      [sf_dir] [query ...]
@@ -9,7 +12,9 @@ Usage: python tools/verify_oracle.py [--json OUT.json] [--allowlist AXIS]
 --allowlist AXIS  after the run, diff the failing-name set against
                   tools/fuzz_allowlist.json[AXIS]; exit 0 iff they are
                   EQUAL (the fuzz-residue contract: a new divergence OR
-                  a silently-healed allowlist entry both fail loudly)
+                  a silently-healed allowlist entry both fail loudly).
+                  A fuzz-axis run compares rows only: its plans and job
+                  counts follow the mutated data, not the pins.
 """
 
 from __future__ import annotations
@@ -24,9 +29,11 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import duckdb
+from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQueryListener
 
 from datalake_imagenes_georreferenciadas_spark.session import get_spark
-from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES
+from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES, table
 from __spark_entry__ import oracle_sql, queries
 
 
@@ -67,21 +74,69 @@ def duck_rows(res) -> tuple[list[str], list[tuple]]:
     )
 
 
-def check_query(spark, con, name: str, fn, sf_dir: str, oracle: str | None) -> dict:
+class Audit(StreamingQueryListener):
+    """The plan and job checks of each query that ran. Tags the query's
+    jobs with the group ``verify/<name>`` and counts them together with
+    those of every stream it started (micro-batches run under the
+    stream's ``runId`` group), then hands the executed plan to
+    ``plan_audit.audit``."""
+
+    def __init__(self, spark, sf_dir: str):
+        import plan_audit  # beside this script: importable when it runs as one
+
+        self.check = plan_audit.audit
+        self.sc = spark.sparkContext
+        self.explain = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+        self.parallelism = self.sc.defaultParallelism
+        spread = set(plan_audit.SPREAD.values())
+        self.splits = {t: table(spark, sf_dir, t).rdd.getNumPartitions() for t in spread}
+        self.runs: list[str] = []
+        spark.streams.addListener(self)
+
+    def onQueryStarted(self, event):
+        self.runs.append(str(event.runId))
+
+    onQueryProgress = onQueryTerminated = lambda self, event: None
+
+    def start(self, name: str) -> None:
+        self.group, self.first_run = f"verify/{name}", len(self.runs)
+        self.sc.setJobGroup(self.group, self.group)
+
+    def problems(self, name: str, sdf) -> list[str]:
+        """Audit problems of ``sdf``, built and collected since ``start``."""
+        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
+        st = self.sc.statusTracker()
+        groups = [self.group, *self.runs[self.first_run :]]
+        jobs = sum(len(st.getJobIdsForGroup(g)) for g in groups)
+        plan = sdf._jdf.queryExecution().explainString(self.explain)
+        # the driver canon hashes each cell: nested cells are unhashable
+        nested = [
+            f"non-atomic output {f.name}: {f.dataType.simpleString()}"
+            for f in sdf.schema.fields
+            if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType, T.NullType))
+        ]
+        return nested + self.check(name, plan, jobs, self.parallelism, self.splits)
+
+
+def check_query(
+    spark, con, name: str, fn, sf_dir: str, oracle: str, audit: Audit | None = None
+) -> dict:
     """Run one query and its oracle, print ``pass``/``FAIL`` and return
-    ``{status, kind[, rows]}``: kind is ``match``/``rows_only`` on a
-    pass, else ``spark_error``/``duckdb_error``/``schema``/``rows``/
-    ``value``."""
+    ``{status, kind[, rows]}``: kind is ``match`` on a pass, else
+    ``spark_error``/``duckdb_error``/``schema``/``rows``/``value``, or
+    ``audit`` when matching rows came from a plan or job count that
+    ``audit`` rejects."""
     t0 = time.time()
     try:
-        cols, srows = spark_rows(fn(spark, sf_dir))
+        if audit is not None:
+            audit.start(name)
+        sdf = fn(spark, sf_dir)
+        cols, srows = spark_rows(sdf)
+        probs = audit.problems(name, sdf) if audit is not None else []
     except Exception:
         print(f"FAIL {name}: SPARK ERROR")
         traceback.print_exc(limit=8)
         return {"status": "fail", "kind": "spark_error"}
-    if oracle is None:
-        print(f"pass {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s)")
-        return {"status": "pass", "kind": "rows_only", "rows": len(srows)}
     try:
         res = con.sql(oracle)
         # The driver fetches the DuckDB side via Arrow/pandas, which
@@ -116,6 +171,9 @@ def check_query(spark, con, name: str, fn, sf_dir: str, oracle: str | None) -> d
         print(f"  spark: {srows[diffs[0]]}")
         print(f"  duck : {drows[diffs[0]]}")
         return {"status": "fail", "kind": "value"}
+    if probs:
+        print(f"FAIL {name}: audit: {'; '.join(probs)}")
+        return {"status": "fail", "kind": "audit"}
     print(f"pass {name} ({len(srows)} rows, {time.time()-t0:.1f}s)")
     return {"status": "pass", "kind": "match", "rows": len(srows)}
 
@@ -178,6 +236,7 @@ def main() -> int:
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     con = duck_views(sf_dir)
+    audit = Audit(spark, sf_dir) if allow_axis is None else None
 
     qs, oracles = queries(), oracle_sql()
     unknown = only - set(qs)
@@ -186,7 +245,7 @@ def main() -> int:
         return 2
     for name, fn in qs.items():
         if not only or name in only:
-            results[name] = check_query(spark, con, name, fn, sf_dir, oracles.get(name))
+            results[name] = check_query(spark, con, name, fn, sf_dir, oracles.get(name), audit)
     n_fail = sum(r["status"] == "fail" for r in results.values())
     n_pass = len(results) - n_fail
     print(f"\n{n_pass} pass, {n_fail} fail")
