@@ -12,8 +12,8 @@ Design notes vs the reference:
   mysql_process.py:13-25) is a single-writer bottleneck and a race; ids
   here are allocated per-batch, deterministically and WITHOUT a global
   single-partition window: a per-``indice`` partitioned ``row_number``
-  plus driver-computed cumulative group offsets — the zipWithIndex
-  pattern (see ``_with_ids``).
+  plus cumulative group offsets computed JVM-side over the per-group
+  counts — the zipWithIndex pattern (see ``_with_ids``).
 - Writer concurrency: the store assumes ONE writer at a time (the
   reference's cron posture — one script run per schedule). Two concurrent
   writers could mint colliding run/catalog ids (max+1 read-then-append)
@@ -39,6 +39,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..tables import local_frame
 
 CATALOG_SCHEMA = T.StructType(
     [
@@ -110,7 +112,7 @@ class CatalogStore:
     def _read(self, name: str, schema: T.StructType) -> DataFrame:
         path = self._path(name)
         if not os.path.exists(path):
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(path)
 
     # ---- catalog versioning ----------------------------------------------
@@ -148,7 +150,7 @@ class CatalogStore:
         ``version`` (time travel)."""
         path = self._catalog_dir(version)
         if not os.path.exists(path):
-            return self.spark.createDataFrame([], CATALOG_SCHEMA)
+            return local_frame(self.spark, [], CATALOG_SCHEMA)
         return self.spark.read.schema(CATALOG_SCHEMA).parquet(path)
 
     def runs(self) -> DataFrame:
@@ -194,7 +196,8 @@ class CatalogStore:
             if row["replay"] is not None:
                 return int(row["replay"])
             run_id = (int(row["m"]) if row["m"] is not None else 0) + 1
-        run = self.spark.createDataFrame(
+        run = local_frame(
+            self.spark,
             [(run_id, id_proceso, batch_id)],
             "id_ejecucion long, id_proceso int, batch_id long",
         ).withColumn("fecha", F.current_timestamp())
@@ -301,11 +304,13 @@ class CatalogStore:
         if not ids:
             return self.current_version()  # no-op: don't burn a snapshot
         cat = self.catalog()
-        # a repeated id would match its catalog row once per copy
-        updates = self.spark.createDataFrame(
-            [(i,) for i in sorted({int(i) for i in ids})], "id long"
+        # a repeated id would match its catalog row once per copy; the
+        # id set is an exact-sized LocalRelation, so the join is planned
+        # from its stats (a broadcast while it fits) without a hint
+        updates = local_frame(
+            self.spark, [(i,) for i in sorted({int(i) for i in ids})], "id long"
         )
-        hit = F.broadcast(updates.withColumn("__hit", F.lit(1)))
+        hit = updates.withColumn("__hit", F.lit(1))
         merged = (
             cat.join(hit, "id", "left")
             .withColumn(

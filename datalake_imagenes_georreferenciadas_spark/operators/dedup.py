@@ -46,6 +46,7 @@ from ..functions.hashing import (
     shingles_from_tokens,
     tokens,
 )
+from ..tables import local_frame
 
 
 def _exploded_shingles(
@@ -496,11 +497,7 @@ def components_from_edges(
                 lo, hi = min(ra, rb), max(ra, rb)
                 parent[hi] = lo
         comp_rows = [(int(x), int(find(x))) for x in parent]
-        return F.broadcast(
-            spark.createDataFrame(
-                comp_rows or [(None, None)], "id long, component long"
-            ).filter(F.col("id").isNotNull())
-        )
+        return local_frame(spark, comp_rows, "id long, component long")
 
     edges = edges.persist()
     sym = edges.union(

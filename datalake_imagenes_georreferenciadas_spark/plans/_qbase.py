@@ -41,7 +41,7 @@ from ..operators.sessionize import sessionize
 from ..operators.spatial import classify_points, contains_join, contains_join_grid, nearest_vertex_join
 from ..operators.topk import argmin_per_group, topk_per_group
 from ..sources.binary import scratch_dir, stage_dir
-from ..tables import norm_event_ts, spread, table
+from ..tables import local_frame, norm_event_ts, spread, table
 from . import geo_fixture as GF
 from .flagship import FLAGSHIP_ORACLE_SQL, catalog_filtered_join
 

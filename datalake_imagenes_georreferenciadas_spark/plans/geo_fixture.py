@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..tables import local_frame
+
 # (img_id, lon, lat)
 POINTS: list[tuple[int, float | None, float | None]] = [
     (1, 1.0, 1.0),      # inside P1 (triangle)
@@ -105,7 +107,7 @@ POLYS: list[dict] = [
 
 
 def spark_points(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(POINTS, "img_id long, lon double, lat double")
+    return local_frame(spark, POINTS, "img_id long, lon double, lat double")
 
 
 def spark_polys(spark: SparkSession) -> DataFrame:
@@ -122,7 +124,8 @@ def spark_polys(spark: SparkSession) -> DataFrame:
         )
         for p in POLYS
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "id_predio string, nombre string, codigo string, seccion string, rodal string, "
         "tipouso string, apl string, rings array<array<struct<x double, y double>>>",
@@ -235,6 +238,6 @@ def rasters_values_sql() -> str:
 
 
 def spark_rasters(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        RASTERS, "img_id long, gt array<double>, cols int, rows int"
+    return local_frame(
+        spark, RASTERS, "img_id long, gt array<double>, cols int, rows int"
     )

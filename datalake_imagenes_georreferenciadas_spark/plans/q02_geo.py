@@ -30,6 +30,7 @@ from ._qbase import (
     documents_catalog,
     drain,
     events_stream,
+    local_frame,
     nearest_vertex_join,
     register,
     sessionize,
@@ -117,8 +118,8 @@ def geo_edge_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e"),
     ).select("id_predio", "e.*")
-    roads = spark.createDataFrame(
-        list(_ROADS), "road_id long, ax double, ay double, bx double, by double"
+    roads = local_frame(
+        spark, _ROADS, "road_id long, ax double, ay double, bx double, by double"
     )
 
     def ccw(ax, ay, bx, by, cx, cy):

@@ -35,6 +35,7 @@ from ._qbase import (
     classify_points,
     drain,
     events_stream,
+    local_frame,
     os,
     register,
     scratch_dir,
@@ -621,7 +622,8 @@ def j_late_arriving_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
             _dsum(F.col("o_totalprice")).alias("revenue"),
         )
     )
-    ledger = seg.sparkSession.createDataFrame(
+    ledger = local_frame(
+        seg.sparkSession,
         [("__reconciled_inferred", n_inferred, 0.0)],
         "segment string, n_orders long, revenue double",
     )

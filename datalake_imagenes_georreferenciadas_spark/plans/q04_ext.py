@@ -34,6 +34,7 @@ from ._qbase import (
     documents_catalog,
     drain,
     events_stream,
+    local_frame,
     os,
     register,
     scratch_dir,
@@ -256,8 +257,8 @@ def catalog_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     ] + [
         (name, n, False, False) for name, n, _ in _dir_rows("quarantine")
     ]
-    return spark.createDataFrame(
-        rows, "batch string, n_rows long, audit_passed boolean, published boolean"
+    return local_frame(
+        spark, rows, "batch string, n_rows long, audit_passed boolean, published boolean"
     ).orderBy("batch")
 
 
@@ -544,7 +545,8 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(False).alias("recall_ok"),
         ).filter(F.lit(False))
     model = KMeans(k=8, seed=42, maxIter=5).fit(feat)
-    centroids = spark.createDataFrame(
+    centroids = local_frame(
+        spark,
         [(i, [float(v) for v in c]) for i, c in enumerate(model.clusterCenters())],
         "centroid_id int, centroid array<double>",
     )
@@ -1194,18 +1196,25 @@ def pipeline_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "text"
     )
     exact = D.exact_dedup(q).select("doc_id")
-    # Stage boundary: the survivor set feeds THREE consumers (pair
-    # generation inside dedup_components, the component join, and the
-    # canonical filter). localCheckpoint materializes it once instead of
-    # re-running the quality filter + digest dedup per consumer — the
-    # same staging a production pipeline does between phases (~30%
-    # faster at sf0.1).
+    # Stage boundary: the survivor set feeds two consumers (pair
+    # generation and the canonical filter). localCheckpoint materializes
+    # it once instead of re-running the quality filter + digest dedup per
+    # consumer — the same staging a production pipeline does between
+    # phases (~30% faster at sf0.1). The inner join drops null doc ids.
     kept = q.join(exact, "doc_id").localCheckpoint(eager=True)
-    comp = D.dedup_components(
+    pairs = D.minhash_lsh_pairs(
         kept, k=3, num_hashes=16, bands=4, jaccard_threshold=0.2
     )
-    canon = kept.join(comp, "doc_id").filter(
-        F.col("doc_id") == F.col("component")
+    labels = D.components_from_edges(
+        pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
+    )
+    # a survivor is canonical unless its cluster's min id is another doc:
+    # the driver-side labels broadcast by their exact size, so the corpus
+    # side is never shuffled for this filter
+    canon = kept.join(
+        labels.filter(F.col("id") != F.col("component")),
+        F.col("doc_id") == F.col("id"),
+        "left_anti",
     )
     return canon.groupBy("lang").agg(F.count("*").alias("n_kept"))
 

@@ -17,6 +17,7 @@ from ._qbase import (
     _dsum,
     _dsum_sql,
     documents_catalog,
+    local_frame,
     os,
     register,
     scratch_dir,
@@ -468,8 +469,8 @@ def catalog_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for v in sorted(versions)
     ]
-    return spark.createDataFrame(
-        out, "version int, n_rows bigint, kept boolean, readable_after boolean"
+    return local_frame(
+        spark, out, "version int, n_rows bigint, kept boolean, readable_after boolean"
     )
 
 
@@ -1291,7 +1292,8 @@ def dq_schema_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for c, t in _DOC_CONTRACT
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "col_name string, expected_type string, actual_type string, ok boolean",
     ).orderBy("col_name")

@@ -11,9 +11,13 @@ pruning, partition pruning) intact — the scans in ``.explain`` should show
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 TABLE_NAMES = (
     "region",
@@ -62,6 +66,27 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return norm_event_ts(spark.read.parquet(path))
     return spark.read.parquet(path)
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: str | T.StructType
+) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``schema`` field order) as a
+    DataFrame over an Arrow ``LocalRelation``.
+
+    ``createDataFrame`` on a Python list pickles the rows into a Python
+    RDD: every job that reads it starts Python workers, and the relation
+    reports unknown size, so Catalyst can never broadcast it by its
+    stats. A ``pyarrow.Table`` input is shipped to the JVM once and
+    plans as a ``LocalTableScan`` with exact size stats, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says. ``schema`` (a
+    DDL string or a ``StructType``) fixes names, types and nullability;
+    an empty ``rows`` gives an empty frame of that schema."""
+    struct = schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.table([pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)
 
 
 def spread(df: DataFrame, *keys: str) -> DataFrame:

@@ -4,7 +4,11 @@ fall back to a shuffle join, so it is ONLY allowed when the operand is
 provably bounded — constant dimensions (nation/region, 25/5 rows at
 every SF), top-k / ``limit`` results, per-event-type or per-bucket
 aggregates over bounded domains, sketch/codebook tables, fixtures, or
-explicitly thresholded structures (the ≤250k-edge union-find result).
+explicitly thresholded structures.
+
+Driver-side rows (the MERGE id set, the ≤250k-edge union-find result)
+need no hint: ``tables.local_frame`` makes them Arrow LocalRelations
+with exact size stats, so Catalyst broadcasts them while they fit.
 
 Corpus-derived or linear-in-SF operands (candidate-pair sets, label
 maps, customer/supplier/part, per-customer aggregates, vector tables)
@@ -28,15 +32,10 @@ PKG = REPO / "datalake_imagenes_georreferenciadas_spark"
 # (module relative to the package, enclosing function) -> site count.
 # Every operand below is bounded: query/centroid/codebook/sketch tables,
 # top-k or limit() outputs, per-event-type aggregates (bounded domain),
-# constant dims, geo fixtures, or thresholded driver-side results.
+# constant dims or geo fixtures.
 ALLOWED: dict[tuple[str, str], int] = {
     ("catalog/store.py", "_with_ids"): 1,  # per-group offset aggregate
     ("catalog/store.py", "filtered_paths"): 1,  # one process-run row set
-    # r20: single-pass MERGE — the touched-id set of one copy-on-write
-    # update, bounded by the caller's write batch (a delta, never the
-    # corpus; it is driver-materialized as a LocalRelation already)
-    ("catalog/store.py", "update_processed_img"): 1,
-    ("operators/dedup.py", "components_from_edges"): 1,  # ≤250k-edge union-find result
     ("operators/similarity.py", "brute_force_topk"): 1,  # query set
     ("operators/similarity.py", "ivf_assign"): 1,  # k centroids
     ("operators/similarity.py", "ivf_topk"): 1,  # k centroids

@@ -291,13 +291,13 @@ def test_components_threshold_boundary_and_default(spark):
         )
         plan = out._jdf.queryExecution().analyzed().toString()
         if threshold >= n:
-            # driver union-find output is broadcast-hinted for the
-            # caller's join-back — the hint marks the path taken
-            assert "strategy=broadcast" in plan, plan
+            # driver union-find output is an exact-sized LocalRelation
+            # (no hint: its stats decide the caller's join-back) — the
+            # relation marks the path taken
+            assert "LocalRelation" in plan, plan
         else:
             # distributed path returns the checkpointed label table
-            # directly, no broadcast hint
-            assert "strategy=broadcast" not in plan, plan
+            assert "LocalRelation" not in plan, plan
         results[threshold] = {
             r["id"]: r["component"] for r in out.collect()
         }

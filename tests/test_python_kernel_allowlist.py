@@ -20,6 +20,13 @@ entry here is the review step: state why no built-in can express it.
 Row-at-a-time ``F.udf`` has no allowlist at all — the repo ships zero
 and must stay at zero (an Arrow kernel is the floor for unavoidable
 Python).
+
+The list -> Python-RDD boundary: ``createDataFrame`` on a Python list
+pickles the rows into a Python RDD, so every job that reads the frame
+starts Python workers, and the relation has unknown size stats, so
+Catalyst never broadcasts it unhinted. Driver-side rows enter Spark only
+through ``tables.local_frame`` (an Arrow ``LocalRelation``); it is the
+one ``createDataFrame`` call the package may make.
 """
 
 from __future__ import annotations
@@ -43,6 +50,8 @@ KERNEL_ATTRS = {
 FACTORY_NAMES = {"pandas_udf", "udtf"}
 # Never allowed anywhere: the row-at-a-time path.
 FORBIDDEN_NAMES = {"udf"}
+# The only call site that may build a DataFrame from driver-side data.
+FRAME_SITES = {("tables.py", "local_frame"): 1}
 
 # (module relative to the package, enclosing function) -> site count.
 # Every entry is a kernel with no JVM built-in equivalent.
@@ -76,7 +85,8 @@ PROBE_EXCEPTIONS = {"ImportError", "ModuleNotFoundError"}
 PRIVATE_HANDLES = {"_jc", "_jdf", "_jvm", "_jsc"}
 
 
-def _scan(files, root: Path):
+def _scan(files, root: Path, names=KERNEL_ATTRS | FACTORY_NAMES):
+    """(site -> count of calls/decorators in ``names``, forbidden sites)."""
     kernels: collections.Counter = collections.Counter()
     forbidden: list[tuple[str, str]] = []
     for f in files:
@@ -98,7 +108,7 @@ def _scan(files, root: Path):
                         dname = dec.attr
                     elif isinstance(dec, ast.Name):
                         dname = dec.id
-                    if dname in KERNEL_ATTRS or dname in FACTORY_NAMES:
+                    if dname in names:
                         kernels[site] += 1
                     if dname in FORBIDDEN_NAMES:
                         forbidden.append(site)
@@ -115,7 +125,7 @@ def _scan(files, root: Path):
                 elif isinstance(fn, ast.Name):
                     name = fn.id
                 site = (str(f.relative_to(root)), stack[-1] if stack else "<module>")
-                if name in KERNEL_ATTRS or name in FACTORY_NAMES:
+                if name in names:
                     kernels[site] += 1
                 if name in FORBIDDEN_NAMES:
                     forbidden.append(site)
@@ -133,7 +143,7 @@ def _scan(files, root: Path):
                     )
                     if battr == "udf":
                         forbidden.append(site)
-                    elif battr == "udtf":
+                    elif battr == "udtf" and "udtf" in names:
                         kernels[site] += 1
                 self.generic_visit(node)
 
@@ -164,6 +174,17 @@ def test_allowlist_has_no_stale_entries():
     found, _ = _scan(sorted(PKG.rglob("*.py")), PKG)
     stale = [k for k in ALLOWED if k not in found]
     assert not stale, f"allowlist entries with no call site: {stale}"
+
+
+def test_driver_rows_enter_spark_only_through_local_frame():
+    """Every ``createDataFrame`` in the package is the one inside
+    ``tables.local_frame``: a list input would cross the list ->
+    Python-RDD boundary."""
+    found, _ = _scan(sorted(PKG.rglob("*.py")), PKG, {"createDataFrame"})
+    assert found == FRAME_SITES, (
+        "createDataFrame outside tables.local_frame (build driver-side "
+        f"rows with local_frame instead): {found}"
+    )
 
 
 def _second_bodies(files, root: Path) -> list[tuple[str, int, str]]:
@@ -209,10 +230,20 @@ def test_second_body_scanner_catches_probes_and_handles(tmp_path):
     ]
 
 
-def _scan_src(src: str, tmp_path):
+def _scan_src(src: str, tmp_path, names=KERNEL_ATTRS | FACTORY_NAMES):
     f = tmp_path / "m.py"
     f.write_text(src)
-    return _scan([f], tmp_path)
+    return _scan([f], tmp_path, names)
+
+
+def test_scanner_catches_create_dataframe(tmp_path):
+    src = (
+        "def rows(spark):\n    return spark.createDataFrame([(1,)], 'a int')\n"
+        "def fixture(df):\n    return df.sparkSession.createDataFrame([], 'a int')\n"
+        "def kernel(df):\n    spark.udtf.register('t', T)\n"
+    )
+    found, _ = _scan_src(src, tmp_path, {"createDataFrame"})
+    assert found == {("m.py", "rows"): 1, ("m.py", "fixture"): 1}
 
 
 def test_scanner_catches_udf_register(tmp_path):

@@ -45,9 +45,10 @@ AUDITS: dict[str, tuple[int, int, int, dict[str, int], list[str]]] = {
     "dedup_minhash_bands": (3, 1, 2, {"documents": 1}, ["HashAggregate", "!SortMergeJoin", "!BroadcastHashJoin"]),
     # spatial broadcast join with UDF-free ray-cast predicate
     "geo_contains": (2, 0, 0, {}, ["BroadcastNestedLoopJoin", "!CartesianProduct"]),
-    # cell equi-join: 2 exchanges (both sides hash on cell) is the designed
-    # scale shape — the point is that it's shuffle-partitionable, not BNLJ
-    "geo_contains_grid": (4, 2, 1, {}, ["!CartesianProduct", "!BroadcastNestedLoopJoin"]),
+    # cell equi-join: shuffle-partitionable at scale (both sides hash on
+    # cell), never BNLJ; on the exact-sized fixture LocalRelations Catalyst
+    # broadcasts it, so no exchange runs here
+    "geo_contains_grid": (2, 0, 1, {}, ["!CartesianProduct", "!BroadcastNestedLoopJoin"]),
     # bucketed co-located join: bucket-aligned scans feed the SMJ with NO
     # join-side shuffle; the single allowed exchange is the final groupBy
     "j_bucketed_join": (6, 1, 0, {"lineitem": 1, "orders": 1}, ["SortMergeJoin", "SelectedBucketsCount: 8 out of 8", "!BroadcastHashJoin", "!CartesianProduct"]),
@@ -434,16 +435,17 @@ AUDITS: dict[str, tuple[int, int, int, dict[str, int], list[str]]] = {
     # snapshot diff: version scans checksum-compare through a broadcast
     # join of the (bounded) per-partition digest sides — zero exchanges
     "catalog_snapshot_diff": (13, 0, 0, {}, ["BroadcastHashJoin", "!SortMergeJoin", "!CartesianProduct"]),
-    # corpus prep composite: the one SMJ is corpus×corpus (neither side
-    # broadcastable at 100 TB — the correct shape), dims ride BHJ
-    "pipeline_corpus_prep": (15, 2, 0, {}, ["SortMergeJoin", "BroadcastHashJoin", "!CartesianProduct"]),
+    # corpus prep composite: the canonical filter anti-joins the survivors
+    # with the driver-side non-canonical labels, broadcast by their exact
+    # size — no corpus×corpus join; the one exchange is the lang agg
+    "pipeline_corpus_prep": (13, 1, 0, {}, ["BroadcastHashJoin LeftAnti", "!SortMergeJoin", "!CartesianProduct"]),
     # triangle listing: multi-branch edge-edge equi-joins, never a
     # cartesian or Python; the stats-less checkpointed edge set gets
     # explicit degree/closure broadcasts beside the wedge SMJ
     "graph_triangles": (11, 3, 1, {}, ["SortMergeJoin", "BroadcastHashJoin", "!CartesianProduct", "!BatchEvalPython", "!ArrowEvalPython"]),
     # learned-codebook IVF + recall eval: centroid/total sides ride
     # bounded BNLJ/BHJ broadcasts; probe joins stay hash-shaped
-    "ann_ivf_kmeans": (35, 9, 0, {"embeddings": 6}, ["BroadcastNestedLoopJoin", "!CartesianProduct", "!BatchEvalPython", "!ArrowEvalPython"]),
+    "ann_ivf_kmeans": (33, 8, 0, {"embeddings": 6}, ["BroadcastNestedLoopJoin", "!CartesianProduct", "!BatchEvalPython", "!ArrowEvalPython"]),
     # PQ recall eval: exact-vs-PQ top-k compare; one-row/codebook sides
     # ride BNLJ, candidate joins keyed — no cartesian, no Python
     "ann_pq_recall": (14, 6, 0, {"embeddings": 4}, ["BroadcastNestedLoopJoin", "!CartesianProduct", "!BatchEvalPython", "!ArrowEvalPython"]),
@@ -625,7 +627,7 @@ AUDITS: dict[str, tuple[int, int, int, dict[str, int], list[str]]] = {
     "emb_outlier_zscore": (5, 2, 2, {"embeddings": 2}, ["Generate", "BroadcastHashJoin", "TakeOrderedAndProject", "!SortMergeJoin", "!CartesianProduct"]),
     # geospatial math is pure column expressions (ring explode only)
     "geo_affine_extent": (1, 0, 1, {}, ["Generate", "!CartesianProduct"]),
-    "geo_reproject_centroid": (1, 0, 0, {}, ["!CartesianProduct"]),
+    "geo_reproject_centroid": (0, 0, 0, {}, ["!CartesianProduct"]),
     "geo_ring_areas": (1, 0, 1, {}, ["Generate", "!CartesianProduct"]),
     "geo_snap_simplify": (1, 0, 1, {}, ["Generate", "!CartesianProduct"]),
     # scalar max: one agg exchange (SinglePartition above the aggregate)
@@ -695,7 +697,7 @@ AUDITS: dict[str, tuple[int, int, int, dict[str, int], list[str]]] = {
     # snapshot-expire / MMR: the heavy machinery runs inside the query fn
     # (COW snapshot build, iterative MMR selection over a checkpointed
     # candidate set); the RETURNED plan must stay shuffle- and join-free
-    "catalog_snapshot_expire": (24, 0, 0, {}, ["!Exchange", "!CartesianProduct"]),
+    "catalog_snapshot_expire": (23, 0, 0, {}, ["!Exchange", "!CartesianProduct"]),
     "hybrid_mmr_topk": (36, 0, 0, {}, ["!Exchange", "!CartesianProduct"]),
     "catalog_wap_publish": (28, 1, 0, {}, ["!CartesianProduct", "!BroadcastNestedLoopJoin"]),
     # temperature mixture: source-level aggs (1-col scan) + the bounded
