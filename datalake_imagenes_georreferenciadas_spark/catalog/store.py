@@ -35,6 +35,7 @@ temp-dir + atomic rename pattern where overwrite is needed.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -143,6 +144,18 @@ class CatalogStore:
     def _catalog_dir(self, version: int | None = None) -> str:
         v = self.current_version() if version is None else version
         return self._path(f"catalog_v{v}")
+
+    def expire_snapshots(self, keep_last: int) -> list[int]:
+        """Delete every catalog snapshot older than the newest
+        ``keep_last`` (Delta VACUUM / Iceberg expire_snapshots) and
+        return the removed versions. A history of at most ``keep_last``
+        snapshots is kept whole; the current snapshot is never removed."""
+        if keep_last < 1:
+            raise ValueError(f"keep_last must be >= 1, got {keep_last}")
+        removed = self.catalog_versions()[:-keep_last]
+        for v in removed:
+            shutil.rmtree(self._catalog_dir(v))
+        return removed
 
     # ---- reads -----------------------------------------------------------
     def catalog(self, version: int | None = None) -> DataFrame:

@@ -669,7 +669,7 @@ def simhash_pairs_auto(
     (r18) — the band-widening scale path made automatic: every corpus
     doubling widens bands one bit, holding per-bucket density (and so
     per-band join cost/row) constant. Ladder k=1..16: WAIVED on the
-    copy-correlated scaled axis (alpha_tail 1.50 — make_scaled_sf's
+    copy-correlated scaled axis (alpha_tail 1.50 — the make_sf scale axis's
     cross-copy token correlation grows candidates x2.42 per doubling
     while per-candidate cost stays flat x1.09; the same dial on a
     decorrelated control reads 0.49, c0dc757:tools/organic_growth_control.py).
@@ -736,7 +736,7 @@ def simhash_band_candidates(
 #: closes the r18 ladder waiver. The count dial (auto_band_bits) widens
 #: one bit per corpus doubling, which holds per-bucket density constant
 #: only for decorrelated growth; a copy-correlated corpus (the realistic
-#: web case — and exactly what make_scaled_sf builds) densifies buckets
+#: web case — and exactly what the make_sf scale axis builds) densifies buckets
 #: FASTER than n, so the count dial under-widens precisely when dedup
 #: matters most (measured: candidates ×2.42 per doubling at the count
 #: dial's widths). The budget dial instead MEASURES the banded collision

@@ -396,6 +396,31 @@ def lsh_ann_topk(
     ).select(query_id, data_id, "cos", "rank")
 
 
+def recall_at_k(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
+    """Per-query recall@k of an approximate top-k against the exact one:
+    ``(q_id, n_hit, recall_at_<k>)``, both inputs ``(q_id, vec_id)``.
+    Every query of ``exact`` gets a row (0 hits included); the recall is
+    rounded to 6 decimals half-up, as the oracles' ``floor(x + 0.5)``."""
+    n_hit = (
+        exact.join(approx, ["q_id", "vec_id"], "left_semi")
+        .groupBy("q_id")
+        .agg(F.count("*").alias("n_hit"))
+    )
+    return (
+        exact.select("q_id")
+        .distinct()
+        .join(n_hit, "q_id", "left")
+        .select("q_id", F.coalesce("n_hit", F.lit(0)).alias("n_hit"))
+        .select(
+            "q_id",
+            "n_hit",
+            (F.floor(F.col("n_hit") / float(k) * 1e6 + F.lit(0.5)) / 1e6).alias(
+                f"recall_at_{k}"
+            ),
+        )
+    )
+
+
 def rerank_crossencoder(
     cands: DataFrame,
     docs: DataFrame,

@@ -1039,24 +1039,7 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), "embedding"
     )
     exact = SIM.brute_force_topk(emb, queries_df, k=5).select("q_id", "vec_id")
-    n_hit = (
-        exact.join(pq, ["q_id", "vec_id"], "left_semi")
-        .groupBy("q_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return (
-        exact.select("q_id")
-        .distinct()
-        .join(n_hit, "q_id", "left")
-        .select("q_id", F.coalesce("n_hit", F.lit(0)).alias("n_hit"))
-        .select(
-            "q_id",
-            "n_hit",
-            (F.floor(F.col("n_hit") / 5.0 * 1e6 + F.lit(0.5)) / 1e6).alias(
-                "recall_at_5"
-            ),
-        )
-    )
+    return SIM.recall_at_k(exact, pq, 5)
 
 
 _SQ8_RECALL_SQL = (
@@ -1097,20 +1080,7 @@ def ann_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sq8 = ann_sq8_topk(spark, sf_dir).select("q_id", "vec_id")
     exact = SIM.brute_force_topk(emb, queries, k=5).select("q_id", "vec_id")
-    hit = exact.join(sq8, ["q_id", "vec_id"], "left_semi")
-    n_hit = hit.groupBy("q_id").agg(F.count("*").alias("n_hit"))
-    return (
-        exact.select("q_id")
-        .distinct()
-        .join(n_hit, "q_id", "left")
-        .select(
-            "q_id",
-            F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
-            (F.floor(F.coalesce("n_hit", F.lit(0)) / 5.0 * 1e6 + F.lit(0.5)) / 1e6).alias(
-                "recall_at_5"
-            ),
-        )
-    )
+    return SIM.recall_at_k(exact, sq8, 5)
 
 
 # ======================================================================

@@ -988,24 +988,7 @@ def ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     q16 = queries_df.select("q_id", F.slice("embedding", 1, 16).alias("embedding"))
     pre = SIM.brute_force_topk(pre16, q16, k=10).select("q_id", "vec_id")
     exact = SIM.brute_force_topk(emb, queries_df, k=10).select("q_id", "vec_id")
-    n_hit = (
-        exact.join(pre, ["q_id", "vec_id"], "left_semi")
-        .groupBy("q_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return (
-        exact.select("q_id")
-        .distinct()
-        .join(n_hit, "q_id", "left")
-        .select("q_id", F.coalesce("n_hit", F.lit(0)).alias("n_hit"))
-        .select(
-            "q_id",
-            "n_hit",
-            (F.floor(F.col("n_hit") / 10.0 * 1e6 + F.lit(0.5)) / 1e6).alias(
-                "recall_at_10"
-            ),
-        )
-    )
+    return SIM.recall_at_k(exact, pre, 10)
 
 
 _RECALL_SQL = f"""
@@ -1052,20 +1035,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q_id", "vec_id"
     )
     exact = SIM.brute_force_topk(emb, queries, k=5).select("q_id", "vec_id")
-    hit = exact.join(ann, ["q_id", "vec_id"], "left_semi")
-    n_hit = hit.groupBy("q_id").agg(F.count("*").alias("n_hit"))
-    base = exact.select("q_id").distinct()
-    return (
-        base.join(n_hit, "q_id", "left")
-        .select("q_id", F.coalesce("n_hit", F.lit(0)).alias("n_hit"))
-        .select(
-            "q_id",
-            "n_hit",
-            (F.floor(F.col("n_hit") / 5.0 * 1e6 + F.lit(0.5)) / 1e6).alias(
-                "recall_at_5"
-            ),
-        )
-    )
+    return SIM.recall_at_k(exact, ann, 5)
 
 
 @register(

@@ -434,8 +434,6 @@ def catalog_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     remain readable — the oracle predicts the full lifecycle in closed
     form. Update sets are disjoint id slices, so each snapshot has
     identical cardinality (copy-on-write replaces rows)."""
-    import shutil
-
     store = documents_catalog(spark, sf_dir)
     # r19 (guide §5 driver discipline / §1.2 don't recompute): ONE id
     # collect; the %10 slicing is a pure function of the ids. r20: read
@@ -450,25 +448,9 @@ def catalog_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
         store.update_processed_img(10, ids)
     versions = store.catalog_versions()
     n_rows = {v: store.catalog(version=v).count() for v in versions}
-    keep_last = 2
-    # An empty-source lifecycle can produce fewer than keep_last
-    # snapshots (disjoint update slices are empty, so no MERGE lands);
-    # expiry of a short history keeps everything rather than indexing
-    # past the front of the list.
-    vs = sorted(versions)
-    cutoff = vs[-keep_last] if len(vs) >= keep_last else (vs[0] if vs else 0)
-    for v in versions:
-        if v < cutoff:
-            shutil.rmtree(store._catalog_dir(v))
-    out = [
-        (
-            v,
-            n_rows[v],
-            v >= cutoff,
-            os.path.isdir(store._catalog_dir(v)),
-        )
-        for v in sorted(versions)
-    ]
+    removed = store.expire_snapshots(keep_last=2)
+    readable = store.catalog_versions()
+    out = [(v, n_rows[v], v not in removed, v in readable) for v in versions]
     return local_frame(
         spark, out, "version int, n_rows bigint, kept boolean, readable_after boolean"
     )

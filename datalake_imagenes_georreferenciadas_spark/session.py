@@ -3,8 +3,9 @@
 Local testing runs on ``local[N]`` but every config here is chosen to also
 hold on a large multi-executor cluster: AQE for runtime re-planning (skew
 joins, partition coalescing), Arrow for the Pandas-UDF slow path, UTC
-session timezone so results are oracle-comparable, and shuffle partitions
-sized to cores (overridable via env for the cluster case).
+session timezone so results are oracle-comparable, and a fixed 32
+shuffle partitions whatever the core count (``SPARK_GRAFT_SHUFFLE``
+overrides it for the cluster case), which AQE coalesces at runtime.
 """
 
 from __future__ import annotations

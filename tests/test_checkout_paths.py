@@ -60,7 +60,7 @@ def test_run_docs_name_only_existing_tools():
     assert _TOOL_PATH.findall("run tools/a.py, not c0dc757:tools/b.py") == ["tools/a.py"]
     missing = sorted(
         f"{doc}: {path}"
-        for doc in ("README.md", "SCALING.md", ".claude/skills/verify/SKILL.md")
+        for doc in ("README.md", "SCALING.md", "COVERAGE.md", ".claude/skills/verify/SKILL.md")
         for path in set(_TOOL_PATH.findall((REPO / doc).read_text()))
         if not (REPO / path).exists()
     )

@@ -1,6 +1,6 @@
 """Extreme-text/timestamp robustness (r15 hardening, fourth axis).
 
-tools/make_extreme_sf.py injects the dirty values a 100 TB corpus serves
+``tools/make_sf.py extreme`` injects the dirty values a 100 TB corpus serves
 daily — empty strings, multibyte unicode (char-count != byte-count),
 10k-char repetitive payloads, and 1901/2199 outlier timestamps. The r15
 differential run found two classes:
@@ -23,15 +23,9 @@ RECURSION_LEVEL_LIMIT — already a clean error, by design).
 
 from __future__ import annotations
 
-import sys
-from pathlib import Path
-
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES
-from tools.make_extreme_sf import mutate_table
+from datalake_imagenes_georreferenciadas_spark.tables import DEFAULT_SF_DIR
 
 FIXED_IN_R15 = [
     "f14_variant_extract",
@@ -49,35 +43,19 @@ GUARDED_FAIL_FAST = {
 }
 
 
-@pytest.fixture(scope="module")
-def extreme_sf(tmp_path_factory):
-    import os
-
-    import pyarrow.parquet as pq
-
-    d = str(tmp_path_factory.mktemp("extreme_sf"))
-    src = "/root/testdata/sf0.001"
-    for t in TABLE_NAMES:
-        pq.write_table(
-            mutate_table(os.path.join(src, f"{t}.parquet"), t),
-            os.path.join(d, f"{t}.parquet"),
-        )
-    return d
-
-
 @pytest.mark.parametrize("name", FIXED_IN_R15)
-def test_query_executes_on_extreme_input(spark, extreme_sf, name):
+def test_query_executes_on_extreme_input(spark, axis_sf, name):
     from __spark_entry__ import queries
 
-    queries()[name](spark, extreme_sf).collect()
+    queries()[name](spark, axis_sf("extreme")).collect()
 
 
 @pytest.mark.parametrize("name", sorted(GUARDED_FAIL_FAST))
-def test_span_guard_fails_fast_with_diagnosable_error(spark, extreme_sf, name):
+def test_span_guard_fails_fast_with_diagnosable_error(spark, axis_sf, name):
     from __spark_entry__ import queries
 
     with pytest.raises(Exception) as e:
-        queries()[name](spark, extreme_sf).collect()
+        queries()[name](spark, axis_sf("extreme")).collect()
     assert GUARDED_FAIL_FAST[name] in str(e.value)
 
 
@@ -85,7 +63,7 @@ def test_span_guard_fails_fast_with_diagnosable_error(spark, extreme_sf, name):
 def test_guarded_queries_still_pass_on_clean_input(spark, name):
     from __spark_entry__ import queries
 
-    out = queries()[name](spark, "/root/testdata/sf0.001").collect()
+    out = queries()[name](spark, DEFAULT_SF_DIR).collect()
     assert len(out) > 0
 
 
@@ -103,11 +81,12 @@ R17_EXTREME_CONTRACTS = [
 
 @pytest.mark.parametrize("name", R17_EXTREME_CONTRACTS)
 def test_r17_contract_value_matches_oracle_on_extreme_input(
-    spark, extreme_sf, name
+    spark, axis_sf, name
 ):
     from __spark_entry__ import oracle_sql, queries
     from tools.verify_oracle import duck_rows, duck_views, spark_rows
 
+    extreme_sf = axis_sf("extreme")
     con = duck_views(extreme_sf)
     _, srows = spark_rows(queries()[name](spark, extreme_sf))
     _, drows = duck_rows(con.sql(oracle_sql()[name]))

@@ -6,6 +6,9 @@ tools/fuzz_allowlist.json maps each adversarial axis to
 — a new divergence and a silently-healed entry both fail loudly, so
 future rounds diff the set instead of re-diagnosing prose.
 
+The EMPTY axis carries the zero-row data divergences (grand-total
+rows, dynamic pivot columns, closed-form lifecycles) with no
+``[spark_error]`` marker, so an empty-input crash still fails the gate.
 r16 state: the NULL axis is EMPTY — all 73 r15 null-fuzz divergences
 were converted to explicit contracts (COVERAGE.md "Null-determinism
 contracts"); the EXTREME axis carries the engine-convention residue
@@ -40,6 +43,14 @@ def test_axes_present_and_well_formed():
         assert isinstance(entries, dict), axis
         for name, mech in entries.items():
             assert isinstance(mech, str) and mech.strip(), (axis, name)
+
+
+def test_every_axis_is_a_make_sf_axis():
+    """Each allowlisted axis is one tools/make_sf.py can build, so every
+    residue names the command that reproduces it."""
+    from tools.make_sf import AXES
+
+    assert set(_load()) <= set(AXES)
 
 
 def test_every_entry_names_a_registered_query():
@@ -97,3 +108,12 @@ def test_designed_fail_fast_entries_carry_kind_markers():
     for name, mech in data["extreme"].items():
         if "DESIGNED fail-fast" in mech:
             assert mech.startswith("[spark_error]"), name
+
+
+def test_empty_axis_waives_no_crash():
+    """Zero-row residue is data divergence only: an empty-input crash
+    (the r15 sweep's class) must still fail the gate."""
+    from tools.verify_oracle import expected_kinds
+
+    kinds = expected_kinds(_load()["empty"])
+    assert all("spark_error" not in k for k in kinds.values()), kinds

@@ -1,6 +1,6 @@
 """Null-injected-input robustness (r15 hardening, second axis).
 
-tools/make_null_fuzz_sf.py builds a deterministic ~3%-null copy of a
+``tools/make_sf.py null`` builds a deterministic ~3%-null copy of a
 testdata dir; running the registry against it (differentially vs DuckDB
 on the SAME mutated files) found 16 queries that CRASHED on dirty data
 that a 100 TB corpus serves daily: Arrow kernels calling bytes()/len()/
@@ -10,22 +10,14 @@ concat_ws's null-skipping, pandas NaN→int casts. All 16 now execute
 crash-free (and 15 of 16 value-match their oracles even on fuzzed
 input). This suite pins exactly that: each previously-crashing query
 EXECUTES on a nulled sf0.001 copy. Value parity on fuzzed data stays a
-tool-level concern (tools/verify_oracle.py /tmp/<fuzz_dir>) — null
+tool-level concern (tools/verify_oracle.py --allowlist null) — null
 ordering conventions differ between engines on shapes the contract
 never specified.
 """
 
 from __future__ import annotations
 
-import sys
-from pathlib import Path
-
 import pytest
-
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES
-from tools.make_null_fuzz_sf import mutate_table
 
 # The 16 queries the first r15 null-fuzz run crashed on (plus the pandas
 # cosine twin found in the second pass). Keep in sync with the fix sites
@@ -50,32 +42,18 @@ FIXED_IN_R15 = [
 ]
 
 
-@pytest.fixture(scope="module")
-def null_sf(tmp_path_factory):
-    import os
-
+def test_fixture_actually_contains_nulls(axis_sf):
     import pyarrow.parquet as pq
 
-    d = str(tmp_path_factory.mktemp("null_sf"))
-    src = "/root/testdata/sf0.001"
-    for t in TABLE_NAMES:
-        out = mutate_table(os.path.join(src, f"{t}.parquet"), t, 0.03)
-        pq.write_table(out, os.path.join(d, f"{t}.parquet"))
-    return d
-
-
-def test_fixture_actually_contains_nulls(null_sf):
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(f"{null_sf}/documents.parquet")
+    t = pq.read_table(f"{axis_sf('null')}/documents.parquet")
     assert any(t.column(i).null_count > 0 for i in range(t.num_columns))
 
 
 @pytest.mark.parametrize("name", FIXED_IN_R15)
-def test_query_executes_on_null_injected_input(spark, null_sf, name):
+def test_query_executes_on_null_injected_input(spark, axis_sf, name):
     from __spark_entry__ import queries
 
-    queries()[name](spark, null_sf).collect()
+    queries()[name](spark, axis_sf("null")).collect()
 
 
 # r16 null-determinism campaign: one representative per contract family
@@ -95,17 +73,17 @@ R16_CONTRACT_SPOT_CHECKS = [
 
 
 @pytest.mark.parametrize("name", R16_CONTRACT_SPOT_CHECKS)
-def test_r16_contract_query_executes_on_null_input(spark, null_sf, name):
+def test_r16_contract_query_executes_on_null_input(spark, axis_sf, name):
     from __spark_entry__ import queries
 
-    queries()[name](spark, null_sf).collect()
+    queries()[name](spark, axis_sf("null")).collect()
 
 
-def test_event_time_exclusion_contract(spark, null_sf):
+def test_event_time_exclusion_contract(spark, axis_sf):
     """Null event times produce NO window group (not a null bucket)."""
     from __spark_entry__ import queries
 
-    rows = queries()["tumbling_window_agg"](spark, null_sf).collect()
+    rows = queries()["tumbling_window_agg"](spark, axis_sf("null")).collect()
     assert rows and all(r["window_start_epoch"] is not None for r in rows)
 
 

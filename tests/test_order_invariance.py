@@ -4,7 +4,7 @@ At cluster scale rows arrive in whatever order the splits serve them; an
 operator whose result depends on file order (an unordered first()/
 limit(), collect_list consumed without sort_array, a tie broken by
 position) is nondeterministic at 100 TB even when a single-file local
-run looks stable. tools/make_shuffled_sf.py builds a value-identical,
+run looks stable. ``tools/make_sf.py shuffle`` builds a value-identical,
 row-order-shuffled copy of a testdata dir; the full-registry
 differential (tools/verify_oracle.py against it) passed 330/330 at
 sf0.001 AND sf0.01 in r15. This suite pins the property cheaply on the
@@ -14,16 +14,9 @@ SAME value set on the shuffled copy as on the original.
 
 from __future__ import annotations
 
-import sys
-from pathlib import Path
-
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES
-
-SRC = "/root/testdata/sf0.001"
+from datalake_imagenes_georreferenciadas_spark.tables import DEFAULT_SF_DIR
 
 # Shapes where an order-dependence bug would most plausibly hide:
 # per-group top-k / rank ties, first-seen dedup, argmin/min_by,
@@ -38,33 +31,14 @@ ORDER_SENSITIVE = [
 ]
 
 
-@pytest.fixture(scope="module")
-def shuffled_sf(tmp_path_factory):
-    import os
-    import zlib
-
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    d = str(tmp_path_factory.mktemp("shuffled_sf"))
-    for t in TABLE_NAMES:
-        tbl = pq.read_table(os.path.join(SRC, f"{t}.parquet"))
-        rng = np.random.default_rng(zlib.crc32(f"test_shuffle:{t}".encode()))
-        pq.write_table(
-            tbl.take(rng.permutation(tbl.num_rows)),
-            os.path.join(d, f"{t}.parquet"),
-        )
-    return d
-
-
 def _value_set(df):
     cols = sorted(df.columns)
     return sorted(tuple(repr(r[c]) for c in cols) for r in df.collect())
 
 
 @pytest.mark.parametrize("name", ORDER_SENSITIVE)
-def test_result_is_row_order_invariant(spark, shuffled_sf, name):
+def test_result_is_row_order_invariant(spark, axis_sf, name):
     from __spark_entry__ import queries
 
     fn = queries()[name]
-    assert _value_set(fn(spark, shuffled_sf)) == _value_set(fn(spark, SRC))
+    assert _value_set(fn(spark, axis_sf("shuffle"))) == _value_set(fn(spark, DEFAULT_SF_DIR))

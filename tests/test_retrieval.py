@@ -7,7 +7,10 @@ import hashlib
 
 from pyspark.sql import functions as F
 
-from datalake_imagenes_georreferenciadas_spark.operators.similarity import rerank_crossencoder
+from datalake_imagenes_georreferenciadas_spark.operators.similarity import (
+    recall_at_k,
+    rerank_crossencoder,
+)
 
 
 def test_rerank_scores_match_reference_digest(spark):
@@ -48,3 +51,14 @@ def test_bm25_ranks_term_bearing_docs_first(spark):
     assert ranks == sorted(ranks) == list(range(1, len(rows) + 1))
     scores = [r["bm25"] for r in rows]
     assert scores == sorted(scores, reverse=True)
+
+
+def test_recall_at_k_counts_hits_per_query(spark):
+    """Every exact query gets a row, a query the approximate side missed
+    entirely included, and the ratio rounds half-up at 6 decimals."""
+    exact = spark.createDataFrame(
+        [(0, 1), (0, 2), (0, 3), (1, 4), (1, 5), (1, 6)], "q_id long, vec_id long"
+    )
+    approx = spark.createDataFrame([(0, 1), (0, 3), (0, 9), (2, 4)], "q_id long, vec_id long")
+    rows = {r["q_id"]: (r["n_hit"], r["recall_at_3"]) for r in recall_at_k(exact, approx, 3).collect()}
+    assert rows == {0: (2, 0.666667), 1: (0, 0.0)}

@@ -2,7 +2,7 @@
 
 scaling_ladder.json commits measured growth exponents for the most
 expensive query families over deterministic k× inflations of sf0.1
-(tools/make_scaled_sf.py — key spaces stretch with row count).
+(`tools/make_sf.py scale:k` — key spaces stretch with row count).
 alpha_tail = log2(t[8]/t[4]) is the marginal exponent on the largest
 doubling; a banded/bucketed design holds it ≲1.3, a pair generator
 gone quadratic reads ≈2.
@@ -48,7 +48,7 @@ WAIVERS = {
     "dedup_semantic_components_scaled": "same mechanism one stage later: 1.20 at its k=8 design density, 1.89 on the 8->16 segment; planes=9 is the measured k=16 dial",
     # NOT a dial failure — an AXIS property, decomposed by measurement
     # (r18, c0dc757:tools/organic_growth_control.py + SCALING.md §auto-density):
-    # make_scaled_sf's every-3rd-word salting leaves TOKEN-VOTE simhash
+    # the make_sf scale axis's every-3rd-word salting leaves TOKEN-VOTE simhash
     # fingerprints correlated across copies (it was calibrated for
     # 5-shingle jaccard, where salting kills 87% of shingles), so
     # cross-copy docs co-occupy band buckets: candidates grow x2.42 for

@@ -1,6 +1,6 @@
 """Skewed-input behavior (r15 hardening, fifth axis).
 
-tools/make_skewed_sf.py concentrates 30% of join/window keys on one hot
+``tools/make_sf.py skew`` concentrates 30% of join/window keys on one hot
 value and turns half the document corpus into one exact + one near
 duplicate cluster — the shape that breaks SCALE claims (bucket bounds,
 band caps, skew joins), never semantics. The r15 full-registry
@@ -17,40 +17,15 @@ bucket. This suite pins the two properties that matter cheaply:
 
 from __future__ import annotations
 
-import sys
-from pathlib import Path
-
-import pytest
-
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES
-from tools.make_skewed_sf import mutate_table
-
-RATE = 0.30
+from tools.make_sf import HOT_TEXT, NEAR_TEXT
 
 
-@pytest.fixture(scope="module")
-def skewed_sf(tmp_path_factory):
-    import os
-
-    import pyarrow.parquet as pq
-
-    d = str(tmp_path_factory.mktemp("skewed_sf"))
-    src = "/root/testdata/sf0.001"
-    for t in TABLE_NAMES:
-        pq.write_table(
-            mutate_table(os.path.join(src, f"{t}.parquet"), t, RATE),
-            os.path.join(d, f"{t}.parquet"),
-        )
-    return d
-
-
-def test_exact_dedup_collapses_hot_cluster(spark, skewed_sf):
+def test_exact_dedup_collapses_hot_cluster(spark, axis_sf):
     from __spark_entry__ import queries
 
     import pyarrow.parquet as pq
 
+    skewed_sf = axis_sf("skew")
     texts = pq.read_table(f"{skewed_sf}/documents.parquet").column("text").to_pylist()
     n_docs = len(texts)
     n_distinct = len(set(texts))
@@ -60,13 +35,12 @@ def test_exact_dedup_collapses_hot_cluster(spark, skewed_sf):
     assert n_distinct < n_docs - 100  # the skew actually planted clusters
 
 
-def test_near_pairs_cover_hot_cluster_within_bound(spark, skewed_sf):
+def test_near_pairs_cover_hot_cluster_within_bound(spark, axis_sf):
     from __spark_entry__ import queries
 
     import pyarrow.parquet as pq
 
-    from tools.make_skewed_sf import HOT_TEXT, NEAR_TEXT
-
+    skewed_sf = axis_sf("skew")
     tbl = pq.read_table(f"{skewed_sf}/documents.parquet")
     texts = tbl.column("text").to_pylist()
     n_cluster = sum(1 for x in texts if x in (HOT_TEXT, NEAR_TEXT))

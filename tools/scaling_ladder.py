@@ -1,6 +1,6 @@
 """Scale-ladder growth check (r16, VERDICT task 2): time the most
-expensive query families at k× inflations of sf0.1 (tools/
-make_scaled_sf.py, k∈{1,2,4,8}) and fit per-family growth exponents.
+expensive query families at k× inflations of sf0.1 (tools/make_sf.py
+scale:k, k∈{1,2,4,8}) and fit per-family growth exponents.
 
 For each family we report
   * t(k) — min-of-2 warm wall seconds at each k,
@@ -23,12 +23,13 @@ from __future__ import annotations
 import json
 import math
 import os
-import subprocess
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from make_sf import build  # beside this script: importable when it runs as one
 
 # The 20+ most expensive families from BENCH_DETAIL.json (r15 close),
 # minus fixture-construction-dominated and streaming machinery-cost
@@ -67,11 +68,7 @@ def scaled_dir(k: int, base: str = "/root/testdata/sf0.1") -> str:
     d = f"/tmp/scale_sf0.1_k{k}"
     marker = os.path.join(d, "embeddings.parquet")
     if not os.path.exists(marker):
-        subprocess.run(
-            [sys.executable, "tools/make_scaled_sf.py", d, str(k), base],
-            check=True,
-            cwd=REPO,
-        )
+        build(f"scale:{k}", d, base)
     return d
 
 
