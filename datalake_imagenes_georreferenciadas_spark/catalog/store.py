@@ -161,10 +161,8 @@ class CatalogStore:
     def catalog(self, version: int | None = None) -> DataFrame:
         """The catalog snapshot — latest by default, or any retained
         ``version`` (time travel)."""
-        path = self._catalog_dir(version)
-        if not os.path.exists(path):
-            return local_frame(self.spark, [], CATALOG_SCHEMA)
-        return self.spark.read.schema(CATALOG_SCHEMA).parquet(path)
+        v = self.current_version() if version is None else version
+        return self._read(f"catalog_v{v}", CATALOG_SCHEMA)
 
     def runs(self) -> DataFrame:
         return self._read("runs", RUNS_SCHEMA)

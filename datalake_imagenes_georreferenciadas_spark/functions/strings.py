@@ -19,9 +19,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def composite_key(*cols: Column | str, sep: str = "_") -> Column:
-    """F1/P3: build the denormalized business key (script_geo.py:197)."""
-    return F.concat_ws(sep, *[F.col(c).cast("string") if isinstance(c, str) else c.cast("string") for c in cols])
+def composite_key(*cols: Column | str) -> Column:
+    """F1/P3: build the ``_``-joined denormalized business key
+    (script_geo.py:197)."""
+    return F.concat_ws("_", *[F.col(c).cast("string") if isinstance(c, str) else c.cast("string") for c in cols])
 
 
 _SUFFIXES = r"(_grilla|_etiquetas|_rodal)$"

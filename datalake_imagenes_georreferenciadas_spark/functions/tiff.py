@@ -177,10 +177,10 @@ def _tag_values(data: bytes, bo: str, typ: int, count: int, field_pos: int):
     return None
 
 
-def _tiff_byte_order(data: bytes, off: int = 0) -> str | None:
-    if data[off : off + 2] == b"II":
+def _tiff_byte_order(data: bytes) -> str | None:
+    if data[:2] == b"II":
         return "<"
-    if data[off : off + 2] == b"MM":
+    if data[:2] == b"MM":
         return ">"
     return None
 

@@ -30,14 +30,14 @@ def asof_join(
     keys: Sequence[str],
     ts_col: str = "ts",
     right_value_cols: Sequence[str] | None = None,
-    matched_ts_col: str = "asof_ts",
 ) -> DataFrame:
     """For each left row, the right row with the greatest ``ts`` ≤ left's.
 
     Right should be unique per (keys, ts) — pre-aggregate if not, or the
     winner among equal timestamps is the union order (nondeterministic).
-    Output: all left columns + ``right_value_cols`` + ``matched_ts_col``
-    (null when no prior right row exists — left-join semantics).
+    Output: all left columns + ``right_value_cols`` + ``asof_ts``, the
+    matched right row's ``ts`` (null when no prior right row exists —
+    left-join semantics).
 
     The matched right row is carried as ONE struct through a single
     ``last(ignorenulls)`` — per-column fills would decouple fields when
@@ -90,7 +90,7 @@ def asof_join(
         "__is_left",
         *left_payload,
         *[matched[c].alias(c) for c in right_value_cols],
-        matched["__ts"].alias(matched_ts_col),
+        matched["__ts"].alias("asof_ts"),
     )
     return filled.filter(F.col("__is_left") == 1).drop("__is_left")
 
@@ -116,17 +116,14 @@ def range_join(
     return left.join(right, cond, how)
 
 
-def resample_interpolate(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    val_col: str = "value",
-    tiebreak_col: str = "event_id",
-    step_seconds: int = 3600,
-    max_steps_per_key: int = 1_000_000,
-) -> DataFrame:
-    """Time-series resample with LINEAR INTERPOLATION: for every
-    ``step_seconds`` grid point inside each key's [min ts, max ts], the
+#: resample_interpolate's outlier fail-safe: 1M hourly steps ≈ 114 years.
+MAX_STEPS_PER_KEY = 1_000_000
+
+
+def resample_interpolate(events: DataFrame, step_seconds: int = 3600) -> DataFrame:
+    """Time-series resample with LINEAR INTERPOLATION of
+    ``events(user_id, ts, value, event_id)``: for every
+    ``step_seconds`` grid point inside each user's [min ts, max ts], the
     value interpolated between the latest event at-or-before and the
     earliest event strictly after the grid point (last grid point may
     have no successor → carries the previous value).
@@ -143,9 +140,9 @@ def resample_interpolate(
     Timestamps are floored to epoch seconds on entry (cross-engine:
     Spark ``unix_timestamp`` floors, the oracle uses
     ``floor(epoch(...))``); ties within a second resolve by
-    ``tiebreak_col``.
+    ``event_id``.
 
-    ``max_steps_per_key`` is the outlier fail-safe: a single corrupt
+    ``MAX_STEPS_PER_KEY`` is the outlier fail-safe: a single corrupt
     timestamp (epoch 0, year 2199, ...) would otherwise silently inflate
     one key's grid to hundreds of millions of rows — at cluster scale an
     OOM, found by the r15 extreme-timestamp fuzz as a multi-minute local
@@ -153,21 +150,19 @@ def resample_interpolate(
     branch on the consumed sequence — unprunable, zero cost per healthy
     key) and fails fast with the offending key's span instead of
     materializing it. The cap is INCLUSIVE of its own value: a key
-    spanning exactly ``max_steps_per_key`` grid steps already raises
+    spanning exactly ``MAX_STEPS_PER_KEY`` grid steps already raises
     (a ``>=`` trigger — the r16 tightening). 1M hourly steps ≈ 114
-    years — far beyond any
-    legitimate sensor span; pass a larger value deliberately if needed.
+    years — far beyond any legitimate sensor span.
     The cap is approximate to within one step: for pre-1970 (negative
     epoch) bounds Spark's truncate-toward-zero ``div`` undercounts the
     floor-difference step count by up to one — acceptable slack on a
     fail-safe whose purpose is catching million-fold blow-ups.
     """
-    k = F.col(key_col)
     e = events.select(
-        k.alias("__k"),
-        F.unix_timestamp(F.col(ts_col)).alias("__x"),
-        F.col(val_col).cast("double").alias("__v"),
-        F.col(tiebreak_col).cast("long").alias("__tb"),
+        F.col("user_id").alias("__k"),
+        F.unix_timestamp(F.col("ts")).alias("__x"),
+        F.col("value").cast("double").alias("__v"),
+        F.col("event_id").cast("long").alias("__tb"),
     )
     bounds = e.groupBy("__k").agg(F.min("__x").alias("__lo"), F.max("__x").alias("__hi"))
     n_steps = f"(__hi div {step_seconds}) - (__lo div {step_seconds})"
@@ -175,10 +170,10 @@ def resample_interpolate(
         "__k",
         F.explode(
             F.expr(
-                f"CASE WHEN {n_steps} >= {max_steps_per_key} THEN "
+                f"CASE WHEN {n_steps} >= {MAX_STEPS_PER_KEY} THEN "
                 f"raise_error(concat('resample_interpolate: key ', cast(__k as string), "
                 f"' spans ', cast({n_steps} as string), ' grid steps >= max_steps_per_key="
-                f"{max_steps_per_key} — corrupt outlier timestamp?')) "
+                f"{MAX_STEPS_PER_KEY} — corrupt outlier timestamp?')) "
                 f"ELSE sequence((__lo + {step_seconds - 1}) div {step_seconds},"
                 f" __hi div {step_seconds}) END"
             )
@@ -218,7 +213,7 @@ def resample_interpolate(
     # DuckDB's goes half-to-even — floor(x*1e4 + 0.5) is identical in both
     rounded = F.floor(interp * 10000 + F.lit(0.5)) / 10000.0
     return filled.filter(F.col("__is_grid") == 1).select(
-        F.col("__k").alias(key_col),
+        F.col("__k").alias("user_id"),
         F.col("__x").alias("grid_epoch"),
-        rounded.alias(val_col),
+        rounded.alias("value"),
     )

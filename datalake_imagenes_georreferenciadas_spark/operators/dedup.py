@@ -69,15 +69,16 @@ def _exploded_shingles(
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup by content digest, keeping the smallest id per group
-    (deterministic representative — A3's first-seen-order intent,
-    script_geo.py:71-77, without the nondeterminism of ``dropDuplicates``).
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Exact dedup of ``df(doc_id, text)`` by content digest, keeping the
+    smallest id per group (deterministic representative — A3's
+    first-seen-order intent, script_geo.py:71-77, without the
+    nondeterminism of ``dropDuplicates``).
     """
     return (
-        df.groupBy(F.sha2(F.col(text_col), 256).alias("digest"))
-        .agg(F.min(id_col).alias(id_col), F.count("*").alias("n_copies"))
-        .select(id_col, "digest", "n_copies")
+        df.groupBy(F.sha2(F.col("text"), 256).alias("digest"))
+        .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("n_copies"))
+        .select("doc_id", "digest", "n_copies")
     )
 
 
@@ -322,13 +323,12 @@ def _shingle_intersections(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
     jaccard_threshold: float = 0.5,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity join (dedup family #4).
+    """Exact n-gram Jaccard similarity join over ``df(doc_id, text)``
+    (dedup family #4).
 
     Fully aggregative plan — no arrays cross the shuffle: explode DISTINCT
     shingles, self equi-join on the shingle (only docs sharing a shingle
@@ -337,7 +337,7 @@ def ngram_jaccard_pairs(
     shingles (see :func:`_shingle_intersections`).
     """
     return (
-        _shingle_intersections(df, id_col, text_col, k, max_doc_freq)
+        _shingle_intersections(df, "doc_id", "text", k, max_doc_freq)
         .withColumn(
             "jaccard",
             F.round(
@@ -353,15 +353,14 @@ def ngram_jaccard_pairs(
 
 def containment_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
     threshold: float = 0.8,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
-    """Asymmetric shingle CONTAINMENT join (Broder's containment
-    coefficient): ``c(A→B) = |A∩B| / |A|`` — high when A is a subset of
-    B even if B is much larger, which symmetric Jaccard misses entirely
+    """Asymmetric shingle CONTAINMENT join over ``df(doc_id, text)``
+    (Broder's containment coefficient): ``c(A→B) = |A∩B| / |A|`` — high
+    when A is a subset of B even if B is much larger, which symmetric
+    Jaccard misses entirely
     (a paragraph quoted inside a long page has Jaccard ≈ 0 but
     containment ≈ 1). The standard rule for dropping subsumed documents
     (quotes, boilerplate-wrapped reposts, truncated mirrors) from a
@@ -374,7 +373,7 @@ def containment_pairs(
     emitted when EITHER direction clears ``threshold``.
     """
     return (
-        _shingle_intersections(df, id_col, text_col, k, max_doc_freq)
+        _shingle_intersections(df, "doc_id", "text", k, max_doc_freq)
         .withColumn(
             "cont_a", F.round(F.col("__inter") / F.col("__na").cast("double"), 6)
         )
@@ -390,19 +389,16 @@ def containment_pairs(
 
 def dedup_components(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
     jaccard_threshold: float = 0.5,
-    max_iterations: int = 20,
     small_graph_threshold: int = 250_000,
 ) -> DataFrame:
-    """Near-duplicate CLUSTERS: connected components over the verified
-    MinHash-LSH pair graph — the step that turns pairwise near-dups into
-    keep-one-per-group dedup decisions (component = min doc id, the
-    canonical representative).
+    """Near-duplicate CLUSTERS of ``df(doc_id, text)``: connected
+    components over the verified MinHash-LSH pair graph — the step that
+    turns pairwise near-dups into keep-one-per-group dedup decisions
+    (component = min doc id, the canonical representative).
 
     Hybrid execution, both paths deterministic and result-identical:
 
@@ -426,23 +422,21 @@ def dedup_components(
     ``WHERE doc_id IS NOT NULL`` in every components oracle. Null-TEXT
     docs stay: they form no pairs and come out singleton components.
     """
-    df = df.filter(F.col(id_col).isNotNull())
+    df = df.filter(F.col("doc_id").isNotNull())
     pairs = minhash_lsh_pairs(
-        df, id_col, text_col, k, num_hashes, bands, jaccard_threshold
+        df, "doc_id", "text", k, num_hashes, bands, jaccard_threshold
     )
     edges = pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-    labels = components_from_edges(edges, max_iterations, small_graph_threshold)
-    all_ids = df.select(F.col(id_col).alias("id"))
+    labels = components_from_edges(edges, small_graph_threshold)
+    all_ids = df.select(F.col("doc_id").alias("id"))
     return all_ids.join(labels, "id", "left").select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         F.coalesce("component", F.col("id").cast("long")).alias("component"),
     )
 
 
 def components_from_edges(
-    edges: DataFrame,
-    max_iterations: int = 20,
-    small_graph_threshold: int = 250_000,
+    edges: DataFrame, small_graph_threshold: int = 250_000
 ) -> DataFrame:
     """(id, component) min-label connected components for every
     edge-incident node of an (src, dst) edge list — the shared engine
@@ -456,9 +450,11 @@ def components_from_edges(
     min-label
     propagation over edge-incident nodes only — each round one
     distributed join + groupBy, converged when the monotonically-
-    decreasing label sum stops falling (rounds = cluster diameter).
-    ``localCheckpoint`` truncates lineage per round; at extreme scale
-    swap for large-star/small-star contraction — same per-round shape.
+    decreasing label sum stops falling. The sum falls every round until
+    the labels converge, so the loop ends after at most diameter + 1
+    rounds and needs no cap. ``localCheckpoint`` truncates lineage per
+    round; at extreme scale swap for large-star/small-star contraction —
+    same per-round shape.
     Nodes with no edges are absent from the result — callers left-join
     and coalesce to self-label.
     """
@@ -510,7 +506,7 @@ def components_from_edges(
         .localCheckpoint(eager=True)
     )
     prev_sum = None
-    for _ in range(max_iterations):
+    while True:
         prop = sym.join(labels, sym.src == labels.id).select(
             F.col("dst").alias("id"), "component"
         )
@@ -550,46 +546,40 @@ def _sign_votes(h: str, prefix: str, num_bits: int) -> tuple[list[Column], Colum
     return votes, pack
 
 
-def simhash_table(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_bits: int = 32,
-) -> DataFrame:
-    """(id, fp) SimHash fingerprints via explode + grouped bit votes.
+def simhash_table(df: DataFrame, num_bits: int = 32) -> DataFrame:
+    """(doc_id, fp) SimHash fingerprints of ``df(doc_id, text)`` via
+    explode + grouped bit votes.
 
     One md5 per token; ``num_bits`` partial-aggregated sign sums; one
     shuffle on the doc id. Docs with no tokens fingerprint to 0.
     """
     n_part = df.sparkSession.sparkContext.defaultParallelism
-    ex = df.repartition(n_part, F.col(id_col)).select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("__t")
+    ex = df.repartition(n_part, F.col("doc_id")).select(
+        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("__t")
     )
-    h = ex.select(F.col(id_col), hash64(F.col("__t"), seed=0).alias("__h"))
+    h = ex.select(F.col("doc_id"), hash64(F.col("__t"), seed=0).alias("__h"))
     # r19 (guide §1.2 per-task/driver work): SQL-string votes save ~1 s
     # of driver time per query construction at 32 bits (simhash_pairs
     # fresh 2.76 s → 1.78 s; an eager-checkpoint variant of the
     # fingerprint table was also tried and rejected — stats loss made
     # the band self-join slower combined).
     votes, fp = _sign_votes("__h", "__b", num_bits)
-    g = h.groupBy(id_col).agg(*votes)
+    g = h.groupBy("doc_id").agg(*votes)
     return (
-        df.select(F.col(id_col))
-        .join(g, id_col, "left")
-        .select(F.col(id_col), F.coalesce(fp, F.lit(0).cast("bigint")).alias("fp"))
+        df.select(F.col("doc_id"))
+        .join(g, "doc_id", "left")
+        .select(F.col("doc_id"), F.coalesce(fp, F.lit(0).cast("bigint")).alias("fp"))
     )
 
 
 def simhash_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_bits: int = 32,
     band_bits: int = 8,
     max_hamming: int = 3,
 ) -> DataFrame:
-    """SimHash near-dup pairs ``(a_id, b_id, hamming)`` with pigeonhole
-    band blocking — the parameterized scale dial behind
+    """SimHash near-dup pairs ``(a_id, b_id, hamming)`` of
+    ``df(doc_id, text)`` with pigeonhole band blocking — the parameterized scale dial behind
     ``dedup_simhash_pairs``.
 
     The ``num_bits`` fingerprint splits into ``num_bits // band_bits``
@@ -621,10 +611,8 @@ def simhash_pairs(
             f"bands > max_hamming (got {num_bits}/{band_bits}, "
             f"{n_bands} bands, hamming {max_hamming})"
         )
-    fps = simhash_table(df, id_col=id_col, text_col=text_col, num_bits=num_bits)
-    cand = simhash_band_candidates(
-        fps, id_col=id_col, num_bits=num_bits, band_bits=band_bits
-    )
+    fps = simhash_table(df, num_bits=num_bits)
+    cand = simhash_band_candidates(fps, num_bits=num_bits, band_bits=band_bits)
     hamming = F.bit_count(F.col("fa").bitwiseXOR(F.col("fb")))
     return cand.filter(hamming <= max_hamming).select(
         "a_id", "b_id", hamming.alias("hamming")
@@ -645,26 +633,21 @@ _AUTO_BAND_LO = 6
 _AUTO_BAND_HI = 15
 
 
-def auto_band_bits(
-    n: int,
-    lo: int = _AUTO_BAND_LO,
-    hi: int = _AUTO_BAND_HI,
-    c: int = _AUTO_BAND_C,
-) -> int:
+def auto_band_bits(n: int) -> int:
     """Corpus-derived simhash band width: ``clamp(ceil(log2 n) - c, lo,
-    hi)``. Integer-exact (``(n-1).bit_length()``; the oracle's DuckDB
-    twin is ``length(bin(greatest(n,2)-1))``) so both engines agree at
-    every boundary."""
-    return max(lo, min(hi, (max(int(n), 2) - 1).bit_length() - c))
+    hi)`` over the ``_AUTO_BAND_*`` constants. Integer-exact
+    (``(n-1).bit_length()``; the oracle's DuckDB twin is
+    ``length(bin(greatest(n,2)-1))``) so both engines agree at every
+    boundary."""
+    return max(
+        _AUTO_BAND_LO,
+        min(_AUTO_BAND_HI, (max(int(n), 2) - 1).bit_length() - _AUTO_BAND_C),
+    )
 
 
-def simhash_pairs_auto(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """:func:`simhash_pairs` with ``band_bits`` (and therefore
+def simhash_pairs_auto(df: DataFrame) -> DataFrame:
+    """:func:`simhash_pairs` over ``df(doc_id, text)`` at hamming ≤ 3,
+    with ``band_bits`` (and therefore
     ``num_bits = 4·band_bits``) DERIVED from a cheap corpus ``count()``
     (r18) — the band-widening scale path made automatic: every corpus
     doubling widens bands one bit, holding per-bucket density (and so
@@ -684,24 +667,14 @@ def simhash_pairs_auto(
     its own ground truth, like dedup_simhash_pairs_wide."""
     n = df.count()
     bb = auto_band_bits(n)
-    return simhash_pairs(
-        df,
-        id_col=id_col,
-        text_col=text_col,
-        num_bits=4 * bb,
-        band_bits=bb,
-        max_hamming=max_hamming,
-    )
+    return simhash_pairs(df, num_bits=4 * bb, band_bits=bb)
 
 
 def simhash_band_candidates(
-    fps: DataFrame,
-    id_col: str = "doc_id",
-    num_bits: int = 32,
-    band_bits: int = 8,
+    fps: DataFrame, num_bits: int = 32, band_bits: int = 8
 ) -> DataFrame:
-    """Candidate pairs ``(a_id, b_id, fa, fb)`` sharing at least one
-    whole band of the fingerprint — the (only) stage of simhash dedup
+    """Candidate pairs ``(a_id, b_id, fa, fb)`` of ``fps(doc_id, fp)``
+    sharing at least one whole band of the fingerprint — the (only) stage of simhash dedup
     whose cost depends on bucket density, factored out so the scale
     demo (c0dc757:tools/simhash_band_demo.py) can count candidates at each band
     width. Band ``b``'s key is ``(b << band_bits) | band``, one
@@ -721,7 +694,7 @@ def simhash_band_candidates(
         for b in range(num_bits // band_bits)
     ]
     id_fp = F.when(
-        F.col(id_col).isNotNull(), F.struct(F.col(id_col).alias("id"), "fp")
+        F.col("doc_id").isNotNull(), F.struct(F.col("doc_id").alias("id"), "fp")
     ).alias("id_fp")
     pairs = band_pairs(fps.select(id_fp, "fp"), "id_fp", F.array(*keys))
     return pairs.select(
@@ -759,16 +732,10 @@ _AUTO2_W_PROBE = 24  # probe/maximum band width; 4 bands of ≤59 bits fit
 _AUTO2_BANDS = 4  # pinned: bands > max_hamming 3 keeps pigeonhole exact
 
 
-def simhash_banded_table(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    band_bits: int = _AUTO2_W_PROBE,
-    n_bands: int = _AUTO2_BANDS,
-) -> DataFrame:
-    """(id, ks: array<bigint> of ``n_bands`` band keys) seeded banded
-    SimHash at ``band_bits`` — the probe family behind
-    :func:`simhash_pairs_auto2`.
+def simhash_banded_table(df: DataFrame, band_bits: int = _AUTO2_W_PROBE) -> DataFrame:
+    """(doc_id, ks: array<bigint> of ``_AUTO2_BANDS`` band keys) seeded
+    banded SimHash of ``df(doc_id, text)`` at ``band_bits`` — the probe
+    family behind :func:`simhash_pairs_auto2`.
 
     Band ``b`` bit ``j`` is the sign of the token-vote sum over bit
     ``j`` of ``hash64(token, seed=b)`` — one independent 60-bit hash
@@ -782,20 +749,20 @@ def simhash_banded_table(
     hamming verify all read the same table. Docs with no tokens key to
     all-zero bands (the family's fp=0 contract).
 
-    Plan: explode tokens ×``n_bands`` hash lanes, groupBy(id, band)
+    Plan: explode tokens ×``_AUTO2_BANDS`` hash lanes, groupBy(id, band)
     with ``band_bits`` integer vote sums (map-side partial agg; the agg
     row is ~``band_bits``+2 columns — under the sweep's 64-col wide-agg
     gate, unlike a 4·``band_bits``-column single-agg formulation), then
     4→1 conditional-agg pivot to the array. Two key-partitioned
-    shuffles of ≤ ``n_bands`` rows/doc; zero Python.
+    shuffles of ≤ ``_AUTO2_BANDS`` rows/doc; zero Python.
     """
     n_part = df.sparkSession.sparkContext.defaultParallelism
-    ex = df.repartition(n_part, F.col(id_col)).select(
-        F.col(id_col),
-        F.explode(tokens(F.col(text_col))).alias("__t"),
+    ex = df.repartition(n_part, F.col("doc_id")).select(
+        F.col("doc_id"),
+        F.explode(tokens(F.col("text"))).alias("__t"),
     )
     lanes = ex.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.array(
                 *[
@@ -803,43 +770,39 @@ def simhash_banded_table(
                         F.lit(b).alias("b"),
                         hash64(F.col("__t"), seed=b).alias("h"),
                     )
-                    for b in range(n_bands)
+                    for b in range(_AUTO2_BANDS)
                 ]
             )
         ).alias("bh"),
-    ).select(F.col(id_col), F.col("bh.b").alias("b"), F.col("bh.h").alias("h"))
+    ).select(F.col("doc_id"), F.col("bh.b").alias("b"), F.col("bh.h").alias("h"))
     # at the 24-bit probe width the SQL-string votes save ~3× the
     # 32-bit case's py4j time
     votes, key = _sign_votes("h", "__s", band_bits)
-    g = lanes.groupBy(id_col, "b").agg(*votes)
-    wide = g.select(F.col(id_col), F.col("b"), key.alias("k")).groupBy(id_col).agg(
+    g = lanes.groupBy("doc_id", "b").agg(*votes)
+    wide = g.select(F.col("doc_id"), F.col("b"), key.alias("k")).groupBy("doc_id").agg(
         F.array(
             *[
                 F.coalesce(
                     F.max(F.when(F.col("b") == b, F.col("k"))),
                     F.lit(0).cast("bigint"),
                 )
-                for b in range(n_bands)
+                for b in range(_AUTO2_BANDS)
             ]
         ).alias("ks")
     )
-    zeros = F.array(*[F.lit(0).cast("bigint") for _ in range(n_bands)])
+    zeros = F.array(*[F.lit(0).cast("bigint") for _ in range(_AUTO2_BANDS)])
     return (
-        df.select(F.col(id_col))
-        .join(wide, id_col, "left")
-        .select(F.col(id_col), F.coalesce(F.col("ks"), zeros).alias("ks"))
+        df.select(F.col("doc_id"))
+        .join(wide, "doc_id", "left")
+        .select(F.col("doc_id"), F.coalesce(F.col("ks"), zeros).alias("ks"))
     )
 
 
-def simhash_collision_masses(
-    banded: DataFrame,
-    lo: int = _AUTO2_LO,
-    w_probe: int = _AUTO2_W_PROBE,
-    n_bands: int = _AUTO2_BANDS,
-) -> dict[int, int]:
-    """``{w: C(w)}`` banded collision mass at every candidate width from
-    ONE pass over the probe keys: per-band bucket counts at full probe
-    width (≤ ``n_bands`` rows/doc), then each distinct (band, key)
+def simhash_collision_masses(banded: DataFrame) -> dict[int, int]:
+    """``{w: C(w)}`` banded collision mass at every candidate width
+    ``w ∈ [_AUTO2_LO, _AUTO2_W_PROBE]`` from ONE pass over the probe
+    keys: per-band bucket counts at full probe width (≤ ``_AUTO2_BANDS``
+    rows/doc), then each distinct (band, key)
     count re-bucketed under every width's prefix mask — the second agg
     runs over DISTINCT KEYS only, so the explode-by-width blowup is
     bounded by distinct buckets, not docs. Integer throughout."""
@@ -848,7 +811,7 @@ def simhash_collision_masses(
             F.array(
                 *[
                     F.struct(F.lit(b).alias("b"), F.col("ks")[b].alias("k"))
-                    for b in range(n_bands)
+                    for b in range(_AUTO2_BANDS)
                 ]
             )
         ).alias("bk")
@@ -866,7 +829,7 @@ def simhash_collision_masses(
                         .bitwiseAND(F.lit((1 << w) - 1).cast("bigint"))
                         .alias("kk"),
                     )
-                    for w in range(lo, w_probe + 1)
+                    for w in range(_AUTO2_LO, _AUTO2_W_PROBE + 1)
                 ]
             )
         ).alias("wk"),
@@ -881,44 +844,33 @@ def simhash_collision_masses(
     return {int(r["w"]): int(r["mass"]) for r in masses}
 
 
-def auto_band_bits2(
-    masses: dict[int, int],
-    n: int,
-    tau: int = _AUTO2_TAU,
-    lo: int = _AUTO2_LO,
-    w_probe: int = _AUTO2_W_PROBE,
-) -> int:
+def auto_band_bits2(masses: dict[int, int], n: int) -> int:
     """The budget dial: narrowest width whose measured candidate mass
-    fits ``tau`` pairs/doc — ``min{w: C(w) ≤ tau·n}``, else ``w_probe``.
-    C is non-increasing in w (wider prefixes only split buckets), so
-    this is the unique budget-feasible minimum. A width with no mass
-    row (empty corpus) counts as mass 0. DuckDB twin: generate_series
-    over [lo, w_probe] LEFT JOIN the mass aggregate, min(w) filtered on
-    the same integer inequality, coalesced to ``w_probe``."""
-    for w in range(lo, w_probe + 1):
-        if masses.get(w, 0) <= tau * n:
+    fits ``_AUTO2_TAU`` pairs/doc — ``min{w ≥ _AUTO2_LO: C(w) ≤
+    _AUTO2_TAU·n}``, else ``_AUTO2_W_PROBE``. C is non-increasing in w
+    (wider prefixes only split buckets), so this is the unique
+    budget-feasible minimum. A width with no mass row (empty corpus)
+    counts as mass 0. DuckDB twin: generate_series over
+    [_AUTO2_LO, _AUTO2_W_PROBE] LEFT JOIN the mass aggregate, min(w)
+    filtered on the same integer inequality, coalesced to
+    ``_AUTO2_W_PROBE``."""
+    for w in range(_AUTO2_LO, _AUTO2_W_PROBE + 1):
+        if masses.get(w, 0) <= _AUTO2_TAU * n:
             return w
-    return w_probe
+    return _AUTO2_W_PROBE
 
 
-def simhash_pairs_auto2(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    tau: int = _AUTO2_TAU,
-    lo: int = _AUTO2_LO,
-    w_probe: int = _AUTO2_W_PROBE,
-) -> DataFrame:
-    """SimHash near-dup pairs ``(a_id, b_id, hamming, band_bits)`` at
-    the duplication-aware BUDGET dial (r19) — the fix for the one r18
+def simhash_pairs_auto2(df: DataFrame) -> DataFrame:
+    """SimHash near-dup pairs ``(a_id, b_id, hamming, band_bits)`` of
+    ``df(doc_id, text)`` at hamming ≤ 3 and the duplication-aware
+    BUDGET dial (r19) — the fix for the one r18
     ladder waiver: where :func:`simhash_pairs_auto` derives band width
     from ``count()`` alone (blind to duplication, under-widening on
     copy-correlated corpora), this measures the actual banded collision
     mass C(w) at every width in one linear aggregate and picks the
-    narrowest width whose candidate volume fits ``tau·n`` — so the
-    candidate stage is ≤ ``tau`` pairs/doc BY CONSTRUCTION on every
-    growth axis, correlated or not.
+    narrowest width whose candidate volume fits ``_AUTO2_TAU·n`` — so
+    the candidate stage is ≤ ``_AUTO2_TAU`` pairs/doc BY CONSTRUCTION
+    on every growth axis, correlated or not.
 
     Exactness: 4 bands > hamming 3, so pigeonhole makes the band join
     recall-lossless at ANY width — the oracle is brute-force all-pairs
@@ -931,14 +883,14 @@ def simhash_pairs_auto2(
     (prefix consistency, see :func:`simhash_banded_table`); the dial is
     a 17-row driver-side reduce (same class as the family's ``count()``
     scalar). Degenerate corpora: an exact-duplicate mega-cluster never
-    splits under ANY width, so the dial saturates at ``w_probe`` and
+    splits under ANY width, so the dial saturates at ``_AUTO2_W_PROBE`` and
     the emitted pairs are the genuine hamming-0 output — quadratic in
     the cluster because the ANSWER is (collapse clusters with
     dedup_exact/components first; pipeline_corpus_prep stages exactly
-    that). 100 TB posture: candidate join cost ``tau·n`` linear;
+    that). 100 TB posture: candidate join cost ``_AUTO2_TAU·n`` linear;
     fingerprint cost linear at FIXED probe width (96 hash+vote lanes);
-    raise ``w_probe`` to 32 at ≳10^9 docs (one constant, the law is
-    unchanged; per-band BIGINT keys carry widths to 59).
+    raise ``_AUTO2_W_PROBE`` to 32 at ≳10^9 docs (one constant, the law
+    is unchanged; per-band BIGINT keys carry widths to 59).
     """
     # materialize the probe keys ONCE (eager localCheckpoint, the
     # components_from_edges precedent): the dial's mass aggregate and
@@ -946,28 +898,20 @@ def simhash_pairs_auto2(
     # so the fingerprint job — the dominant linear stage at 100 TB —
     # really does run a single time, as the contract claims. Without
     # the barrier, lazy evaluation re-runs it per consumer.
-    banded = simhash_banded_table(
-        df, id_col=id_col, text_col=text_col, band_bits=w_probe
-    ).localCheckpoint(eager=True)
+    banded = simhash_banded_table(df).localCheckpoint(eager=True)
     # same value as df.count() (the banded table left-joins back onto
     # df's id column, one row per input row) but reads the checkpoint
     # just materialized instead of re-scanning/re-computing df
     n = banded.count()
-    w_star = auto_band_bits2(
-        simhash_collision_masses(banded, lo=lo, w_probe=w_probe),
-        n,
-        tau=tau,
-        lo=lo,
-        w_probe=w_probe,
-    )
+    w_star = auto_band_bits2(simhash_collision_masses(banded), n)
     mask = F.lit((1 << w_star) - 1).cast("bigint")
     keyed = banded.select(
-        id_col,
+        "doc_id",
         F.transform(F.col("ks"), lambda k: k.bitwiseAND(mask)).alias("ks"),
     )
     keys = [F.lit(b << w_star).bitwiseOR(F.col("ks")[b]) for b in range(_AUTO2_BANDS)]
     cand = (
-        band_pairs(keyed, id_col, F.array(*keys))
+        band_pairs(keyed, "doc_id", F.array(*keys))
         .join(keyed.toDF("a_id", "ka"), "a_id")
         .join(keyed.toDF("b_id", "kb"), "b_id")
     )
@@ -978,7 +922,7 @@ def simhash_pairs_auto2(
         F.lit(0),
         lambda acc, x: acc + x,
     )
-    return cand.filter(hamming <= max_hamming).select(
+    return cand.filter(hamming <= 3).select(
         "a_id",
         "b_id",
         hamming.alias("hamming"),

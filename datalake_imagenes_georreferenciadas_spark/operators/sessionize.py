@@ -13,27 +13,23 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def sessionize(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: float = 30.0,
-) -> DataFrame:
-    """Assign a session id per (user, gap>threshold island).
+def sessionize(events: DataFrame, gap_minutes: float = 30.0) -> DataFrame:
+    """Assign a session id per (user_id, gap>threshold island) of
+    ``events(user_id, ts, event_id)``.
 
     Ordering contract (r16): callers exclude NULL event times (a row
     without a timestamp can't sessionize); the event_id tie-break keeps
     Spark's default ASC NULLS FIRST, written explicitly here and
     mirrored as ``NULLS FIRST`` in every oracle so neither engine's
     default decides frame membership on dirty data."""
-    w = Window.partitionBy(user_col).orderBy(
-        F.col(ts_col).asc_nulls_first(), F.col("event_id").asc_nulls_first()
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").asc_nulls_first(), F.col("event_id").asc_nulls_first()
     )
     gap_s = gap_minutes * 60.0
-    prev = F.lag(ts_col).over(w)
+    prev = F.lag("ts").over(w)
     new_sess = F.when(
         prev.isNull()
-        | ((F.col(ts_col).cast("double") - prev.cast("double")) > gap_s),
+        | ((F.col("ts").cast("double") - prev.cast("double")) > gap_s),
         1,
     ).otherwise(0)
     return events.withColumn("__new", new_sess).withColumn(
@@ -41,34 +37,28 @@ def sessionize(
     ).drop("__new")
 
 
-def session_stats(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: float = 30.0,
-) -> DataFrame:
-    """Per-session aggregates (count, span, value sum) — the batch twin of
-    ``session_window(ts, gap)``."""
-    s = sessionize(events, user_col, ts_col, gap_minutes)
+def session_stats(events: DataFrame) -> DataFrame:
+    """Per-session aggregates (count, span, value sum) at a 30-minute gap
+    — the batch twin of ``session_window(ts, gap)``."""
+    s = sessionize(events)
     return (
-        s.groupBy(user_col, "session_seq")
+        s.groupBy("user_id", "session_seq")
         .agg(
             F.count("*").alias("n_events"),
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
     )
 
 
-def tumbling_window_agg(
-    events: DataFrame, ts_col: str = "ts", minutes: int = 10
-) -> DataFrame:
-    """Tumbling-window counts/sums; batch twin of ``F.window`` so the
-    oracle can use ``time_bucket``. Exposes window_start (not the struct)
-    for cross-engine schema parity."""
+def tumbling_window_agg(events: DataFrame, minutes: int = 10) -> DataFrame:
+    """Tumbling-window counts/sums over ``events(ts, event_type, value)``;
+    batch twin of ``F.window`` so the oracle can use ``time_bucket``, and
+    the body of the streaming ``tumbling_counts``. Exposes window_start
+    (not the struct) for cross-engine schema parity."""
     return (
-        events.groupBy(F.window(ts_col, f"{minutes} minutes").alias("w"), "event_type")
+        events.groupBy(F.window("ts", f"{minutes} minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n", "sum_value")
     )

@@ -99,11 +99,11 @@ def hyperplane_signature(
 
 
 def hyperplane_signature_sql(
-    vec_expr: str, num_planes: int = 8, dim: int = 64, plane_offset: int = 0
+    vec_expr: str, num_planes: int = 8, plane_offset: int = 0
 ) -> str:
-    """DuckDB twin of :func:`hyperplane_signature` (same literal planes,
-    same left-to-right accumulation order)."""
-    planes = _plane_matrix(plane_offset + num_planes, dim)
+    """DuckDB twin of :func:`hyperplane_signature` at ``dim=64`` (same
+    literal planes, same left-to-right accumulation order)."""
+    planes = _plane_matrix(plane_offset + num_planes, 64)
     terms = []
     for p in range(num_planes):
         lits = "[" + ", ".join(repr(c) for c in planes[plane_offset + p]) + "]"
@@ -118,42 +118,37 @@ def hyperplane_signature_sql(
     return "(" + " + ".join(terms) + ")::BIGINT"
 
 
-def brute_force_topk(
-    data: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    data_id: str = "vec_id",
-    query_id: str = "q_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k: broadcast queries × scan data → window top-k.
+def brute_force_topk(data: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
+    """Exact cosine top-k of ``queries(q_id, embedding)`` over
+    ``data(vec_id, embedding)``: broadcast queries × scan data → window
+    top-k.
 
-    Deterministic ordering: (-cosine, data id) — the float-tie hazard is
+    Deterministic ordering: (-cosine, vec_id) — the float-tie hazard is
     resolved by the unique id, so results hash-match the oracle.
     """
-    q = queries.select(F.col(query_id), F.col(vec_col).alias("__qv"))
+    q = queries.select(F.col("q_id"), F.col("embedding").alias("__qv"))
     # r19 (guide §2.5): the corpus side of the broadcast score scan is
     # spread() — a single-row-group parquet scan is ONE task, and the
     # per-row cosine fold serialized on it; no-op at cluster scale
-    scored = spread(data, data_id).join(F.broadcast(q)).select(
-        query_id,
-        F.col(data_id),
-        F.round(cosine(F.col(vec_col), F.col("__qv")), 6).alias("cos"),
+    scored = spread(data, "vec_id").join(F.broadcast(q)).select(
+        "q_id",
+        F.col("vec_id"),
+        F.round(cosine(F.col("embedding"), F.col("__qv")), 6).alias("cos"),
     )
+    return _topk_by_cosine(scored, k)
+
+
+def _topk_by_cosine(scored: DataFrame, k: int) -> DataFrame:
+    """``(q_id, vec_id, cos, rank)``: the ``k`` best-scored vectors per
+    query, ties broken by ``vec_id``."""
     return topk_per_group(
-        scored, [query_id], [F.col("cos").desc(), F.col(data_id)], k, rank_col="rank"
-    ).select(query_id, data_id, "cos", "rank")
+        scored, ["q_id"], [F.col("cos").desc(), F.col("vec_id")], k, rank_col="rank"
+    ).select("q_id", "vec_id", "cos", "rank")
 
 
-def ivf_assign(
-    data: DataFrame,
-    centroids: DataFrame,
-    vec_col: str = "embedding",
-    data_id: str = "vec_id",
-    centroid_id: str = "centroid_id",
-    centroid_vec: str = "centroid",
-) -> DataFrame:
-    """IVF coarse quantization: assign each vector to its nearest centroid
+def ivf_assign(data: DataFrame, centroids: DataFrame) -> DataFrame:
+    """IVF coarse quantization: assign each ``data(vec_id, embedding)``
+    vector to its nearest ``centroids(centroid_id, centroid)`` centroid
     (broadcast the tiny centroid table, argmin on squared euclidean with
     the centroid id as the deterministic tiebreak). The argmin groups on
     the row id only — never on the vector payload — then joins the
@@ -168,12 +163,14 @@ def ivf_assign(
 
     # r19 (guide §2.5): spread the assignment scan — same single-split
     # rationale as brute_force_topk
-    crossed = spread(data.select(data_id, vec_col), data_id).join(F.broadcast(centroids))
-    scored = crossed.withColumn("__d2", euclidean2(F.col(vec_col), F.col(centroid_vec)))
-    assign = argmin_per_group(
-        scored, [data_id], F.struct(F.col("__d2"), F.col(centroid_id)), [centroid_id]
+    crossed = spread(data.select("vec_id", "embedding"), "vec_id").join(
+        F.broadcast(centroids)
     )
-    return data.join(assign, data_id)
+    scored = crossed.withColumn("__d2", euclidean2(F.col("embedding"), F.col("centroid")))
+    assign = argmin_per_group(
+        scored, ["vec_id"], F.struct(F.col("__d2"), F.col("centroid_id")), ["centroid_id"]
+    )
+    return data.join(assign, "vec_id")
 
 
 def ivf_topk(
@@ -182,9 +179,6 @@ def ivf_topk(
     centroids: DataFrame,
     k: int = 10,
     nprobe: int = 2,
-    data_id: str = "vec_id",
-    query_id: str = "q_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-flat ANN: partition vectors by nearest centroid; each query
     probes its ``nprobe`` nearest cells; exact cosine + window top-k on
@@ -194,27 +188,25 @@ def ivf_topk(
     """
     from ..functions.vectors import euclidean2
 
-    d = ivf_assign(data, centroids, vec_col)
+    d = ivf_assign(data, centroids)
     q_scored = queries.join(F.broadcast(centroids)).withColumn(
-        "__d2", euclidean2(F.col(vec_col), F.col("centroid"))
+        "__d2", euclidean2(F.col("embedding"), F.col("centroid"))
     )
     q_probes = topk_per_group(
-        q_scored.select(query_id, vec_col, "centroid_id", "__d2"),
-        [query_id],
+        q_scored.select("q_id", "embedding", "centroid_id", "__d2"),
+        ["q_id"],
         [F.col("__d2"), F.col("centroid_id")],
         nprobe,
         rank_col="__probe_rank",
     ).select(
-        F.col(query_id), F.col(vec_col).alias("__qv"), F.col("centroid_id")
+        F.col("q_id"), F.col("embedding").alias("__qv"), F.col("centroid_id")
     )
     scored = d.join(q_probes, "centroid_id").select(
-        query_id,
-        F.col(data_id),
-        F.round(cosine(F.col(vec_col), F.col("__qv")), 6).alias("cos"),
+        "q_id",
+        F.col("vec_id"),
+        F.round(cosine(F.col("embedding"), F.col("__qv")), 6).alias("cos"),
     )
-    return topk_per_group(
-        scored, [query_id], [F.col("cos").desc(), F.col(data_id)], k, rank_col="rank"
-    ).select(query_id, data_id, "cos", "rank")
+    return _topk_by_cosine(scored, k)
 
 
 def cosine_near_pairs(
@@ -223,12 +215,10 @@ def cosine_near_pairs(
     num_bands: int = 4,
     planes_per_band: int = 5,
     dim: int = 64,
-    data_id: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (dedup family #5), banded
-    OR-of-ANDs LSH — the MinHash-banding recall construction on
-    hyperplane signatures.
+    """Embedding-cosine near-duplicate pairs of ``data(vec_id,
+    embedding)`` (dedup family #5), banded OR-of-ANDs LSH — the
+    MinHash-banding recall construction on hyperplane signatures.
 
     Each vector gets ``num_bands`` independent bucket ids (disjoint
     ``planes_per_band``-plane slices of the global plane family); a pair
@@ -273,11 +263,11 @@ def cosine_near_pairs(
     # signature per join side costs one extra map pass and keeps every
     # exchange payload-free, which is the better trade under a planner that
     # can see scan statistics.
-    keyed = spread(data.select(F.col(data_id), F.col(vec_col)), data_id).select(
-        F.col(data_id),
+    keyed = spread(data.select(F.col("vec_id"), F.col("embedding")), "vec_id").select(
+        F.col("vec_id"),
         *[
             hyperplane_signature(
-                vec_col,
+                "embedding",
                 planes_per_band,
                 dim,
                 plane_offset=band * planes_per_band,
@@ -287,7 +277,7 @@ def cosine_near_pairs(
     )
     cand = band_pairs(
         keyed,
-        data_id,
+        "vec_id",
         F.array(
             *[
                 F.lit(band << planes_per_band).bitwiseOR(F.col(f"__s{band}"))
@@ -295,8 +285,8 @@ def cosine_near_pairs(
             ]
         ),
     )
-    va = data.select(F.col(data_id).alias("a_id"), F.col(vec_col).alias("__va"))
-    vb = data.select(F.col(data_id).alias("b_id"), F.col(vec_col).alias("__vb"))
+    va = data.select(F.col("vec_id").alias("a_id"), F.col("embedding").alias("__va"))
+    vb = data.select(F.col("vec_id").alias("b_id"), F.col("embedding").alias("__vb"))
     return (
         cand.join(va, "a_id")
         .join(vb, "b_id")
@@ -317,31 +307,24 @@ _AUTO_PLANES_LO = 4  # ≥16 buckets/band even on tiny corpora
 _AUTO_PLANES_HI = 16  # 4 bands × 16 planes: bounded Catalyst tree
 
 
-def auto_planes_per_band(
-    n: int,
-    lo: int = _AUTO_PLANES_LO,
-    hi: int = _AUTO_PLANES_HI,
-    c: int = _AUTO_PLANES_C,
-) -> int:
-    """The corpus-derived LSH dial: ``clamp(ceil(log2 n) - c, lo, hi)``.
+def auto_planes_per_band(n: int) -> int:
+    """The corpus-derived LSH dial: ``clamp(ceil(log2 n) - c, lo, hi)``
+    over the ``_AUTO_PLANES_*`` constants.
 
     Integer-exact on both engines — ``ceil(log2 n) = (n-1).bit_length()``
     here, ``length(bin(greatest(n,2)-1))`` in the DuckDB oracle — so no
     float log can disagree in the last ulp at a band boundary."""
-    return max(lo, min(hi, (max(int(n), 2) - 1).bit_length() - c))
+    return max(
+        _AUTO_PLANES_LO,
+        min(_AUTO_PLANES_HI, (max(int(n), 2) - 1).bit_length() - _AUTO_PLANES_C),
+    )
 
 
-def cosine_near_pairs_auto(
-    data: DataFrame,
-    threshold: float = 0.25,
-    num_bands: int = 4,
-    dim: int = 64,
-    data_id: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """:func:`cosine_near_pairs` with the ``planes_per_band`` dial
-    DERIVED from the corpus instead of hand-picked (r18 — the last
-    manual step in the 100 TB dedup posture made automatic).
+def cosine_near_pairs_auto(data: DataFrame, threshold: float = 0.25) -> DataFrame:
+    """:func:`cosine_near_pairs` (4 bands, 64-dim vectors) with the
+    ``planes_per_band`` dial DERIVED from the corpus instead of
+    hand-picked (r18 — the last manual step in the 100 TB dedup posture
+    made automatic).
 
     Fixed-parameter banded LSH is Θ(n²/2^p); the published escape is
     p ∝ log n, demonstrated and registered in r16/r17 — but a deployer
@@ -357,13 +340,7 @@ def cosine_near_pairs_auto(
     between engines at any SF."""
     n = data.count()
     return cosine_near_pairs(
-        data,
-        threshold=threshold,
-        num_bands=num_bands,
-        planes_per_band=auto_planes_per_band(n),
-        dim=dim,
-        data_id=data_id,
-        vec_col=vec_col,
+        data, threshold=threshold, planes_per_band=auto_planes_per_band(n)
     )
 
 
@@ -373,27 +350,23 @@ def lsh_ann_topk(
     k: int = 10,
     num_planes: int = 8,
     dim: int = 64,
-    data_id: str = "vec_id",
-    query_id: str = "q_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate top-k: equi-join on hyperplane bucket, then exact cosine
-    + window inside the bucket. Recall trades off with ``num_planes``; at
-    scale add multi-probe (flip one bit) unions."""
-    d = data.withColumn("__bucket", hyperplane_signature(vec_col, num_planes, dim))
+    """Approximate top-k of ``queries(q_id, embedding)`` over
+    ``data(vec_id, embedding)``: equi-join on hyperplane bucket, then
+    exact cosine + window inside the bucket. Recall trades off with
+    ``num_planes``; at scale add multi-probe (flip one bit) unions."""
+    d = data.withColumn("__bucket", hyperplane_signature("embedding", num_planes, dim))
     q = queries.select(
-        F.col(query_id),
-        F.col(vec_col).alias("__qv"),
-        hyperplane_signature(vec_col, num_planes, dim).alias("__bucket"),
+        F.col("q_id"),
+        F.col("embedding").alias("__qv"),
+        hyperplane_signature("embedding", num_planes, dim).alias("__bucket"),
     )
     scored = d.join(F.broadcast(q), "__bucket").select(
-        query_id,
-        F.col(data_id),
-        F.round(cosine(F.col(vec_col), F.col("__qv")), 6).alias("cos"),
+        "q_id",
+        F.col("vec_id"),
+        F.round(cosine(F.col("embedding"), F.col("__qv")), 6).alias("cos"),
     )
-    return topk_per_group(
-        scored, [query_id], [F.col("cos").desc(), F.col(data_id)], k, rank_col="rank"
-    ).select(query_id, data_id, "cos", "rank")
+    return _topk_by_cosine(scored, k)
 
 
 def recall_at_k(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
@@ -422,13 +395,10 @@ def recall_at_k(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
 
 
 def rerank_crossencoder(
-    cands: DataFrame,
-    docs: DataFrame,
-    query_tag: str = "ce",
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    cands: DataFrame, docs: DataFrame, query_tag: str = "ce"
 ) -> DataFrame:
-    """Second-stage reranking of a retrieval candidate list — the
+    """Second-stage reranking of a ``cands(doc_id, ...)`` retrieval
+    candidate list against ``docs(doc_id, text)`` — the
     cross-encoder step of a RAG pipeline, as Arrow ``mapInPandas``
     plumbing.
 
@@ -443,8 +413,8 @@ def rerank_crossencoder(
     Scores are 60-bit-md5 mod 1e6 INTEGERS — exact in Spark, DuckDB and
     Python, no float-rounding drift across engines.
     """
-    joined = docs.select(F.col(id_col), F.col(text_col)).join(
-        F.broadcast(cands), id_col
+    joined = docs.select(F.col("doc_id"), F.col("text")).join(
+        F.broadcast(cands), "doc_id"
     )
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in cands.schema.fields
@@ -453,11 +423,11 @@ def rerank_crossencoder(
 
     def score_batches(batches):
         for pdf in batches:
-            scored = pdf.drop(columns=[text_col])
+            scored = pdf.drop(columns=["text"])
             scored["ce_score"] = [
                 int(hashlib.md5(f"{tag}:{t}".encode("utf-8")).hexdigest()[:15], 16)
                 % 1_000_000
-                for t in pdf[text_col]
+                for t in pdf["text"]
             ]
             yield scored
 

@@ -56,14 +56,13 @@ def salted_broadcast_replicate_join(
     small: DataFrame,
     key: str,
     n_salts: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-safe equi-join: salt the big side, replicate the small side
-    across every salt value, join on (key, salt). Each hot-key partition
-    carries 1/n_salts of that key's rows."""
+    """Skew-safe inner equi-join: salt the big side, replicate the small
+    side across every salt value, join on (key, salt). Each hot-key
+    partition carries 1/n_salts of that key's rows."""
     big_s = big.withColumn(
         "__salt", F.pmod(F.hash(F.col(key), F.monotonically_increasing_id()), F.lit(n_salts))
     )
     salts = F.explode(F.array(*[F.lit(i) for i in range(n_salts)])).alias("__salt")
     small_r = small.select("*", salts)
-    return big_s.join(small_r, [key, "__salt"], how).drop("__salt")
+    return big_s.join(small_r, [key, "__salt"]).drop("__salt")

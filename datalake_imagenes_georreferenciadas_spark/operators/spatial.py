@@ -41,31 +41,21 @@ from pyspark.sql import functions as F
 from ..functions.geo import dist2, grid_cell, point_in_rings
 from .topk import argmin_per_group
 
+#: the parcel columns the reference reports for a classified image
+PARCEL_KEEP = ("id_predio", "nombre")
 
-def contains_join(
-    points: DataFrame,
-    polys: DataFrame,
-    x_col: str = "lon",
-    y_col: str = "lat",
-    ring_col: str = "rings",
-    how: str = "left",
-) -> DataFrame:
-    """J2: point-in-polygon join, broadcast-nested-loop with a ray-cast
-    predicate over all rings (holes honored). Use when the polygon side
-    fits in memory (the reference's own assumption — it holds all parcels
-    in a driver list)."""
-    pred = point_in_rings(points[x_col], points[y_col], polys[ring_col])
+
+def contains_join(points: DataFrame, polys: DataFrame, how: str = "left") -> DataFrame:
+    """J2: point-in-polygon join of ``points(lon, lat)`` with
+    ``polys(rings)``, broadcast-nested-loop with a ray-cast predicate over
+    all rings (holes honored). Use when the polygon side fits in memory
+    (the reference's own assumption — it holds all parcels in a driver
+    list)."""
+    pred = point_in_rings(points["lon"], points["lat"], polys["rings"])
     return points.join(F.broadcast(polys), pred, how)
 
 
-def contains_join_grid(
-    points: DataFrame,
-    polys: DataFrame,
-    eps: float = 0.5,
-    x_col: str = "lon",
-    y_col: str = "lat",
-    ring_col: str = "rings",
-) -> DataFrame:
+def contains_join_grid(points: DataFrame, polys: DataFrame, eps: float = 0.5) -> DataFrame:
     """J2 at scale (§4.3): grid-cell equi-join prefilter, then exact test.
 
     Each polygon is exploded to every ε-cell its bounding box overlaps
@@ -76,7 +66,7 @@ def contains_join_grid(
     lie inside shells; MultiPolygon parts each contribute).
     """
     cells = polys.withColumn(
-        "__flat", F.flatten(F.col(ring_col))
+        "__flat", F.flatten(F.col("rings"))
     ).withColumn(
         "__cells",
         F.expr(
@@ -91,66 +81,53 @@ def contains_join_grid(
             """
         ),
     ).withColumn("__cell", F.explode("__cells")).drop("__cells", "__flat")
-    pts = points.withColumn("__cell", grid_cell(F.col(x_col), F.col(y_col), eps))
+    pts = points.withColumn("__cell", grid_cell(F.col("lon"), F.col("lat"), eps))
     joined = pts.join(cells, "__cell")
-    return joined.filter(point_in_rings(F.col(x_col), F.col(y_col), F.col(ring_col))).drop(
+    return joined.filter(point_in_rings(F.col("lon"), F.col("lat"), F.col("rings"))).drop(
         "__cell"
     )
 
 
-def explode_vertices(
-    polys: DataFrame, ring_col: str = "rings", keep: tuple[str, ...] = ("id_predio", "nombre")
-) -> DataFrame:
+def explode_vertices(polys: DataFrame) -> DataFrame:
     """Dimension prep for J3: one row per polygon vertex across every ring
     — shells and holes, like the reference's ``allcoor`` vertex→parcel
     index built from the full nested coordinate walk
     (script_geo.py:50-57,146-154)."""
     return polys.select(
-        *keep, F.explode(F.flatten(F.col(ring_col))).alias("__v")
-    ).select(*keep, F.col("__v.x").alias("vx"), F.col("__v.y").alias("vy"))
+        *PARCEL_KEEP, F.explode(F.flatten(F.col("rings"))).alias("__v")
+    ).select(*PARCEL_KEEP, F.col("__v.x").alias("vx"), F.col("__v.y").alias("vy"))
 
 
-def nearest_vertex_join(
-    points: DataFrame,
-    polys: DataFrame,
-    point_id: str = "img_id",
-    x_col: str = "lon",
-    y_col: str = "lat",
-    ring_col: str = "rings",
-    keep: tuple[str, ...] = ("id_predio", "nombre"),
-) -> DataFrame:
-    """J3–J5: nearest polygon vertex per point, deterministic argmin.
+def nearest_vertex_join(points: DataFrame, polys: DataFrame) -> DataFrame:
+    """J3–J5: nearest polygon vertex per ``points(img_id, lon, lat)``,
+    deterministic argmin.
 
     Broadcast the (small) vertex dimension against the point fact table,
-    compute squared distance, and ``min(struct(dist, keep...))`` per point
-    — one partial-aggregated shuffle on point id, no window state. Ties
-    break on the ``keep`` columns' ordering (documented, deterministic).
+    compute squared distance, and ``min(struct(dist, id_predio, nombre))``
+    per point — one partial-aggregated shuffle on point id, no window
+    state. Ties break on the parcel columns' ordering (documented,
+    deterministic).
     """
-    verts = explode_vertices(polys, ring_col, keep)
-    crossed = points.select(point_id, x_col, y_col).join(F.broadcast(verts))
+    verts = explode_vertices(polys)
+    crossed = points.select("img_id", "lon", "lat").join(F.broadcast(verts))
     scored = crossed.withColumn(
-        "dist2", dist2(F.col(x_col), F.col(y_col), F.col("vx"), F.col("vy"))
+        "dist2", dist2(F.col("lon"), F.col("lat"), F.col("vx"), F.col("vy"))
     )
-    return argmin_per_group(scored, [point_id], F.col("dist2"), [*keep, "vx", "vy"])
+    return argmin_per_group(scored, ["img_id"], F.col("dist2"), [*PARCEL_KEEP, "vx", "vy"])
 
 
 def classify_points(
-    points: DataFrame,
-    polys: DataFrame,
-    point_id: str = "img_id",
-    x_col: str = "lon",
-    y_col: str = "lat",
-    ring_col: str = "rings",
-    keep: tuple[str, ...] = ("id_predio", "nombre"),
-    unclassifiable_label: str = "IMAGEN NO CLASIFICABLE",
+    points: DataFrame, polys: DataFrame, keep: tuple[str, ...] = PARCEL_KEEP
 ) -> DataFrame:
-    """The 3A classifier: containment first, nearest-vertex fallback, P7
-    null-guard label for points with no coordinates (§2.11 intent).
+    """The 3A classifier over ``points(img_id, lon, lat)`` and
+    ``polys(rings, keep...)``: containment first, nearest-vertex
+    fallback, P7 null-guard label for points with no coordinates (§2.11
+    intent).
 
-    Output: point columns + ``keep`` columns + ``method`` ∈
-    {'contains','nearest', unclassifiable_label}.
+    Output: ``img_id`` + ``keep`` columns + ``method`` ∈
+    {'contains', 'nearest', 'IMAGEN NO CLASIFICABLE'}.
     """
-    has_xy = F.col(x_col).isNotNull() & F.col(y_col).isNotNull()
+    has_xy = F.col("lon").isNotNull() & F.col("lat").isNotNull()
     located = points.filter(has_xy)
     unlocated = points.filter(~has_xy)
 
@@ -164,10 +141,10 @@ def classify_points(
     # tie-break of the vertex formulation only ordered rows WITHIN a
     # polygon and never changed which polygon won), but 2 stages instead
     # of 6 — at 100 TB the fact side is scanned ONCE.
-    px, py = F.col(x_col), F.col(y_col)
-    rings = F.col(ring_col)
-    scored = located.join(F.broadcast(polys.select(*keep, ring_col))).select(
-        point_id,
+    px, py = F.col("lon"), F.col("lat")
+    rings = F.col("rings")
+    scored = located.join(F.broadcast(polys.select(*keep, "rings"))).select(
+        "img_id",
         *keep,
         point_in_rings(px, py, rings).alias("__in"),
         F.array_min(
@@ -180,9 +157,9 @@ def classify_points(
         *[F.col(c) for c in keep],
         F.col("__in"),
     )
-    win = scored.groupBy(point_id).agg(F.min(rank).alias("__w"))
+    win = scored.groupBy("img_id").agg(F.min(rank).alias("__w"))
     located_out = win.select(
-        point_id,
+        "img_id",
         *[F.col(f"__w.{c}").alias(c) for c in keep],
         F.when(F.col("__w.__in"), F.lit("contains")).otherwise(F.lit("nearest")).alias("method"),
     )
@@ -192,8 +169,8 @@ def classify_points(
     # (or error under ANSI).
     keep_types = {f.name: f.dataType for f in polys.schema.fields}
     unc = unlocated.select(
-        point_id,
+        "img_id",
         *[F.lit(None).cast(keep_types[c]).alias(c) for c in keep],
-        F.lit(unclassifiable_label).alias("method"),
+        F.lit("IMAGEN NO CLASIFICABLE").alias("method"),
     )
     return located_out.unionByName(unc)

@@ -93,7 +93,7 @@ def digest_quantile(means: np.ndarray, weights: np.ndarray, q: float) -> float:
     return float(np.interp(q * float(weights.sum()), cum, means))
 
 
-def sketch(df: DataFrame, col: str, delta: float = DELTA) -> DataFrame:
+def sketch(df: DataFrame, col: str) -> DataFrame:
     """Stage 1: per-Arrow-batch t-digests → (mean, weight) centroid rows."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -103,15 +103,13 @@ def sketch(df: DataFrame, col: str, delta: float = DELTA) -> DataFrame:
             if v.size == 0:
                 continue
             v.sort()
-            m, w = merge_centroids(v, np.ones(v.size), delta)
+            m, w = merge_centroids(v, np.ones(v.size))
             yield pd.DataFrame({"mean": m, "weight": w})
 
     return df.select(col).mapInPandas(batches, "mean double, weight double")
 
 
-def quantiles_from_centroids(
-    cent: DataFrame, qs: Sequence[float], delta: float = DELTA
-) -> DataFrame:
+def quantiles_from_centroids(cent: DataFrame, qs: Sequence[float]) -> DataFrame:
     """Final merge stage: (mean, weight) centroid rows — from any number
     of partial digests, batch or streaming — re-merged in ONE task
     (sorted by mean first, so the result is independent of arrival
@@ -120,9 +118,7 @@ def quantiles_from_centroids(
 
     def final(_key, pdf):
         pdf = pdf.sort_values(["mean", "weight"]).reset_index(drop=True)
-        m, w = merge_centroids(
-            pdf["mean"].to_numpy(), pdf["weight"].to_numpy(), delta
-        )
+        m, w = merge_centroids(pdf["mean"].to_numpy(), pdf["weight"].to_numpy())
         return pd.DataFrame(
             {"q": qs, "approx": [digest_quantile(m, w, q) for q in qs]}
         )
@@ -134,9 +130,7 @@ def quantiles_from_centroids(
     )
 
 
-def quantiles(
-    df: DataFrame, col: str, qs: Sequence[float], delta: float = DELTA
-) -> DataFrame:
+def quantiles(df: DataFrame, col: str, qs: Sequence[float]) -> DataFrame:
     """Two-stage t-digest → DataFrame (q double, approx double), one row
     per requested quantile."""
-    return quantiles_from_centroids(sketch(df, col, delta), qs, delta)
+    return quantiles_from_centroids(sketch(df, col), qs)

@@ -176,9 +176,9 @@ def edges_values_sql() -> str:
     return f"(VALUES {', '.join(rows)}) AS e(id_predio, nombre, x1, y1, x2, y2)"
 
 
-def crossings_sql(lon: str = "p.lon", lat: str = "p.lat") -> str:
+def crossings_sql() -> str:
     """Even-odd ray-cast as SQL over the ``e`` edge table: crossing count
-    of the rightward ray from (lon,lat), exactly mirroring the engine's
+    of the rightward ray from (p.lon, p.lat), exactly mirroring the engine's
     ``_edge_crosses`` float expression (same operand order → identical
     IEEE doubles in both engines). Group by polygon and test
     ``% 2 = 1`` for containment — valid for holes, MultiPolygons, and
@@ -186,9 +186,9 @@ def crossings_sql(lon: str = "p.lon", lat: str = "p.lat") -> str:
     non-straddling (possibly horizontal, y2=y1) edges.
     """
     return (
-        f"sum(CASE WHEN (e.y1 > {lat}) != (e.y2 > {lat}) THEN "
-        f"CASE WHEN {lon} < (e.x2 - e.x1) * ({lat} - e.y1) / (e.y2 - e.y1) + e.x1 "
-        f"THEN 1 ELSE 0 END ELSE 0 END)"
+        "sum(CASE WHEN (e.y1 > p.lat) != (e.y2 > p.lat) THEN "
+        "CASE WHEN p.lon < (e.x2 - e.x1) * (p.lat - e.y1) / (e.y2 - e.y1) + e.x1 "
+        "THEN 1 ELSE 0 END ELSE 0 END)"
     )
 
 

@@ -1100,20 +1100,20 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.exact_dedup(table(spark, sf_dir, "documents"))
 
 
-def _minhash_cte(num_hashes: int = 16, bands: int = 4, k: int = 3) -> str:
-    """Shared CTE prefix mirroring the explode+groupBy MinHash plan —
-    tokenize/shingle once, ONE md5 per shingle, per-seed affine-derived
-    mins (the min list and signature SQL of operators.dedup)."""
-    rpb = num_hashes // bands
-    mins, arr = D._minhash_sql(num_hashes, "list_value")
+def _minhash_cte() -> str:
+    """Shared CTE prefix mirroring the explode+groupBy MinHash plan at 16
+    hashes in 4 bands over 3-shingles — tokenize/shingle once, ONE md5
+    per shingle, per-seed affine-derived mins (the min list and signature
+    SQL of operators.dedup)."""
+    mins, arr = D._minhash_sql(16, "list_value")
     band_list = "[" + ", ".join(
         f"md5('{b}|' || array_to_string("
-        f"list_transform(sig[{b * rpb + 1}:{(b + 1) * rpb}], v -> v::VARCHAR), ','))"
-        for b in range(bands)
+        f"list_transform(sig[{b * 4 + 1}:{(b + 1) * 4}], v -> v::VARCHAR), ','))"
+        for b in range(4)
     ) + "]"
     return f"""
 WITH base AS (
-  SELECT doc_id, {H.shingles_sql('text', k)} AS shingles FROM documents),
+  SELECT doc_id, {H.shingles_sql('text', 3)} AS shingles FROM documents),
 ex AS (SELECT doc_id, unnest(shingles) AS sh FROM base),
 hsh AS (
   SELECT doc_id,

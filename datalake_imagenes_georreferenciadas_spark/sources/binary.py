@@ -48,12 +48,9 @@ IMAGE_META_SCHEMA = (
 )
 
 
-def read_binary_dir(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
+def read_binary_dir(spark: SparkSession, path: str) -> DataFrame:
     """S1: binaryFile scan of an object-store/filesystem directory."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
+    return spark.read.format("binaryFile").load(path)
 
 
 #: name prefix of every staging dir; the owner's pid follows it
@@ -263,10 +260,10 @@ def extract_image_meta(binary_df: DataFrame) -> DataFrame:
     )
 
 
-def content_key(df: DataFrame, content_col: str = "content") -> DataFrame:
+def content_key(df: DataFrame) -> DataFrame:
     """S12 fixed: TRUE content-addressed key ``md5(content)`` (the reference
     hashes ``os.urandom(32)`` — download_list_images.py:45, §2.11 bug 5)."""
-    return df.withColumn("content_key", F.md5(F.col(content_col)))
+    return df.withColumn("content_key", F.md5(F.col("content")))
 
 
 # ---- north-star multimodal kernels (resize / frame-sample) --------------
@@ -441,7 +438,7 @@ def _frame_rms_stub(chunk: str) -> int:
     return int(hashlib.md5(chunk.encode("utf-8")).hexdigest()[:8], 16) % 1_000_000
 
 
-def audio_features(df: DataFrame, frame_chars: int = 1000) -> DataFrame:
+def audio_features(df: DataFrame) -> DataFrame:
     """Audio feature extraction as an Arrow mapInPandas kernel — the
     third modality next to image resize and video frame-sampling: an
     opaque payload is windowed into fixed-size frames and each frame
@@ -449,8 +446,8 @@ def audio_features(df: DataFrame, frame_chars: int = 1000) -> DataFrame:
     contract (Arrow batch iteration, frame windowing, per-row feature
     reduction, typed output schema) is real; only the per-frame DSP body
     is the documented digest stub. Input is the ``text`` column standing
-    in for a PCM payload (frames = fixed CHARACTER windows so the DuckDB
-    oracle can reproduce the windowing exactly)."""
+    in for a PCM payload (frames = fixed 1000-CHARACTER windows so the
+    DuckDB oracle can reproduce the windowing exactly)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -464,10 +461,7 @@ def audio_features(df: DataFrame, frame_chars: int = 1000) -> DataFrame:
                     first.append(None)
                     total.append(None)
                     continue
-                chunks = [
-                    text[i : i + frame_chars]
-                    for i in range(0, len(text), frame_chars)
-                ] or [""]
+                chunks = [text[i : i + 1000] for i in range(0, len(text), 1000)] or [""]
                 rms = [_frame_rms_stub(c) for c in chunks]
                 nfr.append(len(rms))
                 first.append(rms[0])

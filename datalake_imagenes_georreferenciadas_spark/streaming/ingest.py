@@ -6,7 +6,7 @@ micro-batch file stream with no restart safety: a crash between upload and
 catalog insert double-processes files (its insert even swallows errors —
 mysql_process.py:59-60). The Spark shape:
 
-- ``readStream.format("parquet"|"binaryFile")`` with a checkpoint dir →
+- ``readStream.format("parquet")`` with a checkpoint dir →
   the source itself tracks which files are done (replaces download +
   ``del_files`` lifecycle, S4).
 - ``foreachBatch(fn)`` → ``batchId`` keys the run row (``ID_EJECUCION``
@@ -34,17 +34,15 @@ def start_file_ingest(
     store: CatalogStore,
     schema,
     to_catalog_rows: Callable[[DataFrame], DataFrame],
-    fmt: str = "parquet",
-    id_proceso: int = 0,
 ):
-    """Run a checkpointed file-source stream that lands each micro-batch in
-    the catalog with run + lineage rows.
+    """Run a checkpointed parquet file-source stream that lands each
+    micro-batch in the catalog with run + lineage rows (process id 0).
 
     ``to_catalog_rows`` maps the raw batch to CATALOG columns (minus id).
     Returns the StreamingQuery; callers use ``processAllAvailable()`` in
     tests / ``awaitTermination()`` in production.
     """
-    stream = spark.readStream.format(fmt).schema(schema).load(source_dir)
+    stream = spark.readStream.format("parquet").schema(schema).load(source_dir)
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -52,7 +50,7 @@ def start_file_ingest(
         # batchId IS the replay key: a crash between insert and checkpoint
         # commit re-delivers this batch, start_run finds the existing run
         # row for the batchId and reuses its id — runs stay exactly-once.
-        run_id = store.start_run(id_proceso, batch_id=batch_id)
+        run_id = store.start_run(0, batch_id=batch_id)
         # within-batch dedup first (two source files can map to the same
         # ruta_resultado), then the cross-batch guard: anti-join vs the
         # catalog, which on replay also drops everything the first

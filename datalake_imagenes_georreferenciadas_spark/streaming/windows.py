@@ -8,18 +8,16 @@ sink, asserting batch-by-batch results (SURVEY §5.2.5).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from ..operators.sessionize import tumbling_window_agg
 
 
 def tumbling_counts(
     events: DataFrame, minutes: int = 10, watermark_minutes: int = 30
 ) -> DataFrame:
     """Tumbling-window event counts with a watermark for late data."""
-    return (
-        events.withWatermark("ts", f"{watermark_minutes} minutes")
-        .groupBy(F.window("ts", f"{minutes} minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "sum_value")
+    return tumbling_window_agg(
+        events.withWatermark("ts", f"{watermark_minutes} minutes"), minutes
     )
 
 

@@ -284,11 +284,7 @@ def test_components_threshold_boundary_and_default(spark):
     n = len(edges)
     results = {}
     for threshold in (n, n - 1):  # <= n: driver union-find; below: distributed
-        # chain diameter = 40 > default max_iterations: raise it so the
-        # label-propagation path fully converges on this worst-case shape
-        out = components_from_edges(
-            edf, max_iterations=64, small_graph_threshold=threshold
-        )
+        out = components_from_edges(edf, small_graph_threshold=threshold)
         plan = out._jdf.queryExecution().analyzed().toString()
         if threshold >= n:
             # driver union-find output is an exact-sized LocalRelation
@@ -302,6 +298,22 @@ def test_components_threshold_boundary_and_default(spark):
             r["id"]: r["component"] for r in out.collect()
         }
     assert results[n] == results[n - 1] == expect
+
+
+def test_components_distributed_path_converges_on_a_long_chain(spark):
+    """The label-propagation path runs until the label sum stops falling,
+    however long that takes: a 41-node chain (diameter 40) through the
+    distributed path must label every node 0, as union-find does. A
+    fixed round cap of 20 left 20 of the 41 nodes in wrong components."""
+    from datalake_imagenes_georreferenciadas_spark.operators.dedup import components_from_edges
+
+    edges = [(i, i + 1) for i in range(40)]
+    edf = spark.createDataFrame(edges, "src long, dst long")
+    got = {
+        r["id"]: r["component"]
+        for r in components_from_edges(edf, small_graph_threshold=0).collect()
+    }
+    assert got == _py_components(edges)
 
 
 def test_containment_catches_subset_that_jaccard_misses(spark):
