@@ -37,21 +37,6 @@ def sessionize(events: DataFrame, gap_minutes: float = 30.0) -> DataFrame:
     ).drop("__new")
 
 
-def session_stats(events: DataFrame) -> DataFrame:
-    """Per-session aggregates (count, span, value sum) at a 30-minute gap
-    — the batch twin of ``session_window(ts, gap)``."""
-    s = sessionize(events)
-    return (
-        s.groupBy("user_id", "session_seq")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-    )
-
-
 def tumbling_window_agg(events: DataFrame, minutes: int = 10) -> DataFrame:
     """Tumbling-window counts/sums over ``events(ts, event_type, value)``;
     batch twin of ``F.window`` so the oracle can use ``time_bucket``, and

@@ -398,37 +398,21 @@ def rerank_crossencoder(
     cands: DataFrame, docs: DataFrame, query_tag: str = "ce"
 ) -> DataFrame:
     """Second-stage reranking of a ``cands(doc_id, ...)`` retrieval
-    candidate list against ``docs(doc_id, text)`` — the
-    cross-encoder step of a RAG pipeline, as Arrow ``mapInPandas``
-    plumbing.
+    candidate list against ``docs(doc_id, text)``: the cross-encoder step
+    of a RAG pipeline. Returns the candidate columns plus ``ce_score``.
 
     The candidate set (tiny: top-k from RRF/ANN) broadcasts onto the
-    document store to fetch texts, then a Pandas batch kernel scores each
-    (query, text) pair. THE KERNEL IS THE MODEL CALL SITE: a real
-    deployment runs the cross-encoder forward pass on the batch there
-    (exactly the shape model-serving wants — Arrow columnar in, scores
-    out); this container has no model runtime, so the body is a
-    deterministic md5 stub over the same bytes, which keeps the operator
-    oracle-verifiable end-to-end (DuckDB computes the identical digest).
-    Scores are 60-bit-md5 mod 1e6 INTEGERS — exact in Spark, DuckDB and
-    Python, no float-rounding drift across engines.
+    document store to fetch texts, then each (query, text) pair is
+    scored. The score is the model call site: a real deployment runs the
+    cross-encoder forward pass there, as an Arrow batch kernel over just
+    these k rows. The package ships no model runtime, so the score is
+    a deterministic md5 stub, a built-in expression that DuckDB computes
+    identically. Scores are 60-bit-md5 mod 1e6 INTEGERS (exact in both
+    engines, no float-rounding drift); NULL text scores NULL.
     """
     joined = docs.select(F.col("doc_id"), F.col("text")).join(
         F.broadcast(cands), "doc_id"
     )
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in cands.schema.fields
-    ) + ", ce_score long"
-    tag = query_tag
-
-    def score_batches(batches):
-        for pdf in batches:
-            scored = pdf.drop(columns=["text"])
-            scored["ce_score"] = [
-                int(hashlib.md5(f"{tag}:{t}".encode("utf-8")).hexdigest()[:15], 16)
-                % 1_000_000
-                for t in pdf["text"]
-            ]
-            yield scored
-
-    return joined.mapInPandas(score_batches, schema=out_schema)
+    digest = F.md5(F.concat(F.lit(f"{query_tag}:"), F.col("text")))
+    score = F.conv(F.substring(digest, 1, 15), 16, 10).cast("bigint") % 1_000_000
+    return joined.select(*cands.columns, score.alias("ce_score"))

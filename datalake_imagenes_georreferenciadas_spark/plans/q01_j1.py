@@ -830,17 +830,14 @@ def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio feature extraction (sources/binary.py audio_features) — the
-    third modality kernel beside image resize and video frame-sampling:
-    the payload is windowed into fixed 1000-char frames, each frame
-    reduced to a scalar energy, aggregated per document inside one Arrow
-    mapInPandas pass. The per-frame DSP body is the documented digest
-    stub (librosa/soundfile absent from the container); the windowing,
-    batch iteration and typed aggregation — the Spark-side contract — is
-    real and value-checked against the digest-twin oracle."""
+    third modality beside image resize and video frame-sampling: the
+    payload is windowed into fixed 1000-char frames, each frame reduced
+    to a scalar energy, aggregated per document, all in one projection
+    of built-in array expressions (no Python worker). The per-frame DSP
+    body is the documented digest stub; the windowing and typed
+    aggregation are value-checked against the digest-twin oracle."""
     from ..sources.binary import audio_features
 
-    # r20: spread() measured and REJECTED here (0.46 s unspread vs
-    # 0.62 s spread warm min-of-3) — see multimodal_frames.
     return audio_features(table(spark, sf_dir, "documents"))
 
 

@@ -419,16 +419,11 @@ FROM documents CROSS JOIN (SELECT unnest(generate_series(0, 4)) AS i)
 
 @register("multimodal_frames", _FRAMES_SQL)
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling kernel contract: one binary row → N frame rows via
-    Arrow-batched mapInPandas (decode stubbed on a digest chain the oracle
-    reproduces — schema, batching, and row expansion are all real)."""
+    """Frame-sampling contract: one binary row → N frame rows via one
+    explode of the frame-index sequence (decode stubbed on a digest chain
+    the oracle reproduces — schema and row expansion are real)."""
     from ..sources.binary import sample_frames
 
-    # r20: a spread() of the one-task scan was measured and REJECTED —
-    # the digest-stub kernel is cheaper than the repartition exchange at
-    # warm steady-state (isolated min-of-3: 0.43 s unspread vs 0.67 s
-    # spread); with a real decoder the balance flips and the §2.5
-    # rebalance becomes the right move.
     docs = table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("path"),
         F.col("text").cast("binary").alias("content"),
@@ -452,19 +447,15 @@ FROM (
 
 @register("multimodal_resize", _RESIZE_SQL)
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image-resize kernel contract (SURVEY §2.10 multimodal family):
-    binary column → Arrow-batched mapInPandas thumbnail kernel
-    (sources/binary.py resize_images — the deterministic digest-slice
-    thumbnail stub) →
-    per-image (width, height, byte length, content digest). The oracle
-    replays the stub's digest chain in hex-string space (byte slicing
-    aligns to hex pairs), so schema, batch plumbing, and binary-out
-    length semantics are externally checked end to end, like
+    """Image-resize contract (SURVEY §2.10 multimodal family): binary
+    column → digest-slice thumbnail (sources/binary.py resize_images, a
+    built-in expression) → per-image (width, height, byte length,
+    content digest). The oracle replays the stub's digest chain in
+    hex-string space (byte slicing aligns to hex pairs), so schema and
+    binary-out length semantics are externally checked end to end, like
     multimodal_frames."""
     from ..sources.binary import resize_images
 
-    # r20: spread() measured and REJECTED here (0.50 s unspread vs
-    # 0.68 s spread warm min-of-3) — see multimodal_frames.
     docs = table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("path"),
         F.col("text").cast("binary").alias("content"),

@@ -125,13 +125,13 @@ WHERE ce_rank <= 5
 
 @register("hybrid_rerank_topk", _HYBRID_RERANK_SQL)
 def hybrid_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full two-stage retrieval: RRF-fused top-10 candidates → Arrow
-    mapInPandas cross-encoder rerank → top-5. The rerank kernel is the
-    model call site (see operators.similarity.rerank_crossencoder):
-    candidates broadcast onto the doc store, texts batch through the
-    Pandas kernel, integer digest scores keep it oracle-exact. At fleet
-    scale the expensive model pass touches only k rows per query — the
-    first stage already reduced the corpus."""
+    """Full two-stage retrieval: RRF-fused top-10 candidates →
+    cross-encoder rerank → top-5. The rerank score is the model call
+    site (see operators.similarity.rerank_crossencoder): candidates
+    broadcast onto the doc store, and an integer digest stub scores each
+    text, oracle-exact. At fleet scale the expensive model pass touches
+    only k rows per query — the first stage already reduced the
+    corpus."""
     docs = table(spark, sf_dir, "documents")
     cands = hybrid_rrf_topk(spark, sf_dir)
     reranked = SIM.rerank_crossencoder(cands, docs, query_tag="ce")

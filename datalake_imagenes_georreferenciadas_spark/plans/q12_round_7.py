@@ -1455,15 +1455,13 @@ def multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     histograms, nothing else changes) compared per document, a cut
     declared when the jump clears a threshold — the shot-boundary pass
     that picks keyframes for captioning/embedding instead of wasting
-    compute on every frame. Frames come from the one-to-many Arrow
-    mapInPandas kernel (multimodal_frames' contract); the boundary
-    logic is one lag window per asset + a conditional aggregate. At
-    100 TB each asset's frames stay in one partition group — the
-    window never crosses assets."""
+    compute on every frame. Frames come from the one-to-many frame
+    explode (multimodal_frames' contract); the boundary logic is one lag
+    window per asset + a conditional aggregate. At 100 TB each asset's
+    frames stay in one partition group — the window never crosses
+    assets."""
     from ..sources.binary import sample_frames
 
-    # r20: spread() measured and REJECTED here (0.67 s unspread vs
-    # 0.90 s spread warm min-of-3) — see multimodal_frames.
     docs = table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("path"),
         F.col("text").cast("binary").alias("content"),

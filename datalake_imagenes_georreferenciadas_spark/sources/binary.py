@@ -6,14 +6,16 @@ structs, read via Spark's ``binaryFile`` source:
     spark.read.format("binaryFile").load(dir)
       → (path, modificationTime, length, content BINARY)
 
-Decode / feature-extract kernels run as Arrow-batched ``mapInPandas``
-generators. Image metadata has one decoder: the stdlib TIFF/EXIF walker
+Byte decoders run as Arrow-batched ``mapInPandas`` generators. Image
+metadata has one decoder: the stdlib TIFF/EXIF walker
 (``functions.tiff``) reads EXIF GPS from JPEGs and the geotransform and
 dimensions from GeoTIFFs. Bytes it cannot parse (the synthetic landing
 zone holds text, not images) get ``_decode_image_stub``, a deterministic
-fake derived from the content digest that the oracles replay. Pixel
-work (resize, frame sampling, audio features) has no decoder here and
-runs as digest stubs with the same Spark-side contract.
+fake derived from the content digest that the oracles replay. Archive
+extraction is the other byte kernel. Pixel work (resize, frame
+sampling, audio features) has no decoder here: its digest stubs are
+md5 chains, so they are built-in column expressions that stay in the
+JVM, the same SQL the oracles run.
 
 Reference parity:
 - S1 object-store list+fetch (download_list_images.py:17-25) → binaryFile
@@ -266,49 +268,24 @@ def content_key(df: DataFrame) -> DataFrame:
     return df.withColumn("content_key", F.md5(F.col("content")))
 
 
-# ---- north-star multimodal kernels (resize / frame-sample) --------------
+# ---- north-star multimodal stubs (resize / frame-sample / audio) -------
 #
-# No pixel or video decoder is in the environment; the *Spark-side
-# contract* — Arrow batch shape, output schema, partition-parallel map — is
-# the engine surface. Each stub derives deterministic output from the bytes
-# so tests can assert end-to-end through mapInPandas.
-
-RESIZE_SCHEMA = "path string, width int, height int, thumb binary"
-
-
-def _resize_stub(b: bytes, width: int, height: int) -> bytes:
-    """Deterministic fake thumbnail: digest-derived byte slice."""
-    t = hashlib.md5(bytes(b)).digest() * ((width * height) // 16 + 1)
-    return t[: width * height]
-
-
-def _resize_one(b: bytes, width: int, height: int) -> bytes | None:
-    """Digest-stub thumbnail. A NULL payload (undecoded/missing blob in a
-    dirty corpus) yields NULL out, the same null propagation the SQL
-    twin's md5(NULL) has."""
-    return None if b is None else _resize_stub(b, width, height)
+# The package depends on no pixel, video or audio decoder. Each stub derives
+# deterministic output from an md5 of the payload, written with Spark
+# built-ins (a real decoder would be a byte kernel like
+# extract_image_meta). A NULL payload gives NULL values, as md5(NULL) does.
 
 
 def resize_images(binary_df: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
-    """Image resize as an Arrow-batched mapInPandas kernel.
-
-    The thumbnail is the deterministic digest-slice stub; the plumbing
-    (batch iteration, binary-in/binary-out, schema) is the real contract
-    a pixel decoder would plug into.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["path"],
-                    "width": width,
-                    "height": height,
-                    "thumb": [_resize_one(b, width, height) for b in pdf["content"]],
-                }
-            )
-
-    return binary_df.select("path", "content").mapInPandas(batches, RESIZE_SCHEMA)
+    """Image resize: ``(path, content)`` in, ``(path, width, height,
+    thumb)`` out. The thumbnail is the digest-slice stub: ``md5(content)``
+    repeated and cut to ``width*height`` bytes, cut in hex space (two
+    hex digits per byte)."""
+    n = width * height
+    thumb = F.unhex(F.substring(F.repeat(F.md5("content"), n // 16 + 1), 1, 2 * n))
+    return binary_df.select(
+        "path", F.lit(width).alias("width"), F.lit(height).alias("height"), thumb.alias("thumb")
+    )
 
 
 EXTRACT_SCHEMA = (
@@ -394,87 +371,45 @@ def extract_archives(binary_df: DataFrame) -> DataFrame:
     return binary_df.select("path", "content").mapInPandas(batches, EXTRACT_SCHEMA)
 
 
-FRAME_SCHEMA = "path string, frame_idx int, frame_key string"
-
-
 def sample_frames(binary_df: DataFrame, every_n: int = 10, max_frames: int = 5) -> DataFrame:
-    """Video frame sampling as a one-to-many mapInPandas kernel.
-
-    STUB decode: real body seeks an ffmpeg/PyAV demuxer; here each "frame"
-    is keyed by a digest chain so the row-expansion contract (one binary →
-    N frame rows) is exercised and deterministic.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            paths, idxs, keys = [], [], []
-            for p, b in zip(pdf["path"], pdf["content"]):
-                # NULL payload → frames with NULL keys (null-in-null-out,
-                # matching the oracle's md5(NULL) = NULL), row fan-out kept
-                d = None if b is None else hashlib.md5(bytes(b)).hexdigest()
-                for i in range(max_frames):
-                    paths.append(p)
-                    idxs.append(i * every_n)
-                    keys.append(
-                        None
-                        if d is None
-                        else hashlib.md5(f"{d}:{i * every_n}".encode()).hexdigest()
-                    )
-            yield pd.DataFrame({"path": paths, "frame_idx": idxs, "frame_key": keys})
-
-    return binary_df.select("path", "content").mapInPandas(batches, FRAME_SCHEMA)
-
-
-AUDIO_FEATURES_SCHEMA = (
-    "doc_id long, n_frames int, first_rms long, total_rms long"
-)
-
-
-def _frame_rms_stub(chunk: str) -> int:
-    """Deterministic per-frame 'RMS' proxy — STAND-IN for a real audio
-    decode (librosa/soundfile aren't in this container): the first 8 hex
-    digits of the frame digest as an integer energy. Clearly fake
-    values; the real body would decode PCM and compute actual RMS."""
-    return int(hashlib.md5(chunk.encode("utf-8")).hexdigest()[:8], 16) % 1_000_000
+    """Video frame sampling: one ``(path, content)`` row becomes
+    ``max_frames`` rows ``(path, frame_idx, frame_key)``, frame_idx
+    stepping by ``every_n``. Decode stub: each frame is keyed by the
+    digest chain ``md5(md5(content) || ':' || frame_idx)`` (a real body
+    seeks a demuxer); a NULL payload keeps its rows with a NULL key."""
+    frames = binary_df.select(
+        "path",
+        F.md5("content").alias("digest"),
+        F.explode(
+            F.sequence(F.lit(0), F.lit((max_frames - 1) * every_n), F.lit(every_n))
+        ).alias("frame_idx"),
+    )
+    key = F.md5(F.concat("digest", F.lit(":"), F.col("frame_idx").cast("string")))
+    return frames.select("path", "frame_idx", key.alias("frame_key"))
 
 
 def audio_features(df: DataFrame) -> DataFrame:
-    """Audio feature extraction as an Arrow mapInPandas kernel — the
-    third modality next to image resize and video frame-sampling: an
-    opaque payload is windowed into fixed-size frames and each frame
-    yields a scalar feature, aggregated per document. The Spark-side
-    contract (Arrow batch iteration, frame windowing, per-row feature
-    reduction, typed output schema) is real; only the per-frame DSP body
-    is the documented digest stub. Input is the ``text`` column standing
-    in for a PCM payload (frames = fixed 1000-CHARACTER windows so the
-    DuckDB oracle can reproduce the windowing exactly)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, nfr, first, total = [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                # pd.isna, not `is None`: Arrow hands a null int64 to
-                # pandas as float64 NaN
-                ids.append(None if pd.isna(doc_id) else int(doc_id))
-                if text is None:  # undecodable payload → NULL features
-                    nfr.append(None)
-                    first.append(None)
-                    total.append(None)
-                    continue
-                chunks = [text[i : i + 1000] for i in range(0, len(text), 1000)] or [""]
-                rms = [_frame_rms_stub(c) for c in chunks]
-                nfr.append(len(rms))
-                first.append(rms[0])
-                total.append(sum(rms))
-            # nullable pandas dtypes: plain int lists with None infer
-            # float64 and NaN→int casts throw at the Arrow boundary
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(ids, dtype="Int64"),
-                    "n_frames": pd.array(nfr, dtype="Int32"),
-                    "first_rms": pd.array(first, dtype="Int64"),
-                    "total_rms": pd.array(total, dtype="Int64"),
-                }
-            )
-
-    return df.select("doc_id", "text").mapInPandas(batches, AUDIO_FEATURES_SCHEMA)
+    """Audio features, the third modality next to image resize and frame
+    sampling: ``(doc_id, text)`` in, ``(doc_id, n_frames, first_rms,
+    total_rms)`` out. The ``text`` column stands in for a PCM payload,
+    cut into fixed 1000-CHARACTER frames (one empty frame for empty
+    text), and each frame's "RMS" is the stub ``first 8 hex digits of
+    md5(frame) mod 1e6`` (a real body decodes PCM with an audio library
+    the package does not depend on). NULL text gives NULL features."""
+    length = F.length("text")
+    n = F.when(length == 0, 1).otherwise(F.ceil(length / 1000)).cast("int")
+    rms = F.transform(
+        F.sequence(F.lit(0), n - 1),
+        lambda i: F.conv(
+            F.substring(F.md5(F.col("text").substr(i * 1000 + 1, F.lit(1000))), 1, 8), 16, 10
+        ).cast("bigint")
+        % 1_000_000,
+    )
+    # n_frames is n itself, not size(rms): size(NULL) is -1 outside ANSI mode
+    feats = df.select("doc_id", n.alias("n_frames"), rms.alias("rms"))
+    return feats.select(
+        "doc_id",
+        "n_frames",
+        F.col("rms")[0].alias("first_rms"),
+        F.aggregate("rms", F.lit(0).cast("bigint"), lambda acc, x: acc + x).alias("total_rms"),
+    )

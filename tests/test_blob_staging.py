@@ -167,3 +167,17 @@ def test_plans_make_no_unowned_fixtures():
                 if isinstance(n.value, ast.Name) and n.value.id in dicts:
                     bad.append(f"{where} module-level cache {n.value.id}")
     assert bad == []
+
+
+def test_tests_make_no_unowned_temp_dirs():
+    """Tests take their dirs from pytest's ``tmp_path``, which pytest
+    cleans up; a ``tempfile.mkdtemp`` dir outlives every run."""
+    bad = []
+    for path in sorted((ROOT / "tests").rglob("*.py")):
+        for n in ast.walk(ast.parse(path.read_text())):
+            if isinstance(n, ast.Call):
+                f = n.func
+                called = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+                if called == "mkdtemp":
+                    bad.append(f"{path.name}:{n.lineno}")
+    assert bad == []

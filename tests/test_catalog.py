@@ -3,7 +3,6 @@
 
 from __future__ import annotations
 
-import tempfile
 import time
 import uuid
 
@@ -39,8 +38,8 @@ def _rows(spark, n=4):
     ).withColumn("fecha", F.current_timestamp())
 
 
-def test_run_ids_monotonic(spark):
-    store = CatalogStore(spark, tempfile.mkdtemp())
+def test_run_ids_monotonic(spark, tmp_path):
+    store = CatalogStore(spark, str(tmp_path))
     assert store.start_run(PROCESO_INGEST) == 1
     assert store.start_run(PROCESO_INGEST) == 2
     assert store.runs().count() == 2
@@ -67,13 +66,13 @@ def _jobs_in_group(spark, group, fn):
     return out, seen
 
 
-def test_start_run_replay_and_next_id_from_one_aggregate(spark):
+def test_start_run_replay_and_next_id_from_one_aggregate(spark, tmp_path):
     """A replayed ``batch_id`` reuses its run id, a new batch gets
     max+1, and each call answers both questions with ONE aggregate over
     the runs table (a new batch adds only the append write of its run
     row). One aggregate's job count is measured, not assumed: AQE runs
     its shuffle-map stage as a job of its own."""
-    store = CatalogStore(spark, tempfile.mkdtemp())
+    store = CatalogStore(spark, str(tmp_path))
     assert store.start_run(PROCESO_INGEST, batch_id=7) == 1
     assert store.start_run(PROCESO_INGEST, batch_id=8) == 2
     tag = uuid.uuid4().hex
@@ -94,8 +93,8 @@ def test_start_run_replay_and_next_id_from_one_aggregate(spark):
     ) == [(1, 7), (2, 8), (3, 9), (4, None)]
 
 
-def test_insert_allocates_ids_and_lineage(spark):
-    store = CatalogStore(spark, tempfile.mkdtemp())
+def test_insert_allocates_ids_and_lineage(spark, tmp_path):
+    store = CatalogStore(spark, str(tmp_path))
     run = store.start_run(PROCESO_INGEST)
     inserted = store.insert_catalog(_rows(spark), run)
     ids = sorted(r["id"] for r in inserted.select("id").collect())
@@ -106,8 +105,8 @@ def test_insert_allocates_ids_and_lineage(spark):
     assert store.last_id() == 4
 
 
-def test_second_insert_continues_ids(spark):
-    store = CatalogStore(spark, tempfile.mkdtemp())
+def test_second_insert_continues_ids(spark, tmp_path):
+    store = CatalogStore(spark, str(tmp_path))
     r1 = store.start_run(PROCESO_INGEST)
     store.insert_catalog(_rows(spark, 3), r1)
     r2 = store.start_run(PROCESO_INGEST)
@@ -116,8 +115,8 @@ def test_second_insert_continues_ids(spark):
     assert store.catalog().count() == 5
 
 
-def test_update_processed_img_merge(spark):
-    store = CatalogStore(spark, tempfile.mkdtemp())
+def test_update_processed_img_merge(spark, tmp_path):
+    store = CatalogStore(spark, str(tmp_path))
     run = store.start_run(PROCESO_INGEST)
     store.insert_catalog(_rows(spark), run)
     store.update_processed_img(10, [1, 3])
@@ -127,10 +126,10 @@ def test_update_processed_img_merge(spark):
     assert store.catalog().count() == 4
 
 
-def test_update_processed_img_repeated_id_keeps_row_set(spark):
+def test_update_processed_img_repeated_id_keeps_row_set(spark, tmp_path):
     """A repeated id in the MERGE list flips its row once; it must not
     duplicate the matched row in the new snapshot."""
-    store = CatalogStore(spark, tempfile.mkdtemp())
+    store = CatalogStore(spark, str(tmp_path))
     run = store.start_run(PROCESO_INGEST)
     store.insert_catalog(_rows(spark), run)
     store.update_processed_img(10, [2, 2, 2, 3])
@@ -139,10 +138,10 @@ def test_update_processed_img_repeated_id_keeps_row_set(spark):
     assert sorted(ids) == [1, 2, 3, 4]
 
 
-def test_update_is_versioned_snapshot(spark):
+def test_update_is_versioned_snapshot(spark, tmp_path):
     """Copy-on-write MERGE: the update lands in a NEW snapshot; the old
     version stays readable (time travel) and the pointer names the new."""
-    store = CatalogStore(spark, tempfile.mkdtemp())
+    store = CatalogStore(spark, str(tmp_path))
     run = store.start_run(PROCESO_INGEST)
     store.insert_catalog(_rows(spark), run)
     assert store.current_version() == 0
@@ -180,14 +179,14 @@ def test_expire_snapshots_keeps_the_newest(spark, tmp_path):
     assert store.catalog_versions() == [3]
 
 
-def test_insert_id_plan_has_no_single_partition_exchange(spark):
+def test_insert_id_plan_has_no_single_partition_exchange(spark, tmp_path):
     """VERDICT r1 #3 + r4 #3: id allocation must not funnel the batch
     through one task, and (r4) must not collect offsets to the driver.
     The batch path may only shuffle hash-partitioned on the group key;
     the one allowed SinglePartition exchange is the offsets running-sum
     over the per-group AGGREGATE (one row per distinct indice), which
     arrives back via BroadcastExchange."""
-    store = CatalogStore(spark, tempfile.mkdtemp())
+    store = CatalogStore(spark, str(tmp_path))
     plan = store._with_ids(_rows(spark), 0)._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
@@ -205,7 +204,7 @@ def test_insert_id_plan_has_no_single_partition_exchange(spark):
     assert "BroadcastExchange" in plan
 
 
-def test_insert_ids_match_global_row_number_order(spark):
+def test_insert_ids_match_global_row_number_order(spark, tmp_path):
     """Partition-offset allocation must equal the single global
     row_number over (indice, ruta_resultado) — the oracle's definition."""
     rows = [
@@ -214,7 +213,7 @@ def test_insert_ids_match_global_row_number_order(spark):
         ("C_ix", "lake/c/0.jpg")
     ]
     df = spark.createDataFrame(rows, "indice string, ruta_resultado string")
-    store = CatalogStore(spark, tempfile.mkdtemp())
+    store = CatalogStore(spark, str(tmp_path))
     got = {
         (r["indice"], r["ruta_resultado"]): r["id"]
         for r in store._with_ids(df, 100).collect()
@@ -224,8 +223,8 @@ def test_insert_ids_match_global_row_number_order(spark):
         assert got[key] == 100 + rank
 
 
-def test_filtered_paths_flagship_query(spark):
-    store = CatalogStore(spark, tempfile.mkdtemp())
+def test_filtered_paths_flagship_query(spark, tmp_path):
+    store = CatalogStore(spark, str(tmp_path))
     run = store.start_run(PROCESO_INGEST)
     store.insert_catalog(_rows(spark), run)
     out = store.filtered_paths(PROCESO_INGEST, [TIPO_IMG_RAW_JPG], "C0_S_X_A").collect()

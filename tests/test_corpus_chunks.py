@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
 import pytest
 
@@ -21,8 +20,8 @@ from datalake_imagenes_georreferenciadas_spark.plans.q09_north_star import dedup
 BOILER = "one two three four"  # exactly one 4-token chunk wide
 
 
-def _write_docs(spark, rows):
-    d = os.path.join(tempfile.mkdtemp(), "sfx")
+def _write_docs(spark, tmp_path, rows):
+    d = str(tmp_path / "sfx")
     os.makedirs(d, exist_ok=True)
     spark.createDataFrame(rows, "doc_id long, text string").write.mode(
         "overwrite"
@@ -30,7 +29,7 @@ def _write_docs(spark, rows):
     return d
 
 
-def test_planted_boilerplate_removed_everywhere(spark):
+def test_planted_boilerplate_removed_everywhere(spark, tmp_path):
     # docs 1 and 2 share the boilerplate chunk at different positions;
     # doc 3 is entirely unique; doc 4 is boilerplate ONLY
     rows = [
@@ -39,7 +38,7 @@ def test_planted_boilerplate_removed_everywhere(spark):
         (3, "iota kappa lam mu nu xi omicron pi"),
         (4, BOILER),
     ]
-    sf = _write_docs(spark, rows)
+    sf = _write_docs(spark, tmp_path, rows)
     got = {r["doc_id"]: r for r in dedup_corpus_chunks(spark, sf).collect()}
 
     assert got[1]["n_chunks"] == 2 and got[1]["n_kept"] == 1
@@ -57,14 +56,14 @@ def test_planted_boilerplate_removed_everywhere(spark):
     assert got[4]["clean_md5"] == md5("")
 
 
-def test_order_preserved_across_multiple_kept_chunks(spark):
+def test_order_preserved_across_multiple_kept_chunks(spark, tmp_path):
     # two kept chunks straddling a removed one: reassembly must keep
     # original order, not hash/agg order
     rows = [
         (1, "a1 a2 a3 a4 " + BOILER + " z1 z2 z3 z4"),
         (2, BOILER + " unrelated words here now"),
     ]
-    sf = _write_docs(spark, rows)
+    sf = _write_docs(spark, tmp_path, rows)
     got = {r["doc_id"]: r for r in dedup_corpus_chunks(spark, sf).collect()}
     md5 = lambda s: hashlib.md5(s.encode()).hexdigest()
     assert got[1]["n_chunks"] == 3 and got[1]["n_kept"] == 2

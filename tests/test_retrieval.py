@@ -13,20 +13,39 @@ from datalake_imagenes_georreferenciadas_spark.operators.similarity import (
 )
 
 
+def _ce_reference(tag, text):
+    """Python cross-encoder stub: first 15 md5 hex digits of
+    ``<tag>:<text>`` mod 1e6; NULL text scores NULL."""
+    if text is None:
+        return None
+    return int(hashlib.md5(f"{tag}:{text}".encode("utf-8")).hexdigest()[:15], 16) % 1_000_000
+
+
 def test_rerank_scores_match_reference_digest(spark):
-    """The mapInPandas kernel must reproduce the documented md5 stub
-    bit-for-bit (the same bytes a DuckDB oracle hashes)."""
-    docs = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma delta")], ["doc_id", "text"]
+    """The rerank score must reproduce the documented md5 stub
+    bit-for-bit (the same bytes a DuckDB oracle hashes), on edge texts
+    too: empty, 1000 and 1001 characters, multibyte, and NULL, which
+    scores NULL as the oracle's ``md5('ce:' || NULL)`` does (not the
+    score of the string 'ce:None')."""
+    texts = (
+        (1, "alpha beta"),
+        (2, "gamma delta"),
+        (3, ""),
+        (4, "a" * 1000),
+        (5, "b" * 1001),
+        (6, "ñ日本\U0001F600" * 300),
+        (7, None),
     )
-    cands = spark.createDataFrame([(1, 0.5), (2, 0.4)], ["doc_id", "rrf_score"])
-    out = {
-        r["doc_id"]: r["ce_score"]
-        for r in rerank_crossencoder(cands, docs, query_tag="ce").collect()
-    }
-    for doc_id, text in ((1, "alpha beta"), (2, "gamma delta")):
-        expect = int(hashlib.md5(f"ce:{text}".encode()).hexdigest()[:15], 16) % 1_000_000
-        assert out[doc_id] == expect
+    docs = spark.createDataFrame(list(texts), "doc_id long, text string")
+    cands = spark.createDataFrame(
+        [(i, 0.5) for i, _ in texts], "doc_id long, rrf_score double"
+    )
+    for tag in ("ce", "q7"):
+        out = {
+            r["doc_id"]: r["ce_score"]
+            for r in rerank_crossencoder(cands, docs, query_tag=tag).collect()
+        }
+        assert out == {i: _ce_reference(tag, t) for i, t in texts}
 
 
 def test_rerank_only_scores_candidates(spark):

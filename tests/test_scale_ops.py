@@ -4,6 +4,7 @@ scale-path operators (SURVEY §4.2/§4.3, north star)."""
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,6 +18,7 @@ from datalake_imagenes_georreferenciadas_spark.operators.skew import (
 from datalake_imagenes_georreferenciadas_spark.sources.binary import (
     _decode_image,
     _decode_image_stub,
+    audio_features,
     resize_images,
     sample_frames,
 )
@@ -77,6 +79,57 @@ def test_ivf_topk_self_in_results(spark):
     assert top[0]["vec_id"] == 9 and top[0]["cos"] == 1.0
 
 
+# Edge payloads: NULL, empty, a 1000- and a 1001-character text, and
+# multibyte text (2-, 3- and 4-byte UTF-8), so a frame cut by bytes
+# instead of characters would show.
+_EDGE_TEXTS = (
+    None,
+    "",
+    "a" * 1000,
+    "b" * 1001,
+    "ñ" * 1500 + "日本",
+    "x" * 999 + "é" + "y" * 1000,
+    "\U0001F600" * 1001,
+)
+
+
+def _edge_payloads(spark):
+    rows = [
+        (f"{i}.bin", None if t is None else bytearray(t.encode("utf-8")))
+        for i, t in enumerate(_EDGE_TEXTS)
+    ]
+    return spark.createDataFrame(rows, "path string, content binary"), dict(rows)
+
+
+def _resize_reference(b, width, height):
+    """Python digest-slice thumbnail: md5(content) repeated, cut to
+    width*height bytes; NULL in, NULL out."""
+    if b is None:
+        return None
+    t = hashlib.md5(bytes(b)).digest() * ((width * height) // 16 + 1)
+    return t[: width * height]
+
+
+def _frames_reference(b, every_n, max_frames):
+    """Python frame keys: ``max_frames`` (frame_idx, key) pairs, keys
+    NULL for a NULL payload."""
+    d = None if b is None else hashlib.md5(bytes(b)).hexdigest()
+    return [
+        (i * every_n, None if d is None else hashlib.md5(f"{d}:{i * every_n}".encode()).hexdigest())
+        for i in range(max_frames)
+    ]
+
+
+def _audio_reference(text):
+    """Python audio features: 1000-character frames (one empty frame for
+    empty text), each frame's first 8 md5 hex digits mod 1e6."""
+    if text is None:
+        return (None, None, None)
+    chunks = [text[i : i + 1000] for i in range(0, len(text), 1000)] or [""]
+    rms = [int(hashlib.md5(c.encode("utf-8")).hexdigest()[:8], 16) % 1_000_000 for c in chunks]
+    return (len(rms), rms[0], sum(rms))
+
+
 def test_resize_images_contract(spark):
     df = spark.createDataFrame(
         [("a.jpg", bytearray(b"imgbytes-a")), ("b.jpg", bytearray(b"imgbytes-b"))],
@@ -89,6 +142,15 @@ def test_resize_images_contract(spark):
     # deterministic: same content → same thumb
     again = resize_images(df, width=8, height=4).collect()
     assert {bytes(r["thumb"]) for r in out} == {bytes(r["thumb"]) for r in again}
+    # edge payloads match the Python reference, also for a size that is
+    # not a multiple of the 16-byte digest
+    edges, payloads = _edge_payloads(spark)
+    for w, h in ((8, 4), (5, 3)):
+        got = {
+            r["path"]: (r["width"], r["height"], None if r["thumb"] is None else bytes(r["thumb"]))
+            for r in resize_images(edges, width=w, height=h).collect()
+        }
+        assert got == {p: (w, h, _resize_reference(b, w, h)) for p, b in payloads.items()}
 
 
 def test_sample_frames_row_expansion(spark):
@@ -97,6 +159,26 @@ def test_sample_frames_row_expansion(spark):
     assert len(out) == 5
     assert sorted(r["frame_idx"] for r in out) == [0, 10, 20, 30, 40]
     assert len({r["frame_key"] for r in out}) == 5  # distinct per frame
+    # edge payloads match the Python reference; a NULL payload keeps its
+    # max_frames rows, with NULL keys
+    edges, payloads = _edge_payloads(spark)
+    got: dict = {}
+    for r in sample_frames(edges, every_n=10, max_frames=5).collect():
+        got.setdefault(r["path"], []).append((r["frame_idx"], r["frame_key"]))
+    assert {p: sorted(v, key=lambda f: f[0]) for p, v in got.items()} == {
+        p: _frames_reference(b, 10, 5) for p, b in payloads.items()
+    }
+
+
+def test_audio_features_match_reference(spark):
+    rows = list(enumerate(_EDGE_TEXTS))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r["doc_id"]: (r["n_frames"], r["first_rms"], r["total_rms"])
+        for r in audio_features(df).collect()
+    }
+    assert got == {i: _audio_reference(t) for i, t in rows}
+    assert got[3][0] == 2 and got[2][0] == 1  # 1001 chars → 2 frames
 
 
 def test_dedup_within_watermark_stream(spark, tmp_path):

@@ -4,7 +4,6 @@ bookkeeping (SURVEY §2.9/M4)."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -32,10 +31,9 @@ def _to_rows(batch):
     )
 
 
-def test_file_ingest_lands_catalog_and_lineage(spark):
-    src = tempfile.mkdtemp(prefix="ingest_src_")
-    ckpt = tempfile.mkdtemp(prefix="ingest_ckpt_")
-    store = CatalogStore(spark, tempfile.mkdtemp(prefix="ingest_cat_"))
+def test_file_ingest_lands_catalog_and_lineage(spark, tmp_path):
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    store = CatalogStore(spark, str(tmp_path / "cat"))
 
     batch1 = spark.createDataFrame(
         [(1, "C1", "lake/C1/1.jpg"), (2, "C2", "lake/C2/2.jpg")], SRC_SCHEMA

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import datetime
 import os
-import tempfile
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -27,10 +26,10 @@ def _write_events(path, ts_array):
     )
 
 
-def test_events_ts_normalized_from_us_ntz(spark):
+def test_events_ts_normalized_from_us_ntz(spark, tmp_path):
     """µs timestamps (isAdjustedToUTC=false → TIMESTAMP_NTZ in Spark 4)
     must read back as session-zone TIMESTAMP with identical instants."""
-    d = tempfile.mkdtemp()
+    d = str(tmp_path)
     t0 = datetime.datetime(2024, 1, 1, 12, 30, 45)
     _write_events(
         os.path.join(d, "events.parquet"),
@@ -44,9 +43,9 @@ def test_events_ts_normalized_from_us_ntz(spark):
     assert df.select(F.col("ts").cast("double")).count() == 2
 
 
-def test_events_ts_normalized_from_int64_nanos(spark):
+def test_events_ts_normalized_from_int64_nanos(spark, tmp_path):
     """The legacy INT64-nanos encoding still converts via integer div."""
-    d = tempfile.mkdtemp()
+    d = str(tmp_path)
     base_ns = 1704112245_000_000_000  # 2024-01-01T12:30:45Z
     _write_events(
         os.path.join(d, "events.parquet"),
@@ -59,8 +58,8 @@ def test_events_ts_normalized_from_int64_nanos(spark):
     assert got[0] == datetime.datetime(2024, 1, 1, 12, 30, 45)
 
 
-def test_spread_rebalances_single_split_and_preserves_rows(spark):
-    d = tempfile.mkdtemp()
+def test_spread_rebalances_single_split_and_preserves_rows(spark, tmp_path):
+    d = str(tmp_path)
     pq.write_table(
         pa.table({"doc_id": pa.array(range(100), pa.int64())}),
         os.path.join(d, "docs.parquet"),

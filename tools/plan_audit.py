@@ -127,9 +127,10 @@ AUDITS: dict[str, tuple[int, int, int, dict[str, int], list[str]]] = {
     # side exploded to its 3x3 cells), never an all-pairs cartesian/BNLJ
     "geo_cluster_eps": (5, 0, 0, {"documents": 1}, ["!CartesianProduct", "!BroadcastNestedLoopJoin"]),
     # two-stage retrieval: candidates broadcast onto the doc store, the
-    # Arrow rerank kernel above that join, top-5 via TakeOrdered; the RRF
-    # full-outer rank join is an SMJ (no broadcast full-outer) of ≤100 rows
-    "hybrid_rerank_topk": (7, 1, 1, {"documents": 2, "embeddings": 2}, ["MapInPandas", "BroadcastHashJoin", "TakeOrderedAndProject", "!CartesianProduct"]),
+    # digest-stub rerank score a projection above that join (no Python
+    # worker), top-5 via TakeOrdered; the RRF full-outer rank join is an
+    # SMJ (no broadcast full-outer) of ≤100 rows
+    "hybrid_rerank_topk": (7, 1, 1, {"documents": 2, "embeddings": 2}, ["!MapInPandas", "BroadcastHashJoin", "TakeOrderedAndProject", "!CartesianProduct"]),
     # passage dedup: ONE corpus pass for totals+kept+reassembly (the hot
     # flag rides a single equi-join), never a cartesian
     "dedup_corpus_chunks": (6, 3, 2, {"documents": 2}, ["BroadcastHashJoin", "ObjectHashAggregate", "!CartesianProduct", "!SortMergeJoin"]),
@@ -186,8 +187,9 @@ AUDITS: dict[str, tuple[int, int, int, dict[str, int], list[str]]] = {
     # of the query side with WindowGroupLimit top-k; the compare joins two
     # bounded 5-rows-per-query sets
     "ann_sq8_recall": (16, 8, 1, {"embeddings": 5}, ["BroadcastNestedLoopJoin", "WindowGroupLimit", "!CartesianProduct", "!BatchEvalPython", "!ArrowEvalPython"]),
-    # audio feature kernel: Arrow mapInPandas off the binary scan
-    "multimodal_audio_features": (2, 0, 0, {"documents": 1}, ["MapInPandas", "!CartesianProduct", "!SortMergeJoin"]),
+    # audio features: one projection of built-in array expressions off
+    # the scan, no Python worker
+    "multimodal_audio_features": (2, 0, 0, {"documents": 1}, ["!MapInPandas", "!CartesianProduct", "!SortMergeJoin"]),
     # streaming t-digest monitor (post-stream check plan): centroid
     # merge in one FlatMapGroupsInPandas task, tiny sides broadcast
     "streaming_tdigest": (14, 3, 1, {"events": 2}, ["FlatMapGroupsInPandas", "BroadcastNestedLoopJoin", "!CartesianProduct", "!SortMergeJoin"]),
@@ -610,13 +612,15 @@ AUDITS: dict[str, tuple[int, int, int, dict[str, int], list[str]]] = {
     "a4_unpivot": (2, 0, 0, {"lineitem": 1}, ["Expand", "!CartesianProduct"]),
     "f19_url_parse": (2, 0, 0, {"documents": 1}, ["!CartesianProduct"]),
     "f20_ip_cidr": (5, 2, 0, {"events": 1}, ["HashAggregate", "!SortMergeJoin", "!CartesianProduct"]),
-    # multimodal decode kernels: the MapInPandas Arrow batch IS the
-    # design (binary columns have no JVM expression surface) — zero
-    # shuffles around the kernel; scene cuts adds one window exchange
+    # image metadata decode: the MapInPandas Arrow batch IS the design
+    # (the EXIF/GeoTIFF byte walk has no JVM expression surface). The
+    # digest stubs (resize, frames) are built-in expressions with no
+    # Python worker; the frame fan-out is the one Generate. Zero shuffles
+    # around them; scene cuts adds one window exchange
     "multimodal_meta": (3, 0, 0, {}, ["MapInPandas", "!CartesianProduct"]),
-    "multimodal_resize": (2, 0, 0, {"documents": 1}, ["MapInPandas", "!CartesianProduct"]),
-    "multimodal_frames": (2, 0, 0, {"documents": 1}, ["MapInPandas", "!CartesianProduct"]),
-    "multimodal_scene_cuts": (3, 1, 0, {"documents": 1}, ["MapInPandas", "Window", "hashpartitioning", "!CartesianProduct"]),
+    "multimodal_resize": (2, 0, 0, {"documents": 1}, ["!MapInPandas", "!CartesianProduct"]),
+    "multimodal_frames": (2, 0, 1, {"documents": 1}, ["!MapInPandas", "!CartesianProduct"]),
+    "multimodal_scene_cuts": (3, 1, 1, {"documents": 1}, ["!MapInPandas", "Window", "hashpartitioning", "!CartesianProduct"]),
     # DQ checks: per-shard aggregates reduce before the scalar compare
     # (their SinglePartition sits above the aggregate — sweep-shielded)
     "dq_freshness_sla": (8, 4, 0, {"events": 2}, ["HashAggregate", "!SortMergeJoin", "!CartesianProduct"]),
@@ -804,13 +808,9 @@ PY_NODES = (
 # pyspark.sql.functions aggregate could compute (r09: g1_trend_fit's
 # grouped least-squares kernel took 3.6 s warm; built-in regr_slope 0.31 s).
 ALLOWED_PYTHON = {
-    # binary decode kernels: image/audio/video bytes have no JVM
-    # expression surface; Arrow batches over mapInPandas IS the design
+    # binary decode kernels: image bytes have no JVM expression
+    # surface; Arrow batches over mapInPandas IS the design
     "multimodal_meta": "EXIF/GeoTIFF byte-walk decode kernel",
-    "multimodal_resize": "image resize kernel over binary column",
-    "multimodal_frames": "frame-sample kernel over binary column",
-    "multimodal_scene_cuts": "frame-delta scene-cut kernel",
-    "multimodal_audio_features": "PCM feature-extract kernel",
     "s7_exif_gps_scan": "stdlib EXIF byte-level walker",
     "s8_geotiff_meta_scan": "stdlib GeoTIFF tag walker",
     "pipeline_geo_ingest": "composite includes the EXIF decode stage",
@@ -820,9 +820,8 @@ ALLOWED_PYTHON = {
     # sketches with no closed form: merge logic is the operator
     "a19_tdigest_quantile": "t-digest centroid merge (no closed form)",
     "streaming_tdigest": "t-digest merge inside foreachBatch",
-    # custom merge/rerank kernels over grouped/cogrouped frames
+    # custom merge kernel over cogrouped frames
     "g2_cogroup_merge": "cogrouped reconciliation kernel",
-    "hybrid_rerank_topk": "cross-encoder-shaped rerank over k candidates",
     # deliberate API-surface twins (each has a JVM-side counterpart
     # benched beside it: f17_cosine_topk / the SQL UDTF-free segmenters)
     "f17_cosine_pandas": "Pandas-UDF twin of f17_cosine_topk (kept for the JVM-vs-Arrow comparison)",
