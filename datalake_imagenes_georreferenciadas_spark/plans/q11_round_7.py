@@ -663,7 +663,10 @@ _AHASH_BLOCKS = 64
 _AHASH_MAX_HAMMING = 6
 
 
-def _ahash_duck() -> str:
+def _ahash_duck(band_ctes: str, max_hamming: int) -> str:
+    """The aHash pair oracle: the hash index ``h``, then ``band_ctes``
+    (CTEs ending in ``cand(a_id, b_id)``), then the exact Hamming
+    verify at ``max_hamming``."""
     block = (
         "('0x' || substring(md5(substring(t, "
         f"1 + CAST(floor(b * L / {_AHASH_BLOCKS}.0) AS INT), "
@@ -688,14 +691,7 @@ h AS (
                          THEN 1 << b ELSE 0 END
                     FOR b IN range({_AHASH_BLOCKS - 1}) ]) AS ahash
   FROM px),
-bands AS (
-  SELECT doc_id, ahash, b AS band_idx, (ahash >> (b * 9)) & 511 AS band_val
-  FROM h, (SELECT unnest(range(7)) AS b)),
-cand AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-   AND a.doc_id < b.doc_id),
+{band_ctes}
 ham AS (
   SELECT c.a_id, c.b_id,
          bit_count(xor(ha.ahash, hb.ahash)) AS hamming
@@ -703,8 +699,18 @@ ham AS (
   JOIN h ha ON ha.doc_id = c.a_id
   JOIN h hb ON hb.doc_id = c.b_id)
 SELECT a_id, b_id, CAST(hamming AS BIGINT) AS hamming
-FROM ham WHERE hamming <= {_AHASH_MAX_HAMMING}
+FROM ham WHERE hamming <= {max_hamming}
 """
+
+
+_AHASH_NARROW_CTES = """bands AS (
+  SELECT doc_id, ahash, b AS band_idx, (ahash >> (b * 9)) & 511 AS band_val
+  FROM h, (SELECT unnest(range(7)) AS b)),
+cand AS (
+  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
+  FROM bands a JOIN bands b
+    ON a.band_idx = b.band_idx AND a.band_val = b.band_val
+   AND a.doc_id < b.doc_id),"""
 
 
 def _ahash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -773,7 +779,26 @@ def _ahash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)
 
 
-@register("multimodal_ahash_pairs", _ahash_duck())
+def _hamming_verify(cand: DataFrame, h: DataFrame, max_hamming: int) -> DataFrame:
+    """(a_id, b_id, hamming) of the candidate pairs whose hashes in
+    ``h`` differ in at most ``max_hamming`` bits."""
+    ha = h.select(F.col("doc_id").alias("a_id"), F.col("ahash").alias("h_a"))
+    hb = h.select(F.col("doc_id").alias("b_id"), F.col("ahash").alias("h_b"))
+    return (
+        cand.join(ha, "a_id")
+        .join(hb, "b_id")
+        .select(
+            "a_id",
+            "b_id",
+            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
+            .cast("bigint")
+            .alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
+@register("multimodal_ahash_pairs", _ahash_duck(_AHASH_NARROW_CTES, _AHASH_MAX_HAMMING))
 def multimodal_ahash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual average-hash near-dup pairs for binary assets: the
     payload is tiled into 64 length-proportional blocks (the 8×8 resize
@@ -819,23 +844,9 @@ def multimodal_ahash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "shiftleft(CAST(b AS BIGINT), 9) | (shiftright(ahash, b * 9) & 511))"
         ),
     )
-    ha = h.select(F.col("doc_id").alias("a_id"), F.col("ahash").alias("h_a"))
-    hb = h.select(F.col("doc_id").alias("b_id"), F.col("ahash").alias("h_b"))
     # cand is corpus-derived (quadratic-in-N band collisions) — no
     # broadcast hint; AQE converts to broadcast at runtime iff it fits
-    return (
-        cand
-        .join(ha, "a_id")
-        .join(hb, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-            .cast("bigint")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= _AHASH_MAX_HAMMING)
-    )
+    return _hamming_verify(cand, h, _AHASH_MAX_HAMMING)
 
 
 _AHASH_WIDE_BITS = 21  # 3 bands × 21 bits cover the 63-bit hash
@@ -843,58 +854,23 @@ _AHASH_WIDE_BANDS = 3
 _AHASH_WIDE_MAX_HAMMING = 5  # 3 bands × (1 probe flip + 1) - 1
 
 
-def _ahash_wide_duck() -> str:
-    block = (
-        "('0x' || substring(md5(substring(t, "
-        f"1 + CAST(floor(b * L / {_AHASH_BLOCKS}.0) AS INT), "
-        f"CAST(greatest(floor(L / {_AHASH_BLOCKS}.0), 1) AS INT)"
-        ")), 1, 2))::BIGINT"
-    )
-    w, nb = _AHASH_WIDE_BITS, _AHASH_WIDE_BANDS
-    return f"""
-WITH src AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000,
-         substring(text, 1, 9) || 'ZZZ' || substring(text, 13)
-  FROM documents WHERE doc_id % 50 = 0 AND length(text) >= 12),
-px AS (
-  SELECT doc_id,
-         [ {block} FOR b IN range({_AHASH_BLOCKS}) ] AS p
-  FROM (SELECT doc_id, text AS t, greatest(length(text), 1) AS L
-        FROM src)),
-h AS (
-  SELECT doc_id,
-         list_sum([ CASE WHEN p[b + 1] * {_AHASH_BLOCKS} > list_sum(p)
-                         THEN 1 << b ELSE 0 END
-                    FOR b IN range({_AHASH_BLOCKS - 1}) ]) AS ahash
-  FROM px),
-idx AS (
+_AHASH_WIDE_CTES = f"""idx AS (
   SELECT doc_id, b AS band_idx,
-         (ahash >> (b * {w})) & {(1 << w) - 1} AS band_val
-  FROM h, (SELECT unnest(range({nb})) AS b)),
+         (ahash >> (b * {_AHASH_WIDE_BITS})) & {(1 << _AHASH_WIDE_BITS) - 1} AS band_val
+  FROM h, (SELECT unnest(range({_AHASH_WIDE_BANDS})) AS b)),
 probe AS (
   SELECT doc_id, band_idx,
          CASE WHEN j < 0 THEN band_val ELSE xor(band_val, 1 << j) END
            AS probe_val
-  FROM idx, (SELECT unnest(range(-1, {w})) AS j)),
+  FROM idx, (SELECT unnest(range(-1, {_AHASH_WIDE_BITS})) AS j)),
 cand AS (
   SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
   FROM probe a JOIN idx b
     ON a.band_idx = b.band_idx AND a.probe_val = b.band_val
-   AND a.doc_id < b.doc_id),
-ham AS (
-  SELECT c.a_id, c.b_id,
-         bit_count(xor(ha.ahash, hb.ahash)) AS hamming
-  FROM cand c
-  JOIN h ha ON ha.doc_id = c.a_id
-  JOIN h hb ON hb.doc_id = c.b_id)
-SELECT a_id, b_id, CAST(hamming AS BIGINT) AS hamming
-FROM ham WHERE hamming <= {_AHASH_WIDE_MAX_HAMMING}
-"""
+   AND a.doc_id < b.doc_id),"""
 
 
-@register("multimodal_ahash_pairs_wide", _ahash_wide_duck())
+@register("multimodal_ahash_pairs_wide", _ahash_duck(_AHASH_WIDE_CTES, _AHASH_WIDE_MAX_HAMMING))
 def multimodal_ahash_pairs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB-posture aHash near-dup join: WIDE bands + multi-probe,
     trading a slightly tighter guarantee for ~200× fewer band
@@ -944,20 +920,7 @@ def multimodal_ahash_pairs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("a_id", "b_id")
         .dropDuplicates(["a_id", "b_id"])
     )
-    ha = h.select(F.col("doc_id").alias("a_id"), F.col("ahash").alias("h_a"))
-    hb = h.select(F.col("doc_id").alias("b_id"), F.col("ahash").alias("h_b"))
-    return (
-        cand.join(ha, "a_id")
-        .join(hb, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-            .cast("bigint")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= _AHASH_WIDE_MAX_HAMMING)
-    )
+    return _hamming_verify(cand, h, _AHASH_WIDE_MAX_HAMMING)
 
 
 def _soundex_sql(name_expr: str) -> str:

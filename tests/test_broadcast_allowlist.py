@@ -22,9 +22,10 @@ entry, state why the operand is bounded at 100 TB."""
 
 from __future__ import annotations
 
-import ast
 import collections
 from pathlib import Path
+
+from call_sites import call_sites
 
 REPO = Path(__file__).resolve().parent.parent
 PKG = REPO / "datalake_imagenes_georreferenciadas_spark"
@@ -122,34 +123,12 @@ ALLOWED: dict[tuple[str, str], int] = {
 
 
 def _scan(files, root: Path) -> dict[tuple[str, str], int]:
-    """Count every ``*.broadcast(...)`` call by (module, enclosing fn).
-    The Attribute-name match is deliberately conservative — it also
-    catches ``sparkContext.broadcast`` / ``sc.broadcast`` variables,
-    which are forced broadcasts too and need the same bounded-operand
-    review."""
-    found: collections.Counter = collections.Counter()
-    for f in files:
-        tree = ast.parse(f.read_text())
-        stack: list[str] = []
-
-        class V(ast.NodeVisitor):
-            def visit_FunctionDef(self, node):
-                stack.append(node.name)
-                self.generic_visit(node)
-                stack.pop()
-
-            visit_AsyncFunctionDef = visit_FunctionDef
-
-            def visit_Call(self, node):
-                fn = node.func
-                if isinstance(fn, ast.Attribute) and fn.attr == "broadcast":
-                    found[
-                        (str(f.relative_to(root)), stack[-1] if stack else "<module>")
-                    ] += 1
-                self.generic_visit(node)
-
-        V().visit(tree)
-    return dict(found)
+    """Count every ``broadcast(...)`` call by (module, enclosing fn):
+    ``F.broadcast``, a bare ``broadcast`` imported from
+    ``pyspark.sql.functions``, and — deliberately conservative —
+    ``sparkContext.broadcast`` / ``sc.broadcast`` variables, which are
+    forced broadcasts too and need the same bounded-operand review."""
+    return dict(collections.Counter(site for site, name, _ in call_sites(files, root) if name == "broadcast"))
 
 
 def _sites() -> dict[tuple[str, str], int]:
@@ -191,3 +170,15 @@ def test_allowlist_has_no_stale_entries():
     found = _sites()
     stale = [k for k in ALLOWED if k not in found]
     assert not stale, f"allowlist entries with no call site: {stale}"
+
+
+def test_scanner_catches_every_broadcast_form(tmp_path):
+    f = tmp_path / "m.py"
+    f.write_text(
+        "from pyspark.sql.functions import broadcast\n"
+        "def bare(a, b):\n    return a.join(broadcast(b), 'k')\n"
+        "def attr(a, b):\n    return a.join(F.broadcast(b), 'k')\n"
+        "def var(sc, xs):\n    return sc.broadcast(xs)\n"
+        "def other(a, b):\n    return a.join(b.hint('shuffle_hash'), 'k')\n"
+    )
+    assert _scan([f], tmp_path) == {("m.py", "bare"): 1, ("m.py", "attr"): 1, ("m.py", "var"): 1}

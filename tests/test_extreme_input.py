@@ -91,3 +91,18 @@ def test_r17_contract_value_matches_oracle_on_extreme_input(
     _, srows = spark_rows(queries()[name](spark, extreme_sf))
     _, drows = duck_rows(con.sql(oracle_sql()[name]))
     assert srows == drows
+
+
+def test_binary_scan_skips_zero_byte_files(spark, tmp_path):
+    """The ``extreme`` axis sets some document texts to ``''``, so their
+    blobs are zero bytes. Spark's ``binaryFile`` scan skips zero-length
+    files while the oracles' SQL keeps those rows: the measured cause of
+    the multimodal_meta, pipeline_geo_ingest and s22_orphan_files entries
+    in tools/fuzz_allowlist.json["extreme"]. If Spark starts reading empty
+    files, this fails and those waivers go stale with it."""
+    from datalake_imagenes_georreferenciadas_spark.sources.binary import read_binary_dir
+
+    (tmp_path / "empty.bin").write_bytes(b"")
+    (tmp_path / "abc.bin").write_bytes(b"abc")
+    rows = read_binary_dir(spark, str(tmp_path)).select("path", "length").collect()
+    assert [(r.path.rsplit("/", 1)[-1], r.length) for r in rows] == [("abc.bin", 3)]

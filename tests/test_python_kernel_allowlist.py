@@ -35,6 +35,8 @@ import ast
 import collections
 from pathlib import Path
 
+from call_sites import call_sites, callee_name
+
 REPO = Path(__file__).resolve().parent.parent
 PKG = REPO / "datalake_imagenes_georreferenciadas_spark"
 
@@ -83,68 +85,27 @@ PRIVATE_HANDLES = {"_jc", "_jdf", "_jvm", "_jsc"}
 
 
 def _scan(files, root: Path, names=KERNEL_ATTRS | FACTORY_NAMES):
-    """(site -> count of calls/decorators in ``names``, forbidden sites)."""
+    """(site -> count of calls/decorators in ``names``, forbidden sites).
+    Bare decorators (@udtf / @pandas_udf / @udf with no parentheses)
+    count too — r09 ADVICE #2: they escaped both checks."""
     kernels: collections.Counter = collections.Counter()
     forbidden: list[tuple[str, str]] = []
-    for f in files:
-        tree = ast.parse(f.read_text())
-        stack: list[str] = []
-
-        class V(ast.NodeVisitor):
-            def visit_FunctionDef(self, node):
-                stack.append(node.name)
-                # BARE decorators (@udtf / @pandas_udf / @udf with no
-                # parentheses) are ast.Name/Attribute nodes, not Calls —
-                # r09 ADVICE #2: they escaped both checks. Parenthesized
-                # decorators are Call nodes and are counted by
-                # visit_Call via generic_visit (not double-counted here).
-                site = (str(f.relative_to(root)), node.name)
-                for dec in node.decorator_list:
-                    dname = None
-                    if isinstance(dec, ast.Attribute):
-                        dname = dec.attr
-                    elif isinstance(dec, ast.Name):
-                        dname = dec.id
-                    if dname in names:
-                        kernels[site] += 1
-                    if dname in FORBIDDEN_NAMES:
-                        forbidden.append(site)
-                self.generic_visit(node)
-                stack.pop()
-
-            visit_AsyncFunctionDef = visit_FunctionDef
-
-            def visit_Call(self, node):
-                fn = node.func
-                name = None
-                if isinstance(fn, ast.Attribute):
-                    name = fn.attr
-                elif isinstance(fn, ast.Name):
-                    name = fn.id
-                site = (str(f.relative_to(root)), stack[-1] if stack else "<module>")
-                if name in names:
-                    kernels[site] += 1
-                if name in FORBIDDEN_NAMES:
-                    forbidden.append(site)
-                if name == "register" and isinstance(fn, ast.Attribute):
-                    # r09 ADVICE #2: spark.udf.register(name, fn) builds
-                    # the same row-at-a-time eval path as F.udf but the
-                    # Call's attr is 'register', so it escaped the ban.
-                    # spark.udtf.register is the UDTF surface — a kernel
-                    # site needing review, not an outright ban.
-                    base = fn.value
-                    battr = (
-                        base.attr
-                        if isinstance(base, ast.Attribute)
-                        else base.id if isinstance(base, ast.Name) else None
-                    )
-                    if battr == "udf":
-                        forbidden.append(site)
-                    elif battr == "udtf" and "udtf" in names:
-                        kernels[site] += 1
-                self.generic_visit(node)
-
-        V().visit(tree)
+    for site, name, node in call_sites(files, root):
+        if name in names:
+            kernels[site] += 1
+        if name in FORBIDDEN_NAMES:
+            forbidden.append(site)
+        if name == "register" and isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            # r09 ADVICE #2: spark.udf.register(name, fn) builds the same
+            # row-at-a-time eval path as F.udf but the Call's attr is
+            # 'register', so it escaped the ban. spark.udtf.register is
+            # the UDTF surface — a kernel site needing review, not an
+            # outright ban.
+            base = callee_name(node.func.value)
+            if base == "udf":
+                forbidden.append(site)
+            elif base == "udtf" and "udtf" in names:
+                kernels[site] += 1
     return dict(kernels), forbidden
 
 

@@ -459,24 +459,6 @@ def test_wide_waiver_keeps_comma_bearing_expression_key_whole():
     assert wide_agg_key_violations(plan2, re.escape(expr)) == ["l_orderkey#11L"]
 
 
-# ---- headline_remeasure ref-file shapes (r14) ----
-
-def test_remeasure_load_ref_accepts_both_artifact_shapes(tmp_path):
-    # the adjudication tool must read a driver BENCH_r*.json
-    # (parsed.queries) AND a bench BENCH_DETAIL.json (queries_warm) —
-    # extended-name re-measures compare against git-extracted details
-    from tools.headline_remeasure import load_ref
-
-    driver = tmp_path / "BENCH_rX.json"
-    driver.write_text(
-        '{"parsed": {"queries": {"q1": 0.5}}, "tail": ""}'
-    )
-    detail = tmp_path / "DETAIL.json"
-    detail.write_text('{"queries_warm": {"q1": 0.4, "q2": 1.0}}')
-    assert load_ref(str(driver)) == {"q1": 0.5}
-    assert load_ref(str(detail)) == {"q1": 0.4, "q2": 1.0}
-
-
 # ---- _split_top_level property (r14) ----
 
 from hypothesis import given, strategies as st  # noqa: E402
@@ -520,18 +502,3 @@ def test_split_top_level_clamps_negative_depth_on_stray_closer():
     assert parts == ["substr(s, '')", "')'", "a#1", "b#2"]
     # balanced input is unaffected by the clamp
     assert _split_top_level("f(a, b), c") == ["f(a, b)", " c"]
-
-
-# ---- headline_remeasure no-ref row (r14 ADVICE #3) ----
-
-
-def test_remeasure_classify_reports_measured_name_missing_from_ref():
-    # a measured name absent from the ref file must yield an explicit
-    # no-ref row, not vanish from the table after its passes were spent
-    from tools.headline_remeasure import classify
-
-    ref = {"q1": 0.5, "q0": 0.0}
-    assert classify("q1", 0.5, ref) == ("q1", 0.5, 0.5, 1.0, "ok")
-    assert classify("q1", 1.0, ref)[4] == "SLOW"
-    assert classify("q_ext", 0.7, ref) == ("q_ext", None, 0.7, None, "no-ref")
-    assert classify("q0", 0.1, ref)[3] == float("inf")  # zero ref guarded

@@ -8,7 +8,11 @@ tools/plan_audit.py.
 Usage: python tools/verify_oracle.py [--json OUT.json] [--allowlist AXIS]
                                      [sf_dir] [query ...]
 
---json OUT.json   write per-query {status, kind} machine-readable results
+--json OUT.json   write per-query {status, kind[, rows]} results; each
+                  query the audit checked also gets its layer ledger
+                  (plans.*, exec.*, streaming.* columns; the verify
+                  skill lists them), for which the run keeps a Spark
+                  event log
 --allowlist AXIS  after the run, diff the failing-name set against
                   tools/fuzz_allowlist.json[AXIS]; exit 0 iff they are
                   EQUAL (the fuzz-residue contract: a new divergence OR
@@ -19,9 +23,13 @@ Usage: python tools/verify_oracle.py [--json OUT.json] [--allowlist AXIS]
 
 from __future__ import annotations
 
+import collections
+import glob
+import json
 import math
 import os
 import sys
+import tempfile
 import time
 import traceback
 
@@ -35,6 +43,10 @@ from pyspark.sql.streaming import StreamingQueryListener
 from datalake_imagenes_georreferenciadas_spark.session import get_spark
 from datalake_imagenes_georreferenciadas_spark.tables import TABLE_NAMES, table
 from __spark_entry__ import oracle_sql, queries
+from perfbench.tracing import EXECUTOR_FIELDS, Tracer, event_log_conf, task_metrics_by_job
+
+#: the task-end SQL metric of Python-eval operators (milliseconds)
+PYTHON_WORKER_METRIC = "time to run Python workers"
 
 
 def norm_cell(v):
@@ -75,11 +87,13 @@ def duck_rows(res) -> tuple[list[str], list[tuple]]:
 
 
 class Audit(StreamingQueryListener):
-    """The plan and job checks of each query that ran. Tags the query's
-    jobs with the group ``verify/<name>`` and counts them together with
-    those of every stream it started (micro-batches run under the
-    stream's ``runId`` group), then hands the executed plan to
-    ``plan_audit.audit``."""
+    """The plan and job checks of each query that ran, and its layer
+    ledger. ``check_query`` runs each query as a span of ``tracer`` that
+    tags its jobs with the group ``verify/<name>`` and counts their jobs,
+    stages and tasks as it closes, with the build, planning and collect
+    as its child spans. The audit adds the jobs of every stream the query
+    started (micro-batches run under the stream's ``runId`` group) and
+    hands the executed plan to ``plan_audit.audit``."""
 
     def __init__(self, spark, sf_dir: str):
         import plan_audit  # beside this script: importable when it runs as one
@@ -90,24 +104,57 @@ class Audit(StreamingQueryListener):
         self.parallelism = self.sc.defaultParallelism
         spread = set(plan_audit.SPREAD.values())
         self.splits = {t: table(spark, sf_dir, t).rdd.getNumPartitions() for t in spread}
+        self.tracer = Tracer(True, "verify")
+        self.tracer.sc = self.sc
         self.runs: list[str] = []
+        # runId -> (durationMs, state rows, state memory) per trigger
+        self.progress: dict[str, list[tuple]] = collections.defaultdict(list)
+        # job group -> (query, end of its build span); stream jobs are all build work
+        self.owner: dict[str, tuple[str, float]] = {}
+        self.ledger: dict[str, dict] = {}
         spark.streams.addListener(self)
 
     def onQueryStarted(self, event):
         self.runs.append(str(event.runId))
 
-    onQueryProgress = onQueryTerminated = lambda self, event: None
+    def onQueryProgress(self, event):
+        p, ops = event.progress, event.progress.stateOperators
+        self.progress[str(p.runId)].append(
+            (
+                dict(p.durationMs),
+                sum(o.numRowsTotal for o in ops),
+                sum(o.memoryUsedBytes for o in ops),
+            )
+        )
+
+    onQueryTerminated = lambda self, event: None
 
     def start(self, name: str) -> None:
-        self.group, self.first_run = f"verify/{name}", len(self.runs)
-        self.sc.setJobGroup(self.group, self.group)
+        self.first_run = len(self.runs)
+
+    def drain(self) -> None:
+        """Wait until the listener bus has delivered every event so far,
+        so ``statusTracker`` knows every job that ran."""
+        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
 
     def problems(self, name: str, sdf) -> list[str]:
-        """Audit problems of ``sdf``, built and collected since ``start``."""
-        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
-        st = self.sc.statusTracker()
-        groups = [self.group, *self.runs[self.first_run :]]
-        jobs = sum(len(st.getJobIdsForGroup(g)) for g in groups)
+        """Audit problems of ``sdf``, whose query span (drained before it
+        closed) is the last one since ``start``; records its ledger row."""
+        build, plan, collect, query = self.tracer.spans[-4:]
+        runs = self.runs[self.first_run :]
+        counts = [query, *(self.tracer.job_counts(r) for r in runs)]
+        jobs = sum(c["jobs"] for c in counts)
+        self.owner[query["group"]] = (name, build["end"])
+        self.owner.update(dict.fromkeys(runs, (name, math.inf)))
+        self.ledger[name] = {
+            "plans.build_s": build["end"] - build["start"],
+            "plans.plan_s": plan["end"] - plan["start"],
+            "exec.s": collect["end"] - collect["start"],
+            "exec.jobs": jobs,
+            "exec.stages": sum(c["stages"] for c in counts),
+            "exec.tasks": sum(c["tasks"] for c in counts),
+            **self.stream_columns(runs),
+        }
         plan = sdf._jdf.queryExecution().explainString(self.explain)
         # the driver canon hashes each cell: nested cells are unhashable
         nested = [
@@ -116,6 +163,62 @@ class Audit(StreamingQueryListener):
             if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType, T.NullType))
         ]
         return nested + self.check(name, plan, jobs, self.parallelism, self.splits)
+
+    def stream_columns(self, runs: list[str]) -> dict:
+        """Trigger phase durations summed over ``runs``, their trigger
+        count, and state-operator rows and memory (each run's peak)."""
+        out: collections.Counter = collections.Counter()
+        for run in runs:
+            triggers = self.progress.pop(run, [])
+            for durations, _, _ in triggers:
+                out.update({f"streaming.{k}_ms": v for k, v in durations.items()})
+            if triggers:
+                out["streaming.triggers"] += len(triggers)
+                out["streaming.state_rows"] += max(t[1] for t in triggers)
+                out["streaming.state_memory_bytes"] += max(t[2] for t in triggers)
+        return dict(out)
+
+
+def python_worker_s_by_job(log_dir: str) -> dict[int, float]:
+    """Per job id: seconds its tasks spent running Python workers, from
+    the task-end accumulables in the event log in ``log_dir``."""
+    out: collections.Counter = collections.Counter()
+    stage_job: dict[int, int] = {}
+    for path in glob.glob(os.path.join(log_dir, "*")):
+        with open(path) as fh:
+            for line in fh:
+                if '"SparkListenerJobStart"' in line:
+                    ev = json.loads(line)
+                    stage_job.update(dict.fromkeys(ev["Stage IDs"], ev["Job ID"]))
+                elif PYTHON_WORKER_METRIC in line and '"SparkListenerTaskEnd"' in line:
+                    ev = json.loads(line)
+                    for acc in ev["Task Info"].get("Accumulables", []):
+                        if acc.get("Name") == PYTHON_WORKER_METRIC:
+                            out[stage_job.get(ev["Stage ID"])] += int(acc["Update"]) / 1000.0
+    return out
+
+
+def executor_ledger(log_dir: str, owner: dict[str, tuple[str, float]]) -> dict[str, dict]:
+    """Per query: the jobs submitted before its build span ended (its
+    eager actions and streams), and the executor metrics and Python-worker
+    time of all the jobs in its groups (``Audit.owner``), read from the
+    event log."""
+    jobs, py_s = task_metrics_by_job(log_dir), python_worker_s_by_job(log_dir)
+    cols = ["plans.build_jobs", *EXECUTOR_FIELDS, "exec.python_worker_s"]
+    out = {name: dict.fromkeys(cols, 0) for name, _ in owner.values()}
+    for jid, job in jobs.items():
+        if job["group"] not in owner:
+            continue
+        name, build_end = owner[job["group"]]
+        row = out[name]
+        row["plans.build_jobs"] += job["submitted"] <= build_end
+        for col, field in EXECUTOR_FIELDS.items():
+            row[col] += job[field]
+        row["exec.python_worker_s"] += py_s.get(jid, 0)
+    return out
+
+
+_UNTRACED = Tracer(False, "verify")
 
 
 def check_query(
@@ -127,11 +230,19 @@ def check_query(
     ``audit`` when matching rows came from a plan or job count that
     ``audit`` rejects."""
     t0 = time.time()
+    tracer = audit.tracer if audit is not None else _UNTRACED
     try:
         if audit is not None:
             audit.start(name)
-        sdf = fn(spark, sf_dir)
-        cols, srows = spark_rows(sdf)
+        with tracer.span(name, "verify"):
+            with tracer.span("build"):
+                sdf = fn(spark, sf_dir)
+            with tracer.span("plan"):
+                sdf._jdf.queryExecution().executedPlan()
+            with tracer.span("exec"):
+                cols, srows = spark_rows(sdf)
+            if audit is not None:
+                audit.drain()  # before the query span counts its jobs
         probs = audit.problems(name, sdf) if audit is not None else []
     except Exception:
         print(f"FAIL {name}: SPARK ERROR")
@@ -187,8 +298,6 @@ def load_allowlist(axis: str) -> dict[str, str]:
     A mechanism tag may start with a ``[kind]`` marker (e.g.
     ``[spark_error] DESIGNED fail-fast: ...``) pinning the EXPECTED
     failure kind; see expected_kinds()."""
-    import json
-
     path = os.path.join(os.path.dirname(__file__), "fuzz_allowlist.json")
     with open(path) as fh:
         data = json.load(fh)
@@ -214,9 +323,28 @@ def expected_kinds(allow: dict[str, str]) -> dict[str, set[str]]:
     return out
 
 
-def main() -> int:
-    import json
+def run_pass(sf_dir: str, qs: dict, audited: bool, log_dir: str | None = None) -> dict[str, dict]:
+    """``check_query`` results of the queries ``qs``, audited or
+    rows-only. With ``log_dir`` the session keeps its event log there and
+    each audited record gets its ledger columns."""
+    if log_dir is not None:
+        # a launch-time conf: only a session started after this keeps the log
+        os.environ["PYSPARK_SUBMIT_ARGS"] = event_log_conf(log_dir)
+    spark = get_spark()
+    spark.sparkContext.setLogLevel("ERROR")
+    con = duck_views(sf_dir)
+    audit = Audit(spark, sf_dir) if audited else None
+    oracles = oracle_sql()
+    results = {name: check_query(spark, con, name, fn, sf_dir, oracles.get(name), audit) for name, fn in qs.items()}
+    if log_dir is not None:
+        spark.stop()  # closes the event log
+        for name, cols in executor_ledger(log_dir, audit.owner).items():
+            row = {**audit.ledger[name], **cols}
+            results[name].update((k, round(v, 4) if isinstance(v, float) else v) for k, v in row.items())
+    return results
 
+
+def main() -> int:
     argv = sys.argv[1:]
     json_out = allow_axis = None
     while argv and argv[0].startswith("--"):
@@ -232,20 +360,17 @@ def main() -> int:
             raise SystemExit(f"unknown flag {flag}")
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
-    results: dict[str, dict] = {}
-    spark = get_spark()
-    spark.sparkContext.setLogLevel("ERROR")
-    con = duck_views(sf_dir)
-    audit = Audit(spark, sf_dir) if allow_axis is None else None
-
-    qs, oracles = queries(), oracle_sql()
+    qs = queries()
     unknown = only - set(qs)
     if unknown:
         print(f"unknown queries on argv: {' '.join(sorted(unknown))}", file=sys.stderr)
         return 2
-    for name, fn in qs.items():
-        if not only or name in only:
-            results[name] = check_query(spark, con, name, fn, sf_dir, oracles.get(name), audit)
+    qs = {name: fn for name, fn in qs.items() if not only or name in only}
+    if json_out and allow_axis is None:
+        with tempfile.TemporaryDirectory(prefix="verify_eventlog_") as log_dir:
+            results = run_pass(sf_dir, qs, True, log_dir)
+    else:
+        results = run_pass(sf_dir, qs, allow_axis is None)
     n_fail = sum(r["status"] == "fail" for r in results.values())
     n_pass = len(results) - n_fail
     print(f"\n{n_pass} pass, {n_fail} fail")
