@@ -6,6 +6,27 @@ Re-expresses the reference's MySQL metadata layer (mysql_process.py):
 - ``CATALOG.PROC_EJECUCION``   → ``runs``      (process executions)
 - ``CATALOG.DETALLE_EJECUCION``→ ``lineage``   (run ↔ image junction)
 
+Layout under ``root`` (a commit log over immutable files, the Delta Lake
+shape of Armbrust et al., VLDB 2020, on plain parquet):
+
+- ``data/<uuid>/part-*.parquet`` — immutable catalog data files. A file
+  is written once and never changed; it is only deleted by
+  ``expire_snapshots`` once no retained log entry lists it.
+- ``_log/<N>.json`` — one entry per catalog commit (an insert or a
+  MERGE), made visible by an atomic rename. An entry lists every live
+  file of version ``N`` with its row count and min/max ``id`` (read on
+  the driver from the parquet footers), the next catalog id, every
+  insert's lineage as ``(run id, first id, last id)`` and the commit's
+  kind, rows added and rows rewritten. Files a crashed commit wrote are
+  listed by no entry, so no read ever sees them.
+- ``_runs/r<id>[_b<batch>].json`` — one record per run, also renamed
+  into place; the file name alone answers the replay lookup and the
+  next run id.
+
+So run ids, the next catalog id, ``runs()`` and ``lineage()`` cost no
+Spark job: they are directory listings and driver-side JSON, and the two
+tables enter Spark as Arrow ``LocalRelation``s.
+
 Design notes vs the reference:
 
 - AUTO_INCREMENT + read-modify-write id allocation (``last_id``,
@@ -13,30 +34,34 @@ Design notes vs the reference:
   here are allocated per-batch, deterministically and WITHOUT a global
   single-partition window: a per-``indice`` partitioned ``row_number``
   plus cumulative group offsets computed JVM-side over the per-group
-  counts — the zipWithIndex pattern (see ``_with_ids``).
+  counts — the zipWithIndex pattern (see ``_with_ids``). The ids of one
+  insert are the dense range ``base+1 .. base+n``, so its lineage is
+  exactly one ``(run, first, last)`` triple.
 - Writer concurrency: the store assumes ONE writer at a time (the
   reference's cron posture — one script run per schedule). Two concurrent
-  writers could mint colliding run/catalog ids (max+1 read-then-append)
-  or race the version-pointer flip. Multi-writer coordination belongs to
-  a table format with a transaction log (Delta/Iceberg — the documented
-  production path); this plain-parquet emulation keeps the single-writer
+  writers could mint colliding run/catalog ids or both commit version
+  ``N``: the rename replaces, it does not refuse. Multi-writer
+  coordination needs a put-if-absent commit (Delta/Iceberg — the
+  documented production path); this emulation keeps the single-writer
   contract explicit instead of half-locking around it.
 - ``update_processed_img`` (mysql_process.py:83-91) row-at-a-time UPDATE →
-  a MERGE-shaped plan: anti-join the untouched rows, union the updated
-  ones, overwrite. (Delta's MERGE INTO is the production path; plain
-  parquet emulation keeps this container dependency-free — SURVEY §7 M2
-  fallback.)
+  a file-level copy-on-write MERGE: only the files whose ``[min, max]``
+  id range holds an updated id are rewritten; the rest carry over to the
+  new entry by reference.
 - the reference swallows insert errors (mysql_process.py:59-60); we don't.
-
-Tables are plain parquet dirs under ``root``; every write goes through a
-temp-dir + atomic rename pattern where overwrite is needed.
 """
 
 from __future__ import annotations
 
+import bisect
+import json
 import os
+import re
 import shutil
+import time
+import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -79,6 +104,15 @@ LINEAGE_SCHEMA = T.StructType(
     ]
 )
 
+#: one insert's lineage as recorded in the log: its run and id range
+_RANGE_SCHEMA = T.StructType(
+    [
+        T.StructField("id_ejecucion", T.LongType(), False),
+        T.StructField("first", T.LongType(), False),
+        T.StructField("last", T.LongType(), False),
+    ]
+)
+
 #: id_tipo_img enum (script_geo.py:168-174, download_list_images.py:103)
 TIPO_IMG_RAW_JPG = 0
 TIPO_IMG_GEOTIFF = 3
@@ -88,133 +122,238 @@ TIPO_IMG_MODEL_OUTPUT = 10
 PROCESO_INGEST = 0
 PROCESO_MODEL_PUBLISH = 2
 
+_LOG_FILE = re.compile(r"(\d+)\.json")
+_RUN_FILE = re.compile(r"r(\d+)(?:_b(-?\d+))?\.json")
+#: the entry of a store with no commit yet
+_EMPTY = {"files": [], "next_id": 1, "lineage": []}
+
+
+def _write_json(path: str, obj) -> None:
+    """Write ``obj`` to ``path`` by an atomic rename: a reader sees the
+    whole record or none."""
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
+def _footer(path: str) -> tuple[int, int | None, int | None]:
+    """Row count and min/max ``id`` of a parquet file, from its footer."""
+    meta = pq.read_metadata(path)
+    if meta.num_rows == 0:
+        return 0, None, None
+    col = meta.schema.names.index("id")
+    stats = [meta.row_group(g).column(col).statistics for g in range(meta.num_row_groups)]
+    return meta.num_rows, min(s.min for s in stats), max(s.max for s in stats)
+
 
 class CatalogStore:
-    """Catalog + runs + lineage over parquet directories.
+    """Catalog + runs + lineage over a commit log of immutable parquet
+    files.
 
-    The catalog table is SNAPSHOT-VERSIONED: inserts append to the
-    current snapshot directory (``catalog_v{N}``); updates write a brand-
-    new snapshot and flip an atomically-renamed pointer file. Readers
-    therefore never observe a half-written state (the Delta-style
-    copy-on-write contract on plain parquet), a crash mid-update leaves
-    the previous snapshot intact, and old snapshots stay readable —
-    ``catalog(version=N)`` is time travel.
+    The catalog is VERSIONED: every insert and every MERGE writes new
+    data files and then commits one log entry that lists the live files
+    of the new version. ``catalog(version=N)`` reads exactly the files
+    entry ``N`` lists, so a version never changes once committed (time
+    travel), readers never observe a half-written state, and a crash
+    before the commit leaves the previous version current and its own
+    files unread. ``expire_snapshots`` bounds the history.
     """
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        os.makedirs(root, exist_ok=True)
+        for d in ("data", "_log", "_runs"):
+            os.makedirs(os.path.join(root, d), exist_ok=True)
 
     # ---- paths -----------------------------------------------------------
-    def _path(self, name: str) -> str:
-        return os.path.join(self.root, name)
+    def _path(self, *parts: str) -> str:
+        return os.path.join(self.root, *parts)
 
-    def _read(self, name: str, schema: T.StructType) -> DataFrame:
-        path = self._path(name)
-        if not os.path.exists(path):
-            return local_frame(self.spark, [], schema)
-        return self.spark.read.schema(schema).parquet(path)
+    def _files_frame(self, files: list) -> DataFrame:
+        """The catalog rows of exactly ``files`` (log file records)."""
+        if not files:
+            return local_frame(self.spark, [], CATALOG_SCHEMA)
+        paths = [self._path(f[0]) for f in files]
+        return self.spark.read.schema(CATALOG_SCHEMA).parquet(*paths)
 
     # ---- catalog versioning ----------------------------------------------
-    def current_version(self) -> int:
-        ptr = self._path("catalog.version")
-        if not os.path.exists(ptr):
-            return 0
-        with open(ptr) as f:
-            return int(f.read().strip())
-
     def catalog_versions(self) -> list[int]:
-        import re
+        names = os.listdir(self._path("_log"))
+        return sorted(int(m[1]) for m in map(_LOG_FILE.fullmatch, names) if m)
 
-        out = []
-        for d in os.listdir(self.root):
-            m = re.fullmatch(r"catalog_v(\d+)", d)
-            if m:
-                out.append(int(m.group(1)))
-        return sorted(out)
+    def current_version(self) -> int:
+        versions = self.catalog_versions()
+        return versions[-1] if versions else 0
 
-    def _set_version(self, version: int) -> None:
-        ptr = self._path("catalog.version")
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, ptr)  # atomic pointer flip
-
-    def _catalog_dir(self, version: int | None = None) -> str:
+    def _entry(self, version: int | None = None) -> dict:
+        """Log entry ``version`` (default: the newest); a store with no
+        commit, or a version that is not in the log, reads as empty."""
         v = self.current_version() if version is None else version
-        return self._path(f"catalog_v{v}")
+        path = self._path("_log", f"{v}.json")
+        if not os.path.exists(path):
+            return _EMPTY
+        with open(path) as f:
+            return json.load(f)
+
+    def _commit(self, op: str, entry: dict, files: list, added: int = 0,
+                rewritten: int = 0, ranges: list = ()) -> int:
+        """Write the next log entry after ``entry``: ``files`` become the
+        live set of the new version, ``ranges`` join its lineage.
+
+        A commit that would list more files than Spark lists on the
+        driver (``spark.sql.sources.parallelPartitionDiscovery.threshold``)
+        first folds the smallest live files into one, down to half the
+        threshold, so a catalog read never starts a listing job."""
+        threshold = int(
+            self.spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
+        )
+        if len(files) > threshold:
+            fold = sorted(files, key=lambda f: (f[1], f[2]))[: len(files) - threshold // 2 + 1]
+            folded = {f[0] for f in fold}
+            files = [f for f in files if f[0] not in folded] + self._rewrite(fold)
+            rewritten += sum(f[1] for f in fold)
+        versions = self.catalog_versions()
+        version = versions[-1] + 1 if versions else 0
+        _write_json(
+            self._path("_log", f"{version}.json"),
+            {
+                "op": op,
+                "rows_added": added,
+                "rows_rewritten": rewritten,
+                "next_id": entry["next_id"] + added,
+                "files": files,
+                "lineage": entry["lineage"] + list(ranges),
+            },
+        )
+        return version
+
+    def _write(self, df: DataFrame) -> list:
+        """Write ``df`` as new immutable files and return their log
+        records ``[path, rows, min id, max id]`` (empty files unlisted)."""
+        rel = os.path.join("data", uuid.uuid4().hex)
+        df.select([f.name for f in CATALOG_SCHEMA.fields]).write.parquet(self._path(rel))
+        files = []
+        for name in sorted(os.listdir(self._path(rel))):
+            if name.endswith(".parquet"):
+                rows, lo, hi = _footer(self._path(rel, name))
+                if rows:
+                    files.append([os.path.join(rel, name), rows, lo, hi])
+        if not files:
+            shutil.rmtree(self._path(rel))
+        return files
+
+    def _rewrite(self, files: list, ids: list[int] | None = None, new_tipo_img: int = 0) -> list:
+        """Copy-on-write: rewrite ``files`` with ``id_tipo_img`` set to
+        ``new_tipo_img`` on the rows whose id is in ``ids``; with no
+        ``ids``, fold them into one file. Returns the new file records."""
+        df = self._files_frame(files)
+        if not ids:
+            return self._write(df.coalesce(1))
+        # the id set is an exact-sized LocalRelation, so the join is
+        # planned from its stats (a broadcast while it fits) without a
+        # hint; ONE scan + left join with a conditional column keeps
+        # every row exactly once and flips only the hits
+        hit = local_frame(self.spark, [(i,) for i in ids], "id long").withColumn(
+            "__hit", F.lit(1)
+        )
+        return self._write(
+            df.join(hit, "id", "left").withColumn(
+                "id_tipo_img",
+                F.when(
+                    F.col("__hit").isNotNull(), F.lit(new_tipo_img).cast("int")
+                ).otherwise(F.col("id_tipo_img")),
+            )
+        )
 
     def expire_snapshots(self, keep_last: int) -> list[int]:
-        """Delete every catalog snapshot older than the newest
-        ``keep_last`` (Delta VACUUM / Iceberg expire_snapshots) and
-        return the removed versions. A history of at most ``keep_last``
-        snapshots is kept whole; the current snapshot is never removed."""
+        """Delete every log entry older than the newest ``keep_last``
+        (Delta VACUUM / Iceberg expire_snapshots), then every data file
+        that no retained entry lists (files of expired versions and of
+        commits that crashed before their entry); return the removed
+        versions. A history of at most ``keep_last`` versions is kept
+        whole; the current version is never removed."""
         if keep_last < 1:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-        removed = self.catalog_versions()[:-keep_last]
+        versions = self.catalog_versions()
+        removed = versions[:-keep_last]
         for v in removed:
-            shutil.rmtree(self._catalog_dir(v))
+            os.remove(self._path("_log", f"{v}.json"))
+        live = {f[0] for v in versions[-keep_last:] for f in self._entry(v)["files"]}
+        for d in os.listdir(self._path("data")):
+            names = os.listdir(self._path("data", d))
+            if not any(os.path.join("data", d, n) in live for n in names):
+                shutil.rmtree(self._path("data", d))
+                continue
+            for n in names:
+                if n.endswith(".parquet") and os.path.join("data", d, n) not in live:
+                    os.remove(self._path("data", d, n))
+                    crc = self._path("data", d, f".{n}.crc")
+                    if os.path.exists(crc):
+                        os.remove(crc)
         return removed
 
     # ---- reads -----------------------------------------------------------
     def catalog(self, version: int | None = None) -> DataFrame:
-        """The catalog snapshot — latest by default, or any retained
-        ``version`` (time travel)."""
-        v = self.current_version() if version is None else version
-        return self._read(f"catalog_v{v}", CATALOG_SCHEMA)
+        """The catalog at the newest version, or at any retained
+        ``version`` (time travel): exactly the files its entry lists."""
+        return self._files_frame(self._entry(version)["files"])
+
+    def _run_files(self) -> list[tuple[int, int | None, str]]:
+        """(run id, batch id, file name) of every run record."""
+        out = []
+        for name in os.listdir(self._path("_runs")):
+            m = _RUN_FILE.fullmatch(name)
+            if m:
+                out.append((int(m[1]), None if m[2] is None else int(m[2]), name))
+        return sorted(out)
 
     def runs(self) -> DataFrame:
-        return self._read("runs", RUNS_SCHEMA)
+        rows = []
+        for _, _, name in self._run_files():
+            with open(self._path("_runs", name)) as f:
+                r = json.load(f)
+            rows.append((r["id_ejecucion"], r["id_proceso"], r["fecha_us"], r["batch_id"]))
+        return local_frame(self.spark, rows, RUNS_SCHEMA)
 
     def lineage(self) -> DataFrame:
-        return self._read("lineage", LINEAGE_SCHEMA)
+        """One row per (run, image) pair, expanded from the newest entry's
+        ``(run, first id, last id)`` ranges."""
+        ranges = [tuple(r) for r in self._entry()["lineage"]]
+        return local_frame(self.spark, ranges, _RANGE_SCHEMA).select(
+            "id_ejecucion",
+            F.explode(F.sequence("first", "last")).alias("id_imagen_fuente"),
+        )
 
     def last_id(self) -> int:
         """A1: max catalog id (the reference's AUTO_INCREMENT peek,
-        mysql_process.py:13-25, as a one-row aggregate). r19: an absent
-        catalog snapshot is 0 without a Spark job (guide §5)."""
-        if not os.path.exists(self._catalog_dir()):
-            return 0
-        row = self.catalog().agg(F.max("id").alias("m")).collect()[0]
-        return int(row["m"]) if row["m"] is not None else 0
+        mysql_process.py:13-25), from the newest log entry."""
+        return self._entry()["next_id"] - 1
 
     # ---- writes ----------------------------------------------------------
     def start_run(self, id_proceso: int, batch_id: int | None = None) -> int:
-        """S14: append a run row, return its id (mysql_process.py:28-43).
+        """S14: record a run, return its id (mysql_process.py:28-43).
 
         With ``batch_id`` set (streaming foreachBatch), run creation is
         IDEMPOTENT: a replay of the same micro-batch finds the existing
-        run row and reuses its id instead of appending a duplicate —
-        the runs table stays exactly-once under crash-replay."""
-        # r19 (guide §5 — the driver should do almost no data work): a
-        # store with no runs file yet has nothing to look up; skipping
-        # the empty-relation aggregate job saves ~0.5 s per fresh store
-        # lifecycle (the catalog fixture queries build one per run). The
-        # replay lookup and the next id come from ONE aggregate job.
-        run_id = 1
-        if os.path.exists(self._path("runs")):
-            row = (
-                self.runs()
-                .agg(
-                    F.min(
-                        F.when(F.col("batch_id") == batch_id, F.col("id_ejecucion"))
-                    ).alias("replay"),
-                    F.max("id_ejecucion").alias("m"),
-                )
-                .collect()[0]
-            )
-            if row["replay"] is not None:
-                return int(row["replay"])
-            run_id = (int(row["m"]) if row["m"] is not None else 0) + 1
-        run = local_frame(
-            self.spark,
-            [(run_id, id_proceso, batch_id)],
-            "id_ejecucion long, id_proceso int, batch_id long",
-        ).withColumn("fecha", F.current_timestamp())
-        run.select("id_ejecucion", "id_proceso", "fecha", "batch_id").write.mode(
-            "append"
-        ).parquet(self._path("runs"))
+        run record and reuses its id instead of minting a duplicate —
+        the runs table stays exactly-once under crash-replay. Both the
+        replay lookup and the next id come from the ``_runs/`` listing."""
+        listed = self._run_files()
+        replay = [r for r, b, _ in listed if batch_id is not None and b == batch_id]
+        if replay:
+            return replay[0]
+        run_id = (listed[-1][0] if listed else 0) + 1
+        name = f"r{run_id}.json" if batch_id is None else f"r{run_id}_b{batch_id}.json"
+        _write_json(
+            self._path("_runs", name),
+            {
+                "id_ejecucion": run_id,
+                "id_proceso": id_proceso,
+                "fecha_us": time.time_ns() // 1000,
+                "batch_id": batch_id,
+            },
+        )
         return run_id
 
     def _with_ids(self, rows: DataFrame, base: int) -> DataFrame:
@@ -269,74 +408,45 @@ class CatalogStore:
         with no read-modify-write per row (unlike mysql_process.py:46-61)
         and no single-partition exchange (``_with_ids``). ``rows`` is
         evaluated twice (group counts + the write) — persist upstream if
-        it is expensive to recompute. Returns the inserted rows with ids.
+        it is expensive to recompute.
 
-        r20 (guide §1.2 don't compute twice): the lineage rows and the
-        RETURNED frame derive from the snapshot rows just written
-        (``id > base`` — ids are base + a dense row_number, and the
-        store's single-writer contract means nothing else appended), not
-        from the lazy id-allocation plan, which previously re-ran the
-        whole window + offset-join pipeline once per write (catalog,
-        then lineage, then once more per caller collect). The read-back
-        is a small stats-bearing parquet scan.
-
-        The returned frame reads the snapshot version this call wrote:
-        evaluate (or persist) it before the next ``update_processed_img``
-        or snapshot expire, which can flip or remove that version.
+        The batch is written as new files and committed as a new
+        version. Its ids are the dense range ``last_id+1 .. last_id+n``,
+        with ``n`` summed from the new files' footers, so the lineage is
+        the one range ``(run_id, last_id+1, last_id+n)`` in the log
+        entry: no read-back and no lineage write. Returns the inserted
+        rows with ids, read from the files this call wrote; the frame
+        stays valid until ``expire_snapshots`` removes those files.
         """
-        base = self.last_id()
-        with_id = self._with_ids(rows, base)
-        ordered = with_id.select([f.name for f in CATALOG_SCHEMA.fields])
-        ordered.write.mode("append").parquet(self._catalog_dir())
-        written = self.catalog().filter(F.col("id") > base)
-        lineage = written.select(
-            F.lit(run_id).cast("long").alias("id_ejecucion"),
-            F.col("id").alias("id_imagen_fuente"),
-        )
-        lineage.write.mode("append").parquet(self._path("lineage"))
-        return written
+        entry = self._entry()
+        base = entry["next_id"] - 1
+        written = self._write(self._with_ids(rows, base))
+        n = sum(f[1] for f in written)
+        ranges = [[run_id, base + 1, base + n]] if n else []
+        self._commit("insert", entry, entry["files"] + written, added=n, ranges=ranges)
+        return self._files_frame(written)
 
     def update_processed_img(self, new_tipo_img: int, ids: list[int]) -> int:
         """S15: MERGE-shaped state advance (mysql_process.py:83-91).
 
-        Copy-on-write: the merged rows are written to a NEW snapshot
-        directory, then the version pointer flips atomically. Readers
-        mid-update keep seeing the previous snapshot; a crash before the
-        flip changes nothing. Returns the new version.
-
-        r20 (guide §1.2 / §3): ONE scan + ONE broadcast left-join with a
-        conditional column instead of the previous anti-join ∪ semi-join
-        pair, which scanned (and joined) the full snapshot twice per
-        MERGE. Row set is identical — the left join preserves every
-        snapshot row exactly once and only flips ``id_tipo_img`` on
-        hits (value-verified; same-session A/B min-of-3:
-        catalog_snapshot_expire 4.31 → 3.85 s, diff 2.19 → 2.05 s).
+        File-level copy-on-write: only the live files whose ``[min, max]``
+        id range holds an updated id are rewritten (one scan + one left
+        join with the id set); every other file carries over to the new
+        entry by reference. Readers mid-update keep seeing the previous
+        version; a crash before the commit changes nothing. Returns the
+        new version.
         """
         if not ids:
-            return self.current_version()  # no-op: don't burn a snapshot
-        cat = self.catalog()
-        # a repeated id would match its catalog row once per copy; the
-        # id set is an exact-sized LocalRelation, so the join is planned
-        # from its stats (a broadcast while it fits) without a hint
-        updates = local_frame(
-            self.spark, [(i,) for i in sorted({int(i) for i in ids})], "id long"
-        )
-        hit = updates.withColumn("__hit", F.lit(1))
-        merged = (
-            cat.join(hit, "id", "left")
-            .withColumn(
-                "id_tipo_img",
-                F.when(
-                    F.col("__hit").isNotNull(), F.lit(new_tipo_img).cast("int")
-                ).otherwise(F.col("id_tipo_img")),
-            )
-            .drop("__hit")
-            .select([f.name for f in CATALOG_SCHEMA.fields])
-        )
-        new_version = self.current_version() + 1
-        merged.write.mode("overwrite").parquet(self._catalog_dir(new_version))
-        self._set_version(new_version)
-        return new_version
+            return self.current_version()  # no-op: don't burn a version
+        # a repeated id would match its catalog row once per copy
+        ids = sorted({int(i) for i in ids})
+        entry = self._entry()
+        touched, kept = [], []
+        for f in entry["files"]:
+            i = bisect.bisect_left(ids, f[2])
+            (touched if i < len(ids) and ids[i] <= f[3] else kept).append(f)
+        new = self._rewrite(touched, ids, new_tipo_img) if touched else []
+        return self._commit("merge", entry, kept + new, rewritten=sum(f[1] for f in touched))
 
     # ---- queries ---------------------------------------------------------
     def filtered_paths(

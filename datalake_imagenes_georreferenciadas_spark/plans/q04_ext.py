@@ -159,10 +159,10 @@ SELECT id, tipo0 AS tipo_old, 10 AS tipo_new FROM ids WHERE id % 7 = 0
 
 @register("catalog_snapshot_diff", _SNAPSHOT_DIFF_SQL)
 def catalog_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S15 end-to-end through the versioned store: insert a snapshot,
-    MERGE-update every 7th id (copy-on-write → new snapshot + pointer
-    flip), then DIFF the two time-travel reads — an anti-equi join on
-    (id, id_tipo_img) between ``catalog(version=0)`` and
+    """S15 end-to-end through the versioned store: insert (version 0),
+    MERGE-update every 7th id (file-level copy-on-write → version 1 in
+    the commit log), then DIFF the two time-travel reads — an anti-equi
+    join on (id, id_tipo_img) between ``catalog(version=0)`` and
     ``catalog(version=1)`` reporting exactly the changed rows. The
     oracle reproduces the deterministic id allocation and the %7 update
     set in closed form."""
@@ -170,7 +170,7 @@ def catalog_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r20 (guide §1.2 don't recompute): the returned frame is lazy, so
     # filtering IT re-runs the whole id-allocation plan (documents scan +
     # window + broadcast join); the ids are already durable in the
-    # just-written v0 snapshot — read them back from parquet instead.
+    # just-written v0 files — read them back from parquet instead.
     # Identical ids (fresh store: the snapshot holds exactly the insert).
     update_ids = [
         r["id"]
@@ -215,8 +215,8 @@ def catalog_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit and lands in quarantine. The final output re-derives each
     batch's verdict FROM THE DIRECTORIES (published vs quarantine
     re-read), not from in-memory state — the audit trail a catalog
-    would record. Promotion is a directory rename: same atomic-pointer
-    posture as the catalog store's snapshot flip."""
+    would record. Promotion is a directory rename: the same atomic-rename
+    posture as the catalog store's log commit."""
     base = scratch_dir("wap_")
     orders = table(spark, sf_dir, "orders")
     batches = {

@@ -426,8 +426,8 @@ def corpus_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 def catalog_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot expiry (VACUUM retention): the versioned catalog
     accumulates copy-on-write snapshots on every MERGE; expiry keeps the
-    last K (here 2) and deletes older snapshot directories — bounding
-    time-travel storage exactly like Delta VACUUM / Iceberg
+    last K (here 2) and deletes older log entries and the files only they
+    list — bounding time-travel storage exactly like Delta VACUUM / Iceberg
     expire_snapshots. Builds a real store, advances it through three
     MERGE updates (4 snapshots), reads every snapshot's row count
     BEFORE expiry, expires with keep_last=2, and reports which versions

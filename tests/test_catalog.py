@@ -3,17 +3,20 @@
 
 from __future__ import annotations
 
-import time
+import os
 import uuid
 
 from pyspark.sql import functions as F
 
 from datalake_imagenes_georreferenciadas_spark.catalog.store import (
+    LINEAGE_SCHEMA,
     PROCESO_INGEST,
+    RUNS_SCHEMA,
     TIPO_IMG_GEOTIFF,
     TIPO_IMG_RAW_JPG,
     CatalogStore,
 )
+from perfbench.tracing import Tracer
 
 
 def _rows(spark, n=4):
@@ -45,52 +48,33 @@ def test_run_ids_monotonic(spark, tmp_path):
     assert store.runs().count() == 2
 
 
-def _jobs_in_group(spark, group, fn):
-    """(fn(), number of Spark jobs ``fn`` ran), counted by job group. The
-    status store is fed asynchronously, so wait until the count holds."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs ``fn`` ran), counted by job group with
+    the benchmark's ``Tracer`` after the listener bus has drained."""
+    tracer = Tracer(True, "test")
+    tracer.sc = spark.sparkContext
+    with tracer.span("call", uuid.uuid4().hex):
         out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    st = sc.statusTracker()
-    seen, deadline = -1, time.time() + 10
-    while time.time() < deadline:
-        n = len(st.getJobIdsForGroup(group))
-        if n == seen:
-            break
-        seen = n
-        time.sleep(0.5)
-    return out, seen
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, tracer.spans[-1]["jobs"]
 
 
-def test_start_run_replay_and_next_id_from_one_aggregate(spark, tmp_path):
-    """A replayed ``batch_id`` reuses its run id, a new batch gets
-    max+1, and each call answers both questions with ONE aggregate over
-    the runs table (a new batch adds only the append write of its run
-    row). One aggregate's job count is measured, not assumed: AQE runs
-    its shuffle-map stage as a job of its own."""
+def test_start_run_and_last_id_run_no_spark_job(spark, tmp_path):
+    """A replayed ``batch_id`` reuses its run id and a new batch gets
+    max+1, both answered from the ``_runs/`` listing; ``last_id`` reads
+    the newest log entry. None of the three starts a Spark job."""
     store = CatalogStore(spark, str(tmp_path))
     assert store.start_run(PROCESO_INGEST, batch_id=7) == 1
     assert store.start_run(PROCESO_INGEST, batch_id=8) == 2
-    tag = uuid.uuid4().hex
-    _, one_agg = _jobs_in_group(
-        spark, f"agg_{tag}", lambda: store.runs().agg(F.max("id_ejecucion")).collect()
-    )
-    run, jobs = _jobs_in_group(
-        spark, f"replay_{tag}", lambda: store.start_run(PROCESO_INGEST, batch_id=7)
-    )
-    assert (run, jobs) == (1, one_agg)
-    run, jobs = _jobs_in_group(
-        spark, f"new_{tag}", lambda: store.start_run(PROCESO_INGEST, batch_id=9)
-    )
-    assert (run, jobs) == (3, one_agg + 1)
+    assert _jobs(spark, lambda: store.start_run(PROCESO_INGEST, batch_id=7)) == (1, 0)
+    assert _jobs(spark, lambda: store.start_run(PROCESO_INGEST, batch_id=9)) == (3, 0)
     assert store.start_run(PROCESO_INGEST) == 4
     assert sorted(
         (r["id_ejecucion"], r["batch_id"]) for r in store.runs().collect()
     ) == [(1, 7), (2, 8), (3, 9), (4, None)]
+    assert _jobs(spark, store.last_id) == (0, 0)
+    store.insert_catalog(_rows(spark), 4)
+    assert _jobs(spark, store.last_id) == (4, 0)
 
 
 def test_insert_allocates_ids_and_lineage(spark, tmp_path):
@@ -139,8 +123,8 @@ def test_update_processed_img_repeated_id_keeps_row_set(spark, tmp_path):
 
 
 def test_update_is_versioned_snapshot(spark, tmp_path):
-    """Copy-on-write MERGE: the update lands in a NEW snapshot; the old
-    version stays readable (time travel) and the pointer names the new."""
+    """Copy-on-write MERGE: the update lands in a NEW version; the old
+    version stays readable (time travel) and is no longer current."""
     store = CatalogStore(spark, str(tmp_path))
     run = store.start_run(PROCESO_INGEST)
     store.insert_catalog(_rows(spark), run)
@@ -154,16 +138,99 @@ def test_update_is_versioned_snapshot(spark, tmp_path):
     # a second update stacks another snapshot
     store.update_processed_img(10, [2])
     assert store.catalog_versions() == [0, 1, 2]
-    # inserts go to the CURRENT snapshot
-    run2 = store.start_run(PROCESO_INGEST)
-    store.insert_catalog(_rows(spark, 1), run2)
+
+
+def test_version_is_unchanged_by_a_later_insert(spark, tmp_path):
+    """An insert commits a NEW version; every earlier version, the one
+    a held frame reads included, keeps its rows."""
+    store = CatalogStore(spark, str(tmp_path))
+    store.insert_catalog(_rows(spark), store.start_run(PROCESO_INGEST))
+    store.update_processed_img(10, [2])
+    held = store.catalog()
+    before = sorted(held.collect())
+    store.insert_catalog(_rows(spark, 1), store.start_run(PROCESO_INGEST))
+    assert store.catalog_versions() == [0, 1, 2]
     assert store.catalog().count() == 5
-    assert store.catalog(version=0).count() == 4  # old snapshot untouched
+    assert sorted(store.catalog(version=1).collect()) == before
+    assert sorted(held.collect()) == before
+    assert store.catalog(version=0).count() == 4
+
+
+def test_uncommitted_data_files_are_invisible(spark, tmp_path):
+    """Data files that no log entry lists (a write whose commit never
+    happened) are never read, and expiry deletes them."""
+    store = CatalogStore(spark, str(tmp_path))
+    store.insert_catalog(_rows(spark, 2), store.start_run(PROCESO_INGEST))
+    orphan = store._write(store._with_ids(_rows(spark, 3), store.last_id()))
+    assert orphan and all(os.path.exists(tmp_path / f[0]) for f in orphan)
+    assert store.catalog().count() == 2 and store.last_id() == 2
+    store.insert_catalog(_rows(spark, 1), store.start_run(PROCESO_INGEST))
+    assert sorted(r["id"] for r in store.catalog().collect()) == [1, 2, 3]
+    read = {os.path.basename(p) for p in store.catalog().inputFiles()}
+    assert not read & {os.path.basename(f[0]) for f in orphan}
+    assert store.expire_snapshots(keep_last=1) == [0]
+    assert not any(os.path.exists(tmp_path / f[0]) for f in orphan)
+    assert store.catalog().count() == 3
+
+
+def test_merge_rewrites_only_the_files_it_touches(spark, tmp_path):
+    """A MERGE rewrites the files whose id range holds an updated id and
+    carries every other file path into the new entry unchanged."""
+    store = CatalogStore(spark, str(tmp_path))
+    for n in (3, 2, 4):
+        store.insert_catalog(_rows(spark, n), store.start_run(PROCESO_INGEST))
+    before = store._entry()["files"]
+    assert [(f[2], f[3]) for f in before] == [(1, 3), (4, 5), (6, 9)]
+    store.update_processed_img(10, [4, 5])
+    after = store._entry()
+    assert after["op"] == "merge" and after["rows_rewritten"] == 2
+    assert [f for f in after["files"] if f not in before] != []
+    assert before[0] in after["files"] and before[2] in after["files"]
+    assert before[1] not in after["files"]
+    got = {r["id"]: r["id_tipo_img"] for r in store.catalog().collect()}
+    assert sorted(got) == list(range(1, 10))
+    assert [i for i, t in got.items() if t == 10] == [4, 5]
+    # an id set no file range holds commits a version that rewrites nothing
+    v = store.update_processed_img(10, [99])
+    assert store._entry(v)["files"] == after["files"]
+
+
+def test_lineage_and_runs_keep_their_schemas(spark, tmp_path):
+    store = CatalogStore(spark, str(tmp_path))
+    assert store.lineage().schema == LINEAGE_SCHEMA
+    assert store.runs().schema == RUNS_SCHEMA
+    r1 = store.start_run(PROCESO_INGEST)
+    store.insert_catalog(_rows(spark, 3), r1)
+    r2 = store.start_run(PROCESO_INGEST)
+    store.insert_catalog(_rows(spark, 2), r2)
+    assert store.lineage().schema == LINEAGE_SCHEMA
+    assert sorted(tuple(r) for r in store.lineage().collect()) == [
+        (r1, 1), (r1, 2), (r1, 3), (r2, 4), (r2, 5)
+    ]
+
+
+def test_catalog_read_starts_no_job_past_the_listing_threshold(spark, tmp_path):
+    """``spark.read.parquet`` over more paths than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (default
+    32) lists them with a Spark job; the store folds its smallest files
+    before a commit would list more, so a catalog read stays job-free."""
+    threshold = int(
+        spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
+    )
+    store = CatalogStore(spark, str(tmp_path))
+    rows = _rows(spark, 1).localCheckpoint()
+    for _ in range(threshold + 2):
+        store.insert_catalog(rows, 1)
+    assert len(store._entry()["files"]) <= threshold
+    assert store.last_id() == threshold + 2
+    df, jobs = _jobs(spark, store.catalog)
+    assert jobs == 0
+    assert sorted(r["id"] for r in df.collect()) == list(range(1, threshold + 3))
 
 
 def test_expire_snapshots_keeps_the_newest(spark, tmp_path):
     """Expiry removes every snapshot older than the newest ``keep_last``
-    and leaves the pointer on the current one; a history no longer than
+    and keeps the current one; a history no longer than
     ``keep_last`` is kept whole."""
     store = CatalogStore(spark, str(tmp_path))
     store.insert_catalog(_rows(spark), store.start_run(PROCESO_INGEST))

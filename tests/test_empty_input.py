@@ -57,3 +57,16 @@ def test_query_executes_on_empty_input(spark, axis_sf, name):
 
     out = queries()[name](spark, axis_sf("empty"))
     out.collect()  # executing, not asserting rows: empty in != empty out
+
+
+def test_tdigest_quantiles_over_empty_input_are_one_row_each(spark, axis_sf):
+    """Over zero rows the t-digest queries return what the global
+    aggregate they mirror returns: one row per requested quantile, with
+    n_total 0 and a NULL exact quantile."""
+    from __spark_entry__ import queries
+
+    from datalake_imagenes_georreferenciadas_spark.plans.q07_north_star import _TDIGEST_QS
+
+    for name in ("a19_tdigest_quantile", "streaming_tdigest"):
+        rows = queries()[name](spark, axis_sf("empty")).collect()
+        assert [tuple(r) for r in rows] == [(q, 0, None, True) for q in _TDIGEST_QS], name

@@ -57,7 +57,7 @@ def _plan(df, capsys) -> str:
 def test_local_frame_schema_equals_parsed_ddl_at_every_site(spark):
     sites = _site_ddls()
     assert RINGS_DDL in {ddl for _, _, ddl in sites}
-    assert len(sites) >= 12
+    assert len(sites) >= 11
     for mod, line, ddl in sites:
         assert local_frame(spark, [], ddl).schema == _parse_datatype_string(ddl), (mod, line)
 

@@ -1,8 +1,9 @@
 """Python-kernel review gate (r09, the g1_trend_fit lesson): every
 JVM<->Python boundary — ``applyInPandas`` / ``mapInPandas`` /
 ``mapInArrow`` / ``applyInPandasWithState`` / ``pandas_udf`` /
-``udtf`` / row-at-a-time ``F.udf`` — pays per-batch Arrow transfer
-plus a Python worker pool, so it is ONLY allowed where no JVM built-in
+``udtf`` / ``spark.dataSource.register`` (a Python DataSource, whose
+scan runs in a Python worker) / row-at-a-time ``F.udf`` — pays
+per-batch Arrow transfer plus a Python worker pool, so it is ONLY allowed where no JVM built-in
 can express the kernel: byte-level decode of binary columns, archive
 codecs, stateful sketch merges with no closed form, cogrouped custom
 reconciliation, or the Python API surface itself being the component
@@ -50,6 +51,8 @@ KERNEL_ATTRS = {
 }
 # Bare/attribute function names that build Python-eval expressions.
 FACTORY_NAMES = {"pandas_udf", "udtf"}
+# ``spark.<name>.register`` calls that add a Python surface to the session.
+REGISTRIES = {"udtf", "dataSource"}
 # Never allowed anywhere: the row-at-a-time path.
 FORBIDDEN_NAMES = {"udf"}
 # The only call site that may build a DataFrame from driver-side data.
@@ -75,6 +78,9 @@ ALLOWED: dict[tuple[str, str], int] = {
     # 2 sites: the @udtf(returnType=...) decorator + spark.udtf.register
     # (the register form is counted since the r10 scanner tightening)
     ("plans/q04_ext.py", "f18_python_udtf"): 2,  # the UDTF surface itself
+    # a Python DataSource: EXIF/GeoTIFF decode inside the scan, so only
+    # typed rows leave the worker (sources/binary.py ships whole blobs)
+    ("sources/pyds.py", "register_exifscan"): 1,
 }
 
 # One body per kernel: a second body picked by an import probe never runs
@@ -84,7 +90,7 @@ PROBE_EXCEPTIONS = {"ImportError", "ModuleNotFoundError"}
 PRIVATE_HANDLES = {"_jc", "_jdf", "_jvm", "_jsc"}
 
 
-def _scan(files, root: Path, names=KERNEL_ATTRS | FACTORY_NAMES):
+def _scan(files, root: Path, names=KERNEL_ATTRS | FACTORY_NAMES | REGISTRIES):
     """(site -> count of calls/decorators in ``names``, forbidden sites).
     Bare decorators (@udtf / @pandas_udf / @udf with no parentheses)
     count too — r09 ADVICE #2: they escaped both checks."""
@@ -98,23 +104,29 @@ def _scan(files, root: Path, names=KERNEL_ATTRS | FACTORY_NAMES):
         if name == "register" and isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
             # r09 ADVICE #2: spark.udf.register(name, fn) builds the same
             # row-at-a-time eval path as F.udf but the Call's attr is
-            # 'register', so it escaped the ban. spark.udtf.register is
-            # the UDTF surface — a kernel site needing review, not an
-            # outright ban.
+            # 'register', so it escaped the ban. spark.udtf.register (the
+            # UDTF surface) and spark.dataSource.register (a Python scan)
+            # are kernel sites needing review, not an outright ban.
             base = callee_name(node.func.value)
             if base == "udf":
                 forbidden.append(site)
-            elif base == "udtf" and "udtf" in names:
+            elif base in REGISTRIES and base in names:
                 kernels[site] += 1
     return dict(kernels), forbidden
 
 
-def test_every_python_kernel_site_is_reviewed():
-    found, _ = _scan(sorted(PKG.rglob("*.py")), PKG)
+def _unreviewed(found: dict) -> tuple[dict, dict]:
+    """(sites not in ALLOWED, sites with more calls than ALLOWED says)."""
     new = {k: v for k, v in found.items() if k not in ALLOWED}
     grown = {
         k: (v, ALLOWED[k]) for k, v in found.items() if k in ALLOWED and v > ALLOWED[k]
     }
+    return new, grown
+
+
+def test_every_python_kernel_site_is_reviewed():
+    found, _ = _scan(sorted(PKG.rglob("*.py")), PKG)
+    new, grown = _unreviewed(found)
     assert not new and not grown, (
         "unreviewed Python-kernel call sites (add to ALLOWED only if no "
         f"JVM built-in can express the kernel): new={new} grown={grown}"
@@ -188,7 +200,7 @@ def test_second_body_scanner_catches_probes_and_handles(tmp_path):
     ]
 
 
-def _scan_src(src: str, tmp_path, names=KERNEL_ATTRS | FACTORY_NAMES):
+def _scan_src(src: str, tmp_path, names=KERNEL_ATTRS | FACTORY_NAMES | REGISTRIES):
     f = tmp_path / "m.py"
     f.write_text(src)
     return _scan([f], tmp_path, names)
@@ -249,3 +261,15 @@ def test_scanner_catches_bare_decorators(tmp_path):
         tmp_path,
     )
     assert kernels3 == {("m.py", "k"): 1}
+
+
+def test_scanner_catches_datasource_register(tmp_path):
+    """``spark.dataSource.register`` adds a Python scan: an unlisted one
+    fails the gate, and the package's one site is the listed one."""
+    kernels, forbidden = _scan_src(
+        "def setup(spark):\n    spark.dataSource.register(Src)\n", tmp_path
+    )
+    assert not forbidden and kernels == {("m.py", "setup"): 1}
+    assert _unreviewed(kernels) == ({("m.py", "setup"): 1}, {})
+    found, _ = _scan(sorted(PKG.rglob("*.py")), PKG, {"dataSource"})
+    assert found == {("sources/pyds.py", "register_exifscan"): 1}

@@ -58,6 +58,45 @@ def test_file_ingest_lands_catalog_and_lineage(spark, tmp_path):
     assert {r["codigo"] for r in cat} == {"C1", "C2", "C3"}
 
 
+def test_file_ingest_replays_a_crash_between_write_and_commit(spark, tmp_path, monkeypatch):
+    """The first delivery's data files are written but its log entry
+    never commits (the commit raises). The replayed delivery lands the
+    batch exactly once: one run, one catalog row and one lineage row
+    per image, and the orphaned files are never read."""
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    store = CatalogStore(spark, str(tmp_path / "cat"))
+    spark.createDataFrame(
+        [(1, "C1", "lake/C1/1.jpg"), (2, "C2", "lake/C2/2.jpg")], SRC_SCHEMA
+    ).write.parquet(os.path.join(src, "b1"))
+    commit = store._commit
+    orphans = []
+
+    def crash_once(*a, **k):
+        monkeypatch.setattr(store, "_commit", commit)
+        orphans.extend(os.path.join(store.root, f[0]) for f in a[2])
+        raise OSError("crash before the log entry")
+
+    monkeypatch.setattr(store, "_commit", crash_once)
+    q = start_file_ingest(spark, os.path.join(src, "*"), ckpt, store, SRC_SCHEMA, _to_rows)
+    with pytest.raises(Exception, match="crash before the log entry"):
+        q.awaitTermination()
+    assert orphans and all(os.path.exists(p) for p in orphans)
+    assert store.catalog_versions() == [] and store.catalog().count() == 0
+
+    q = start_file_ingest(spark, os.path.join(src, "*"), ckpt, store, SRC_SCHEMA, _to_rows)
+    q.awaitTermination()
+    cat = store.catalog()
+    assert sorted((r["id"], r["ruta_resultado"]) for r in cat.collect()) == [
+        (1, "lake/C1/1.jpg"),
+        (2, "lake/C2/2.jpg"),
+    ]
+    assert [(r["id_ejecucion"], r["batch_id"]) for r in store.runs().collect()] == [(1, 0)]
+    assert sorted(tuple(r) for r in store.lineage().collect()) == [(1, 1), (1, 2)]
+    assert all(os.path.exists(p) for p in orphans)
+    read = {os.path.basename(p) for p in cat.inputFiles()}
+    assert not read & {os.path.basename(p) for p in orphans}
+
+
 def test_sessionize_gap_semantics(spark):
     import datetime as dt
 
