@@ -43,8 +43,8 @@ from datalake_imagenes_georreferenciadas_spark.session import get_spark
 # unparseable (r02/r03/r05 all failed this way; line LENGTH is the
 # mechanism, not extra keys). So the stdout `queries` dict carries ONLY
 # this bounded headline set (48 names ≈ 1.4 kB, the size r04 parsed
-# fine); everything in EXTENDED_QUERIES is still timed every run but its
-# numbers live in BENCH_DETAIL.json + stderr only.
+# fine); a full run (``timed_names``) times every other registered query
+# too, but those numbers live in BENCH_DETAIL.json + stderr only.
 BENCH_QUERIES = [
     "catalog_filtered_join",
     "a4_group_agg",
@@ -96,169 +96,21 @@ BENCH_QUERIES = [
     "graph_triangles",
 ]
 
-# Timed every run (regressions stay visible in BENCH_DETAIL.json and the
-# per-query stderr lines) but EXCLUDED from the stdout JSON line so it
-# stays under the driver's 2,000-byte tail capture.
-EXTENDED_QUERIES = [
-    # r05 breadth: the families externally verified in round 4 join the
-    # bench so regressions in them are visible round-over-round
-    "sub_scalar",
-    "sub_in",
-    "sub_correlated_scalar",
-    "j1_correlated_exists",
-    "a4_pivot",
-    "a4_unpivot",
-    "a4_percentiles",
-    "a4_grouping_sets",
-    "a4_histogram",
-    "w4_rank_funcs",
-    "w5_range_frame",
-    "w6_distribution_funcs",
-    "w7_gap_fill",
-    "streaming_session",
-    "streaming_stream_join",
-    "text_quality_filter",
-    "text_edit_distance",
-    "geo_reproject_centroid",
-    "f17_cosine_pandas",
-    "dedup_corpus_chunks",
-    "text_rarity_score",
-    "dedup_semantic_components",
-    "ann_sq8_topk",
-    "multimodal_resize",
-    "ann_sq8_recall",
-    # r06 additions: embedded-Derby JDBC, exact inverse-TM, bigram LM
-    # gate, containment dedup, GeoTIFF byte roundtrip, bounded BFS
-    "s9_jdbc_roundtrip",
-    "geo_utm_inverse_grid",
-    "text_bigram_fluency",
-    "dedup_containment",
-    "s8_geotiff_meta_scan",
-    "graph_bfs_distance",
-    "ts_ewma",
-    "ann_matryoshka_recall",
-    "f14_variant_extract",
-    "j_dynamic_partition_pruning",
-    "s1_python_datasource",
-    "ann_pq_topk",
-    "streaming_foreachbatch_merge",
-    "geo_utm_forward_grid",
-    "s2_7z_extract",
-    "a19_tdigest_quantile",
-    "hybrid_maxsim_topk",
-    "s25_xml_roundtrip",
-    "w12_reset_running_sum",
-    "ml_feature_hashing",
-    "streaming_tdigest",
-    "j_scd2_asof",
-    "a22_weighted_quantile",
-    "geo_areal_weighted",
-    "a23_bitmap_distinct",
-    "ml_target_encoding",
-    "j_range_bucketed",
-    "catalog_wap_publish",
-    "graph_item_similarity",
-    "geo_tile_pyramid",
-    "streaming_cdc_apply",
-    "text_tfidf_topk",
-    "geo_edge_crossings",
-    "geo_knn_grid",
-    "a4_pivot_dynamic",
-    "j_late_arriving_dim",
-    # r07 additions: time-series bars/changepoints, DSIR selection,
-    # ranking/classification evals, IVF-PQ + nprobe curve, IVM refresh,
-    # geohash, phrase search, freshness/Benford DQ, modularity
-    "ts_ohlc_resample",
-    "dq_benford",
-    "pipeline_dsir_weights",
-    "ml_chi2_tokens",
-    "streaming_static_join",
-    "ts_cusum_alerts",
-    "text_entropy_quality",
-    "ann_ivfpq_topk",
-    "ml_auc_exact",
-    "ml_calibration_bins",
-    "geo_geohash_cells",
-    "dedup_minhash_accuracy",
-    "ann_nprobe_curve",
-    "emb_dim_stats",
-    "dq_freshness_sla",
-    "text_phrase_search",
-    "graph_modularity",
-    "ml_ndcg_at10",
-    "ivm_join_delta",
-    "s26_dynamic_overwrite",
-    # r07 late additions: ER/linkage, retrieval diversity, graph IVM,
-    # attribution, trajectory, eval-suite completions, DQ channels
-    "j_asof_nearest",
-    "ml_prf1_eval",
-    "corpus_mixture_temperature",
-    "catalog_snapshot_expire",
-    "f19_url_parse",
-    "f20_ip_cidr",
-    "graph_degree_distribution",
-    "multimodal_ahash_pairs",
-    "multimodal_ahash_pairs_wide",
-    "er_fuzzy_match",
-    "a24_seq_motifs",
-    "geo_track_resample",
-    "dq_schema_contract",
-    "j_shuffle_hash_hint",
-    "ml_knn_classifier",
-    "dq_quarantine_reasons",
-    "pipeline_span_corruption",
-    "pipeline_padding_waste",
-    "ts_business_days",
-    "ab_test_zscore",
-    "geo_snap_simplify",
-    "j_mark_join_flags",
-    "emb_outlier_zscore",
-    "ml_lift_table",
-    "text_keyphrase_rake",
-    "graph_incremental_components",
-    "ts_autocorrelation",
-    "attribution_last_touch",
-    "s27_csv_badrecords",
-    "hybrid_mmr_topk",
-    "ts_local_peaks",
-    "a25_skyline_2d",
-    "geo_quadtree_cells",
-    "ts_wma",
-    "multimodal_scene_cuts",
-    "graph_assoc_rules",
-    "ts_spc_limits",
-    "streaming_append_windows",
-    "ts_seasonal_adjust",
-    "s28_column_rename_evolution",
-    "ann_cell_balance",
-    "ts_naive_forecast_mae",
-    "seq_regex_funnel",
-    "pipeline_dataset_card",
-    "dq_duplicate_payments",
-    "emb_centroid_drift",
-    "ts_bollinger_breaches",
-    "ts_max_drawdown",
-    "corpus_token_apportion",
-    "f21_luhn_check",
-]
 
-# SPARK_GRAFT_BENCH_FULL=1 extends the timed set to EVERY registered
-# query (registration order, so the list is stable round-over-round).
-# The stdout JSON line still carries only the 48 headline queries —
-# the driver contract is unchanged; the full set lands in
-# BENCH_DETAIL.json. The builder's closing run uses this so no query
-# ships without ever having been timed at sf0.1 (a correctness-green
-# query can still hide a scale pathology the sf0.01 oracle runs never
-# surface).
-if os.environ.get("SPARK_GRAFT_BENCH_FULL"):
-    from datalake_imagenes_georreferenciadas_spark.plans.queries import (
-        QUERIES as _ALL_REGISTERED,
-    )
 
-    _timed = set(BENCH_QUERIES) | set(EXTENDED_QUERIES)
-    EXTENDED_QUERIES = EXTENDED_QUERIES + [
-        n for n in _ALL_REGISTERED if n not in _timed
-    ]
+def timed_names() -> list[str]:
+    """The names one run times, in order: the 48 headline names, then,
+    with ``SPARK_GRAFT_BENCH_FULL=1``, every other registered query in
+    registration order (stable round-over-round). The stdout JSON line
+    carries only the headline names either way; the full set lands in
+    BENCH_DETAIL.json, so no query ships without having been timed at
+    sf0.1 (a correctness-green query can still hide a scale pathology
+    the sf0.01 oracle runs never surface)."""
+    if not os.environ.get("SPARK_GRAFT_BENCH_FULL"):
+        return list(BENCH_QUERIES)
+    from datalake_imagenes_georreferenciadas_spark.plans.queries import QUERIES
+
+    return BENCH_QUERIES + [n for n in QUERIES if n not in BENCH_QUERIES]
 
 
 def materialize(df) -> int:
@@ -284,7 +136,7 @@ def warm_up(spark, sf_dir: str):
     for t in TABLE_NAMES:
         load(spark, sf_dir, t).count()
     t0 = time.time()
-    shingles = _exploded_shingles(load(spark, sf_dir, "documents"), "doc_id", "text", 3)
+    shingles = _exploded_shingles(load(spark, sf_dir, "documents"), 3)
     shingles.cache()
     shingles.count()
     print(f"# shingle cache staged: {time.time() - t0:.3f}s", file=sys.stderr)
@@ -318,20 +170,18 @@ def main() -> None:
 
     # HEADLINE-FIRST METHODOLOGY (r09 VERDICT task 4): the 48 stdout
     # headline queries are timed at the START of the session, before any
-    # EXTENDED/FULL-registry query executes, so the driver-contract
-    # `value` is a fresh-session number comparable round-over-round
-    # regardless of how large the extended set grows (FULL mode times
-    # 330 queries; deep-session state — e.g. the documented
+    # FULL-registry query executes, so the driver-contract `value` is a
+    # fresh-session number comparable round-over-round (FULL mode times
+    # 338 queries; deep-session state — e.g. the documented
     # a5_approx_distinct position-~230 anomaly — must never leak into
     # the headline sum). Pinned by tests/test_output_schemas.py:
-    # the run order is BENCH_QUERIES + EXTENDED_QUERIES and FULL mode
-    # only APPENDS to EXTENDED_QUERIES.
+    # timed_names() starts with BENCH_QUERIES and FULL mode only APPENDS.
     warm: dict[str, float] = {}
     cold: dict[str, float] = {}
     spread: dict[str, float] = {}
     headline_elapsed = None
     run_start = time.time()
-    for name in BENCH_QUERIES + EXTENDED_QUERIES:
+    for name in timed_names():
         t0 = time.time()
         n = materialize(queries[name](spark, sf_dir))
         cold[name] = round(time.time() - t0, 3)
@@ -362,14 +212,14 @@ def main() -> None:
             headline_elapsed = round(time.time() - run_start, 3)
             print(
                 f"# headline-48 portion complete at {headline_elapsed}s "
-                "(extended set starts now — stdout sum is already fixed)",
+                "(the rest of a full run starts now — stdout sum is already fixed)",
                 file=sys.stderr,
             )
     shingle_base.unpersist()
 
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # Full per-query detail (warm + cold, headline + extended) goes to a
+    # Full per-query detail (warm + cold, every timed name) goes to a
     # side file + stderr; the stdout JSON line carries EXACTLY the
     # driver-contract keys with the headline subset only.
     detail = {
@@ -379,7 +229,7 @@ def main() -> None:
         "cold_total": round(sum(cold.values()), 3),
         "headline_names": BENCH_QUERIES,
         # wall-clock when the 48th headline query finished — proof the
-        # stdout sum was measured fresh-session, before the extension
+        # stdout sum was measured fresh-session, before the full-run tail
         "headline_elapsed": headline_elapsed,
         "sf": sf_val,
         # noise indicators: host load at session start/end + per-query

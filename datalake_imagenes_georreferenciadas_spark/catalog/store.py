@@ -13,14 +13,14 @@ shape of Armbrust et al., VLDB 2020, on plain parquet):
   is written once and never changed; it is only deleted by
   ``expire_snapshots`` once no retained log entry lists it.
 - ``_log/<N>.json`` — one entry per catalog commit (an insert or a
-  MERGE), made visible by an atomic rename. An entry lists every live
+  MERGE), published put-if-absent (``_write_json``). An entry lists every live
   file of version ``N`` with its row count and min/max ``id`` (read on
   the driver from the parquet footers), the next catalog id, every
   insert's lineage as ``(run id, first id, last id)`` and the commit's
   kind, rows added and rows rewritten. Files a crashed commit wrote are
   listed by no entry, so no read ever sees them.
-- ``_runs/r<id>[_b<batch>].json`` — one record per run, also renamed
-  into place; the file name alone answers the replay lookup and the
+- ``_runs/r<id>[_b<batch>].json`` — one record per run, also published
+  put-if-absent; the file name alone answers the replay lookup and the
   next run id.
 
 So run ids, the next catalog id, ``runs()`` and ``lineage()`` cost no
@@ -37,13 +37,17 @@ Design notes vs the reference:
   counts — the zipWithIndex pattern (see ``_with_ids``). The ids of one
   insert are the dense range ``base+1 .. base+n``, so its lineage is
   exactly one ``(run, first, last)`` triple.
-- Writer concurrency: the store assumes ONE writer at a time (the
-  reference's cron posture — one script run per schedule). Two concurrent
-  writers could mint colliding run/catalog ids or both commit version
-  ``N``: the rename replaces, it does not refuse. Multi-writer
-  coordination needs a put-if-absent commit (Delta/Iceberg — the
-  documented production path); this emulation keeps the single-writer
-  contract explicit instead of half-locking around it.
+- Writer concurrency: a commit is put-if-absent, so of two writers
+  that both read version ``N - 1`` and then commit ``N``, the second
+  gets ``FileExistsError`` and the first writer's entry stands; the
+  loser's data files stay unlisted until ``expire_snapshots`` removes
+  them. The loser is not retried: it must re-read the log and redo its
+  work (Delta's optimistic concurrency, without the automatic retry).
+  The same holds for two runs minting one id with the same record name;
+  records of one id under different names (``r<N>.json``,
+  ``r<N>_b<batch>.json``) both land, so the store still expects one
+  run-minting writer at a time (the reference's cron posture — one
+  script run per schedule).
 - ``update_processed_img`` (mysql_process.py:83-91) row-at-a-time UPDATE →
   a file-level copy-on-write MERGE: only the files whose ``[min, max]``
   id range holds an updated id are rewritten; the rest carry over to the
@@ -129,12 +133,17 @@ _EMPTY = {"files": [], "next_id": 1, "lineage": []}
 
 
 def _write_json(path: str, obj) -> None:
-    """Write ``obj`` to ``path`` by an atomic rename: a reader sees the
-    whole record or none."""
-    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
+    """Publish ``obj`` at ``path`` unless a record is already there: write
+    a uniquely named temp file, then hard-link it into place. A reader
+    sees the whole record or none, and a writer that lost the race for
+    ``path`` gets ``FileExistsError`` instead of replacing the record."""
+    tmp = os.path.join(os.path.dirname(path), f".{uuid.uuid4().hex}.tmp")
     with open(tmp, "w") as f:
         json.dump(obj, f)
-    os.replace(tmp, path)
+    try:
+        os.link(tmp, path)
+    finally:
+        os.remove(tmp)
 
 
 def _footer(path: str) -> tuple[int, int | None, int | None]:

@@ -112,9 +112,10 @@ def dist2(ax: Column, ay: Column, bx: Column, by: Column) -> Column:
     return (ax - bx) * (ax - bx) + (ay - by) * (ay - by)
 
 
-def reproject_utm_to_wgs84_approx(x: Column, y: Column, zone: int = 18, south: bool = True) -> Column:
+def reproject_utm_to_wgs84_approx(x: Column, y: Column, zone: int = 18) -> Column:
     """F9: inverse-Mercator-style approximation of UTM→WGS84 as
-    ``struct<lon,lat>``.
+    ``struct<lon,lat>`` for a southern-hemisphere zone (the reference's
+    EPSG:32718 is UTM 18S, script_geo.py:33-39).
 
     Pure column arithmetic both engines reproduce bit-for-bit; the
     oracles replay it. :func:`reproject_utm_to_wgs84_exact` is the
@@ -124,8 +125,7 @@ def reproject_utm_to_wgs84_approx(x: Column, y: Column, zone: int = 18, south: b
     lon0 = F.lit(float(zone * 6 - 183))
     k0 = 0.9996
     r = 6378137.0
-    false_n = 10000000.0 if south else 0.0
-    lat = (y - F.lit(false_n)) / F.lit(k0 * r) * F.lit(180.0 / 3.141592653589793)
+    lat = (y - F.lit(10000000.0)) / F.lit(k0 * r) * F.lit(180.0 / 3.141592653589793)
     lon = lon0 + (x - F.lit(500000.0)) / F.lit(k0 * r) * F.lit(180.0 / 3.141592653589793)
     return F.struct(lon.alias("lon"), lat.alias("lat"))
 
@@ -249,25 +249,21 @@ def utm_inverse_steps(
     ]
 
 
-def reproject_utm_to_wgs84_exact(
-    df, x_col: str, y_col: str, zone: int = 19, south: bool = True
-):
-    """Apply the exact inverse-TM series to a DataFrame: adds ``lon`` /
-    ``lat`` columns (dropping the ``__*`` intermediates). Pure JVM-side
-    column arithmetic — whole-stage-codegen friendly, no UDF."""
-    steps = utm_inverse_steps(x_col, y_col, zone, south)
+def reproject_utm_to_wgs84_exact(df, x_col: str, y_col: str):
+    """Apply the exact inverse-TM series (UTM 19S) to a DataFrame: adds
+    ``lon`` / ``lat`` columns (dropping the ``__*`` intermediates). Pure
+    JVM-side column arithmetic — whole-stage-codegen friendly, no UDF."""
+    steps = utm_inverse_steps(x_col, y_col)
     for name, expr in steps:
         df = df.withColumn(name, F.expr(expr))
     return df.drop(*[n for n, _ in steps if n.startswith("__")])
 
 
-def utm_inverse_sql(
-    source_sql: str, x_expr: str, y_expr: str, zone: int = 19, south: bool = True
-) -> str:
+def utm_inverse_sql(source_sql: str, x_expr: str, y_expr: str) -> str:
     """DuckDB twin: the same steps as nested selects over ``source_sql``
     (a relation producing ``x_expr``/``y_expr``)."""
     q = source_sql
-    for name, expr in utm_inverse_steps(x_expr, y_expr, zone, south):
+    for name, expr in utm_inverse_steps(x_expr, y_expr):
         q = f"SELECT *, {expr} AS {name} FROM ({q})"
     return q
 
@@ -321,22 +317,18 @@ def utm_forward_steps(
     ]
 
 
-def reproject_wgs84_to_utm_exact(
-    df, lat_col: str, lon_col: str, zone: int = 19, south: bool = True
-):
-    """Apply the forward-TM series: adds ``easting``/``northing``
+def reproject_wgs84_to_utm_exact(df, lat_col: str, lon_col: str):
+    """Apply the forward-TM series (UTM 19S): adds ``easting``/``northing``
     columns (dropping intermediates). Pure JVM column arithmetic."""
-    steps = utm_forward_steps(lat_col, lon_col, zone, south)
+    steps = utm_forward_steps(lat_col, lon_col)
     for name, expr in steps:
         df = df.withColumn(name, F.expr(expr))
     return df.drop(*[n for n, _ in steps if n.startswith("__")])
 
 
-def utm_forward_sql(
-    source_sql: str, lat_expr: str, lon_expr: str, zone: int = 19, south: bool = True
-) -> str:
+def utm_forward_sql(source_sql: str, lat_expr: str, lon_expr: str) -> str:
     """DuckDB twin of :func:`reproject_wgs84_to_utm_exact`."""
     q = source_sql
-    for name, expr in utm_forward_steps(lat_expr, lon_expr, zone, south):
+    for name, expr in utm_forward_steps(lat_expr, lon_expr):
         q = f"SELECT *, {expr} AS {name} FROM ({q})"
     return q

@@ -88,17 +88,17 @@ def lang_guess_sql(text: str) -> str:
     )
 
 
-def fingerprint(text: Column, k: int = 3) -> Column:
-    """Document fingerprint: min shingle-hash (a 1-hash MinHash — the
+def fingerprint(text: Column) -> Column:
+    """Document fingerprint: min 3-shingle hash (a 1-hash MinHash — the
     winnowing-style rolling-hash fingerprint reduced to its Spark shape)."""
     return F.coalesce(
-        F.array_min(F.transform(shingles(text, k), lambda sh: hash64(sh, seed=0))),
+        F.array_min(F.transform(shingles(text, 3), lambda sh: hash64(sh, seed=0))),
         hash64(F.lower(text), seed=0),
     )
 
 
-def fingerprint_sql(text: str, k: int = 3) -> str:
+def fingerprint_sql(text: str) -> str:
     return (
-        f"coalesce(list_min([{hash64_sql('sh', 0)} FOR sh IN {shingles_sql(text, k)}]), "
+        f"coalesce(list_min([{hash64_sql('sh', 0)} FOR sh IN {shingles_sql(text, 3)}]), "
         f"{hash64_sql(f'lower({text})', 0)})"
     )

@@ -23,17 +23,20 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+#: the key both joins partition on, and the as-of timestamp column
+KEY = "user_id"
+TS = "ts"
+
 
 def asof_join(
     left: DataFrame,
     right: DataFrame,
-    keys: Sequence[str],
-    ts_col: str = "ts",
     right_value_cols: Sequence[str] | None = None,
 ) -> DataFrame:
-    """For each left row, the right row with the greatest ``ts`` ≤ left's.
+    """For each left row, the right row of its ``user_id`` with the
+    greatest ``ts`` ≤ left's.
 
-    Right should be unique per (keys, ts) — pre-aggregate if not, or the
+    Right should be unique per (user_id, ts) — pre-aggregate if not, or the
     winner among equal timestamps is the union order (nondeterministic).
     Output: all left columns + ``right_value_cols`` + ``asof_ts``, the
     matched right row's ``ts`` (null when no prior right row exists —
@@ -46,16 +49,16 @@ def asof_join(
     the newer row's timestamp).
     """
     if right_value_cols is None:
-        right_value_cols = [c for c in right.columns if c not in (*keys, ts_col)]
+        right_value_cols = [c for c in right.columns if c not in (KEY, TS)]
 
-    left_payload = [c for c in left.columns if c not in (*keys, ts_col)]
+    left_payload = [c for c in left.columns if c not in (KEY, TS)]
     r_struct = F.struct(
-        F.col(ts_col).alias("__ts"),
+        F.col(TS).alias("__ts"),
         *[F.col(c).alias(c) for c in right_value_cols],
     )
     null_r = F.lit(None).cast(
         "struct<__ts:"
-        + right.schema[ts_col].dataType.simpleString()
+        + right.schema[TS].dataType.simpleString()
         + ","
         + ",".join(
             f"{c}:{right.schema[c].dataType.simpleString()}" for c in right_value_cols
@@ -63,15 +66,15 @@ def asof_join(
         + ">"
     )
     lt = left.select(
-        *keys,
-        F.col(ts_col),
+        KEY,
+        F.col(TS),
         F.lit(1).alias("__is_left"),
         *[F.col(c) for c in left_payload],
         null_r.alias("__r"),
     )
     rt = right.select(
-        *keys,
-        F.col(ts_col),
+        KEY,
+        F.col(TS),
         F.lit(0).alias("__is_left"),
         *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_payload],
         r_struct.alias("__r"),
@@ -79,14 +82,14 @@ def asof_join(
     u = lt.unionByName(rt)
     # right rows (__is_left=0) sort before left at equal ts → "<=" semantics
     w = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(ts_col), F.col("__is_left"))
+        Window.partitionBy(KEY)
+        .orderBy(F.col(TS), F.col("__is_left"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     matched = F.last(F.col("__r"), ignorenulls=True).over(w)
     filled = u.select(
-        *keys,
-        ts_col,
+        KEY,
+        TS,
         "__is_left",
         *left_payload,
         *[matched[c].alias(c) for c in right_value_cols],
@@ -98,7 +101,6 @@ def asof_join(
 def range_join(
     left: DataFrame,
     right: DataFrame,
-    keys: Sequence[str],
     left_ts: Column,
     right_ts: Column,
     lower: Column,
@@ -106,24 +108,24 @@ def range_join(
     how: str = "inner",
 ) -> DataFrame:
     """Equi-key join with a time-range residual: ``right_ts ∈ [left_ts +
-    lower, left_ts + upper]``. The equality on ``keys`` keeps this a hash
-    join (shuffle-partitionable); the range is a post-join filter."""
-    cond = None
-    for k in keys:
-        c = left[k] == right[k]
-        cond = c if cond is None else (cond & c)
-    cond = cond & (right_ts >= left_ts + lower) & (right_ts <= left_ts + upper)
+    lower, left_ts + upper]``. The equality on ``user_id`` keeps this a
+    hash join (shuffle-partitionable); the range is a post-join filter."""
+    cond = (
+        (left[KEY] == right[KEY]) & (right_ts >= left_ts + lower) & (right_ts <= left_ts + upper)
+    )
     return left.join(right, cond, how)
 
 
 #: resample_interpolate's outlier fail-safe: 1M hourly steps ≈ 114 years.
 MAX_STEPS_PER_KEY = 1_000_000
+#: resample_interpolate's grid step: hourly
+STEP_SECONDS = 3600
 
 
-def resample_interpolate(events: DataFrame, step_seconds: int = 3600) -> DataFrame:
+def resample_interpolate(events: DataFrame) -> DataFrame:
     """Time-series resample with LINEAR INTERPOLATION of
     ``events(user_id, ts, value, event_id)``: for every
-    ``step_seconds`` grid point inside each user's [min ts, max ts], the
+    ``STEP_SECONDS`` grid point inside each user's [min ts, max ts], the
     value interpolated between the latest event at-or-before and the
     earliest event strictly after the grid point (last grid point may
     have no successor → carries the previous value).
@@ -165,7 +167,7 @@ def resample_interpolate(events: DataFrame, step_seconds: int = 3600) -> DataFra
         F.col("event_id").cast("long").alias("__tb"),
     )
     bounds = e.groupBy("__k").agg(F.min("__x").alias("__lo"), F.max("__x").alias("__hi"))
-    n_steps = f"(__hi div {step_seconds}) - (__lo div {step_seconds})"
+    n_steps = f"(__hi div {STEP_SECONDS}) - (__lo div {STEP_SECONDS})"
     grid = bounds.select(
         "__k",
         F.explode(
@@ -174,11 +176,11 @@ def resample_interpolate(events: DataFrame, step_seconds: int = 3600) -> DataFra
                 f"raise_error(concat('resample_interpolate: key ', cast(__k as string), "
                 f"' spans ', cast({n_steps} as string), ' grid steps >= max_steps_per_key="
                 f"{MAX_STEPS_PER_KEY} — corrupt outlier timestamp?')) "
-                f"ELSE sequence((__lo + {step_seconds - 1}) div {step_seconds},"
-                f" __hi div {step_seconds}) END"
+                f"ELSE sequence((__lo + {STEP_SECONDS - 1}) div {STEP_SECONDS},"
+                f" __hi div {STEP_SECONDS}) END"
             )
         ).alias("__g"),
-    ).select("__k", (F.col("__g") * step_seconds).alias("__x"))
+    ).select("__k", (F.col("__g") * STEP_SECONDS).alias("__x"))
     pt = F.struct(F.col("__x").alias("x"), F.col("__v").alias("v"))
     ev_rows = e.select("__k", "__x", F.lit(0).alias("__is_grid"), pt.alias("__pt"), "__tb")
     null_pt = F.lit(None).cast("struct<x:bigint,v:double>")

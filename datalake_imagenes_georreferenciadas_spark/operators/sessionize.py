@@ -1,6 +1,6 @@
 """Sessionization and event-window operators over the ``events`` table
-(SURVEY §2.9 EXT). Batch twins of the streaming windows in
-``streaming.windows`` — same semantics, oracle-checkable.
+(SURVEY §2.9 EXT), oracle-checkable in batch; ``tumbling_window_agg``
+runs unchanged on a watermarked stream.
 
 Session windows in batch are the classic gaps-and-islands plan: lag(ts)
 per user → gap > threshold starts a new island → running count names the
@@ -13,8 +13,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def sessionize(events: DataFrame, gap_minutes: float = 30.0) -> DataFrame:
-    """Assign a session id per (user_id, gap>threshold island) of
+def sessionize(events: DataFrame) -> DataFrame:
+    """Assign a session id per (user_id, gap > 30 minutes island) of
     ``events(user_id, ts, event_id)``.
 
     Ordering contract (r16): callers exclude NULL event times (a row
@@ -25,11 +25,10 @@ def sessionize(events: DataFrame, gap_minutes: float = 30.0) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc_nulls_first(), F.col("event_id").asc_nulls_first()
     )
-    gap_s = gap_minutes * 60.0
     prev = F.lag("ts").over(w)
     new_sess = F.when(
         prev.isNull()
-        | ((F.col("ts").cast("double") - prev.cast("double")) > gap_s),
+        | ((F.col("ts").cast("double") - prev.cast("double")) > 1800.0),
         1,
     ).otherwise(0)
     return events.withColumn("__new", new_sess).withColumn(
@@ -37,13 +36,13 @@ def sessionize(events: DataFrame, gap_minutes: float = 30.0) -> DataFrame:
     ).drop("__new")
 
 
-def tumbling_window_agg(events: DataFrame, minutes: int = 10) -> DataFrame:
-    """Tumbling-window counts/sums over ``events(ts, event_type, value)``;
-    batch twin of ``F.window`` so the oracle can use ``time_bucket``, and
-    the body of the streaming ``tumbling_counts``. Exposes window_start
-    (not the struct) for cross-engine schema parity."""
+def tumbling_window_agg(events: DataFrame) -> DataFrame:
+    """10-minute tumbling-window counts/sums over ``events(ts,
+    event_type, value)``, batch or streaming (give a stream its
+    ``withWatermark`` first). Exposes window_start (not the struct) for
+    cross-engine schema parity."""
     return (
-        events.groupBy(F.window("ts", f"{minutes} minutes").alias("w"), "event_type")
+        events.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n", "sum_value")
     )

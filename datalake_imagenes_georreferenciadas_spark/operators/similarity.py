@@ -320,9 +320,9 @@ def auto_planes_per_band(n: int) -> int:
     )
 
 
-def cosine_near_pairs_auto(data: DataFrame, threshold: float = 0.25) -> DataFrame:
-    """:func:`cosine_near_pairs` (4 bands, 64-dim vectors) with the
-    ``planes_per_band`` dial DERIVED from the corpus instead of
+def cosine_near_pairs_auto(data: DataFrame) -> DataFrame:
+    """:func:`cosine_near_pairs` (cosine ≥ 0.25, 4 bands, 64-dim vectors)
+    with the ``planes_per_band`` dial DERIVED from the corpus instead of
     hand-picked (r18 — the last manual step in the 100 TB dedup posture
     made automatic).
 
@@ -339,19 +339,16 @@ def cosine_near_pairs_auto(data: DataFrame, threshold: float = 0.25) -> DataFram
     setting — and therefore the banding-defined answer — is bit-agreed
     between engines at any SF."""
     n = data.count()
-    return cosine_near_pairs(
-        data, threshold=threshold, planes_per_band=auto_planes_per_band(n)
-    )
+    return cosine_near_pairs(data, planes_per_band=auto_planes_per_band(n))
 
 
 def lsh_ann_topk(
     data: DataFrame,
     queries: DataFrame,
-    k: int = 10,
     num_planes: int = 8,
     dim: int = 64,
 ) -> DataFrame:
-    """Approximate top-k of ``queries(q_id, embedding)`` over
+    """Approximate top-5 of ``queries(q_id, embedding)`` over
     ``data(vec_id, embedding)``: equi-join on hyperplane bucket, then
     exact cosine + window inside the bucket. Recall trades off with
     ``num_planes``; at scale add multi-probe (flip one bit) unions."""
@@ -366,7 +363,7 @@ def lsh_ann_topk(
         F.col("vec_id"),
         F.round(cosine(F.col("embedding"), F.col("__qv")), 6).alias("cos"),
     )
-    return _topk_by_cosine(scored, k)
+    return _topk_by_cosine(scored, 5)
 
 
 def recall_at_k(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:

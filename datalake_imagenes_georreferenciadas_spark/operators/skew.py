@@ -31,9 +31,8 @@ def salted_sum_count(
     sum_col: Column,
     n_salts: int = 8,
     sum_alias: str = "sum_value",
-    count_alias: str = "n",
 ) -> DataFrame:
-    """Two-phase skew-safe sum+count per key.
+    """Two-phase skew-safe sum+count (as ``n``) per key.
 
     Phase 1 groups on (key, salt) — partial aggregation over ``n_salts``×
     more reducers than keys; phase 2 merges partials per key. Uses a
@@ -47,7 +46,7 @@ def salted_sum_count(
         F.sum(sum_col).alias("__psum"), F.count("*").alias("__pcnt")
     )
     return partial.groupBy(*keys).agg(
-        F.sum("__psum").alias(sum_alias), F.sum("__pcnt").alias(count_alias)
+        F.sum("__psum").alias(sum_alias), F.sum("__pcnt").alias("n")
     )
 
 

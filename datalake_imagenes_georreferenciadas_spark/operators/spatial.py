@@ -45,14 +45,14 @@ from .topk import argmin_per_group
 PARCEL_KEEP = ("id_predio", "nombre")
 
 
-def contains_join(points: DataFrame, polys: DataFrame, how: str = "left") -> DataFrame:
-    """J2: point-in-polygon join of ``points(lon, lat)`` with
+def contains_join(points: DataFrame, polys: DataFrame) -> DataFrame:
+    """J2: point-in-polygon inner join of ``points(lon, lat)`` with
     ``polys(rings)``, broadcast-nested-loop with a ray-cast predicate over
     all rings (holes honored). Use when the polygon side fits in memory
     (the reference's own assumption — it holds all parcels in a driver
     list)."""
     pred = point_in_rings(points["lon"], points["lat"], polys["rings"])
-    return points.join(F.broadcast(polys), pred, how)
+    return points.join(F.broadcast(polys), pred, "inner")
 
 
 def contains_join_grid(points: DataFrame, polys: DataFrame, eps: float = 0.5) -> DataFrame:

@@ -701,7 +701,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id").isin(0, 1, 2)).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    return SIM.lsh_ann_topk(emb, queries, k=5, num_planes=6)
+    return SIM.lsh_ann_topk(emb, queries, num_planes=6)
 
 
 # SQ8 scalar quantization: shared formula text so Spark and DuckDB run
@@ -1130,7 +1130,7 @@ _MINHASH_BANDS_SQL = _minhash_cte() + "SELECT doc_id, unnest(bands) AS band FROM
 def dedup_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signature → LSH band keys, exploded (the near-dup join key)."""
     docs = D.with_minhash(
-        table(spark, sf_dir, "documents"), "text", 3, 16, 4, keep_shingles=False
+        table(spark, sf_dir, "documents"), 3, 16, 4, keep_shingles=False
     )
     return docs.select("doc_id", F.explode("__bands").alias("band"))
 
@@ -1247,7 +1247,7 @@ SELECT doc_id,
        len(list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')) AS n_tokens,
        {TX.quality_score_sql('text')} AS quality,
        {TX.lang_guess_sql('text')} AS lang_guess,
-       {TX.fingerprint_sql('text', 3)} AS fp
+       {TX.fingerprint_sql('text')} AS fp
 FROM documents
 """
 
@@ -1263,7 +1263,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         TX.token_count(F.col("text")).alias("n_tokens"),
         TX.quality_score(F.col("text")).alias("quality"),
         TX.lang_guess(F.col("text")).alias("lang_guess"),
-        TX.fingerprint(F.col("text"), 3).alias("fp"),
+        TX.fingerprint(F.col("text")).alias("fp"),
     )
 
 

@@ -227,7 +227,7 @@ def geo_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lon").isNotNull() & F.col("lat").isNotNull()
     )
     polys = GF.spark_polys(spark)
-    return contains_join(pts, polys, how="inner").select("img_id", "id_predio", "nombre")
+    return contains_join(pts, polys).select("img_id", "id_predio", "nombre")
 
 
 @register("geo_contains_grid", _GEO_CONTAINS_SQL)
@@ -483,7 +483,7 @@ def session_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT so both engines emit int64 (CORRECTNESS_r01 red cell).
     """
     ev = table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
-    s = sessionize(ev, gap_minutes=30.0)
+    s = sessionize(ev)
     return s.groupBy("user_id", "session_seq").agg(
         F.count("*").alias("n_events"), _dsum(F.col("value")).alias("sum_value")
     )
@@ -978,7 +978,6 @@ def j_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = range_join(
         errors,
         purchases,
-        ["user_id"],
         F.col("e_ts"),
         F.col("p_ts"),
         F.expr("INTERVAL 0 MINUTES"),
@@ -1034,7 +1033,7 @@ def j_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "ts")
         .agg(F.max("event_id").alias("signup_id"))
     )
-    out = asof_join(purchases, signups, ["user_id"], "ts", ["signup_id"])
+    out = asof_join(purchases, signups, ["signup_id"])
     return out.select(
         "event_id",
         "user_id",
@@ -1239,7 +1238,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap active (VERDICT r1 #5) and mirrored in the oracle."""
     return D.ngram_jaccard_pairs(
         table(spark, sf_dir, "documents"),
-        k=3,
         jaccard_threshold=0.1,
         max_doc_freq=_NGRAM_MAX_DF,
     )
@@ -1277,40 +1275,43 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     directions from one intersection count."""
     return D.containment_pairs(
         table(spark, sf_dir, "documents"),
-        k=3,
         threshold=_CONTAINMENT_THR,
         max_doc_freq=_NGRAM_MAX_DF,
     )
 
 
-_COS_BANDS, _COS_PLANES = 4, 5
-_COS_BAND_COLS = ",\n         ".join(
-    SIM.hyperplane_signature_sql(
-        "embedding", _COS_PLANES, plane_offset=b * _COS_PLANES
+def _cos_cand_cte(bands: int, planes: int) -> str:
+    """The oracle's banded-cosine CTEs ``b`` (per-band hyperplane
+    buckets), ``cand`` (distinct candidate pairs) and ``ver`` (their
+    exact cosine) at ``bands`` x ``planes``; a query appends its tail.
+
+    One equi-join PER BAND unioned + DISTINCT, exactly the engine's
+    band-bucket join + dropDuplicates-before-verify. (An earlier OR-of-
+    band-equalities single join forced DuckDB into a nested-loop that
+    re-evaluated the un-materialized hyperplane signatures per pair —
+    ~14 s at sf0.01; the materialized equi-join form is ~10× cheaper and
+    is also the only shape that stays hash-joinable at scale.)"""
+    band_cols = ",\n         ".join(
+        SIM.hyperplane_signature_sql(
+            "embedding", planes, plane_offset=b * planes
+        )
+        + f" AS bucket{b}"
+        for b in range(bands)
     )
-    + f" AS bucket{b}"
-    for b in range(_COS_BANDS)
-)
-# One equi-join PER BAND unioned + DISTINCT, exactly the engine's
-# band-bucket join + dropDuplicates-before-verify. (An earlier OR-of-
-# band-equalities single join forced DuckDB into a nested-loop that
-# re-evaluated the un-materialized hyperplane signatures per pair —
-# ~14 s at sf0.01; the materialized equi-join form is ~10× cheaper and
-# is also the only shape that stays hash-joinable at scale.)
-_COS_BAND_UNION = "\n    UNION ALL\n".join(
-    f"    SELECT a.vec_id AS a_id, b2.vec_id AS b_id\n"
-    f"    FROM b a JOIN b b2\n"
-    f"      ON a.bucket{k} = b2.bucket{k} AND a.vec_id < b2.vec_id"
-    for k in range(_COS_BANDS)
-)
-_COSINE_CAND_CTE = f"""
+    band_union = "\n    UNION ALL\n".join(
+        f"    SELECT a.vec_id AS a_id, b2.vec_id AS b_id\n"
+        f"    FROM b a JOIN b b2\n"
+        f"      ON a.bucket{k} = b2.bucket{k} AND a.vec_id < b2.vec_id"
+        for k in range(bands)
+    )
+    return f"""
 WITH b AS MATERIALIZED (
   SELECT vec_id, embedding,
-         {_COS_BAND_COLS}
+         {band_cols}
   FROM embeddings WHERE embedding IS NOT NULL),
 cand AS MATERIALIZED (
   SELECT DISTINCT a_id, b_id FROM (
-{_COS_BAND_UNION}
+{band_union}
   )),
 ver AS (
   SELECT c.a_id, c.b_id,
@@ -1319,6 +1320,10 @@ ver AS (
   JOIN b va ON va.vec_id = c.a_id
   JOIN b vb ON vb.vec_id = c.b_id)
 """
+
+
+_COS_BANDS, _COS_PLANES = 4, 5
+_COSINE_CAND_CTE = _cos_cand_cte(_COS_BANDS, _COS_PLANES)
 _COSINE_PAIRS_SQL = (
     _COSINE_CAND_CTE + "SELECT a_id, b_id, cos FROM ver WHERE cos >= 0.25"
 )
@@ -1395,22 +1400,42 @@ lab{i} AS MATERIALIZED (
     return ",\n".join(parts)
 
 
-# Components run over edge-incident nodes only — singletons (the vast
-# majority) never enter the label loop and get their self-label from
-# the final left join.
-_SEMANTIC_COMPONENTS_SQL = (
-    _COSINE_CAND_CTE
-    + """, pairs AS MATERIALIZED (SELECT a_id, b_id FROM ver WHERE cos >= 0.25),
+def _semantic_components_sql(cand_ctes: str) -> str:
+    """Oracle of a semantic-components registration: the pairs of
+    ``cand_ctes`` (a WITH list ending in ``ver``) at cosine ≥ 0.25 →
+    symmetric edges → min-label contraction → one label per vector.
+    Components run over edge-incident nodes only — singletons (the vast
+    majority) never enter the label loop and get their self-label from
+    the final left join."""
+    return (
+        cand_ctes
+        + """, pairs AS MATERIALIZED (SELECT a_id, b_id FROM ver WHERE cos >= 0.25),
 edges AS MATERIALIZED (
   SELECT a_id AS src, b_id AS dst FROM pairs
   UNION ALL SELECT b_id, a_id FROM pairs),
 """
-    + _min_label_components_cte()
-    + """
+        + _min_label_components_cte()
+        + """
 SELECT emb.vec_id,
        CAST(coalesce(comp.component, emb.vec_id) AS BIGINT) AS component
 FROM embeddings emb LEFT JOIN comp ON comp.id = emb.vec_id"""
-)
+    )
+
+
+def _semantic_components(spark: SparkSession, sf_dir: str, pairs: DataFrame) -> DataFrame:
+    """Spark side of :func:`_semantic_components_sql`: ``pairs(a_id,
+    b_id)`` → ``components_from_edges`` → every ``embeddings`` vector
+    with its component (its own id when it pairs with nothing)."""
+    edges = pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
+    labels = D.components_from_edges(edges)
+    vecs = table(spark, sf_dir, "embeddings").select("vec_id")
+    return vecs.join(labels, vecs.vec_id == labels.id, "left").select(
+        "vec_id",
+        F.coalesce("component", F.col("vec_id").cast("long")).alias("component"),
+    )
+
+
+_SEMANTIC_COMPONENTS_SQL = _semantic_components_sql(_COSINE_CAND_CTE)
 
 
 @register("dedup_semantic_components", _SEMANTIC_COMPONENTS_SQL)
@@ -1433,12 +1458,6 @@ def dedup_semantic_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_bands=_COS_BANDS,
         planes_per_band=_COS_PLANES,
     )
-    edges = pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-    labels = D.components_from_edges(edges)
-    vecs = table(spark, sf_dir, "embeddings").select("vec_id")
-    return vecs.join(labels, vecs.vec_id == labels.id, "left").select(
-        "vec_id",
-        F.coalesce("component", F.col("vec_id").cast("long")).alias("component"),
-    )
+    return _semantic_components(spark, sf_dir, pairs)
 
 

@@ -196,7 +196,7 @@ def geo_reproject_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ext = rast.withColumn("ext", affine_extent(F.col("gt"), F.col("cols"), F.col("rows")))
     cen = ext.withColumn("c", extent_centroid(F.col("ext")))
     rep = cen.withColumn(
-        "ll", reproject_utm_to_wgs84_approx(F.col("c.x"), F.col("c.y"), zone=18, south=True)
+        "ll", reproject_utm_to_wgs84_approx(F.col("c.x"), F.col("c.y"), zone=18)
     )
     return rep.select(
         "img_id",
@@ -216,8 +216,6 @@ _UTM_FWD_SQL = (
         " FROM generate_series(0, 99) t(i)",
         "lat",
         "lon",
-        zone=19,
-        south=True,
     )
     + ")"
 )
@@ -239,7 +237,7 @@ def geo_utm_forward_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "in_zone", (F.col("lon") >= -72.0) & (F.col("lon") < -66.0)
     )
-    out = GEO.reproject_wgs84_to_utm_exact(pts, "lat", "lon", zone=19, south=True)
+    out = GEO.reproject_wgs84_to_utm_exact(pts, "lat", "lon")
     return out.select(
         "pt_id",
         F.round("easting", 4).alias("easting"),
@@ -255,8 +253,6 @@ _UTM_INV_SQL = (
         " 5600000.0 + i * 7300.0 AS y FROM generate_series(0, 99) t(i)",
         "x",
         "y",
-        zone=19,
-        south=True,
     )
     + ")"
 )
@@ -280,7 +276,7 @@ def geo_utm_inverse_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             (5600000.0 + F.col("id") * 7300.0).alias("y"),
         )
     )
-    out = GEO.reproject_utm_to_wgs84_exact(pts, "x", "y", zone=19, south=True)
+    out = GEO.reproject_utm_to_wgs84_exact(pts, "x", "y")
     return out.select(
         "pt_id",
         F.round("lat", 6).alias("lat"),
@@ -346,7 +342,7 @@ def skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     out = salted_sum_count(
         li, ["l_returnflag"], F.col("l_quantity").cast("decimal(18,4)"), n_salts=8,
-        sum_alias="__dsum", count_alias="n",
+        sum_alias="__dsum",
     )
     return out.select(
         "l_returnflag", F.col("__dsum").cast("double").alias("sum_qty"), "n"
@@ -428,7 +424,7 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("string").alias("path"),
         F.col("text").cast("binary").alias("content"),
     )
-    frames = sample_frames(docs, every_n=10, max_frames=5)
+    frames = sample_frames(docs)
     return frames.select(
         F.col("path").cast("long").alias("doc_id"), "frame_idx", "frame_key"
     )

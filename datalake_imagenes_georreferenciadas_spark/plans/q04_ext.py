@@ -693,7 +693,7 @@ def ts_resample_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("ts").isNotNull()
         & F.col("value").isNotNull()
     )
-    return resample_interpolate(ev, step_seconds=3600)
+    return resample_interpolate(ev)
 
 
 # ======================================================================

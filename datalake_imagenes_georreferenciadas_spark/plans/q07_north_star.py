@@ -330,7 +330,7 @@ def s1_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     dest = stage_dir(spark, ("pyds", sf_dir), write)
     register_exifscan(spark)
-    scan = spark.read.format("exifscan").option("numPartitions", "8").load(dest)
+    scan = spark.read.format("exifscan").load(dest)
     return (
         scan.groupBy("kind")
         .agg(
@@ -1031,7 +1031,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id").isin(0, 1, 2)).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    ann = SIM.lsh_ann_topk(emb, queries, k=5, num_planes=6).select(
+    ann = SIM.lsh_ann_topk(emb, queries, num_planes=6).select(
         "q_id", "vec_id"
     )
     exact = SIM.brute_force_topk(emb, queries, k=5).select("q_id", "vec_id")

@@ -1036,7 +1036,7 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     # three consumers (band explode + both verify sides) — checkpoint
     # the signature index once, as a production index store would
-    s = D.with_minhash(docs, "text", 3, 16, 4, keep_shingles=True).localCheckpoint()
+    s = D.with_minhash(docs, 3, 16, 4, keep_shingles=True).localCheckpoint()
     cand = D.band_pairs(s, "doc_id", F.col("__bands"))
     side = s.select(
         "doc_id",

@@ -1466,7 +1466,7 @@ def multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("string").alias("path"),
         F.col("text").cast("binary").alias("content"),
     )
-    frames = sample_frames(docs, every_n=10, max_frames=5)
+    frames = sample_frames(docs)
     fr = frames.select(
         F.col("path").cast("long").alias("doc_id"),
         "frame_idx",

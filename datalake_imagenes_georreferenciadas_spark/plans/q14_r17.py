@@ -13,13 +13,12 @@ from ._qbase import (
     F,
     SIM,
     SparkSession,
-    V,
     Window,
     register,
     table,
 )
 from .q01_j1 import _simhash_sql
-from .q02_geo import _min_label_components_cte
+from .q02_geo import _cos_cand_cte, _semantic_components, _semantic_components_sql
 from .q05_training import _WQ_QS
 
 
@@ -170,41 +169,6 @@ def dedup_simhash_pairs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cos_cand_cte(bands: int, planes: int) -> str:
-    # mirrors plans/q02_geo.py's _COSINE_CAND_CTE construction with the
-    # plane count as the dial (same materialized per-band equi-join
-    # shape; see that module for why OR-of-bands is not hash-joinable)
-    band_cols = ",\n         ".join(
-        SIM.hyperplane_signature_sql(
-            "embedding", planes, plane_offset=b * planes
-        )
-        + f" AS bucket{b}"
-        for b in range(bands)
-    )
-    band_union = "\n    UNION ALL\n".join(
-        f"    SELECT a.vec_id AS a_id, b2.vec_id AS b_id\n"
-        f"    FROM b a JOIN b b2\n"
-        f"      ON a.bucket{k} = b2.bucket{k} AND a.vec_id < b2.vec_id"
-        for k in range(bands)
-    )
-    return f"""
-WITH b AS MATERIALIZED (
-  SELECT vec_id, embedding,
-         {band_cols}
-  FROM embeddings WHERE embedding IS NOT NULL),
-cand AS MATERIALIZED (
-  SELECT DISTINCT a_id, b_id FROM (
-{band_union}
-  )),
-ver AS (
-  SELECT c.a_id, c.b_id,
-         round({V.cosine_sql('va.embedding', 'vb.embedding')}, 6) AS cos
-  FROM cand c
-  JOIN b va ON va.vec_id = c.a_id
-  JOIN b vb ON vb.vec_id = c.b_id)
-"""
-
-
 @register(
     "dedup_cosine_pairs_scaled",
     _cos_cand_cte(4, 8) + "SELECT a_id, b_id, cos FROM ver WHERE cos >= 0.25",
@@ -228,18 +192,7 @@ def dedup_cosine_pairs_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "dedup_semantic_components_scaled",
-    _cos_cand_cte(4, 8)
-    + """, pairs AS MATERIALIZED (SELECT a_id, b_id FROM ver WHERE cos >= 0.25),
-edges AS MATERIALIZED (
-  SELECT a_id AS src, b_id AS dst FROM pairs
-  UNION ALL SELECT b_id, a_id FROM pairs),
-"""
-    + _min_label_components_cte()
-    + """
-SELECT emb.vec_id,
-       CAST(coalesce(comp.component, emb.vec_id) AS BIGINT) AS component
-FROM embeddings emb LEFT JOIN comp ON comp.id = emb.vec_id""",
+    "dedup_semantic_components_scaled", _semantic_components_sql(_cos_cand_cte(4, 8))
 )
 def dedup_semantic_components_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_semantic_components at the registered scale setting (r17):
@@ -255,10 +208,4 @@ def dedup_semantic_components_scaled(spark: SparkSession, sf_dir: str) -> DataFr
         num_bands=4,
         planes_per_band=8,
     )
-    edges = pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-    labels = D.components_from_edges(edges)
-    vecs = table(spark, sf_dir, "embeddings").select("vec_id")
-    return vecs.join(labels, vecs.vec_id == labels.id, "left").select(
-        "vec_id",
-        F.coalesce("component", F.col("vec_id").cast("long")).alias("component"),
-    )
+    return _semantic_components(spark, sf_dir, pairs)

@@ -19,7 +19,6 @@ all; these are the beyond-survey LLM-pipeline operators at their
 from ._qbase import (
     D,
     DataFrame,
-    F,
     H,
     SIM,
     SparkSession,
@@ -27,7 +26,7 @@ from ._qbase import (
     register,
     table,
 )
-from .q02_geo import _min_label_components_cte
+from .q02_geo import _semantic_components, _semantic_components_sql
 
 #: DuckDB twin of operators.similarity._HPLANE_SCALE (2^59)
 _HPS = 576460752303423488
@@ -91,9 +90,7 @@ def dedup_cosine_pairs_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     the derived dial is 5 — exactly the registered hand-picked base —
     and at the ladder's k=8/k=16 it is 8/9, the two measured
     density-matched settings."""
-    return SIM.cosine_near_pairs_auto(
-        table(spark, sf_dir, "embeddings"), threshold=0.25
-    )
+    return SIM.cosine_near_pairs_auto(table(spark, sf_dir, "embeddings"))
 
 
 #: DuckDB twin of operators.dedup.auto_band_bits — clamp(ceil(log2 n)
@@ -137,18 +134,7 @@ WHERE bit_count(xor(fa.fp, fb.fp)) <= 3
 
 
 @register(
-    "dedup_semantic_components_auto",
-    _COS_AUTO_CTES
-    + """, pairs AS MATERIALIZED (SELECT a_id, b_id FROM ver WHERE cos >= 0.25),
-edges AS MATERIALIZED (
-  SELECT a_id AS src, b_id AS dst FROM pairs
-  UNION ALL SELECT b_id, a_id FROM pairs),
-"""
-    + _min_label_components_cte()
-    + """
-SELECT emb.vec_id,
-       CAST(coalesce(comp.component, emb.vec_id) AS BIGINT) AS component
-FROM embeddings emb LEFT JOIN comp ON comp.id = emb.vec_id""",
+    "dedup_semantic_components_auto", _semantic_components_sql(_COS_AUTO_CTES)
 )
 def dedup_semantic_components_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic dedup clusters at the corpus-DERIVED dial (r18) —
@@ -162,16 +148,8 @@ def dedup_semantic_components_auto(spark: SparkSession, sf_dir: str) -> DataFram
     SF. Same null-identity seed exclusion and min-label closure as
     dedup_semantic_components / _scaled; only the dial derivation is
     new."""
-    pairs = SIM.cosine_near_pairs_auto(
-        table(spark, sf_dir, "embeddings"), threshold=0.25
-    )
-    edges = pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-    labels = D.components_from_edges(edges)
-    vecs = table(spark, sf_dir, "embeddings").select("vec_id")
-    return vecs.join(labels, vecs.vec_id == labels.id, "left").select(
-        "vec_id",
-        F.coalesce("component", F.col("vec_id").cast("long")).alias("component"),
-    )
+    pairs = SIM.cosine_near_pairs_auto(table(spark, sf_dir, "embeddings"))
+    return _semantic_components(spark, sf_dir, pairs)
 
 
 @register("dedup_simhash_pairs_auto", _SIMHASH_AUTO_SQL)

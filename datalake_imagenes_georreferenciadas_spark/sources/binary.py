@@ -371,17 +371,17 @@ def extract_archives(binary_df: DataFrame) -> DataFrame:
     return binary_df.select("path", "content").mapInPandas(batches, EXTRACT_SCHEMA)
 
 
-def sample_frames(binary_df: DataFrame, every_n: int = 10, max_frames: int = 5) -> DataFrame:
-    """Video frame sampling: one ``(path, content)`` row becomes
-    ``max_frames`` rows ``(path, frame_idx, frame_key)``, frame_idx
-    stepping by ``every_n``. Decode stub: each frame is keyed by the
+def sample_frames(binary_df: DataFrame) -> DataFrame:
+    """Video frame sampling: one ``(path, content)`` row becomes 5 rows
+    ``(path, frame_idx, frame_key)``, every 10th frame (frame_idx 0, 10,
+    …, 40). Decode stub: each frame is keyed by the
     digest chain ``md5(md5(content) || ':' || frame_idx)`` (a real body
     seeks a demuxer); a NULL payload keeps its rows with a NULL key."""
     frames = binary_df.select(
         "path",
         F.md5("content").alias("digest"),
         F.explode(
-            F.sequence(F.lit(0), F.lit((max_frames - 1) * every_n), F.lit(every_n))
+            F.sequence(F.lit(0), F.lit(40), F.lit(10))
         ).alias("frame_idx"),
     )
     key = F.md5(F.concat("digest", F.lit(":"), F.col("frame_idx").cast("string")))

@@ -21,6 +21,9 @@ import os
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+#: splits per scan: the file list is dealt round-robin into this many
+SPLITS = 8
+
 EXIFSCAN_SCHEMA = (
     "path string, length bigint, kind string, lat double, lon double, "
     "cols int, rows int, x0 double, y0 double"
@@ -35,7 +38,6 @@ class _FileSplit(InputPartition):
 class ExifScanReader(DataSourceReader):
     def __init__(self, options: dict):
         self.path = options.get("path")
-        self.num_partitions = int(options.get("numPartitions", "8"))
 
     def partitions(self):
         files = sorted(
@@ -43,7 +45,7 @@ class ExifScanReader(DataSourceReader):
             for f in os.listdir(self.path)
             if f.lower().endswith((".jpg", ".jpeg", ".tif", ".tiff"))
         )
-        n = max(1, min(self.num_partitions, len(files)))
+        n = max(1, min(SPLITS, len(files)))
         return [_FileSplit(files[i::n]) for i in range(n)]
 
     def read(self, partition: _FileSplit):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from datalake_imagenes_georreferenciadas_spark.catalog.store import (
@@ -171,6 +172,27 @@ def test_uncommitted_data_files_are_invisible(spark, tmp_path):
     assert store.expire_snapshots(keep_last=1) == [0]
     assert not any(os.path.exists(tmp_path / f[0]) for f in orphan)
     assert store.catalog().count() == 3
+
+
+def test_a_commit_never_replaces_another_writers_entry(spark, tmp_path):
+    """Two handles on one root: the second writer listed ``_log/`` before
+    the first one committed, so both aim at the same next version. The
+    first commit stands, the second raises, and expiry removes the data
+    files the losing writer left unlisted."""
+    a, b = CatalogStore(spark, str(tmp_path)), CatalogStore(spark, str(tmp_path))
+    a.insert_catalog(_rows(spark, 2), a.start_run(PROCESO_INGEST))
+    stale = b.catalog_versions()
+    a.insert_catalog(_rows(spark, 3), a.start_run(PROCESO_INGEST))
+    data_dirs = set(os.listdir(tmp_path / "data"))
+    b.catalog_versions = lambda: stale  # b's listing predates a's commit
+    with pytest.raises(FileExistsError):
+        b.insert_catalog(_rows(spark, 4), b.start_run(PROCESO_INGEST))
+    assert a.catalog_versions() == [0, 1]
+    assert a._entry()["rows_added"] == 3
+    assert sorted(r["id"] for r in a.catalog().collect()) == [1, 2, 3, 4, 5]
+    assert len(set(os.listdir(tmp_path / "data")) - data_dirs) == 1
+    assert a.expire_snapshots(keep_last=2) == []
+    assert set(os.listdir(tmp_path / "data")) == data_dirs
 
 
 def test_merge_rewrites_only_the_files_it_touches(spark, tmp_path):

@@ -118,9 +118,9 @@ def test_ngram_jaccard_hot_shingle_cap(spark):
     rows += [(100, f"{stop} same same same"), (101, f"{stop} same same same")]
     df = _docs(spark, rows)
 
-    uncapped = ngram_jaccard_pairs(df, k=3, jaccard_threshold=0.01).collect()
+    uncapped = ngram_jaccard_pairs(df, jaccard_threshold=0.01).collect()
     capped = ngram_jaccard_pairs(
-        df, k=3, jaccard_threshold=0.01, max_doc_freq=3
+        df, jaccard_threshold=0.01, max_doc_freq=3
     ).collect()
     # uncapped: every pair shares the stop shingle → C(10,2)=45 candidates
     assert len(uncapped) == 45
@@ -136,7 +136,7 @@ def test_ngram_jaccard_cap_keeps_moderate_shingles(spark):
 
     rows = [(1, "a b c x y z"), (2, "a b c p q r")]  # share shingle 'a b c', df=2
     out = ngram_jaccard_pairs(
-        _docs(spark, rows), k=3, jaccard_threshold=0.0, max_doc_freq=2
+        _docs(spark, rows), jaccard_threshold=0.0, max_doc_freq=2
     ).collect()
     assert len(out) == 1 and out[0]["jaccard"] == round(1 / 7, 6)
 
@@ -333,14 +333,14 @@ def test_containment_catches_subset_that_jaccard_misses(spark):
     )
     cont = {
         (r["a_id"], r["b_id"]): (r["cont_a"], r["cont_b"])
-        for r in containment_pairs(df, k=3, threshold=0.8).collect()
+        for r in containment_pairs(df, threshold=0.8).collect()
     }
     assert (1, 2) in cont and len(cont) == 1
     ca, cb = cont[(1, 2)]
     # the excerpt (b, smaller) is fully contained; the source is not
     assert cb == 1.0 and ca < 0.2
     # symmetric Jaccard at the same bar finds nothing
-    assert ngram_jaccard_pairs(df, k=3, jaccard_threshold=0.8).count() == 0
+    assert ngram_jaccard_pairs(df, jaccard_threshold=0.8).count() == 0
 
 
 def test_simhash_pairs_parameter_validation(spark):

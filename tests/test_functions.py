@@ -151,7 +151,7 @@ def test_lsh_ann_recall_contains_self(spark):
     q = data.filter(F.col("vec_id").isin(0, 5)).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    top = lsh_ann_topk(data, q, k=5, num_planes=2, dim=8).collect()
+    top = lsh_ann_topk(data, q, num_planes=2, dim=8).collect()
     by_q = {}
     for r in top:
         by_q.setdefault(r["q_id"], []).append(r["vec_id"])

@@ -26,7 +26,7 @@ def test_asof_join_latest_prior(spark):
         [(100, _t(0), 11), (100, _t(25), 12), (200, _t(50), 13)],
         "user_id long, ts timestamp, signup_id long",
     )
-    out = {r["event_id"]: r for r in asof_join(left, right, ["user_id"], "ts", ["signup_id"]).collect()}
+    out = {r["event_id"]: r for r in asof_join(left, right, ["signup_id"]).collect()}
     assert out[1]["signup_id"] == 11  # only t=0 precedes t=10
     assert out[2]["signup_id"] == 12  # t=25 is latest ≤ t=30
     assert out[3]["signup_id"] is None  # no prior right row → left-join null
@@ -36,7 +36,7 @@ def test_asof_join_latest_prior(spark):
 def test_asof_join_equal_ts_matches(spark):
     left = spark.createDataFrame([(1, 7, _t(10))], "event_id long, user_id long, ts timestamp")
     right = spark.createDataFrame([(7, _t(10), 99)], "user_id long, ts timestamp, v long")
-    out = asof_join(left, right, ["user_id"], "ts", ["v"]).collect()[0]
+    out = asof_join(left, right, ["v"]).collect()[0]
     assert out["v"] == 99  # <= semantics: same-instant right row matches
 
 
@@ -51,7 +51,6 @@ def test_range_join_window(spark):
     out = range_join(
         errors,
         purchases,
-        ["user_id"],
         F.col("e_ts"),
         F.col("p_ts"),
         F.expr("INTERVAL 0 MINUTES"),

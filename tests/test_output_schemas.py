@@ -26,12 +26,14 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 SF = "/root/testdata/sf0.001"
 
 
-def test_bench_stdout_line_fits_driver_capture():
-    """Worst-case-width warm times for every benched query must still
-    produce a stdout line under the driver's 2,000-byte tail capture."""
+def test_bench_stdout_line_fits_driver_capture(monkeypatch):
+    """Worst-case-width warm times for every benched query (a full run
+    times them all) must still produce a stdout line under the driver's
+    2,000-byte tail capture."""
     import bench
 
-    warm = {n: 12345.678 for n in bench.BENCH_QUERIES + bench.EXTENDED_QUERIES}
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_FULL", "1")
+    warm = {n: 12345.678 for n in bench.timed_names()}
     line = bench.build_stdout_line(warm, 0.1)
     assert len(line.encode()) < 1900, len(line.encode())
     parsed = json.loads(line)
@@ -43,47 +45,38 @@ def test_bench_stdout_line_fits_driver_capture():
 
 def test_benched_names_are_registered():
     """Every benched name must exist in the registry (a rename that
-    orphans a bench entry should fail here, not at driver time)."""
+    orphans a bench entry should fail here, not at driver time), and a
+    default run times each headline name once."""
     import bench
     from datalake_imagenes_georreferenciadas_spark.plans.queries import QUERIES
 
-    missing = [
-        n
-        for n in bench.BENCH_QUERIES + bench.EXTENDED_QUERIES
-        if n not in dict(QUERIES)
-    ]
+    missing = [n for n in bench.BENCH_QUERIES if n not in dict(QUERIES)]
     assert not missing, missing
-    assert not set(bench.BENCH_QUERIES) & set(bench.EXTENDED_QUERIES)
+    assert len(set(bench.BENCH_QUERIES)) == len(bench.BENCH_QUERIES) == 48
 
 
 def test_bench_headline_runs_before_full_extension(monkeypatch):
     """r09 VERDICT task 4: the stdout headline sum must be measured in a
-    fresh session, i.e. the 48 headline queries run BEFORE any extended
-    query (the loop order is BENCH_QUERIES + EXTENDED_QUERIES) and
-    SPARK_GRAFT_BENCH_FULL must only APPEND to the extended set — never
-    reorder or prepend — so deep-session state (e.g. the documented
-    a5_approx_distinct position-~230 anomaly) can't leak into the
-    round-over-round comparable."""
-    import importlib
-
+    fresh session, i.e. the 48 headline queries run BEFORE any other
+    query (the loop order is ``bench.timed_names()``) and
+    SPARK_GRAFT_BENCH_FULL must only APPEND to the default run order —
+    never reorder or prepend — so deep-session state (e.g. the
+    documented a5_approx_distinct position-~230 anomaly) can't leak into
+    the round-over-round comparable."""
     import bench
+    from datalake_imagenes_georreferenciadas_spark.plans.queries import QUERIES
 
-    default_extended = list(bench.EXTENDED_QUERIES)
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_FULL", raising=False)
+    default_order = bench.timed_names()
+    assert default_order == bench.BENCH_QUERIES
     monkeypatch.setenv("SPARK_GRAFT_BENCH_FULL", "1")
-    importlib.reload(bench)
-    try:
-        full_order = bench.BENCH_QUERIES + bench.EXTENDED_QUERIES
-        # headline block is a strict prefix of the FULL-mode run order
-        assert full_order[: len(bench.BENCH_QUERIES)] == bench.BENCH_QUERIES
-        # FULL mode appends, preserving the default extended prefix
-        assert bench.EXTENDED_QUERIES[: len(default_extended)] == default_extended
-        from datalake_imagenes_georreferenciadas_spark.plans.queries import QUERIES
-
-        assert set(full_order) == set(dict(QUERIES))  # FULL times everything
-    finally:
-        monkeypatch.delenv("SPARK_GRAFT_BENCH_FULL")
-        importlib.reload(bench)
-        assert bench.EXTENDED_QUERIES == default_extended
+    full_order = bench.timed_names()
+    # FULL mode appends, keeping the default run order as its prefix
+    assert full_order[: len(default_order)] == default_order
+    # and times everything once, the rest in registration order
+    assert sorted(full_order) == sorted(QUERIES)
+    rest = full_order[len(default_order):]
+    assert rest == [n for n in QUERIES if n in set(rest)]
 
 
 def test_warm_spread_suspect_thresholds():

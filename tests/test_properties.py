@@ -262,7 +262,7 @@ class TestResampleProperties:
         )
         out = {
             (r["user_id"], r["grid_epoch"]): r["value"]
-            for r in resample_interpolate(df, step_seconds=3600).collect()
+            for r in resample_interpolate(df).collect()
         }
         epoch0 = int(base.replace(tzinfo=datetime.timezone.utc).timestamp())
         # user 1, grid at +60min == event 2 exactly

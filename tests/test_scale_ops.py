@@ -155,15 +155,15 @@ def test_resize_images_contract(spark):
 
 def test_sample_frames_row_expansion(spark):
     df = spark.createDataFrame([("v.mp4", bytearray(b"videobytes"))], "path string, content binary")
-    out = sample_frames(df, every_n=10, max_frames=5).collect()
+    out = sample_frames(df).collect()
     assert len(out) == 5
     assert sorted(r["frame_idx"] for r in out) == [0, 10, 20, 30, 40]
     assert len({r["frame_key"] for r in out}) == 5  # distinct per frame
     # edge payloads match the Python reference; a NULL payload keeps its
-    # max_frames rows, with NULL keys
+    # 5 rows, with NULL keys
     edges, payloads = _edge_payloads(spark)
     got: dict = {}
-    for r in sample_frames(edges, every_n=10, max_frames=5).collect():
+    for r in sample_frames(edges).collect():
         got.setdefault(r["path"], []).append((r["frame_idx"], r["frame_key"]))
     assert {p: sorted(v, key=lambda f: f[0]) for p, v in got.items()} == {
         p: _frames_reference(b, 10, 5) for p, b in payloads.items()
@@ -255,7 +255,7 @@ def test_reproject_approx_lands_in_santiago(spark):
 
     df = spark.createDataFrame([(350000.0, 6300000.0)], "x double, y double")
     row = df.select(
-        reproject_utm_to_wgs84_approx(F.col("x"), F.col("y"), zone=19, south=True).alias("p")
+        reproject_utm_to_wgs84_approx(F.col("x"), F.col("y"), zone=19).alias("p")
     ).collect()[0]["p"]
     # Santiago-ish UTM 19S coordinates: lon near -73, lat near -33
     assert -76.0 < row["lon"] < -69.0 and -36.0 < row["lat"] < -30.0

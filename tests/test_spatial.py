@@ -63,7 +63,7 @@ def test_point_in_ring_inside_outside(spark):
 
 def test_contains_join_inner(spark):
     pts = _points(spark, [(1, 0.5, 0.5), (2, 10.5, 10.5), (3, 5.0, 5.0)])
-    out = contains_join(pts, _polys(spark), how="inner").select("img_id", "id_predio").collect()
+    out = contains_join(pts, _polys(spark)).select("img_id", "id_predio").collect()
     assert {(r["img_id"], r["id_predio"]) for r in out} == {(1, "P1"), (2, "P2")}
 
 
@@ -75,7 +75,7 @@ def test_grid_join_equals_broadcast_join(spark):
     polys = _polys(spark)
     a = {
         (r["img_id"], r["id_predio"])
-        for r in contains_join(pts, polys, how="inner").select("img_id", "id_predio").collect()
+        for r in contains_join(pts, polys).select("img_id", "id_predio").collect()
     }
     for eps in (0.3, 0.5, 2.0):
         b = {
@@ -153,7 +153,7 @@ def test_grid_vs_broadcast_property(spark, n_pts):
     polys = _polys(spark)
     a = {
         (r["img_id"], r["id_predio"])
-        for r in contains_join(pts, polys, how="inner").select("img_id", "id_predio").collect()
+        for r in contains_join(pts, polys).select("img_id", "id_predio").collect()
     }
     b = {
         (r["img_id"], r["id_predio"])
@@ -174,7 +174,7 @@ def test_grid_join_shuffles_both_sides_on_cell(spark):
     polys = _polys(spark)
     expected = {
         (r["img_id"], r["id_predio"])
-        for r in contains_join(pts, polys, how="inner").select("img_id", "id_predio").collect()
+        for r in contains_join(pts, polys).select("img_id", "id_predio").collect()
     }
     confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -253,7 +253,7 @@ def test_contains_join_hole_and_multipolygon(spark):
             (5, 22.0, 2.0),   # P5 part 2 hole → NOT contained
         ],
     )
-    out = contains_join(pts, _holed_polys(spark), how="inner").select(
+    out = contains_join(pts, _holed_polys(spark)).select(
         "img_id", "id_predio"
     ).collect()
     assert {(r["img_id"], r["id_predio"]) for r in out} == {
@@ -271,7 +271,7 @@ def test_grid_join_matches_broadcast_on_holed_geometry(spark):
     polys = _holed_polys(spark)
     a = {
         (r["img_id"], r["id_predio"])
-        for r in contains_join(pts, polys, how="inner").select("img_id", "id_predio").collect()
+        for r in contains_join(pts, polys).select("img_id", "id_predio").collect()
     }
     b = {
         (r["img_id"], r["id_predio"])
@@ -377,7 +377,7 @@ def test_utm_inverse_spark_matches_python_eval(spark):
     from datalake_imagenes_georreferenciadas_spark.functions import geo as G
 
     pts = spark.createDataFrame([(345000.0, 6297000.0)], "x double, y double")
-    row = G.reproject_utm_to_wgs84_exact(pts, "x", "y", zone=19, south=True).collect()[0]
+    row = G.reproject_utm_to_wgs84_exact(pts, "x", "y").collect()[0]
     la, lo = _eval_inverse(345000.0, 6297000.0, 19, True)
     assert abs(row["lat"] - la) < 1e-12 and abs(row["lon"] - lo) < 1e-12
 
@@ -408,7 +408,7 @@ def test_utm_forward_inverse_roundtrip(spark):
         [(la, lo) for la in (-45.0, -33.45, -18.0) for lo in (-72.0, -69.0)],
         "lat double, lon double",
     )
-    fwd = G.reproject_wgs84_to_utm_exact(pts, "lat", "lon", zone=19, south=True)
+    fwd = G.reproject_wgs84_to_utm_exact(pts, "lat", "lon")
     back = G.reproject_utm_to_wgs84_exact(
         fwd.select(
             F.col("lat").alias("lat0"),
@@ -418,8 +418,6 @@ def test_utm_forward_inverse_roundtrip(spark):
         ),
         "easting",
         "northing",
-        zone=19,
-        south=True,
     )
     for r in back.collect():
         assert abs(r["lat"] - r["lat0"]) < 1e-7

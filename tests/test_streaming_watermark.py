@@ -9,8 +9,8 @@ import os
 from pyspark.sql import functions as F
 
 from datalake_imagenes_georreferenciadas_spark.catalog.store import CatalogStore
+from datalake_imagenes_georreferenciadas_spark.operators.sessionize import tumbling_window_agg
 from datalake_imagenes_georreferenciadas_spark.streaming.ingest import start_file_ingest
-from datalake_imagenes_georreferenciadas_spark.streaming.windows import tumbling_counts
 
 BASE = dt.datetime(2024, 1, 1)
 EV_SCHEMA = "event_id long, ts timestamp, event_type string, value double"
@@ -27,7 +27,7 @@ def _run_stream(spark, src, ckpt, name):
     # batches land as subdirs (src/b1, src/b2, …) — the file source does
     # not recurse, so glob one level down
     stream = spark.readStream.schema(EV_SCHEMA).parquet(os.path.join(src, "*"))
-    agg = tumbling_counts(stream, minutes=10, watermark_minutes=30)
+    agg = tumbling_window_agg(stream.withWatermark("ts", "30 minutes"))
     collected: list = []
 
     def capture(batch_df, batch_id):
