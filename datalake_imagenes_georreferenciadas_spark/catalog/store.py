@@ -425,14 +425,17 @@ class CatalogStore:
         the one range ``(run_id, last_id+1, last_id+n)`` in the log
         entry: no read-back and no lineage write. Returns the inserted
         rows with ids, read from the files this call wrote; the frame
-        stays valid until ``expire_snapshots`` removes those files.
+        stays valid until ``expire_snapshots`` removes those files. A
+        batch with no rows commits no version (a duplicate-only trigger
+        or a replay would otherwise push real history out of expiry).
         """
         entry = self._entry()
         base = entry["next_id"] - 1
         written = self._write(self._with_ids(rows, base))
-        n = sum(f[1] for f in written)
-        ranges = [[run_id, base + 1, base + n]] if n else []
-        self._commit("insert", entry, entry["files"] + written, added=n, ranges=ranges)
+        if written:
+            n = sum(f[1] for f in written)
+            self._commit("insert", entry, entry["files"] + written, added=n,
+                         ranges=[[run_id, base + 1, base + n]])
         return self._files_frame(written)
 
     def update_processed_img(self, new_tipo_img: int, ids: list[int]) -> int:

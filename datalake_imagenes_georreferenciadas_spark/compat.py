@@ -40,7 +40,6 @@ import os
 from glob import glob
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .catalog.store import CatalogStore
 from .operators.spatial import classify_points
@@ -145,12 +144,9 @@ def polygono_mascercano(points: DataFrame, polys: DataFrame) -> DataFrame:
     return nearest_vertex_join(points, polys)
 
 
-def get_properties_mascercano(points: DataFrame, polys: DataFrame) -> DataFrame:
-    """script_geo.get_properties_mascercano (131-140): argmin across the
-    per-file candidates — subsumed by the same deterministic argmin."""
-    from .operators.spatial import nearest_vertex_join
-
-    return nearest_vertex_join(points, polys)
+#: script_geo.get_properties_mascercano (131-140): argmin across the
+#: per-file candidates, subsumed by the same deterministic argmin
+get_properties_mascercano = polygono_mascercano
 
 
 def image_list(root: str) -> list[str]:

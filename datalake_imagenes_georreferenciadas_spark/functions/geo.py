@@ -74,12 +74,6 @@ def ring_crossings(px: Column, py: Column, ring: Column) -> Column:
     )
 
 
-def point_in_ring(px: Column, py: Column, ring: Column) -> Column:
-    """F12: ray-casting containment of point (px,py) in ONE polygon ring
-    (odd crossing count = inside)."""
-    return ring_crossings(px, py, ring) % 2 == 1
-
-
 def point_in_rings(px: Column, py: Column, rings: Column) -> Column:
     """F12 on full (Multi)Polygon geometry: ``rings`` is
     ``array<array<struct<x,y>>>`` holding every ring — exterior shells AND

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .hashing import hash64, hash64_sql, shingles, shingles_sql
+from .hashing import hash64, hash64_sql, shingles, shingles_sql, tokens
 
 # tiny per-language stopword marker sets for the n-gram/stopword heuristic
 _STOPWORDS = ("the", "a", "and", "of", "to", "in", "is")
@@ -21,7 +21,7 @@ _STOPWORDS = ("the", "a", "and", "of", "to", "in", "is")
 
 def token_count(text: Column) -> Column:
     """Whitespace token count."""
-    return F.size(F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != ""))
+    return F.size(tokens(text))
 
 
 def word_tokens_bpe_ish(text: Column) -> Column:
@@ -37,7 +37,7 @@ def word_tokens_bpe_ish(text: Column) -> Column:
 def quality_score(text: Column) -> Column:
     """Heuristic quality score in [0,1]: length, punctuation and stopword
     ratios — the standard cheap pre-filter for LLM training corpora."""
-    toks = F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
+    toks = tokens(text)
     n_tok = F.size(toks)
     n_chars = F.length(text)
     stop_ratio = F.size(F.filter(toks, lambda t: t.isin(*_STOPWORDS))) / F.greatest(n_tok, F.lit(1))
@@ -64,7 +64,7 @@ def lang_guess(text: Column) -> Column:
     Real corpora would use a fastText-ish model via a Pandas UDF; the
     engine surface is the column contract — deterministic, SQL-expressible.
     """
-    toks = F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
+    toks = tokens(text)
     en = F.size(F.filter(toks, lambda t: t.isin("the", "and", "of", "is")))
     es = F.size(F.filter(toks, lambda t: t.isin("el", "la", "de", "que")))
     de = F.size(F.filter(toks, lambda t: t.isin("der", "die", "und", "das")))

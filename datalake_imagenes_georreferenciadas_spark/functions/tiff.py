@@ -14,8 +14,9 @@ header + IFD entry walk + typed values), fully parseable with
   (ModelPixelScale 33550, ModelTiepoint 33922) next to the standard
   ImageWidth/ImageLength tags.
 
-So S7/S8 need no image library: these parsers are the engine's one
-metadata decoder (``sources.binary._decode_image``) and run the real
+So S7/S8 need no image library: these parsers, behind the one BR/TIF
+dispatch :func:`image_meta`, are the engine's metadata decoder (the
+``binaryFile`` kernel and the ``exifscan`` source) and run the real
 byte-level extraction in both byte orders. The writers emit minimal
 spec-shaped files (sorted IFD tags, correct offsets) so fixtures
 exercise the parsers end-to-end with deterministic, oracle-computable
@@ -288,3 +289,20 @@ def _parse_tiff_meta(data: bytes) -> tuple[list[float], int, int] | None:
     x0 = float(tie[3]) - float(tie[0]) * px
     y0 = float(tie[4]) + float(tie[1]) * py
     return [x0, px, 0.0, y0, 0.0, -py], int(cols[0]), int(rows[0])
+
+
+def image_meta(data: bytes, path: str) -> dict | None:
+    """P6 type dispatch (script_geo.py:167-175): a ``.jpg``/``.jpeg`` is
+    class BR with its EXIF GPS, anything else class TIF with its
+    geotransform and dims. None when the bytes do not parse; each caller
+    picks its own fallback (``sources.binary``: the digest stub, the
+    ``exifscan`` reader: kind RAW)."""
+    if path.lower().endswith((".jpg", ".jpeg")):
+        gps = parse_exif_gps(data)
+        if gps is None:
+            return None
+        return {"clase": "BR", "lat": gps[0], "lon": gps[1], "gt": None, "cols": None, "rows": None}
+    meta = parse_tiff_meta(data)
+    if meta is None:
+        return None
+    return {"clase": "TIF", "lat": None, "lon": None, "gt": meta[0], "cols": meta[1], "rows": meta[2]}

@@ -31,7 +31,7 @@ TS = "ts"
 def asof_join(
     left: DataFrame,
     right: DataFrame,
-    right_value_cols: Sequence[str] | None = None,
+    right_value_cols: Sequence[str],
 ) -> DataFrame:
     """For each left row, the right row of its ``user_id`` with the
     greatest ``ts`` ≤ left's.
@@ -48,9 +48,6 @@ def asof_join(
     the fill skips the null and splices an OLDER row's value next to
     the newer row's timestamp).
     """
-    if right_value_cols is None:
-        right_value_cols = [c for c in right.columns if c not in (KEY, TS)]
-
     left_payload = [c for c in left.columns if c not in (KEY, TS)]
     r_struct = F.struct(
         F.col(TS).alias("__ts"),

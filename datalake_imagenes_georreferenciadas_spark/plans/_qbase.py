@@ -17,8 +17,6 @@ pair; ``__spark_entry__.py`` re-exports them. Conventions:
 
 from __future__ import annotations
 
-import glob as glob_mod
-import hashlib
 import math
 import os
 import uuid
@@ -29,15 +27,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from ..catalog.store import CatalogStore
+from ..functions import dsum, dsum_sql
 from ..functions import geo as GEO
 from ..functions import hashing as H
 from ..functions import text as TX
 from ..functions import vectors as V
-from ..functions.geo import affine_extent, point_in_ring
+from ..functions.geo import affine_extent
 from ..functions.strings import composite_key, parse_model_filename, path_parts
 from ..operators import dedup as D
 from ..operators import similarity as SIM
-from ..operators.sessionize import sessionize
+from ..operators.sessionize import sessionize, sliding_window_agg, tumbling_window_agg
 from ..operators.spatial import classify_points, contains_join, contains_join_grid, nearest_vertex_join
 from ..operators.topk import argmin_per_group, topk_per_group
 from ..sources.binary import scratch_dir, stage_dir
@@ -209,14 +208,3 @@ def documents_catalog(spark: SparkSession, sf_dir: str) -> CatalogStore:
     store = CatalogStore(spark, scratch_dir("catalog_"))
     store.insert_catalog(rows, store.start_run(0))
     return store
-
-
-def _dsum(col: F.Column) -> F.Column:
-    """Order-independent double sum: decimal partials, double result."""
-    return F.sum(col.cast("decimal(18,4)")).cast("double")
-
-
-def _dsum_sql(expr: str) -> str:
-    return f"CAST(sum(CAST(({expr}) AS DECIMAL(18,4))) AS DOUBLE)"
-
-

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions import tiff
 from ..tables import local_frame
 
 # (img_id, lon, lat)
@@ -240,4 +241,33 @@ def rasters_values_sql() -> str:
 def spark_rasters(spark: SparkSession) -> DataFrame:
     return local_frame(
         spark, RASTERS, "img_id long, gt array<double>, cols int, rows int"
+    )
+
+
+# ---- image fixtures: real EXIF JPEGs and GeoTIFFs from generating
+# integers, so the oracles recompute every decoded value in closed form
+# (s1_python_datasource, s7_exif_gps_scan, s8_geotiff_meta_scan)
+
+
+def exif_jpeg(i: int) -> bytes:
+    """JPEG ``i``: EXIF GPS (17 + i%17)°S (60 + i%12)°W, minutes and
+    hundredths of seconds from ``i``."""
+    return tiff.write_jpeg_exif_gps(
+        (17 + i % 17, (i * 7) % 60, (i * 131) % 6000, 100),
+        (60 + i % 12, (i * 11) % 60, (i * 173) % 6000, 100),
+        south=True,
+        west=True,
+    )
+
+
+def geotiff(i: int) -> bytes:
+    """GeoTIFF ``i``: (512 + i%256) x (256 + i%128) pixels, origin and
+    pixel size dyadic rationals of ``i``, so both engines agree bit-exactly."""
+    return tiff.write_geotiff(
+        512 + i % 256,
+        256 + i % 128,
+        200000.0 + i * 250.25,
+        6000000.0 - i * 125.5,
+        0.25 + (i % 8) / 16.0,
+        0.25 + (i % 4) / 8.0,
     )

@@ -25,11 +25,11 @@ from ._qbase import (
     TX,
     V,
     Window,
-    _dsum,
-    _dsum_sql,
     argmin_per_group,
     catalog_filtered_join,
     composite_key,
+    dsum,
+    dsum_sql,
     parse_model_filename,
     path_parts,
     register,
@@ -312,9 +312,9 @@ def a3_first_seen_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a4_group_agg",
     f"""
     SELECT l_returnflag, l_linestatus,
-           {_dsum_sql('l_quantity')} AS sum_qty,
-           {_dsum_sql('l_extendedprice')} AS sum_base_price,
-           {_dsum_sql('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
+           {dsum_sql('l_quantity')} AS sum_qty,
+           {dsum_sql('l_extendedprice')} AS sum_base_price,
+           {dsum_sql('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
            count(*) AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -326,9 +326,9 @@ def a4_group_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on the group keys; decimal partials for cross-engine exactness."""
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= "1998-09-02")
     return li.groupBy("l_returnflag", "l_linestatus").agg(
-        _dsum(F.col("l_quantity")).alias("sum_qty"),
-        _dsum(F.col("l_extendedprice")).alias("sum_base_price"),
-        _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("sum_disc_price"),
+        dsum(F.col("l_quantity")).alias("sum_qty"),
+        dsum(F.col("l_extendedprice")).alias("sum_base_price"),
+        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("sum_disc_price"),
         F.count("*").alias("count_order"),
     )
 
@@ -336,7 +336,7 @@ def a4_group_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "a4_rollup",
     f"""
-    SELECT l_returnflag, l_linestatus, count(*) AS n, {_dsum_sql('l_quantity')} AS sum_qty
+    SELECT l_returnflag, l_linestatus, count(*) AS n, {dsum_sql('l_quantity')} AS sum_qty
     FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
 )
@@ -345,14 +345,14 @@ def a4_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         table(spark, sf_dir, "lineitem")
         .rollup("l_returnflag", "l_linestatus")
-        .agg(F.count("*").alias("n"), _dsum(F.col("l_quantity")).alias("sum_qty"))
+        .agg(F.count("*").alias("n"), dsum(F.col("l_quantity")).alias("sum_qty"))
     )
 
 
 @register(
     "a4_cube",
     f"""
-    SELECT l_returnflag, l_linestatus, count(*) AS n, {_dsum_sql('l_quantity')} AS sum_qty
+    SELECT l_returnflag, l_linestatus, count(*) AS n, {dsum_sql('l_quantity')} AS sum_qty
     FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
     """,
 )
@@ -361,7 +361,7 @@ def a4_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         table(spark, sf_dir, "lineitem")
         .cube("l_returnflag", "l_linestatus")
-        .agg(F.count("*").alias("n"), _dsum(F.col("l_quantity")).alias("sum_qty"))
+        .agg(F.count("*").alias("n"), dsum(F.col("l_quantity")).alias("sum_qty"))
     )
 
 
@@ -563,7 +563,7 @@ def f_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.groupBy(
             F.year("o_orderdate").alias("y"), F.month("o_orderdate").alias("m")
         )
-        .agg(F.count("*").alias("n"), _dsum(F.col("o_totalprice")).alias("total"))
+        .agg(F.count("*").alias("n"), dsum(F.col("o_totalprice")).alias("total"))
     )
 
 
@@ -1283,7 +1283,7 @@ def text_lang_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.groupBy("lang")
         .agg(
             F.count("*").alias("n_docs"),
-            _dsum(F.col("n_chars")).alias("total_chars"),
+            dsum(F.col("n_chars")).alias("total_chars"),
             F.round(F.avg(TX.token_count(F.col("text"))), 2).alias("avg_tokens"),
         )
     )

@@ -21,20 +21,22 @@ from ._qbase import (
     SparkSession,
     V,
     Window,
-    _dsum,
-    _dsum_sql,
     affine_extent,
     classify_points,
     contains_join,
     contains_join_grid,
     documents_catalog,
     drain,
+    dsum,
+    dsum_sql,
     events_stream,
     local_frame,
     nearest_vertex_join,
     register,
     sessionize,
+    sliding_window_agg,
     table,
+    tumbling_window_agg,
 )
 
 # ======================================================================
@@ -485,7 +487,7 @@ def session_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     s = sessionize(ev)
     return s.groupBy("user_id", "session_seq").agg(
-        F.count("*").alias("n_events"), _dsum(F.col("value")).alias("sum_value")
+        F.count("*").alias("n_events"), dsum(F.col("value")).alias("sum_value")
     )
 
 
@@ -499,22 +501,9 @@ FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
 
 @register("tumbling_window_agg", _TUMBLING_SQL)
 def tumbling_window_agg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window aggregate (batch twin of the streaming query).
-
-    Null-event-time contract (r16): rows with a NULL ts can't bucket —
-    Spark's window generator silently drops them; the filter makes that
-    explicit on both sides and pushes IsNotNull(ts) into the scan."""
-    ev = table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
-    return (
-        ev.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), _dsum(F.col("value")).alias("sum_value"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start_epoch"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
+    """Tumbling-window aggregate (batch twin of the streaming query);
+    NULL event times are excluded on both sides (r16 contract)."""
+    return tumbling_window_agg(table(spark, sf_dir, "events"))
 
 
 _SLIDING_SQL = """
@@ -534,16 +523,7 @@ GROUP BY 1, 2
 def sliding_window_agg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows (10 min window, 5 min slide) — each event lands in 2
     overlapping windows. Null event time excluded (r16 contract)."""
-    ev = table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
-    return (
-        ev.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start_epoch"),
-            "event_type",
-            "n",
-        )
-    )
+    return sliding_window_agg(table(spark, sf_dir, "events"))
 
 
 @register("streaming_tumbling", _TUMBLING_SQL)
@@ -552,18 +532,7 @@ def streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     (file source, availableNow trigger, complete-mode memory sink) — proves
     batch/stream semantic parity, checked against the same oracle."""
     stream, src = events_stream(spark, sf_dir)
-    agg = (
-        stream.filter(F.col("ts").isNotNull())
-        .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), _dsum(F.col("value")).alias("sum_value"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start_epoch"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-    return drain(agg, "complete", src)
+    return drain(tumbling_window_agg(stream), "complete", src)
 
 
 # ======================================================================
@@ -666,17 +635,9 @@ def s7_exif_gps_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlike `multimodal_meta`, whose blobs are text and exercise the
     digest-stub tier."""
     from ..sources.binary import extract_image_meta, read_binary_dir, stage_files
-    from ..functions import tiff as _tiff
 
     def to_file(r):
-        i = r["id"]
-        blob = _tiff.write_jpeg_exif_gps(
-            (17 + i % 17, (i * 7) % 60, (i * 131) % 6000, 100),
-            (60 + i % 12, (i * 11) % 60, (i * 173) % 6000, 100),
-            south=True,
-            west=True,
-        )
-        return f"{i}.jpg", blob
+        return f"{r['id']}.jpg", GF.exif_jpeg(r["id"])
 
     dest = stage_files(spark, "exif_fix", spark.range(60), to_file)
     meta = extract_image_meta(read_binary_dir(spark, dest))
@@ -710,19 +671,9 @@ def s8_geotiff_meta_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     All fixture values are dyadic rationals, so engine and oracle agree
     bit-exactly with no rounding at all."""
     from ..sources.binary import extract_image_meta, read_binary_dir, stage_files
-    from ..functions import tiff as _tiff
 
     def to_file(r):
-        i = r["id"]
-        blob = _tiff.write_geotiff(
-            512 + i % 256,
-            256 + i % 128,
-            200000.0 + i * 250.25,
-            6000000.0 - i * 125.5,
-            0.25 + (i % 8) / 16.0,
-            0.25 + (i % 4) / 8.0,
-        )
-        return f"{i}.tif", blob
+        return f"{r['id']}.tif", GF.geotiff(r["id"])
 
     dest = stage_files(spark, "geotiff_fix", spark.range(48), to_file)
     meta = extract_image_meta(read_binary_dir(spark, dest))
@@ -1071,7 +1022,7 @@ def w4_rank_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "a4_grouping_sets",
     f"""
-    SELECT l_returnflag, l_linestatus, count(*) AS n, {_dsum_sql('l_quantity')} AS sum_qty
+    SELECT l_returnflag, l_linestatus, count(*) AS n, {dsum_sql('l_quantity')} AS sum_qty
     FROM lineitem
     GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
     """,
@@ -1081,7 +1032,7 @@ def a4_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
         SELECT l_returnflag, l_linestatus, count(*) AS n,
-               {_dsum_sql('l_quantity')} AS sum_qty
+               {dsum_sql('l_quantity')} AS sum_qty
         FROM {{lineitem}}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
         """,

@@ -29,11 +29,11 @@ from ._qbase import (
     TX,
     V,
     Window,
-    _dsum,
-    _dsum_sql,
     affine_extent,
     classify_points,
     drain,
+    dsum,
+    dsum_sql,
     events_stream,
     local_frame,
     os,
@@ -52,7 +52,7 @@ from .q01_j1 import _COSINE_ALL_SQL
 @register(
     "s11_csv_roundtrip",
     f"""
-    SELECT event_type, count(*) AS n, {_dsum_sql('value')} AS sum_value
+    SELECT event_type, count(*) AS n, {dsum_sql('value')} AS sum_value
     FROM events GROUP BY event_type
     """,
 )
@@ -96,7 +96,7 @@ def s11_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .csv(dest)
     )
     return back.groupBy("event_type").agg(
-        F.count("*").alias("n"), _dsum(F.col("value")).alias("sum_value")
+        F.count("*").alias("n"), dsum(F.col("value")).alias("sum_value")
     )
 
 
@@ -153,7 +153,7 @@ def streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.filter(F.col("ts").isNotNull())
         .withWatermark("ts", "1 minute")
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n"), _dsum(F.col("value")).alias("sum_value"))
+        .agg(F.count("*").alias("n"), dsum(F.col("value")).alias("sum_value"))
         .select(
             "user_id",
             F.unix_timestamp(F.col("w.start")).alias("session_start_epoch"),
@@ -329,7 +329,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "skew_salted_agg",
     f"""
-    SELECT l_returnflag, {_dsum_sql('l_quantity')} AS sum_qty, count(*) AS n
+    SELECT l_returnflag, {dsum_sql('l_quantity')} AS sum_qty, count(*) AS n
     FROM lineitem GROUP BY l_returnflag
     """,
 )
@@ -352,7 +352,7 @@ def skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "skew_salted_join",
     f"""
-    SELECT p.p_brand, count(*) AS n, {_dsum_sql('l.l_extendedprice')} AS revenue
+    SELECT p.p_brand, count(*) AS n, {dsum_sql('l.l_extendedprice')} AS revenue
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     GROUP BY p.p_brand
     """,
@@ -369,14 +369,14 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = salted_broadcast_replicate_join(li, part, "l_partkey", n_salts=8)
     return joined.groupBy("p_brand").agg(
-        F.count("*").alias("n"), _dsum(F.col("l_extendedprice")).alias("revenue")
+        F.count("*").alias("n"), dsum(F.col("l_extendedprice")).alias("revenue")
     )
 
 
 @register(
     "s16_partitioned_publish",
     f"""
-    SELECT source, count(*) AS n, {_dsum_sql('n_chars')} AS total_chars
+    SELECT source, count(*) AS n, {dsum_sql('n_chars')} AS total_chars
     FROM documents WHERE lang = 'es' GROUP BY source
     """,
 )
@@ -402,7 +402,7 @@ def s16_partitioned_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang") == "es"
     )
     return back.groupBy("source").agg(
-        F.count("*").alias("n"), _dsum(F.col("n_chars")).alias("total_chars")
+        F.count("*").alias("n"), dsum(F.col("n_chars")).alias("total_chars")
     )
 
 
@@ -606,7 +606,7 @@ def j_late_arriving_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(
             F.count("*").alias("n_orders"),
-            _dsum(F.col("o_totalprice")).alias("revenue"),
+            dsum(F.col("o_totalprice")).alias("revenue"),
         )
     )
     ledger = local_frame(
@@ -829,7 +829,7 @@ def w5_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tpch_q3_shape",
     f"""
     SELECT l.l_orderkey,
-           {_dsum_sql('l.l_extendedprice * (1 - l.l_discount)')} AS revenue,
+           {dsum_sql('l.l_extendedprice * (1 - l.l_discount)')} AS revenue,
            floor(epoch(o.o_orderdate))::BIGINT AS orderdate_epoch,
            o.o_orderpriority
     FROM customer c
@@ -856,7 +856,7 @@ def tpch_q3_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c, o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
-            _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
+            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
         )
         .select(
             "l_orderkey",
@@ -873,7 +873,7 @@ def tpch_q3_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tpch_q5_shape",
     f"""
     SELECT n.n_name,
-           {_dsum_sql('l.l_extendedprice * (1 - l.l_discount)')} AS revenue
+           {dsum_sql('l.l_extendedprice * (1 - l.l_discount)')} AS revenue
     FROM region r
     JOIN nation n ON n.n_regionkey = r.r_regionkey
     JOIN customer c ON c.c_nationkey = n.n_nationkey
@@ -903,7 +903,7 @@ def tpch_q5_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(
-            _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
+            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
         )
     )
 

@@ -29,15 +29,16 @@ from ._qbase import (
     SparkSession,
     TX,
     Window,
-    _dsum,
-    _dsum_sql,
     documents_catalog,
     drain,
+    dsum,
+    dsum_sql,
     events_stream,
     local_frame,
     os,
     register,
     scratch_dir,
+    sliding_window_agg,
     stage_dir,
     table,
 )
@@ -53,7 +54,7 @@ from .q03_ext import _BULK_N, _BULK_PTS_SQL
     "j_bucketed_join",
     f"""
     SELECT o.o_orderpriority, count(*) AS n,
-           {_dsum_sql('l.l_extendedprice')} AS revenue
+           {dsum_sql('l.l_extendedprice')} AS revenue
     FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
     GROUP BY o.o_orderpriority
     """,
@@ -95,7 +96,7 @@ def j_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = spark.table(bkt(base, "lineitem"))
     joined = o.hint("merge").join(li, li.l_orderkey == o.o_orderkey)
     return joined.groupBy("o_orderpriority").agg(
-        F.count("*").alias("n"), _dsum(F.col("l_extendedprice")).alias("revenue")
+        F.count("*").alias("n"), dsum(F.col("l_extendedprice")).alias("revenue")
     )
 
 
@@ -412,7 +413,7 @@ def geo_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a4_histogram",
     f"""
     SELECT cast(floor(o_totalprice / 50000.0) AS BIGINT) AS bucket,
-           count(*) AS n, {_dsum_sql('o_totalprice')} AS total
+           count(*) AS n, {dsum_sql('o_totalprice')} AS total
     FROM orders GROUP BY 1
     """,
 )
@@ -425,7 +426,7 @@ def a4_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(
             F.floor(F.col("o_totalprice") / 50000.0).cast("bigint").alias("bucket")
         )
-        .agg(F.count("*").alias("n"), _dsum(F.col("o_totalprice")).alias("total"))
+        .agg(F.count("*").alias("n"), dsum(F.col("o_totalprice")).alias("total"))
     )
 
 
@@ -583,7 +584,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "s17_compaction",
     f"""
-    SELECT lang, count(*) AS n, {_dsum_sql('n_chars')} AS total_chars
+    SELECT lang, count(*) AS n, {dsum_sql('n_chars')} AS total_chars
     FROM documents GROUP BY lang
     """,
 )
@@ -606,7 +607,7 @@ def s17_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         spark.read.parquet(compact_dir)
         .groupBy("lang")
-        .agg(F.count("*").alias("n"), _dsum(F.col("n_chars")).alias("total_chars"))
+        .agg(F.count("*").alias("n"), dsum(F.col("n_chars")).alias("total_chars"))
     )
 
 
@@ -708,17 +709,7 @@ def streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch/stream parity against the same oracle as
     ``sliding_window_agg``."""
     stream, src = events_stream(spark, sf_dir)
-    agg = (
-        stream.filter(F.col("ts").isNotNull())
-        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start_epoch"),
-            "event_type",
-            "n",
-        )
-    )
-    return drain(agg, "complete", src)
+    return drain(sliding_window_agg(stream), "complete", src)
 
 
 @register(
@@ -759,7 +750,7 @@ def geo_ring_areas(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "s9_jdbc_roundtrip",
     f"""
-    SELECT c_nationkey, count(*) AS n, {_dsum_sql('c_acctbal')} AS total_bal
+    SELECT c_nationkey, count(*) AS n, {dsum_sql('c_acctbal')} AS total_bal
     FROM customer WHERE c_mktsegment = 'BUILDING'
     GROUP BY c_nationkey
     """,
@@ -835,7 +826,7 @@ def s9_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         back.filter(F.col("c_mktsegment") == "BUILDING")
         .groupBy("c_nationkey")
-        .agg(F.count("*").alias("n"), _dsum(F.col("c_acctbal")).alias("total_bal"))
+        .agg(F.count("*").alias("n"), dsum(F.col("c_acctbal")).alias("total_bal"))
     )
 
 

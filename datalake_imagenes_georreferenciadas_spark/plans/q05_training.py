@@ -14,9 +14,9 @@ from ._qbase import (
     SparkSession,
     TX,
     Window,
-    _dsum,
-    _dsum_sql,
     drain,
+    dsum,
+    dsum_sql,
     events_stream,
     os,
     register,
@@ -689,7 +689,7 @@ def s19_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.orc(out)
     return back.groupBy("o_orderpriority").agg(
         F.count("*").alias("n"),
-        _dsum(F.col("o_totalprice")).alias("total"),
+        dsum(F.col("o_totalprice")).alias("total"),
     )
 
 
@@ -699,11 +699,11 @@ def s19_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH s AS (
       SELECT l_returnflag,
              count(*) AS n,
-             {_dsum_sql('l_quantity')} AS sx,
-             {_dsum_sql('l_extendedprice')} AS sy,
-             {_dsum_sql('l_quantity * l_quantity')} AS sxx,
-             {_dsum_sql('l_extendedprice * l_extendedprice')} AS syy,
-             {_dsum_sql('l_quantity * l_extendedprice')} AS sxy
+             {dsum_sql('l_quantity')} AS sx,
+             {dsum_sql('l_extendedprice')} AS sy,
+             {dsum_sql('l_quantity * l_quantity')} AS sxx,
+             {dsum_sql('l_extendedprice * l_extendedprice')} AS syy,
+             {dsum_sql('l_quantity * l_extendedprice')} AS sxy
       FROM lineitem GROUP BY l_returnflag)
     SELECT l_returnflag,
            floor(((n * sxy - sx * sy) /
@@ -738,11 +738,11 @@ def a8_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     x, y = F.col("l_quantity"), F.col("l_extendedprice")
     s = li.groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
-        _dsum(x).alias("sx"),
-        _dsum(y).alias("sy"),
-        _dsum(x * x).alias("sxx"),
-        _dsum(y * y).alias("syy"),
-        _dsum(x * y).alias("sxy"),
+        dsum(x).alias("sx"),
+        dsum(y).alias("sy"),
+        dsum(x * x).alias("sxx"),
+        dsum(y * y).alias("syy"),
+        dsum(x * y).alias("sxy"),
     )
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     num = n * F.col("sxy") - sx * sy
@@ -1051,7 +1051,7 @@ def ts_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = orders.groupBy(
         (F.year("o_orderdate") * 100 + F.month("o_orderdate")).alias("month_key")
-    ).agg(_dsum(F.col("o_totalprice")).alias("rev"))
+    ).agg(dsum(F.col("o_totalprice")).alias("rev"))
     w = Window.orderBy("month_key")
     prev = F.lag("rev").over(w)
     return m.select(
@@ -1204,7 +1204,7 @@ def s20_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).json(out)
     return back.groupBy("c_mktsegment").agg(
         F.count("*").alias("n"),
-        _dsum(F.col("c_acctbal")).alias("total_bal"),
+        dsum(F.col("c_acctbal")).alias("total_bal"),
     )
 
 
@@ -1253,7 +1253,7 @@ def s25_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return back.groupBy("s_nationkey").agg(
         F.count("*").alias("n"),
-        _dsum(F.col("s_acctbal")).alias("total_bal"),
+        dsum(F.col("s_acctbal")).alias("total_bal"),
         F.min("s_name").alias("first_name"),
     )
 
@@ -1388,7 +1388,7 @@ def j_scd2_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy(fact.custkey.alias("custkey"), "status").agg(
         F.count("*").alias("n"),
-        _dsum(F.col("l_quantity")).alias("qty"),
+        dsum(F.col("l_quantity")).alias("qty"),
     )
 
 

@@ -12,8 +12,8 @@ from ._qbase import (
     H,
     SparkSession,
     Window,
-    _dsum,
     drain_batches,
+    dsum,
     os,
     publish_state,
     register,
@@ -506,7 +506,7 @@ def a11_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least(F.greatest(F.col("value"), F.col("lo")), F.col("hi")).alias("cv"),
     )
     return clamped.groupBy("event_type").agg(
-        (_dsum(F.col("cv")) / F.count("*")).alias("wmean_raw_div"),
+        (dsum(F.col("cv")) / F.count("*")).alias("wmean_raw_div"),
         F.count("*").alias("n"),
     )
 

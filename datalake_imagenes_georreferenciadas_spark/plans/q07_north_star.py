@@ -17,10 +17,10 @@ from ._qbase import (
     SparkSession,
     V,
     Window,
-    _dsum,
-    _dsum_sql,
     classify_points,
     drain_batches,
+    dsum,
+    dsum_sql,
     os,
     publish_state,
     register,
@@ -302,31 +302,13 @@ def s1_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     s7/s8); per-kind fixed-point checksums over the decoded coordinates
     prove the whole source — partition planning, executor-side read,
     typed schema — end to end against a closed-form oracle."""
-    from ..functions import tiff as _tiff
     from ..sources.pyds import register_exifscan
 
     def write(dest: str) -> None:
         for i in range(40):
-            with open(os.path.join(dest, f"{i}.jpg"), "wb") as f:
-                f.write(
-                    _tiff.write_jpeg_exif_gps(
-                        (17 + i % 17, (i * 7) % 60, (i * 131) % 6000, 100),
-                        (60 + i % 12, (i * 11) % 60, (i * 173) % 6000, 100),
-                        south=True,
-                        west=True,
-                    )
-                )
-            with open(os.path.join(dest, f"{i}.tif"), "wb") as f:
-                f.write(
-                    _tiff.write_geotiff(
-                        512 + i % 256,
-                        256 + i % 128,
-                        200000.0 + i * 250.25,
-                        6000000.0 - i * 125.5,
-                        0.25 + (i % 8) / 16.0,
-                        0.25 + (i % 4) / 8.0,
-                    )
-                )
+            for name, blob in ((f"{i}.jpg", GF.exif_jpeg(i)), (f"{i}.tif", GF.geotiff(i))):
+                with open(os.path.join(dest, name), "wb") as f:
+                    f.write(blob)
 
     dest = stage_dir(spark, ("pyds", sf_dir), write)
     register_exifscan(spark)
@@ -356,7 +338,7 @@ def s1_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
              l_extendedprice
       FROM lineitem)
     SELECT ship_month, count(*) AS n,
-           {_dsum_sql('l_extendedprice')} AS revenue
+           {dsum_sql('l_extendedprice')} AS revenue
     FROM li
     WHERE ship_month IN ('1995-10', '1995-11', '1995-12')
     GROUP BY ship_month
@@ -411,7 +393,7 @@ def j_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("ship_month")
         .agg(
             F.count("*").alias("n"),
-            _dsum(F.col("l_extendedprice")).alias("revenue"),
+            dsum(F.col("l_extendedprice")).alias("revenue"),
         )
     )
 
@@ -490,7 +472,7 @@ def streaming_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n,
            CAST(sum(CAST(props->>'k' AS INT)) AS BIGINT) AS sum_k,
            count(*) FILTER (WHERE props->>'nope' IS NULL) AS n_missing,
-           {_dsum_sql("round(value * 2, 6)")} AS sum_doubled
+           {dsum_sql("round(value * 2, 6)")} AS sum_doubled
     FROM e GROUP BY event_type
     """,
 )
@@ -531,7 +513,7 @@ def f14_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
             F.sum("k").alias("sum_k"),
             F.count(F.when(F.col("missing").isNull(), 1)).alias("n_missing"),
-            _dsum(F.col("doubled")).alias("sum_doubled"),
+            dsum(F.col("doubled")).alias("sum_doubled"),
         )
     )
 
@@ -855,18 +837,13 @@ def s22_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") < 200)
         .select("doc_id", "text")
     )
-    dest = scratch_dir("orphan_scan_")
+    from ..sources.binary import read_binary_dir, stage_files
 
-    def write_files(rows):
-        for r in rows:
-            if r["text"] is None:  # null payloads never reach the bucket
-                continue
-            with open(os.path.join(dest, f"{r['doc_id']}.bin"), "wb") as f:
-                f.write(r["text"].encode("utf-8"))
+    def to_file(r):
+        # null payloads never reach the bucket
+        return None if r["text"] is None else (f"{r['doc_id']}.bin", r["text"].encode("utf-8"))
 
-    docs.foreachPartition(write_files)
-    from ..sources.binary import read_binary_dir
-
+    dest = stage_files(spark, ("orphan_scan", sf_dir), docs, to_file)
     listed = read_binary_dir(spark, dest).select(
         F.regexp_extract(F.col("path"), r"(\d+)\.bin$", 1)
         .cast("long")
@@ -1153,7 +1130,7 @@ def a15_abc_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = (
         li.join(part, li.l_partkey == part.p_partkey)  # linear-in-SF: stats decide
         .groupBy("l_partkey", "p_brand")
-        .agg(_dsum(F.col("l_extendedprice")).alias("rev"))
+        .agg(dsum(F.col("l_extendedprice")).alias("rev"))
     )
     w = Window.partitionBy("p_brand").orderBy(F.col("rev").desc(), "l_partkey")
     cum = (
@@ -1176,7 +1153,7 @@ def a15_abc_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return c.groupBy("p_brand", "abc").agg(
         F.count("*").alias("n_parts"),
-        _dsum(F.col("rev")).alias("class_rev"),
+        dsum(F.col("rev")).alias("class_rev"),
     )
 
 
@@ -1214,7 +1191,7 @@ def a16_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), F.col("c_nationkey") == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("r_name", "n_name")
-        .agg(_dsum(F.col("o_totalprice")).alias("rev"))
+        .agg(dsum(F.col("o_totalprice")).alias("rev"))
     )
     rt = n.groupBy("r_name").agg(
         F.sum(F.col("rev").cast("decimal(18,4)")).cast("double").alias("region_rev")
@@ -1399,7 +1376,7 @@ def a18_outlier_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = F.col("value")
     st = ev.groupBy("event_type").agg(
         F.count("*").alias("n"),
-        _dsum(v).alias("s"),
+        dsum(v).alias("s"),
         F.sum((v * v).cast("decimal(28,4)")).cast("double").alias("ss"),
     )
     mu = F.col("s") / F.col("n")

@@ -16,8 +16,8 @@ from ._qbase import (
     SparkSession,
     V,
     Window,
-    _dsum,
     drain_batches,
+    dsum,
     os,
     register,
     scratch_dir,
@@ -769,7 +769,7 @@ def a21_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("d0", "yyyy-MM-dd").alias("cohort_day"),
             F.datediff("d", "d0").alias("day_offset"),
         )
-        .agg(_dsum(F.col("value")).alias("rev"))
+        .agg(dsum(F.col("value")).alias("rev"))
     )
     w = (
         Window.partitionBy("cohort_day")

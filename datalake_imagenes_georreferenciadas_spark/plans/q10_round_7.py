@@ -14,9 +14,9 @@ from ._qbase import (
     SparkSession,
     V,
     Window,
-    _dsum,
-    _dsum_sql,
     drain,
+    dsum,
+    dsum_sql,
     events_stream,
     register,
     spread,
@@ -400,7 +400,7 @@ def ml_chi2_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "streaming_static_join",
     f"""
-    SELECT c.c_mktsegment, count(*) AS n, {_dsum_sql('e.value')} AS sum_value
+    SELECT c.c_mktsegment, count(*) AS n, {dsum_sql('e.value')} AS sum_value
     FROM events e JOIN customer c ON e.user_id = c.c_custkey
     GROUP BY c.c_mktsegment
     """,
@@ -424,7 +424,7 @@ def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim, stream.user_id == dim.c_custkey, "inner"
     )
     agg = joined.groupBy("c_mktsegment").agg(
-        F.count("*").alias("n"), _dsum(F.col("value")).alias("sum_value")
+        F.count("*").alias("n"), dsum(F.col("value")).alias("sum_value")
     )
     return drain(agg, "complete", src)
 

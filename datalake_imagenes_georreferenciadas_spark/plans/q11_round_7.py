@@ -14,9 +14,9 @@ from ._qbase import (
     SparkSession,
     V,
     Window,
-    _dsum,
-    _dsum_sql,
     documents_catalog,
+    dsum,
+    dsum_sql,
     local_frame,
     os,
     register,
@@ -103,7 +103,7 @@ def ml_ndcg_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ivm_join_delta",
     f"""
     SELECT c.c_mktsegment, count(*) AS n,
-           {_dsum_sql('o.o_totalprice')} AS revenue
+           {dsum_sql('o.o_totalprice')} AS revenue
     FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     WHERE o.o_orderkey IS NOT NULL
     GROUP BY c.c_mktsegment
@@ -173,7 +173,7 @@ def ivm_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     -- __HIVE_DEFAULT_PARTITION__, so an empty-string category reads
     -- back as NULL — the published contract, mirrored here
     SELECT nullif(o_orderpriority, '') AS o_orderpriority, count(*) AS n,
-           {_dsum_sql(
+           {dsum_sql(
                "o_totalprice + CASE WHEN o_orderpriority = '1-URGENT' "
                "THEN 100.0 ELSE 0.0 END"
            )} AS total
@@ -220,7 +220,7 @@ def s26_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the read-back must still bind to the table's contract schema.
     back = spark.read.schema(orders.schema).parquet(dest)
     return back.groupBy("o_orderpriority").agg(
-        F.count("*").alias("n"), _dsum(F.col("o_totalprice")).alias("total")
+        F.count("*").alias("n"), dsum(F.col("o_totalprice")).alias("total")
     )
 
 
@@ -1247,7 +1247,7 @@ def dq_schema_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "j_shuffle_hash_hint",
     f"""
-    SELECT p.p_brand, count(*) AS n, {_dsum_sql('l.l_extendedprice')} AS revenue
+    SELECT p.p_brand, count(*) AS n, {dsum_sql('l.l_extendedprice')} AS revenue
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     GROUP BY p.p_brand
     """,
@@ -1271,7 +1271,7 @@ def j_shuffle_hash_hint(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = li.join(part.hint("SHUFFLE_HASH"), "l_partkey")
     return joined.groupBy("p_brand").agg(
         F.count("*").alias("n"),
-        _dsum(F.col("l_extendedprice")).alias("revenue"),
+        dsum(F.col("l_extendedprice")).alias("revenue"),
     )
 
 

@@ -15,8 +15,8 @@ from ._qbase import (
     SparkSession,
     V,
     Window,
-    _dsum,
-    _dsum_sql,
+    dsum,
+    dsum_sql,
     os,
     register,
     scratch_dir,
@@ -874,7 +874,7 @@ _ATTR_WINDOW_S = 7 * 86400
        AND t.ts >= c.ts - INTERVAL {_ATTR_WINDOW_S} SECOND),
     attr AS (SELECT event_id, value, channel FROM ranked WHERE rn = 1)
     SELECT channel, count(*) AS n_conversions,
-           {_dsum_sql('value')} AS attributed_value
+           {dsum_sql('value')} AS attributed_value
     FROM attr GROUP BY channel ORDER BY channel
     """,
 )
@@ -918,7 +918,7 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
         attr.groupBy("channel")
         .agg(
             F.count("*").alias("n_conversions"),
-            _dsum(F.col("value")).alias("attributed_value"),
+            dsum(F.col("value")).alias("attributed_value"),
         )
         .orderBy("channel")
     )

@@ -13,9 +13,9 @@ from ._qbase import (
     SparkSession,
     V,
     Window,
-    _dsum,
-    _dsum_sql,
     drain,
+    dsum,
+    dsum_sql,
     os,
     register,
     scratch_dir,
@@ -229,7 +229,7 @@ def ts_spc_limits(spark: SparkSession, sf_dir: str) -> DataFrame:
     w AS (
       SELECT CAST(floor(epoch(tts) / 3600) * 3600 AS BIGINT)
                AS window_start_epoch,
-             event_type, count(*) AS n, {_dsum_sql('value')} AS sum_value
+             event_type, count(*) AS n, {dsum_sql('value')} AS sum_value
       FROM kept GROUP BY 1, 2)
     SELECT w.window_start_epoch, w.event_type, w.n, w.sum_value
     FROM w CROSS JOIN m
@@ -311,7 +311,7 @@ def streaming_append_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         shard_stream(spark, src_dir)
         .withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), _dsum(F.col("value")).alias("sum_value"))
+        .agg(F.count("*").alias("n"), dsum(F.col("value")).alias("sum_value"))
         .select(
             F.unix_timestamp("w.start").alias("window_start_epoch"),
             "event_type",
@@ -396,7 +396,7 @@ def ts_seasonal_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
     "s28_column_rename_evolution",
     f"""
     SELECT o_orderstatus AS status, count(*) AS n,
-           {_dsum_sql('o_totalprice')} AS total
+           {dsum_sql('o_totalprice')} AS total
     FROM orders WHERE o_orderkey IS NOT NULL GROUP BY o_orderstatus
     """,
 )
@@ -438,7 +438,7 @@ def s28_column_rename_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     both = old.unionByName(new)
     return both.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count("*").alias("n"), _dsum(F.col("o_totalprice")).alias("total")
+        F.count("*").alias("n"), dsum(F.col("o_totalprice")).alias("total")
     )
 
 

@@ -23,8 +23,9 @@ Reference parity:
   into the source).
 - S7 EXIF GPS extract (script_geo.py:170-171) and S8 raster
   geotransform read (script_geo.py:175-179) → :func:`extract_image_meta`.
-- P6 type dispatch BR/TIF (script_geo.py:167-175) → expression dispatch on
-  extension + decode success, not exception control flow.
+- P6 type dispatch BR/TIF (script_geo.py:167-175) → ``functions.tiff.image_meta``
+  on extension + decode success, not exception control flow (the
+  ``exifscan`` source, sources/pyds.py, runs the same dispatch).
 """
 
 from __future__ import annotations
@@ -37,11 +38,13 @@ import os
 import shutil
 import tempfile
 from collections.abc import Callable, Hashable, Iterator
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.tiff import image_meta
 from ..tables import table
 
 IMAGE_META_SCHEMA = (
@@ -113,27 +116,27 @@ def stage_dir(spark: SparkSession, key: Hashable, fill: Callable[[str], None]) -
     return dest
 
 
+def _write_files(dest: str, to_file: Callable, part: Iterator) -> None:
+    for r in part:
+        out = to_file(r)
+        if out is not None:
+            with open(os.path.join(dest, out[0]), "wb") as fh:
+                fh.write(out[1])
+
+
 def stage_files(
     spark: SparkSession,
-    key: str,
+    key: Hashable,
     rows: DataFrame,
     to_file: Callable[..., tuple[str, bytes] | None],
 ) -> str:
     """Write one file per row of ``rows`` into a :func:`stage_dir` for
     ``key`` and return it. ``to_file(row)`` gives the ``(file name,
-    bytes)`` pair, or None to skip the row."""
-
-    def fill(dest: str) -> None:
-        def write(part):
-            for r in part:
-                out = to_file(r)
-                if out is not None:
-                    with open(os.path.join(dest, out[0]), "wb") as fh:
-                        fh.write(out[1])
-
-        rows.foreachPartition(write)
-
-    return stage_dir(spark, key, fill)
+    bytes)`` pair, or None to skip the row. The package's one RDD-level
+    crossing: each partition's rows are written by a Python worker."""
+    return stage_dir(
+        spark, key, lambda dest: rows.foreachPartition(partial(_write_files, dest, to_file))
+    )
 
 
 @atexit.register
@@ -197,47 +200,14 @@ def _decode_image_stub(content: bytes, path: str) -> dict:
 
 
 def _decode_image(content: bytes, path: str) -> dict:
-    """Per-row decode dispatch, two tiers: the stdlib TIFF/EXIF parser
-    (functions.tiff — EXIF GPS for ``.jpg``/``.jpeg``, geotransform and
-    dims otherwise), then the deterministic digest stub. Mirrors the
-    reference's try/except dispatch (script_geo.py:167-175) so a corrupt
-    blob degrades instead of failing the task — and keeps the digest-twin
-    oracle valid on synthetic (non-image) fixtures."""
-    from ..functions import tiff as _tiff
-
+    """Per-row decode, two tiers: ``functions.tiff.image_meta``, then the
+    deterministic digest stub. Like the reference's try/except dispatch,
+    a corrupt blob degrades instead of failing the task, and the
+    digest-twin oracle stays valid on synthetic (non-image) fixtures."""
     if content is None:  # missing payload → all-NULL metadata row
-        return {
-            "clase": None,
-            "lat": None,
-            "lon": None,
-            "gt": None,
-            "cols": None,
-            "rows": None,
-        }
+        return dict.fromkeys(("clase", "lat", "lon", "gt", "cols", "rows"))
     content = bytes(content)
-    if path.lower().endswith((".jpg", ".jpeg")):
-        gps = _tiff.parse_exif_gps(content)
-        if gps is not None:
-            return {
-                "clase": "BR",
-                "lat": gps[0],
-                "lon": gps[1],
-                "gt": None,
-                "cols": None,
-                "rows": None,
-            }
-    else:
-        meta = _tiff.parse_tiff_meta(content)
-        if meta is not None:
-            return {
-                "clase": "TIF",
-                "lat": None,
-                "lon": None,
-                "gt": meta[0],
-                "cols": meta[1],
-                "rows": meta[2],
-            }
-    return _decode_image_stub(content, path)
+    return image_meta(content, path) or _decode_image_stub(content, path)
 
 
 def extract_image_meta(binary_df: DataFrame) -> DataFrame:

@@ -50,25 +50,18 @@ class ExifScanReader(DataSourceReader):
 
     def read(self, partition: _FileSplit):
         # executor-side: decode inside the scan, emit typed rows only
-        from ..functions import tiff as T
+        from ..functions.tiff import image_meta
 
         for path in partition.files:
             with open(path, "rb") as fh:
                 blob = fh.read()
-            if path.lower().endswith((".jpg", ".jpeg")):
-                gps = T.parse_exif_gps(blob)
-                if gps is not None:
-                    yield (path, len(blob), "BR", gps[0], gps[1],
-                           None, None, None, None)
-                    continue
+            m = image_meta(blob, path)
+            if m is None:
+                yield (path, len(blob), "RAW", None, None, None, None, None, None)
             else:
-                meta = T.parse_tiff_meta(blob)
-                if meta is not None:
-                    gt, cols, rows = meta
-                    yield (path, len(blob), "TIF", None, None,
-                           cols, rows, gt[0], gt[3])
-                    continue
-            yield (path, len(blob), "RAW", None, None, None, None, None, None)
+                gt = m["gt"] or (None,) * 4
+                yield (path, len(blob), m["clase"], m["lat"], m["lon"],
+                       m["cols"], m["rows"], gt[0], gt[3])
 
 
 class ExifScanDataSource(DataSource):

@@ -1,7 +1,8 @@
 """Watermarked streaming operators over events (SURVEY §2.9 EXT).
 
-Watermark-bounded dedup; the windowed count is
-``operators.sessionize.tumbling_window_agg`` over a watermarked stream.
+Watermark-bounded dedup; the windowed aggregates are
+``operators.sessionize.tumbling_window_agg`` / ``sliding_window_agg``,
+which run unchanged on a (watermarked) stream.
 Tests drive these with a file source + ``trigger(availableNow=True)`` +
 memory sink, asserting batch-by-batch results (SURVEY §5.2.5).
 """

@@ -1,7 +1,8 @@
 """Call sites by (module, enclosing function): the AST scan behind the
 review gates that pin where code forces a broadcast
 (test_broadcast_allowlist) or crosses into a Python worker
-(test_python_kernel_allowlist)."""
+(test_python_kernel_allowlist); and the names code reads, behind the
+dead-operator gate (test_operator_params)."""
 
 from __future__ import annotations
 
@@ -51,3 +52,17 @@ def call_sites(files, root: Path):
 
         V().visit(ast.parse(f.read_text()))
         yield from found
+
+
+def used_names(files) -> set[str]:
+    """Every name ``files`` read as a bare name or an attribute: a call's
+    callee, a function passed as a value (a callback, ``partial(fn)``),
+    ``module.fn``. An import alone is not a use."""
+    out: set[str] = set()
+    for f in files:
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                out.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                out.add(node.attr)
+    return out

@@ -124,10 +124,10 @@ def test_staged_dirs_are_removed_at_exit(tmp_path):
     assert state["functions"] == []
     # once per application: the s8 fixture, the landing zone, the 1- and
     # 2-copy events streams, the bucketed, Derby, exifscan and DPP
-    # layouts (8); per call, in each of the two rounds: tdigest's shards
-    # and checkpoint, append_windows' split and source, and the 20 sink,
-    # catalog and evolution dirs (2 x 24)
-    assert state["staged"] == 56
+    # layouts and the orphan-scan bucket (9); per call, in each of the two
+    # rounds: tdigest's shards and checkpoint, append_windows' split and
+    # source, and the 19 sink, catalog and evolution dirs (2 x 23)
+    assert state["staged"] == 55
     leaked = sorted(e for e in os.listdir(tmp) if not e.startswith(SPARK_TMP_PREFIXES))
     assert leaked == []
 

@@ -100,6 +100,23 @@ def test_second_insert_continues_ids(spark, tmp_path):
     assert store.catalog().count() == 5
 
 
+def test_empty_insert_commits_no_version(spark, tmp_path):
+    """An insert with no rows (a duplicate-only trigger, a replay) adds
+    no version, as an empty MERGE adds none, so it cannot push real
+    history out of ``expire_snapshots``."""
+    store = CatalogStore(spark, str(tmp_path))
+    empty = _rows(spark).limit(0)
+    assert store.insert_catalog(empty, store.start_run(PROCESO_INGEST)).count() == 0
+    assert store.catalog_versions() == [] and store.last_id() == 0
+    store.insert_catalog(_rows(spark), store.start_run(PROCESO_INGEST))
+    store.update_processed_img(10, [1])
+    for _ in range(2):
+        store.insert_catalog(empty, store.start_run(PROCESO_INGEST))
+    assert store.catalog_versions() == [0, 1]
+    assert store.expire_snapshots(keep_last=2) == []
+    assert store.last_id() == 4 and store.lineage().count() == 4
+
+
 def test_update_processed_img_merge(spark, tmp_path):
     store = CatalogStore(spark, str(tmp_path))
     run = store.start_run(PROCESO_INGEST)

@@ -6,6 +6,7 @@ import io
 import zipfile
 
 from datalake_imagenes_georreferenciadas_spark import compat
+from datalake_imagenes_georreferenciadas_spark.plans import geo_fixture as GF
 from datalake_imagenes_georreferenciadas_spark.sources.binary import extract_archives
 
 
@@ -54,6 +55,53 @@ def test_upload_file_content_addressed(tmp_path):
     assert dest.endswith(f"{hashlib.md5(b'pixels').hexdigest()}.jpg")
     # same content → same key (idempotent), unlike the reference's urandom
     assert compat.upload_file("BR/C1", str(src), str(tmp_path / "lake")) == dest
+
+
+def test_get_predio_centroide_contains_then_nearest_then_unclassifiable(spark):
+    """Every branch of the reference's per-image classification over the
+    hand-made parcels: containment, the nearest fallback (a point in
+    P4's hole included) and the unlocatable label."""
+    out = compat.get_predio_centroide(GF.spark_points(spark), GF.spark_polys(spark))
+    got = {r["img_id"]: (r["id_predio"], r["method"]) for r in out.collect()}
+    assert got[1] == ("P1", "contains") and got[11] == ("P4", "contains")
+    assert got[12][1] == got[15][1] == got[6][1] == "nearest"
+    assert got[9] == got[10] == (None, "IMAGEN NO CLASIFICABLE")
+    assert set(got) == {i for i, _, _ in GF.POINTS}
+
+
+def _nearest_vertex(lon: float, lat: float) -> tuple:
+    """Brute-force argmin over every parcel vertex: the smallest
+    (squared distance, id_predio, nombre, x, y)."""
+    return min(
+        ((lon - x) * (lon - x) + (lat - y) * (lat - y), p["id_predio"], p["nombre"], x, y)
+        for p in GF.POLYS
+        for ring in p["rings"]
+        for x, y in ring
+    )
+
+
+def test_polygono_mascercano_is_the_nearest_vertex(spark):
+    """Nearest vertex per located point, against a brute-force scan; the
+    per-file argmin of get_properties_mascercano is the same function."""
+    assert compat.get_properties_mascercano is compat.polygono_mascercano
+    out = compat.polygono_mascercano(GF.spark_points(spark), GF.spark_polys(spark))
+    got = {r["img_id"]: (r["id_predio"], r["nombre"], r["vx"], r["vy"]) for r in out.collect()}
+    want = {
+        i: _nearest_vertex(lon, lat)[1:] for i, lon, lat in GF.POINTS if None not in (lon, lat)
+    }
+    assert {i: got[i] for i in want} == want
+
+
+def test_image_list_is_the_sorted_two_level_glob(tmp_path):
+    for rel in ("BR/C1/x.jpg", "BR/b.jpg", "TIF/a.tif", "top.jpg"):
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_bytes(b"")
+    # files exactly two levels down; a directory there is not an image
+    assert compat.image_list(str(tmp_path)) == [
+        str(tmp_path / "BR" / "b.jpg"),
+        str(tmp_path / "TIF" / "a.tif"),
+    ]
+    assert compat.image_list(str(tmp_path / "missing")) == []
 
 
 def test_download_filtered_images_dict_rows(spark, tmp_path):

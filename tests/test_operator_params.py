@@ -24,8 +24,13 @@ no call passes gives one value, its default, and fails too.
 ``compat.py`` sits outside those directories and stays exempt: its
 signatures mirror the reference API.
 
+The dead-operator gate rides along: a module-level function in those
+directories that no code outside ``tests/`` uses (calls, passes as a
+value or decorates) has semantics no registered query's oracle checks,
+so it fails too.
+
 Run as a script to print the defaulted-parameter count per package
-directory and every single-valued parameter:
+directory, every single-valued parameter and every dead function:
 ``python tests/test_operator_params.py``."""
 
 from __future__ import annotations
@@ -34,6 +39,8 @@ import ast
 import collections
 from dataclasses import dataclass
 from pathlib import Path
+
+from call_sites import used_names
 
 REPO = Path(__file__).resolve().parent.parent
 PKG = REPO / "datalake_imagenes_georreferenciadas_spark"
@@ -232,11 +239,47 @@ def test_every_defaulted_parameter_takes_two_values():
     )
 
 
+def dead_functions(files, call_files=None) -> list[tuple[str, str]]:
+    """(module, function) of every undecorated module-level function in
+    ``files`` whose name no file of ``call_files`` (default: the knob
+    gate's call files outside ``tests/``) reads."""
+    if call_files is None:
+        call_files = [f for f in _call_files() if not f.is_relative_to(REPO / "tests")]
+    used = used_names(call_files)
+    out = []
+    for f in files:
+        for node in ast.parse(f.read_text()).body:
+            if isinstance(node, ast.FunctionDef) and not node.decorator_list and node.name not in used:
+                root = PKG if f.is_relative_to(PKG) else f.parent
+                out.append((str(f.relative_to(root)), node.name))
+    return out
+
+
+def test_every_operator_has_a_caller_outside_tests():
+    dead = dead_functions(def_files())
+    assert not dead, (
+        "functions only tests call — route a registered query through each, "
+        f"or delete it: {dead}"
+    )
+
+
+def test_dead_scan_sees_calls_callbacks_and_decorators(tmp_path):
+    f = tmp_path / "mod.py"
+    f.write_text(
+        "import atexit\n\ndef used():\n    pass\n\ndef callback(r):\n    pass\n\n"
+        "def dead():\n    used()\n    return run(callback)\n\n"
+        "@atexit.register\ndef hook():\n    pass\n"
+    )
+    assert dead_functions([f], [f]) == [("mod.py", "dead")]
+
+
 if __name__ == "__main__":
     for k, v in defaulted_counts().items():
         print(f"{k:20s} {v}")
     for site in single_valued(def_files()):
         print("single", *site)
+    for site in dead_functions(def_files()):
+        print("dead", *site)
 
 
 def _flagged(tmp_path, source: str) -> set[tuple[str, str, str]]:

@@ -22,6 +22,12 @@ Row-at-a-time ``F.udf`` has no allowlist at all — the repo ships zero
 and must stay at zero (an Arrow kernel is the floor for unavoidable
 Python).
 
+RDD-level crossings count as kernels too: ``foreachPartition`` /
+``foreach`` run a Python function per row in a Python worker, and a
+``.rdd.<transformation>`` chain pickles every row through one
+(``.rdd.getNumPartitions`` reads metadata and does not). The one
+allowed site is fixture staging, ``sources/binary.stage_files``.
+
 The list -> Python-RDD boundary: ``createDataFrame`` on a Python list
 pickles the rows into a Python RDD, so every job that reads the frame
 starts Python workers, and the relation has unknown size stats, so
@@ -53,6 +59,10 @@ KERNEL_ATTRS = {
 FACTORY_NAMES = {"pandas_udf", "udtf"}
 # ``spark.<name>.register`` calls that add a Python surface to the session.
 REGISTRIES = {"udtf", "dataSource"}
+# Row-level Python over a DataFrame or its RDD; ``rdd`` stands for any
+# ``.rdd.<method>(...)`` call except the metadata read below.
+RDD_CROSSINGS = {"foreachPartition", "foreach", "rdd"}
+RDD_METADATA = {"getNumPartitions"}
 # Never allowed anywhere: the row-at-a-time path.
 FORBIDDEN_NAMES = {"udf"}
 # The only call site that may build a DataFrame from driver-side data.
@@ -81,6 +91,9 @@ ALLOWED: dict[tuple[str, str], int] = {
     # a Python DataSource: EXIF/GeoTIFF decode inside the scan, so only
     # typed rows leave the worker (sources/binary.py ships whole blobs)
     ("sources/pyds.py", "register_exifscan"): 1,
+    # fixture staging: each row's file is written where its partition
+    # lives, so the blob never crosses to the driver
+    ("sources/binary.py", "stage_files"): 1,
 }
 
 # One body per kernel: a second body picked by an import probe never runs
@@ -90,13 +103,27 @@ PROBE_EXCEPTIONS = {"ImportError", "ModuleNotFoundError"}
 PRIVATE_HANDLES = {"_jc", "_jdf", "_jvm", "_jsc"}
 
 
-def _scan(files, root: Path, names=KERNEL_ATTRS | FACTORY_NAMES | REGISTRIES):
+def _rdd_call(node) -> bool:
+    """``node`` is a ``<expr>.rdd.<method>(...)`` call other than a
+    metadata read."""
+    f = getattr(node, "func", None)
+    return (
+        isinstance(f, ast.Attribute)
+        and isinstance(f.value, ast.Attribute)
+        and f.value.attr == "rdd"
+        and f.attr not in RDD_METADATA
+    )
+
+
+def _scan(files, root: Path, names=KERNEL_ATTRS | FACTORY_NAMES | REGISTRIES | RDD_CROSSINGS):
     """(site -> count of calls/decorators in ``names``, forbidden sites).
     Bare decorators (@udtf / @pandas_udf / @udf with no parentheses)
     count too — r09 ADVICE #2: they escaped both checks."""
     kernels: collections.Counter = collections.Counter()
     forbidden: list[tuple[str, str]] = []
     for site, name, node in call_sites(files, root):
+        if _rdd_call(node):
+            name = "rdd"
         if name in names:
             kernels[site] += 1
         if name in FORBIDDEN_NAMES:
@@ -200,7 +227,7 @@ def test_second_body_scanner_catches_probes_and_handles(tmp_path):
     ]
 
 
-def _scan_src(src: str, tmp_path, names=KERNEL_ATTRS | FACTORY_NAMES | REGISTRIES):
+def _scan_src(src: str, tmp_path, names=KERNEL_ATTRS | FACTORY_NAMES | REGISTRIES | RDD_CROSSINGS):
     f = tmp_path / "m.py"
     f.write_text(src)
     return _scan([f], tmp_path, names)
@@ -273,3 +300,16 @@ def test_scanner_catches_datasource_register(tmp_path):
     assert _unreviewed(kernels) == ({("m.py", "setup"): 1}, {})
     found, _ = _scan(sorted(PKG.rglob("*.py")), PKG, {"dataSource"})
     assert found == {("sources/pyds.py", "register_exifscan"): 1}
+
+
+def test_scanner_catches_rdd_crossings(tmp_path):
+    """``foreachPartition`` / ``foreach`` and each ``.rdd.<method>``
+    chain are one kernel site each; ``.rdd.getNumPartitions`` is not."""
+    kernels, _ = _scan_src(
+        "def stage(df, write):\n    df.foreachPartition(write)\n"
+        "def each(df):\n    df.foreach(print)\n"
+        "def pairs(df):\n    return df.rdd.map(tuple).filter(bool).collect()\n"
+        "def splits(df):\n    return df.rdd.getNumPartitions()\n",
+        tmp_path,
+    )
+    assert kernels == {("m.py", "stage"): 1, ("m.py", "each"): 1, ("m.py", "pairs"): 1}

@@ -13,7 +13,6 @@ from datalake_imagenes_georreferenciadas_spark.functions.geo import (
     affine_extent,
     dist2,
     extent_centroid,
-    point_in_ring,
     point_in_rings,
 )
 from datalake_imagenes_georreferenciadas_spark.operators.spatial import (
@@ -57,7 +56,8 @@ def test_point_in_ring_inside_outside(spark):
             "struct(1.0d as x, 1.0d as y), struct(0.0d as x, 1.0d as y))"
         ),
     )
-    got = [r["inside"] for r in df.select(point_in_ring(F.col("x"), F.col("y"), F.col("ring")).alias("inside")).collect()]
+    inside = point_in_rings(F.col("x"), F.col("y"), F.array("ring"))
+    got = [r["inside"] for r in df.select(inside.alias("inside")).collect()]
     assert got == [True, False, False, False]
 
 

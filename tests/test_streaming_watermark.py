@@ -20,6 +20,13 @@ def _t(minutes: float) -> dt.datetime:
     return BASE + dt.timedelta(minutes=minutes)
 
 
+def _epoch(minutes: float) -> int:
+    """``window_start_epoch`` of the window starting at ``_t(minutes)``
+    (a naive datetime enters Spark as local time, as ``timestamp()``
+    reads it)."""
+    return int(_t(minutes).timestamp())
+
+
 def _run_stream(spark, src, ckpt, name):
     """One availableNow round; returns appended rows (foreachBatch sink —
     the memory sink can't recover from a checkpoint across restarts)."""
@@ -61,9 +68,9 @@ def test_watermark_closes_windows_and_drops_late(spark, tmp_path):
     ]
     spark.createDataFrame(batch1, EV_SCHEMA).write.parquet(os.path.join(src, "b1"))
     out1 = _run_stream(spark, src, ckpt, "wm_r1")
-    got1 = {(r["window_start"], r["n"]) for r in out1}
+    got1 = {(r["window_start_epoch"], r["n"]) for r in out1}
     # the flush batch emits windows ending ≤ 70min; event 3's stays open
-    assert got1 == {(_t(0), 1), (_t(10), 1)}
+    assert got1 == {(_epoch(0), 1), (_epoch(10), 1)}
 
     batch2 = [
         (4, _t(5), "a", 1.0),    # LATE: checkpointed watermark is 70min
@@ -72,16 +79,16 @@ def test_watermark_closes_windows_and_drops_late(spark, tmp_path):
     ]
     spark.createDataFrame(batch2, EV_SCHEMA).write.parquet(os.path.join(src, "b2"))
     out2 = _run_stream(spark, src, ckpt, "wm_r2")
-    got2 = {(r["window_start"], r["n"]) for r in out2}
+    got2 = {(r["window_start_epoch"], r["n"]) for r in out2}
     # late event 4 dropped (no [0,10) re-emission); [100,110) closes with
     # event 3 (restored from checkpointed state) + event 5
-    assert got2 == {(_t(100), 2)}
+    assert got2 == {(_epoch(100), 2)}
 
     batch3 = [(7, _t(300), "a", 1.0)]  # watermark → 270min
     spark.createDataFrame(batch3, EV_SCHEMA).write.parquet(os.path.join(src, "b3"))
     out3 = _run_stream(spark, src, ckpt, "wm_r3")
-    got3 = {(r["window_start"], r["n"]) for r in out3}
-    assert got3 == {(_t(200), 1)}  # event 6's window closes; event 7's stays open
+    got3 = {(r["window_start_epoch"], r["n"]) for r in out3}
+    assert got3 == {(_epoch(200), 1)}  # event 6's window closes; event 7's stays open
 
 
 def test_ingest_checkpoint_restart_no_reprocessing(spark, tmp_path):
