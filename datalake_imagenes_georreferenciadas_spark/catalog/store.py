@@ -409,7 +409,7 @@ class CatalogStore:
             .drop("__gk", "__off", "__rn")
         )
 
-    def insert_catalog(self, rows: DataFrame, run_id: int) -> DataFrame:
+    def insert_catalog(self, rows: DataFrame, run_id: int) -> int:
         """S13: append catalog rows + one lineage row each (J6).
 
         ``rows`` carries the CATALOG columns minus ``id``; ids are
@@ -423,20 +423,19 @@ class CatalogStore:
         version. Its ids are the dense range ``last_id+1 .. last_id+n``,
         with ``n`` summed from the new files' footers, so the lineage is
         the one range ``(run_id, last_id+1, last_id+n)`` in the log
-        entry: no read-back and no lineage write. Returns the inserted
-        rows with ids, read from the files this call wrote; the frame
-        stays valid until ``expire_snapshots`` removes those files. A
-        batch with no rows commits no version (a duplicate-only trigger
-        or a replay would otherwise push real history out of expiry).
+        entry: no read-back and no lineage write. Returns the new
+        version. A batch with no rows commits no version (a
+        duplicate-only trigger or a replay would otherwise push real
+        history out of expiry) and returns the current one.
         """
         entry = self._entry()
         base = entry["next_id"] - 1
         written = self._write(self._with_ids(rows, base))
-        if written:
-            n = sum(f[1] for f in written)
-            self._commit("insert", entry, entry["files"] + written, added=n,
-                         ranges=[[run_id, base + 1, base + n]])
-        return self._files_frame(written)
+        if not written:
+            return self.current_version()
+        n = sum(f[1] for f in written)
+        return self._commit("insert", entry, entry["files"] + written, added=n,
+                            ranges=[[run_id, base + 1, base + n]])
 
     def update_processed_img(self, new_tipo_img: int, ids: list[int]) -> int:
         """S15: MERGE-shaped state advance (mysql_process.py:83-91).

@@ -73,11 +73,12 @@ def get_extent(gt: list[float], cols: int, rows: int) -> list[tuple[float, float
 
 
 def reproject_coords(
-    coords: list[tuple[float, float]], zone: int = 18, south: bool = True
+    coords: list[tuple[float, float]], zone: int = 18
 ) -> list[tuple[float, float]]:
-    """script_geo.ReprojectCoords (33-39), EXACT: evaluates the same
-    Snyder inverse-TM step chain the engine and oracles share
-    (functions.geo.utm_inverse_steps) in pure Python — mm-equivalent to
+    """script_geo.ReprojectCoords (33-39), EXACT for a southern-hemisphere
+    UTM ``zone``: evaluates the same Snyder inverse-TM step chain the
+    engine and oracles share (functions.geo.utm_inverse_steps) in pure
+    Python — mm-equivalent to
     the reference's pyproj transform, no wheel required. (Round 1-5
     shipped an equirectangular approximation; the exact series replaced
     it in round 6.)"""
@@ -87,7 +88,7 @@ def reproject_coords(
     out = []
     for x, y in coords:
         vals: dict = {}
-        for name, expr in utm_inverse_steps(repr(float(x)), repr(float(y)), zone, south):
+        for name, expr in utm_inverse_steps(repr(float(x)), repr(float(y)), zone):
             # "__"-prefixed step names aren't valid eval locals; rename
             scope = {k.replace("__", "XX"): v for k, v in vals.items()}
             vals[name] = eval(  # noqa: S307 - our own generated step text

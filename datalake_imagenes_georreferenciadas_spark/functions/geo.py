@@ -106,17 +106,16 @@ def dist2(ax: Column, ay: Column, bx: Column, by: Column) -> Column:
     return (ax - bx) * (ax - bx) + (ay - by) * (ay - by)
 
 
-def reproject_utm_to_wgs84_approx(x: Column, y: Column, zone: int = 18) -> Column:
-    """F9: inverse-Mercator-style approximation of UTM→WGS84 as
-    ``struct<lon,lat>`` for a southern-hemisphere zone (the reference's
-    EPSG:32718 is UTM 18S, script_geo.py:33-39).
+def reproject_utm_to_wgs84_approx(x: Column, y: Column) -> Column:
+    """F9: inverse-Mercator-style approximation of UTM 18S→WGS84 as
+    ``struct<lon,lat>`` (the reference's EPSG:32718, script_geo.py:33-39).
 
     Pure column arithmetic both engines reproduce bit-for-bit; the
     oracles replay it. :func:`reproject_utm_to_wgs84_exact` is the
     accurate series when metres matter.
     """
-    # central meridian of the UTM zone; simple equirectangular inverse
-    lon0 = F.lit(float(zone * 6 - 183))
+    # central meridian of UTM zone 18; simple equirectangular inverse
+    lon0 = F.lit(-75.0)
     k0 = 0.9996
     r = 6378137.0
     lat = (y - F.lit(10000000.0)) / F.lit(k0 * r) * F.lit(180.0 / 3.141592653589793)
@@ -198,17 +197,17 @@ _J2 = 21.0 * _E1**2 / 16.0 - 55.0 * _E1**4 / 32.0
 _J3 = 151.0 * _E1**3 / 96.0
 _J4 = 1097.0 * _E1**4 / 512.0
 _DEG = 180.0 / 3.141592653589793
+#: the southern-hemisphere false northing (every zone the package reads is south)
+_FALSE_NORTHING = 10000000.0
 
 
-def utm_inverse_steps(
-    x_expr: str, y_expr: str, zone: int = 19, south: bool = True
-) -> list[tuple[str, str]]:
-    """The inverse-TM series as ordered (column, SQL-expression) steps;
-    later steps reference earlier column names. One text, two engines."""
-    fn = 10000000.0 if south else 0.0
+def utm_inverse_steps(x_expr: str, y_expr: str, zone: int = 19) -> list[tuple[str, str]]:
+    """The inverse-TM series of a southern-hemisphere ``zone`` as ordered
+    (column, SQL-expression) steps; later steps reference earlier column
+    names. One text, two engines."""
     lon0 = float(zone * 6 - 183)
     return [
-        ("__mu", f"(({y_expr}) - {fn!r}) / {_K0!r} / {_M_DENOM!r}"),
+        ("__mu", f"(({y_expr}) - {_FALSE_NORTHING!r}) / {_K0!r} / {_M_DENOM!r}"),
         (
             "__phi1",
             f"__mu + {_J1!r} * sin(2.0 * __mu) + {_J2!r} * sin(4.0 * __mu)"
@@ -269,15 +268,12 @@ _M3 = 35.0 * _E2**3 / 3072.0
 _RAD = 3.141592653589793 / 180.0
 
 
-def utm_forward_steps(
-    lat_expr: str, lon_expr: str, zone: int = 19, south: bool = True
-) -> list[tuple[str, str]]:
-    """Forward Transverse Mercator (WGS84 lon/lat → UTM easting/
+def utm_forward_steps(lat_expr: str, lon_expr: str) -> list[tuple[str, str]]:
+    """Forward Transverse Mercator (WGS84 lon/lat → UTM 19S easting/
     northing), Snyder eqs. 3-21, 8-9..8-14 — the write-back direction of
     :func:`utm_inverse_steps`, same one-text-two-engines contract
     (pytest round-trips the pair to < 1e-7 deg)."""
-    fn = 10000000.0 if south else 0.0
-    lam0 = float(zone * 6 - 183)
+    lam0 = -69.0  # central meridian of UTM zone 19
     return [
         ("__phi", f"({lat_expr}) * {_RAD!r}"),
         ("__fsp", "sin(__phi)"),
@@ -302,7 +298,7 @@ def utm_forward_steps(
         ),
         (
             "northing",
-            f"{fn!r} + {_K0!r} * (__fm + __fn1 * __ftp * (__fa2 / 2.0"
+            f"{_FALSE_NORTHING!r} + {_K0!r} * (__fm + __fn1 * __ftp * (__fa2 / 2.0"
             " + (5.0 - __ft + 9.0 * __fc + 4.0 * __fc * __fc)"
             " * __fa2 * __fa2 / 24.0"
             f" + (61.0 - 58.0 * __ft + __ft * __ft + 600.0 * __fc"

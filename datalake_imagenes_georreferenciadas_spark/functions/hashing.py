@@ -44,7 +44,7 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
 
 
-def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
+def shingles_from_tokens(toks: Column, k: int) -> Column:
     """k-word shingles from a token-array column.
 
     ``arrays_zip`` of k shifted slices + one transform — O(k·T) per row.
@@ -65,12 +65,12 @@ def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     )
 
 
-def shingles(text: Column, k: int = 3) -> Column:
+def shingles(text: Column, k: int) -> Column:
     """k-word shingles as strings; empty array when fewer than k tokens."""
     return shingles_from_tokens(tokens(text), k)
 
 
-def shingles_sql(text_expr: str, k: int = 3) -> str:
+def shingles_sql(text_expr: str, k: int) -> str:
     """DuckDB twin of :func:`shingles` — same ``list_zip`` shape, so the
     token macro is expanded k times (O(k·T)), never per shingle position."""
     toks = f"list_filter(string_split_regex(lower({text_expr}), '\\s+'), t -> t <> '')"

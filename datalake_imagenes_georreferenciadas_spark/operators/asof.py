@@ -102,15 +102,15 @@ def range_join(
     right_ts: Column,
     lower: Column,
     upper: Column,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-key join with a time-range residual: ``right_ts ∈ [left_ts +
-    lower, left_ts + upper]``. The equality on ``user_id`` keeps this a
-    hash join (shuffle-partitionable); the range is a post-join filter."""
+    """Equi-key left join with a time-range residual: ``right_ts ∈
+    [left_ts + lower, left_ts + upper]``; a left row with no match keeps
+    NULL right columns. The equality on ``user_id`` keeps this a hash
+    join (shuffle-partitionable); the range is a post-join filter."""
     cond = (
         (left[KEY] == right[KEY]) & (right_ts >= left_ts + lower) & (right_ts <= left_ts + upper)
     )
-    return left.join(right, cond, how)
+    return left.join(right, cond, "left")
 
 
 #: resample_interpolate's outlier fail-safe: 1M hourly steps ≈ 114 years.

@@ -101,6 +101,13 @@ def _minhash_coeffs(num_hashes: int) -> list[tuple[int, int, int]]:
 
 #: 2^60 — the base-hash range; all affine products stay under 2^61 < 2^63.
 _MINHASH_MOD = 2**60
+#: the MinHash setting every registered query runs: 3-shingles, 16
+#: hashes in 4 bands of 4 rows
+SHINGLE_K = 3
+NUM_HASHES = 16
+BANDS = 4
+#: the Jaccard bar of the registered components and n-gram queries
+COMPONENT_JACCARD = 0.1
 
 
 def _minhash_sql(num_hashes: int, array_fn: str) -> tuple[list[str], str]:
@@ -115,25 +122,20 @@ def _minhash_sql(num_hashes: int, array_fn: str) -> tuple[list[str], str]:
     return mins, f"{array_fn}({', '.join(f'h{s}' for s in range(num_hashes))})"
 
 
-def minhash_signatures(
-    df: DataFrame,
-    k: int = 3,
-    num_hashes: int = 16,
-    keep_shingles: bool = True,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, keep_shingles: bool) -> DataFrame:
     """(doc_id, __shingles, __sig) of ``df(doc_id, text)`` via explode +
     grouped min per seed — or just (doc_id, __sig) with
     ``keep_shingles=False``, which skips the shingle re-computation and
     the join entirely (the bands-only path).
 
-    ONE md5 per shingle; the ``num_hashes`` hash family is derived from the
+    ONE md5 per ``SHINGLE_K``-shingle; the ``NUM_HASHES`` hash family is derived from the
     base hash's 30-bit halves with per-seed affine coefficients
     (``(a*lo + b*hi + c) mod 2^60`` — exact int64 arithmetic, identical in
     Spark, DuckDB, and Python). 16 partial-aggregated mins; one shuffle on
-    the doc id. Docs with fewer than k tokens get a null ``__sig``.
+    the doc id. Docs with fewer than ``SHINGLE_K`` tokens get a null ``__sig``.
     """
-    mins, sig_arr = _minhash_sql(num_hashes, "array")
-    ex = _exploded_shingles(df, k)
+    mins, sig_arr = _minhash_sql(NUM_HASHES, "array")
+    ex = _exploded_shingles(df, SHINGLE_K)
     h = ex.select(
         F.col("doc_id"),
         (hash64(F.col("__sh"), seed=0) % F.lit(2**30)).alias("lo"),
@@ -146,25 +148,19 @@ def minhash_signatures(
         # docs with <k tokens have no exploded rows → absent here, exactly
         # the null-__sig rows the joined variant would filter anyway
         return sig
-    base = df.select(F.col("doc_id"), shingles(F.col("text"), k).alias("__shingles"))
+    base = df.select(F.col("doc_id"), shingles(F.col("text"), SHINGLE_K).alias("__shingles"))
     return base.join(sig, "doc_id", "left")
 
 
-def with_minhash(
-    df: DataFrame,
-    k: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    keep_shingles: bool = True,
-) -> DataFrame:
+def with_minhash(df: DataFrame, keep_shingles: bool) -> DataFrame:
     """Attach shingles, MinHash signature, and LSH band keys to
     ``df(doc_id, text)``."""
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, k, num_hashes, keep_shingles)
+    sigs = minhash_signatures(df, keep_shingles)
     return sigs.withColumn(
         "__bands",
         F.when(
-            F.col("__sig").isNotNull(), lsh_bands(F.col("__sig"), bands, rows_per_band)
+            F.col("__sig").isNotNull(),
+            lsh_bands(F.col("__sig"), BANDS, NUM_HASHES // BANDS),
         ),
     )
 
@@ -201,12 +197,7 @@ def band_pairs(df: DataFrame, id_col: str, bands: Column) -> DataFrame:
 
 
 def minhash_lsh_pairs(
-    df: DataFrame,
-    k: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    jaccard_threshold: float = 0.5,
-    new_from: int | None = None,
+    df: DataFrame, jaccard_threshold: float, new_from: int | None = None
 ) -> DataFrame:
     """Near-duplicate pairs of ``df(doc_id, text)`` via MinHash-LSH
     banding + exact Jaccard verify.
@@ -232,9 +223,7 @@ def minhash_lsh_pairs(
     # picks; a rebalance (unlike a repartition on the id, which the
     # planner drops as redundant after the token shuffle) stays, and AQE
     # may coalesce it; keyed by id, it leaves the band shuffle to AQE
-    sig = with_minhash(df, k, num_hashes, bands, keep_shingles=False).hint(
-        "rebalance", "doc_id"
-    )
+    sig = with_minhash(df, keep_shingles=False).hint("rebalance", "doc_id")
     cand = band_pairs(sig, "doc_id", F.col("__bands"))
     if new_from is not None:
         cand = cand.filter(F.col("b_id") >= new_from)
@@ -243,7 +232,7 @@ def minhash_lsh_pairs(
     # converts to broadcast at runtime iff it fits (r07 VERDICT: a forced
     # hint removes AQE's fallback and OOMs the driver on a pathological
     # corpus)
-    sets = df.select(F.col("doc_id"), F.array_distinct(shingles(F.col("text"), k)))
+    sets = df.select(F.col("doc_id"), F.array_distinct(shingles(F.col("text"), SHINGLE_K)))
     inter = F.size(F.array_intersect("__sa", "__sb"))
     return (
         cand.join(sets.toDF("a_id", "__sa"), "a_id")
@@ -315,19 +304,16 @@ def _shingle_intersections(df: DataFrame, max_doc_freq: int | None) -> DataFrame
     return inter.join(sa, "a_id").join(sb, "b_id")
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    jaccard_threshold: float = 0.5,
-    max_doc_freq: int | None = None,
-) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, max_doc_freq: int | None) -> DataFrame:
     """Exact n-gram Jaccard similarity join over ``df(doc_id, text)``
     (dedup family #4).
 
     Fully aggregative plan — no arrays cross the shuffle: explode DISTINCT
     shingles, self equi-join on the shingle (only docs sharing a shingle
     ever pair — a word-level inverted index), count intersections per
-    pair, then ``|A∩B| / (|A|+|B|-|A∩B|)``. ``max_doc_freq`` caps hot
-    shingles (see :func:`_shingle_intersections`).
+    pair, then ``|A∩B| / (|A|+|B|-|A∩B|)``, kept at ``COMPONENT_JACCARD``
+    or above. ``max_doc_freq`` caps hot shingles (see
+    :func:`_shingle_intersections`).
     """
     return (
         _shingle_intersections(df, max_doc_freq)
@@ -339,15 +325,13 @@ def ngram_jaccard_pairs(
                 6,
             ),
         )
-        .filter(F.col("jaccard") >= jaccard_threshold)
+        .filter(F.col("jaccard") >= COMPONENT_JACCARD)
         .select("a_id", "b_id", "jaccard")
     )
 
 
 def containment_pairs(
-    df: DataFrame,
-    threshold: float = 0.8,
-    max_doc_freq: int | None = None,
+    df: DataFrame, threshold: float, max_doc_freq: int | None
 ) -> DataFrame:
     """Asymmetric shingle CONTAINMENT join over ``df(doc_id, text)``
     (Broder's containment coefficient): ``c(A→B) = |A∩B| / |A|`` — high
@@ -379,16 +363,10 @@ def containment_pairs(
     )
 
 
-def dedup_components(
-    df: DataFrame,
-    k: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    jaccard_threshold: float = 0.5,
-    small_graph_threshold: int = 250_000,
-) -> DataFrame:
+def dedup_components(df: DataFrame, small_graph_threshold: int = 250_000) -> DataFrame:
     """Near-duplicate CLUSTERS of ``df(doc_id, text)``: connected
-    components over the verified MinHash-LSH pair graph — the step that
+    components over the MinHash-LSH pair graph verified at
+    ``COMPONENT_JACCARD`` — the step that
     turns pairwise near-dups into keep-one-per-group dedup decisions
     (component = min doc id, the canonical representative).
 
@@ -415,7 +393,7 @@ def dedup_components(
     docs stay: they form no pairs and come out singleton components.
     """
     df = df.filter(F.col("doc_id").isNotNull())
-    pairs = minhash_lsh_pairs(df, k, num_hashes, bands, jaccard_threshold)
+    pairs = minhash_lsh_pairs(df, COMPONENT_JACCARD)
     edges = pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
     labels = components_from_edges(edges, small_graph_threshold)
     all_ids = df.select(F.col("doc_id").alias("id"))
@@ -536,7 +514,7 @@ def _sign_votes(h: str, prefix: str, num_bits: int) -> tuple[list[Column], Colum
     return votes, pack
 
 
-def simhash_table(df: DataFrame, num_bits: int = 32) -> DataFrame:
+def simhash_table(df: DataFrame, num_bits: int) -> DataFrame:
     """(doc_id, fp) SimHash fingerprints of ``df(doc_id, text)`` via
     explode + grouped bit votes.
 
@@ -562,19 +540,18 @@ def simhash_table(df: DataFrame, num_bits: int = 32) -> DataFrame:
     )
 
 
-def simhash_pairs(
-    df: DataFrame,
-    num_bits: int = 32,
-    band_bits: int = 8,
-    max_hamming: int = 3,
-) -> DataFrame:
+#: the hamming bar of every SimHash family (Manku et al.'s web-scale bar)
+MAX_HAMMING = 3
+
+
+def simhash_pairs(df: DataFrame, num_bits: int, band_bits: int) -> DataFrame:
     """SimHash near-dup pairs ``(a_id, b_id, hamming)`` of
     ``df(doc_id, text)`` with pigeonhole band blocking — the parameterized scale dial behind
     ``dedup_simhash_pairs``.
 
     The ``num_bits`` fingerprint splits into ``num_bits // band_bits``
     bands; by pigeonhole, any pair within hamming distance
-    ``max_hamming`` (< number of bands) shares at least one whole band,
+    ``MAX_HAMMING`` (< number of bands) shares at least one whole band,
     so the band equi-join provably finds EVERY qualifying pair while
     candidates stay bucket-bounded. Each band has ``2^band_bits``
     buckets, so candidate generation does ~(n/2^band_bits)^2 *
@@ -590,21 +567,20 @@ def simhash_pairs(
     would need special-cased literals on both engines for zero
     informational gain).
 
-    Defaults (32/8/3) are bit-identical to the registered query and
-    its DuckDB oracle; SCALING.md's band-widening table is this
-    function at (32,8) vs (60,15) on k-scaled corpora.
+    SCALING.md's band-widening table is this function at (32,8) vs
+    (60,15) on k-scaled corpora.
     """
     n_bands = num_bits // band_bits
-    if num_bits % band_bits or n_bands <= max_hamming or num_bits > 63:
+    if num_bits % band_bits or n_bands <= MAX_HAMMING or num_bits > 63:
         raise ValueError(
             f"simhash_pairs: need band_bits | num_bits <= 63 and "
-            f"bands > max_hamming (got {num_bits}/{band_bits}, "
-            f"{n_bands} bands, hamming {max_hamming})"
+            f"bands > {MAX_HAMMING} (got {num_bits}/{band_bits}, "
+            f"{n_bands} bands)"
         )
     fps = simhash_table(df, num_bits=num_bits)
     cand = simhash_band_candidates(fps, num_bits=num_bits, band_bits=band_bits)
     hamming = F.bit_count(F.col("fa").bitwiseXOR(F.col("fb")))
-    return cand.filter(hamming <= max_hamming).select(
+    return cand.filter(hamming <= MAX_HAMMING).select(
         "a_id", "b_id", hamming.alias("hamming")
     )
 
@@ -660,9 +636,7 @@ def simhash_pairs_auto(df: DataFrame) -> DataFrame:
     return simhash_pairs(df, num_bits=4 * bb, band_bits=bb)
 
 
-def simhash_band_candidates(
-    fps: DataFrame, num_bits: int = 32, band_bits: int = 8
-) -> DataFrame:
+def simhash_band_candidates(fps: DataFrame, num_bits: int, band_bits: int) -> DataFrame:
     """Candidate pairs ``(a_id, b_id, fa, fb)`` of ``fps(doc_id, fp)``
     sharing at least one whole band of the fingerprint — the (only) stage of simhash dedup
     whose cost depends on bucket density, factored out so the scale
@@ -719,13 +693,13 @@ def simhash_band_candidates(
 _AUTO2_TAU = 64  # per-doc candidate-pair budget (pairs/doc at the dial)
 _AUTO2_LO = 8
 _AUTO2_W_PROBE = 24  # probe/maximum band width; 4 bands of ≤59 bits fit
-_AUTO2_BANDS = 4  # pinned: bands > max_hamming 3 keeps pigeonhole exact
+_AUTO2_BANDS = 4  # pinned: bands > MAX_HAMMING keeps pigeonhole exact
 
 
-def simhash_banded_table(df: DataFrame, band_bits: int = _AUTO2_W_PROBE) -> DataFrame:
+def simhash_banded_table(df: DataFrame) -> DataFrame:
     """(doc_id, ks: array<bigint> of ``_AUTO2_BANDS`` band keys) seeded
-    banded SimHash of ``df(doc_id, text)`` at ``band_bits`` — the probe
-    family behind :func:`simhash_pairs_auto2`.
+    banded SimHash of ``df(doc_id, text)`` at the probe width
+    ``_AUTO2_W_PROBE`` — the probe family behind :func:`simhash_pairs_auto2`.
 
     Band ``b`` bit ``j`` is the sign of the token-vote sum over bit
     ``j`` of ``hash64(token, seed=b)`` — one independent 60-bit hash
@@ -740,9 +714,9 @@ def simhash_banded_table(df: DataFrame, band_bits: int = _AUTO2_W_PROBE) -> Data
     all-zero bands (the family's fp=0 contract).
 
     Plan: explode tokens ×``_AUTO2_BANDS`` hash lanes, groupBy(id, band)
-    with ``band_bits`` integer vote sums (map-side partial agg; the agg
-    row is ~``band_bits``+2 columns — under the sweep's 64-col wide-agg
-    gate, unlike a 4·``band_bits``-column single-agg formulation), then
+    with ``_AUTO2_W_PROBE`` integer vote sums (map-side partial agg; the
+    agg row is ~26 columns — under the sweep's 64-col wide-agg gate,
+    unlike a 96-column single-agg formulation), then
     4→1 conditional-agg pivot to the array. Two key-partitioned
     shuffles of ≤ ``_AUTO2_BANDS`` rows/doc; zero Python.
     """
@@ -767,7 +741,7 @@ def simhash_banded_table(df: DataFrame, band_bits: int = _AUTO2_W_PROBE) -> Data
     ).select(F.col("doc_id"), F.col("bh.b").alias("b"), F.col("bh.h").alias("h"))
     # at the 24-bit probe width the SQL-string votes save ~3× the
     # 32-bit case's py4j time
-    votes, key = _sign_votes("h", "__s", band_bits)
+    votes, key = _sign_votes("h", "__s", _AUTO2_W_PROBE)
     g = lanes.groupBy("doc_id", "b").agg(*votes)
     wide = g.select(F.col("doc_id"), F.col("b"), key.alias("k")).groupBy("doc_id").agg(
         F.array(
@@ -912,7 +886,7 @@ def simhash_pairs_auto2(df: DataFrame) -> DataFrame:
         F.lit(0),
         lambda acc, x: acc + x,
     )
-    return cand.filter(hamming <= 3).select(
+    return cand.filter(hamming <= MAX_HAMMING).select(
         "a_id",
         "b_id",
         hamming.alias("hamming"),

@@ -33,10 +33,17 @@ from .topk import topk_per_group
 #: deterministic pseudo-random hyperplane components derived from md5 of
 #: "plane#dim" so Spark, DuckDB, and Python all agree bit-for-bit.
 _HPLANE_SCALE = 2**59  # md5-60-bit range is [0, 2^60); center at 2^59
+#: the embedding length of every vector table (the plane matrix is a
+#: plan-time literal of this width)
+DIM = 64
+#: the cosine bar of the banded near-duplicate pairs
+COSINE_THRESHOLD = 0.25
+#: hyperplanes of the flat LSH bucket behind ``lsh_ann_topk``
+ANN_PLANES = 6
 
 
 @lru_cache(maxsize=None)
-def _plane_matrix(num_planes: int, dim: int) -> tuple[tuple[float, ...], ...]:
+def _plane_matrix(num_planes: int) -> tuple[tuple[float, ...], ...]:
     """Plane components in [-1,1), precomputed driver-side.
 
     The planes depend only on (plane, dim) indices, so they're computed
@@ -48,19 +55,16 @@ def _plane_matrix(num_planes: int, dim: int) -> tuple[tuple[float, ...], ...]:
         tuple(
             (int(hashlib.md5(f"{p}#{i}".encode()).hexdigest()[:15], 16) - _HPLANE_SCALE)
             / float(_HPLANE_SCALE)
-            for i in range(dim)
+            for i in range(DIM)
         )
         for p in range(num_planes)
     )
 
 
-def hyperplane_signature(
-    vec_col: str, num_planes: int = 8, dim: int = 64, plane_offset: int = 0
-) -> Column:
-    """Sign pattern of the vector column ``vec_col`` against
-    ``num_planes`` hyperplanes, packed into a BIGINT bucket id. ``dim``
-    must equal the vector length (the plane matrix is a plan-time
-    literal). ``plane_offset`` selects a disjoint slice of the global
+def hyperplane_signature(vec_col: str, num_planes: int, plane_offset: int = 0) -> Column:
+    """Sign pattern of the ``DIM``-long vector column ``vec_col`` against
+    ``num_planes`` hyperplanes, packed into a BIGINT bucket id.
+    ``plane_offset`` selects a disjoint slice of the global
     plane family, so band ``b`` of a banded scheme gets independent hash
     functions via ``plane_offset=b*planes_per_band``.
 
@@ -83,7 +87,7 @@ def hyperplane_signature(
     if not all(re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", s) for s in segs):
         raise ValueError(f"hyperplane_signature: not a column name: {vec_col!r}")
     quoted = ".".join(f"`{s}`" for s in segs)
-    planes = _plane_matrix(plane_offset + num_planes, dim)
+    planes = _plane_matrix(plane_offset + num_planes)
     parts = []
     for p in range(num_planes):
         arr = "array(" + ", ".join(f"{c!r}D" for c in planes[plane_offset + p]) + ")"
@@ -98,12 +102,10 @@ def hyperplane_signature(
     return F.expr("CAST(0 AS BIGINT) + " + " + ".join(parts))
 
 
-def hyperplane_signature_sql(
-    vec_expr: str, num_planes: int = 8, plane_offset: int = 0
-) -> str:
-    """DuckDB twin of :func:`hyperplane_signature` at ``dim=64`` (same
-    literal planes, same left-to-right accumulation order)."""
-    planes = _plane_matrix(plane_offset + num_planes, 64)
+def hyperplane_signature_sql(vec_expr: str, num_planes: int, plane_offset: int = 0) -> str:
+    """DuckDB twin of :func:`hyperplane_signature` (same literal planes,
+    same left-to-right accumulation order)."""
+    planes = _plane_matrix(plane_offset + num_planes)
     terms = []
     for p in range(num_planes):
         lits = "[" + ", ".join(repr(c) for c in planes[plane_offset + p]) + "]"
@@ -118,7 +120,7 @@ def hyperplane_signature_sql(
     return "(" + " + ".join(terms) + ")::BIGINT"
 
 
-def brute_force_topk(data: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
+def brute_force_topk(data: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """Exact cosine top-k of ``queries(q_id, embedding)`` over
     ``data(vec_id, embedding)``: broadcast queries × scan data → window
     top-k.
@@ -177,8 +179,8 @@ def ivf_topk(
     data: DataFrame,
     queries: DataFrame,
     centroids: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
+    k: int,
+    nprobe: int,
 ) -> DataFrame:
     """IVF-flat ANN: partition vectors by nearest centroid; each query
     probes its ``nprobe`` nearest cells; exact cosine + window top-k on
@@ -209,16 +211,11 @@ def ivf_topk(
     return _topk_by_cosine(scored, k)
 
 
-def cosine_near_pairs(
-    data: DataFrame,
-    threshold: float = 0.25,
-    num_bands: int = 4,
-    planes_per_band: int = 5,
-    dim: int = 64,
-) -> DataFrame:
+def cosine_near_pairs(data: DataFrame, planes_per_band: int, num_bands: int = 4) -> DataFrame:
     """Embedding-cosine near-duplicate pairs of ``data(vec_id,
-    embedding)`` (dedup family #5), banded OR-of-ANDs LSH — the
-    MinHash-banding recall construction on hyperplane signatures.
+    embedding)`` at cosine ``COSINE_THRESHOLD`` or above (dedup family
+    #5), banded OR-of-ANDs LSH — the MinHash-banding recall construction
+    on hyperplane signatures.
 
     Each vector gets ``num_bands`` independent bucket ids (disjoint
     ``planes_per_band``-plane slices of the global plane family); a pair
@@ -267,10 +264,7 @@ def cosine_near_pairs(
         F.col("vec_id"),
         *[
             hyperplane_signature(
-                "embedding",
-                planes_per_band,
-                dim,
-                plane_offset=band * planes_per_band,
+                "embedding", planes_per_band, plane_offset=band * planes_per_band
             ).alias(f"__s{band}")
             for band in range(num_bands)
         ],
@@ -291,7 +285,7 @@ def cosine_near_pairs(
         cand.join(va, "a_id")
         .join(vb, "b_id")
         .withColumn("cos", F.round(cosine(F.col("__va"), F.col("__vb")), 6))
-        .filter(F.col("cos") >= threshold)
+        .filter(F.col("cos") >= COSINE_THRESHOLD)
         .select("a_id", "b_id", "cos")
     )
 
@@ -342,21 +336,17 @@ def cosine_near_pairs_auto(data: DataFrame) -> DataFrame:
     return cosine_near_pairs(data, planes_per_band=auto_planes_per_band(n))
 
 
-def lsh_ann_topk(
-    data: DataFrame,
-    queries: DataFrame,
-    num_planes: int = 8,
-    dim: int = 64,
-) -> DataFrame:
+def lsh_ann_topk(data: DataFrame, queries: DataFrame) -> DataFrame:
     """Approximate top-5 of ``queries(q_id, embedding)`` over
-    ``data(vec_id, embedding)``: equi-join on hyperplane bucket, then
-    exact cosine + window inside the bucket. Recall trades off with
-    ``num_planes``; at scale add multi-probe (flip one bit) unions."""
-    d = data.withColumn("__bucket", hyperplane_signature("embedding", num_planes, dim))
+    ``data(vec_id, embedding)``: equi-join on the ``ANN_PLANES``-plane
+    hyperplane bucket, then exact cosine + window inside the bucket.
+    Recall trades off with the plane count; at scale add multi-probe
+    (flip one bit) unions."""
+    d = data.withColumn("__bucket", hyperplane_signature("embedding", ANN_PLANES))
     q = queries.select(
         F.col("q_id"),
         F.col("embedding").alias("__qv"),
-        hyperplane_signature("embedding", num_planes, dim).alias("__bucket"),
+        hyperplane_signature("embedding", ANN_PLANES).alias("__bucket"),
     )
     scored = d.join(F.broadcast(q), "__bucket").select(
         "q_id",
@@ -391,9 +381,7 @@ def recall_at_k(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
     )
 
 
-def rerank_crossencoder(
-    cands: DataFrame, docs: DataFrame, query_tag: str = "ce"
-) -> DataFrame:
+def rerank_crossencoder(cands: DataFrame, docs: DataFrame) -> DataFrame:
     """Second-stage reranking of a ``cands(doc_id, ...)`` retrieval
     candidate list against ``docs(doc_id, text)``: the cross-encoder step
     of a RAG pipeline. Returns the candidate columns plus ``ce_score``.
@@ -404,12 +392,12 @@ def rerank_crossencoder(
     cross-encoder forward pass there, as an Arrow batch kernel over just
     these k rows. The package ships no model runtime, so the score is
     a deterministic md5 stub, a built-in expression that DuckDB computes
-    identically. Scores are 60-bit-md5 mod 1e6 INTEGERS (exact in both
+    identically: ``md5('ce:' || text)``. Scores are 60-bit-md5 mod 1e6 INTEGERS (exact in both
     engines, no float-rounding drift); NULL text scores NULL.
     """
     joined = docs.select(F.col("doc_id"), F.col("text")).join(
         F.broadcast(cands), "doc_id"
     )
-    digest = F.md5(F.concat(F.lit(f"{query_tag}:"), F.col("text")))
+    digest = F.md5(F.concat(F.lit("ce:"), F.col("text")))
     score = F.conv(F.substring(digest, 1, 15), 16, 10).cast("bigint") % 1_000_000
     return joined.select(*cands.columns, score.alias("ce_score"))

@@ -20,9 +20,12 @@ Plan shapes, scale-first:
   script_geo.py:146-154), broadcast, then argmin per point via
   ``min(struct(dist, tiebreak...))`` — deterministic ties by parcel id,
   fixing §2.11 bug 6 (float-equality matching).
-- **classify_points (3A pipeline)**: containment left-join + NN fallback +
-  ``coalesce`` → the unclassifiable branch yields nulls and the P7 label,
-  implementing §2.11 bug 2's intent.
+- **classify_points (3A pipeline)**: ONE broadcast left join of the
+  points with the polygons (a point without coordinates meets none) →
+  ONE argmin per point ranking containment above the nearest vertex →
+  ``method`` by ``when``: an unlocated point keeps nulls and the P7
+  label, implementing §2.11 bug 2's intent. The fact side is scanned
+  once.
 
 Polygon encoding: ``rings array<array<struct<x:double,y:double>>>`` —
 every ring of the (Multi)Polygon, exterior shells and interior holes
@@ -43,6 +46,8 @@ from .topk import argmin_per_group
 
 #: the parcel columns the reference reports for a classified image
 PARCEL_KEEP = ("id_predio", "nombre")
+#: the grid cell edge of ``contains_join_grid``, in coordinate units
+GRID_EPS = 0.5
 
 
 def contains_join(points: DataFrame, polys: DataFrame) -> DataFrame:
@@ -55,10 +60,10 @@ def contains_join(points: DataFrame, polys: DataFrame) -> DataFrame:
     return points.join(F.broadcast(polys), pred, "inner")
 
 
-def contains_join_grid(points: DataFrame, polys: DataFrame, eps: float = 0.5) -> DataFrame:
+def contains_join_grid(points: DataFrame, polys: DataFrame) -> DataFrame:
     """J2 at scale (§4.3): grid-cell equi-join prefilter, then exact test.
 
-    Each polygon is exploded to every ε-cell its bounding box overlaps
+    Each polygon is exploded to every ``GRID_EPS`` cell its bounding box overlaps
     (dimension-side blowup is bounded and tiny); each point maps to exactly
     one cell. The join becomes ``point.cell = poly.cell`` — an equi-join
     Catalyst can hash-partition — and the ray-cast runs only on survivors.
@@ -72,16 +77,16 @@ def contains_join_grid(points: DataFrame, polys: DataFrame, eps: float = 0.5) ->
         F.expr(
             f"""
             flatten(transform(
-              sequence(cast(floor(array_min(transform(__flat, p -> p.x)) / {eps}) as bigint),
-                       cast(floor(array_max(transform(__flat, p -> p.x)) / {eps}) as bigint)),
+              sequence(cast(floor(array_min(transform(__flat, p -> p.x)) / {GRID_EPS}) as bigint),
+                       cast(floor(array_max(transform(__flat, p -> p.x)) / {GRID_EPS}) as bigint)),
               cx -> transform(
-                sequence(cast(floor(array_min(transform(__flat, p -> p.y)) / {eps}) as bigint),
-                         cast(floor(array_max(transform(__flat, p -> p.y)) / {eps}) as bigint)),
+                sequence(cast(floor(array_min(transform(__flat, p -> p.y)) / {GRID_EPS}) as bigint),
+                         cast(floor(array_max(transform(__flat, p -> p.y)) / {GRID_EPS}) as bigint)),
                 cy -> struct(cx as cx, cy as cy))))
             """
         ),
     ).withColumn("__cell", F.explode("__cells")).drop("__cells", "__flat")
-    pts = points.withColumn("__cell", grid_cell(F.col("lon"), F.col("lat"), eps))
+    pts = points.withColumn("__cell", grid_cell(F.col("lon"), F.col("lat"), GRID_EPS))
     joined = pts.join(cells, "__cell")
     return joined.filter(point_in_rings(F.col("lon"), F.col("lat"), F.col("rings"))).drop(
         "__cell"
@@ -126,30 +131,43 @@ def classify_points(
 
     Output: ``img_id`` + ``keep`` columns + ``method`` ∈
     {'contains', 'nearest', 'IMAGEN NO CLASIFICABLE'}.
-    """
-    has_xy = F.col("lon").isNotNull() & F.col("lat").isNotNull()
-    located = points.filter(has_xy)
-    unlocated = points.filter(~has_xy)
 
-    # Single-pass plan: ONE broadcast join scoring every (point, polygon)
-    # with BOTH the containment flag and the min vertex distance, then ONE
-    # argmin whose sort key ranks containment above proximity:
-    #   (0, 0.0, keep...)  for containing polygons  → min keep wins (the
-    #                        deterministic overlap tie-break)
-    #   (1, d2,  keep...)  otherwise                → nearest vertex wins
-    # Same winners as the contains-then-fallback cascade (the vx/vy
-    # tie-break of the vertex formulation only ordered rows WITHIN a
-    # polygon and never changed which polygon won), but 2 stages instead
-    # of 6 — at 100 TB the fact side is scanned ONCE.
+    One broadcast left join scores every located (point, polygon) pair
+    with BOTH the containment flag and the min vertex distance, then ONE
+    argmin whose sort key ranks containment above proximity:
+      (0, 0.0, keep...)  for containing polygons  → min keep wins (the
+                           deterministic overlap tie-break)
+      (1, d2,  keep...)  otherwise                → nearest vertex wins
+    Same winners as the contains-then-fallback cascade (the vx/vy
+    tie-break of the vertex formulation only ordered rows WITHIN a
+    polygon and never changed which polygon won). An unlocated point
+    joins no polygon and keeps one row whose NULLs carry each keep
+    column's type; ``__u`` is non-null only on those rows, so each is a
+    group of its own. At 100 TB the fact side is scanned ONCE.
+    """
     px, py = F.col("lon"), F.col("lat")
     rings = F.col("rings")
-    scored = located.join(F.broadcast(polys.select(*keep, "rings"))).select(
-        "img_id",
-        *keep,
-        point_in_rings(px, py, rings).alias("__in"),
-        F.array_min(
-            F.transform(F.flatten(rings), lambda p: dist2(px, py, p["x"], p["y"]))
-        ).alias("__vd2"),
+    located = px.isNotNull() & py.isNotNull()
+    # the nondeterministic id is projected first: Spark groups on no
+    # nondeterministic expression
+    pts = points.select(
+        "img_id", "lon", "lat", F.when(~located, F.monotonically_increasing_id()).alias("__u")
+    )
+    side = polys.select(*keep, "rings", F.lit(True).alias("__p"))
+    scored = (
+        pts.join(F.broadcast(side), located, "left")
+        # a located point with no polygon at all gets no row, as in the
+        # oracle's inner joins
+        .filter(F.col("__u").isNotNull() | F.col("__p"))
+        .select(
+            "img_id",
+            "__u",
+            *keep,
+            point_in_rings(px, py, rings).alias("__in"),
+            F.array_min(
+                F.transform(F.flatten(rings), lambda p: dist2(px, py, p["x"], p["y"]))
+            ).alias("__vd2"),
+        )
     )
     rank = F.struct(
         F.when(F.col("__in"), 0).otherwise(1).alias("r"),
@@ -157,20 +175,12 @@ def classify_points(
         *[F.col(c) for c in keep],
         F.col("__in"),
     )
-    win = scored.groupBy("img_id").agg(F.min(rank).alias("__w"))
-    located_out = win.select(
+    win = scored.groupBy("img_id", "__u").agg(F.min(rank).alias("__w"))
+    return win.select(
         "img_id",
         *[F.col(f"__w.{c}").alias(c) for c in keep],
-        F.when(F.col("__w.__in"), F.lit("contains")).otherwise(F.lit("nearest")).alias("method"),
+        F.when(F.col("__u").isNotNull(), F.lit("IMAGEN NO CLASIFICABLE"))
+        .when(F.col("__w.__in"), F.lit("contains"))
+        .otherwise(F.lit("nearest"))
+        .alias("method"),
     )
-
-    # Null literals must carry each keep column's REAL dtype — a hardcoded
-    # string cast would silently widen non-string keeps in the unionByName
-    # (or error under ANSI).
-    keep_types = {f.name: f.dataType for f in polys.schema.fields}
-    unc = unlocated.select(
-        "img_id",
-        *[F.lit(None).cast(keep_types[c]).alias(c) for c in keep],
-        F.lit("IMAGEN NO CLASIFICABLE").alias("method"),
-    )
-    return located_out.unionByName(unc)

@@ -46,20 +46,18 @@ from pyspark.sql import functions as F
 DELTA = 200
 
 
-def _k(q: float, delta: float) -> float:
+def _k(q: float) -> float:
     """k1 scale function: quantile → cluster index (arcsine stretches
     resolution toward the tails)."""
-    return delta / (2.0 * math.pi) * math.asin(2.0 * q - 1.0)
+    return DELTA / (2.0 * math.pi) * math.asin(2.0 * q - 1.0)
 
 
-def _k_inv(k: float, delta: float) -> float:
-    return (math.sin(k * 2.0 * math.pi / delta) + 1.0) / 2.0
+def _k_inv(k: float) -> float:
+    return (math.sin(k * 2.0 * math.pi / DELTA) + 1.0) / 2.0
 
 
-def merge_centroids(
-    means: np.ndarray, weights: np.ndarray, delta: float = DELTA
-) -> tuple[np.ndarray, np.ndarray]:
-    """Merge mean-sorted centroids into ≤δ clusters (the MergingDigest
+def merge_centroids(means: np.ndarray, weights: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Merge mean-sorted centroids into ≤``DELTA`` clusters (the MergingDigest
     pass): greedily absorb neighbors while the combined cluster stays
     within one unit of the k1 scale function."""
     total = float(weights.sum())
@@ -68,7 +66,7 @@ def merge_centroids(
     cur_m = float(means[0])
     cur_w = float(weights[0])
     w_done = 0.0
-    q_limit = _k_inv(_k(0.0, delta) + 1.0, delta)
+    q_limit = _k_inv(_k(0.0) + 1.0)
     for m, w in zip(means[1:], weights[1:]):
         q = (w_done + cur_w + w) / total
         if q <= q_limit:
@@ -78,7 +76,7 @@ def merge_centroids(
             out_m.append(cur_m)
             out_w.append(cur_w)
             w_done += cur_w
-            q_limit = _k_inv(_k(w_done / total, delta) + 1.0, delta)
+            q_limit = _k_inv(_k(w_done / total) + 1.0)
             cur_m, cur_w = float(m), float(w)
     out_m.append(cur_m)
     out_w.append(cur_w)

@@ -701,7 +701,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id").isin(0, 1, 2)).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    return SIM.lsh_ann_topk(emb, queries, num_planes=6)
+    return SIM.lsh_ann_topk(emb, queries)
 
 
 # SQ8 scalar quantization: shared formula text so Spark and DuckDB run
@@ -1129,9 +1129,7 @@ _MINHASH_BANDS_SQL = _minhash_cte() + "SELECT doc_id, unnest(bands) AS band FROM
 @register("dedup_minhash_bands", _MINHASH_BANDS_SQL)
 def dedup_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signature → LSH band keys, exploded (the near-dup join key)."""
-    docs = D.with_minhash(
-        table(spark, sf_dir, "documents"), 3, 16, 4, keep_shingles=False
-    )
+    docs = D.with_minhash(table(spark, sf_dir, "documents"), keep_shingles=False)
     return docs.select("doc_id", F.explode("__bands").alias("band"))
 
 
@@ -1170,13 +1168,7 @@ _NEAR_PAIRS_SQL = _near_pairs_cte() + "\nSELECT a_id, b_id, jaccard FROM pairs"
 @register("dedup_near_pairs", _NEAR_PAIRS_SQL)
 def dedup_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs + exact-Jaccard verification."""
-    return D.minhash_lsh_pairs(
-        table(spark, sf_dir, "documents"),
-        k=3,
-        num_hashes=16,
-        bands=4,
-        jaccard_threshold=0.1,
-    )
+    return D.minhash_lsh_pairs(table(spark, sf_dir, "documents"), jaccard_threshold=0.1)
 
 
 # connected components over the near-dup graph: min reachable id per doc,
@@ -1203,16 +1195,10 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash-LSH pair graph by iterative min-label propagation (each round
     a distributed join+groupBy; converges in graph-diameter rounds). The
     oracle computes the same min-reachable-id via a recursive CTE."""
-    return D.dedup_components(
-        table(spark, sf_dir, "documents"),
-        k=3,
-        num_hashes=16,
-        bands=4,
-        jaccard_threshold=0.1,
-    )
+    return D.dedup_components(table(spark, sf_dir, "documents"))
 
 
-def _simhash_sql(num_bits: int = 32) -> str:
+def _simhash_sql(num_bits: int) -> str:
     sums = ", ".join(
         f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
         for b in range(num_bits)

@@ -240,7 +240,7 @@ def geo_contains_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lon").isNotNull() & F.col("lat").isNotNull()
     )
     polys = GF.spark_polys(spark)
-    return contains_join_grid(pts, polys, eps=0.5).select("img_id", "id_predio", "nombre")
+    return contains_join_grid(pts, polys).select("img_id", "id_predio", "nombre")
 
 
 _GEO_KNN_SQL = f"""
@@ -933,7 +933,6 @@ def j_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_ts"),
         F.expr("INTERVAL 0 MINUTES"),
         F.expr("INTERVAL 30 MINUTES"),
-        how="left",
     )
     return joined.groupBy(F.col("e_id").alias("event_id")).agg(
         F.count("p_id").alias("n_purchases")
@@ -1188,9 +1187,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     no arrays cross the shuffle), with the hot-shingle document-frequency
     cap active (VERDICT r1 #5) and mirrored in the oracle."""
     return D.ngram_jaccard_pairs(
-        table(spark, sf_dir, "documents"),
-        jaccard_threshold=0.1,
-        max_doc_freq=_NGRAM_MAX_DF,
+        table(spark, sf_dir, "documents"), max_doc_freq=_NGRAM_MAX_DF
     )
 
 
@@ -1286,14 +1283,15 @@ def dedup_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates (bounded per-band buckets), exact cosine verify (dedup
     family #5, VERDICT r1 #4)."""
     return SIM.cosine_near_pairs(
-        table(spark, sf_dir, "embeddings"),
-        threshold=0.25,
-        num_bands=_COS_BANDS,
-        planes_per_band=_COS_PLANES,
+        table(spark, sf_dir, "embeddings"), planes_per_band=_COS_PLANES, num_bands=_COS_BANDS
     )
 
 
-def _min_label_components_cte(n_rounds: int = 12) -> str:
+#: unrolled contraction rounds of ``_min_label_components_cte``
+N_ROUNDS = 12
+
+
+def _min_label_components_cte() -> str:
     """Bounded-round min-label contraction over an ``edges`` (src, dst)
     symmetric CTE — the oracle twin of ``D.components_from_edges``'s
     distributed min-label loop, replacing the earlier recursive-CTE
@@ -1313,13 +1311,13 @@ def _min_label_components_cte(n_rounds: int = 12) -> str:
 
     The bound is ENFORCED, not assumed (ADVICE r08): a companion
     ``nonconv`` CTE runs one more un-compressed min-label step over
-    ``lab{n}`` and counts labels that would still shrink; the final
+    ``lab{N_ROUNDS}`` and counts labels that would still shrink; the final
     projection raises via ``error()`` (CASE short-circuits, so the
     branch costs nothing when converged) instead of silently emitting
     unconverged labels as a confusing engine-vs-oracle hash mismatch.
     One extra O(E) join, total cost still O(rounds × E)."""
     parts = ["lab0 AS MATERIALIZED (SELECT DISTINCT src AS id, src AS comp FROM edges)"]
-    for i in range(1, n_rounds + 1):
+    for i in range(1, N_ROUNDS + 1):
         parts.append(
             f"""step{i} AS MATERIALIZED (
   SELECT id, min(comp) AS comp FROM (
@@ -1334,19 +1332,19 @@ lab{i} AS MATERIALIZED (
         f"""nonconv AS (
   SELECT count(*) AS n FROM (
     SELECT id, min(comp) AS comp FROM (
-      SELECT id, comp FROM lab{n_rounds}
+      SELECT id, comp FROM lab{N_ROUNDS}
       UNION ALL
-      SELECT e.dst AS id, l.comp FROM lab{n_rounds} l JOIN edges e ON e.src = l.id
+      SELECT e.dst AS id, l.comp FROM lab{N_ROUNDS} l JOIN edges e ON e.src = l.id
     ) GROUP BY id
-  ) chk JOIN lab{n_rounds} cur ON cur.id = chk.id AND cur.comp <> chk.comp)"""
+  ) chk JOIN lab{N_ROUNDS} cur ON cur.id = chk.id AND cur.comp <> chk.comp)"""
     )
     parts.append(
         f"""comp AS (
   SELECT id,
          CASE WHEN (SELECT n FROM nonconv) > 0
-              THEN CAST(error('min-label contraction not converged in {n_rounds} rounds — raise n_rounds') AS BIGINT)
+              THEN CAST(error('min-label contraction not converged in {N_ROUNDS} rounds — raise n_rounds') AS BIGINT)
               ELSE comp END AS component
-  FROM lab{n_rounds})"""
+  FROM lab{N_ROUNDS})"""
     )
     return ",\n".join(parts)
 
@@ -1404,10 +1402,7 @@ def dedup_semantic_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     one left join back to the vector table. The oracle replays the same
     closure as a recursive CTE."""
     pairs = SIM.cosine_near_pairs(
-        table(spark, sf_dir, "embeddings"),
-        threshold=0.25,
-        num_bands=_COS_BANDS,
-        planes_per_band=_COS_PLANES,
+        table(spark, sf_dir, "embeddings"), planes_per_band=_COS_PLANES, num_bands=_COS_BANDS
     )
     return _semantic_components(spark, sf_dir, pairs)
 

@@ -196,7 +196,7 @@ def geo_reproject_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ext = rast.withColumn("ext", affine_extent(F.col("gt"), F.col("cols"), F.col("rows")))
     cen = ext.withColumn("c", extent_centroid(F.col("ext")))
     rep = cen.withColumn(
-        "ll", reproject_utm_to_wgs84_approx(F.col("c.x"), F.col("c.y"), zone=18)
+        "ll", reproject_utm_to_wgs84_approx(F.col("c.x"), F.col("c.y"))
     )
     return rep.select(
         "img_id",
@@ -340,10 +340,7 @@ def skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.skew import salted_sum_count
 
     li = table(spark, sf_dir, "lineitem")
-    out = salted_sum_count(
-        li, ["l_returnflag"], F.col("l_quantity").cast("decimal(18,4)"), n_salts=8,
-        sum_alias="__dsum",
-    )
+    out = salted_sum_count(li, ["l_returnflag"], F.col("l_quantity").cast("decimal(18,4)"))
     return out.select(
         "l_returnflag", F.col("__dsum").cast("double").alias("sum_qty"), "n"
     )
@@ -367,7 +364,7 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("l_partkey"), "p_brand"
     )
-    joined = salted_broadcast_replicate_join(li, part, "l_partkey", n_salts=8)
+    joined = salted_broadcast_replicate_join(li, part, "l_partkey")
     return joined.groupBy("p_brand").agg(
         F.count("*").alias("n"), dsum(F.col("l_extendedprice")).alias("revenue")
     )
@@ -456,7 +453,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("string").alias("path"),
         F.col("text").cast("binary").alias("content"),
     )
-    thumbs = resize_images(docs, width=32, height=32)
+    thumbs = resize_images(docs)
     return thumbs.select(
         F.col("path").cast("long").alias("doc_id"),
         "width",

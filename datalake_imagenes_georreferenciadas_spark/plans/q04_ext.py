@@ -1193,9 +1193,7 @@ def pipeline_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumer — the same staging a production pipeline does between
     # phases (~30% faster at sf0.1). The inner join drops null doc ids.
     kept = q.join(exact, "doc_id").localCheckpoint(eager=True)
-    pairs = D.minhash_lsh_pairs(
-        kept, k=3, num_hashes=16, bands=4, jaccard_threshold=0.2
-    )
+    pairs = D.minhash_lsh_pairs(kept, jaccard_threshold=0.2)
     labels = D.components_from_edges(
         pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
     )

@@ -627,7 +627,7 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # entry) and an event time (the watermark can't admit a null ts) —
     # rows lacking either are bad-records, excluded on both sides.
     stream = stream.filter(F.col("event_id").isNotNull() & F.col("ts").isNotNull())
-    deduped = dedup_within_watermark(stream, watermark_minutes=60).select(
+    deduped = dedup_within_watermark(stream).select(
         "event_id", "event_type"
     )
     return drain(deduped, "append", src).groupBy("event_type").agg(F.count("*").alias("n"))

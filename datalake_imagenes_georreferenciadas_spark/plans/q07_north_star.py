@@ -1008,9 +1008,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id").isin(0, 1, 2)).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    ann = SIM.lsh_ann_topk(emb, queries, num_planes=6).select(
-        "q_id", "vec_id"
-    )
+    ann = SIM.lsh_ann_topk(emb, queries).select("q_id", "vec_id")
     exact = SIM.brute_force_topk(emb, queries, k=5).select("q_id", "vec_id")
     return SIM.recall_at_k(exact, ann, 5)
 
@@ -1038,12 +1036,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluates exactly; ``operators.dedup.simhash_pairs`` exposes
     ``band_bits`` as the corpus-size dial (SCALING.md measures the
     widened 60/15 setting at k=8 data — the band-widening scale path)."""
-    return D.simhash_pairs(
-        table(spark, sf_dir, "documents"),
-        num_bits=32,
-        band_bits=8,
-        max_hamming=3,
-    )
+    return D.simhash_pairs(table(spark, sf_dir, "documents"), num_bits=32, band_bits=8)
 
 
 @register(

@@ -229,13 +229,7 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     report (docs removed = Σ(size-1)·clusters) that decides whether
     near-dedup is worth its cost on a new corpus; two tiny aggregates
     over the component assignment."""
-    comp = D.dedup_components(
-        table(spark, sf_dir, "documents"),
-        k=3,
-        num_hashes=16,
-        bands=4,
-        jaccard_threshold=0.1,
-    )
+    comp = D.dedup_components(table(spark, sf_dir, "documents"))
     sizes = comp.groupBy("component").agg(F.count("*").alias("cluster_size"))
     return sizes.groupBy("cluster_size").agg(F.count("*").alias("n_clusters"))
 
@@ -948,9 +942,7 @@ def corpus_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_exact_dupes"
         )
     )
-    pairs = D.minhash_lsh_pairs(
-        docs, k=3, num_hashes=16, bands=4, jaccard_threshold=0.1
-    )
+    pairs = D.minhash_lsh_pairs(docs, jaccard_threshold=0.1)
     np_ = pairs.agg(F.count("*").alias("n_near_pairs"))
     return (
         exact.crossJoin(np_)
@@ -1057,12 +1049,7 @@ def dedup_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     index while the probe side is just the delta — hash-the-delta /
     probe-the-index, the shape an incremental 100 TB ingest needs."""
     return D.minhash_lsh_pairs(
-        table(spark, sf_dir, "documents"),
-        k=3,
-        num_hashes=16,
-        bands=4,
-        jaccard_threshold=0.1,
-        new_from=_INCR_SPLIT,
+        table(spark, sf_dir, "documents"), jaccard_threshold=0.1, new_from=_INCR_SPLIT
     )
 
 

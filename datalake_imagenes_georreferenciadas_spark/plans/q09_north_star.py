@@ -134,7 +134,7 @@ def hybrid_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus."""
     docs = table(spark, sf_dir, "documents")
     cands = hybrid_rrf_topk(spark, sf_dir)
-    reranked = SIM.rerank_crossencoder(cands, docs, query_tag="ce")
+    reranked = SIM.rerank_crossencoder(cands, docs)
     return (
         reranked.orderBy(F.col("ce_score").desc(), "doc_id")
         .limit(5)
@@ -533,27 +533,29 @@ def text_bigram_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def bucket_stitched_gaps(
-    ids: DataFrame, key: str = "k", bucket_bits: int = 13
-) -> DataFrame:
-    """Distributed gaps-and-islands over an id column WITHOUT a global
-    sort. A naive ``lead() OVER (ORDER BY k)`` needs a SinglePartition
+#: ids per bucket of ``bucket_stitched_gaps``: 2^13
+BUCKET_BITS = 13
+
+
+def bucket_stitched_gaps(ids: DataFrame) -> DataFrame:
+    """Distributed gaps-and-islands over ``ids(o_orderkey)`` WITHOUT a
+    global sort. A naive ``lead() OVER (ORDER BY k)`` needs a SinglePartition
     sort of the whole fact table — a 100 TB scale-killer. Instead:
-    partition ids into 2^bucket_bits-wide buckets, run the same lead()
+    partition ids into 2^BUCKET_BITS-wide buckets, run the same lead()
     per bucket (hash-partitioned window), and resolve each bucket's
     LAST row against a bucket-level summary — one row per non-empty
-    bucket, 2^bucket_bits× smaller than the fact — whose own lead()
+    bucket, 2^BUCKET_BITS× smaller than the fact — whose own lead()
     window provides the NEXT non-empty bucket's min id (empty buckets
     in between fall out naturally: they have no summary row, so the
     lead skips them). The summary join stays unhinted (corpus-derived,
-    ~N/2^bucket_bits rows; AQE broadcasts it while it fits). Output is
+    ~N/2^BUCKET_BITS rows; AQE broadcasts it while it fits). Output is
     identical to the global window: every consecutive-id pair spans
     either one bucket or a bucket boundary, and the boundary case is
     exactly the stitched coalesce. Returns (gap_start, gap_end,
     gap_len), unordered."""
     o = ids.select(
-        F.col(key).alias("k"),
-        F.shiftright(F.col(key), bucket_bits).alias("b"),
+        F.col("o_orderkey").alias("k"),
+        F.shiftright(F.col("o_orderkey"), BUCKET_BITS).alias("b"),
     )
     wb = Window.partitionBy("b").orderBy("k")
     per_bucket = o.withColumn("nxt_in_bucket", F.lead("k").over(wb))
@@ -610,7 +612,7 @@ def w11_id_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey")
     )
     return (
-        bucket_stitched_gaps(o, key="o_orderkey", bucket_bits=13)
+        bucket_stitched_gaps(o)
         .orderBy("gap_start")
         .limit(100)
     )

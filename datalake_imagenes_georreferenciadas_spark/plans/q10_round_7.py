@@ -1036,7 +1036,7 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     # three consumers (band explode + both verify sides) — checkpoint
     # the signature index once, as a production index store would
-    s = D.with_minhash(docs, 3, 16, 4, keep_shingles=True).localCheckpoint()
+    s = D.with_minhash(docs, keep_shingles=True).localCheckpoint()
     cand = D.band_pairs(s, "doc_id", F.col("__bands"))
     side = s.select(
         "doc_id",
@@ -1408,8 +1408,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the (tiny) edge set and one broadcast edge total; the single
     division is floored micro fixed point from exact integers."""
     docs = table(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_pairs(docs, k=3, num_hashes=16, bands=4,
-                                jaccard_threshold=0.1).select("a_id", "b_id")
+    pairs = D.minhash_lsh_pairs(docs, jaccard_threshold=0.1).select("a_id", "b_id")
     src = docs.select("doc_id", "source")
     lab = (
         pairs.join(

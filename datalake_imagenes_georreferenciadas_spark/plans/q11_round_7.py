@@ -637,9 +637,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     this predicts it from the edge list alone). Two grouped counts over
     the band-join pair output; log2 runs on small exact integers only."""
     docs = table(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_pairs(
-        docs, k=3, num_hashes=16, bands=4, jaccard_threshold=0.1
-    ).select("a_id", "b_id").localCheckpoint()
+    pairs = D.minhash_lsh_pairs(docs, jaccard_threshold=0.1).select("a_id", "b_id").localCheckpoint()
     deg = (
         pairs.select(F.col("a_id").alias("id"))
         .unionAll(pairs.select(F.col("b_id").alias("id")))

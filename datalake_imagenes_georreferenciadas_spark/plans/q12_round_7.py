@@ -733,9 +733,7 @@ def graph_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").filter(
         F.col("doc_id").isNotNull()
     )
-    pairs = D.minhash_lsh_pairs(
-        docs, k=3, num_hashes=16, bands=4, jaccard_threshold=0.1
-    ).select("a_id", "b_id").localCheckpoint()
+    pairs = D.minhash_lsh_pairs(docs, jaccard_threshold=0.1).select("a_id", "b_id").localCheckpoint()
     split = 400
     old_e = pairs.filter(
         (F.col("a_id") < split) & (F.col("b_id") < split)

@@ -161,12 +161,7 @@ def dedup_simhash_pairs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     superset-at-60-bits answer that is its own ground truth, unlike
     approximate LSH. 60 (not Manku's 64) keeps every bit weight in a
     positive BIGINT lane on both engines."""
-    return D.simhash_pairs(
-        table(spark, sf_dir, "documents"),
-        num_bits=60,
-        band_bits=15,
-        max_hamming=3,
-    )
+    return D.simhash_pairs(table(spark, sf_dir, "documents"), num_bits=60, band_bits=15)
 
 
 @register(
@@ -183,12 +178,7 @@ def dedup_cosine_pairs_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade), so the oracle replicates the exact 4x8 banding with the
     same deterministic md5 hyperplanes and the match is bit-defined,
     like the registered 4x5 pair."""
-    return SIM.cosine_near_pairs(
-        table(spark, sf_dir, "embeddings"),
-        threshold=0.25,
-        num_bands=4,
-        planes_per_band=8,
-    )
+    return SIM.cosine_near_pairs(table(spark, sf_dir, "embeddings"), planes_per_band=8)
 
 
 @register(
@@ -202,10 +192,5 @@ def dedup_semantic_components_scaled(spark: SparkSession, sf_dir: str) -> DataFr
     dial as a permanent oracle-checked registry citizen. Same
     null-identity seed exclusion and min-label closure as the 4x5
     registration; only the banding density changes."""
-    pairs = SIM.cosine_near_pairs(
-        table(spark, sf_dir, "embeddings"),
-        threshold=0.25,
-        num_bands=4,
-        planes_per_band=8,
-    )
+    pairs = SIM.cosine_near_pairs(table(spark, sf_dir, "embeddings"), planes_per_band=8)
     return _semantic_components(spark, sf_dir, pairs)

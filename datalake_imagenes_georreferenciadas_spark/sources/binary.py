@@ -246,15 +246,22 @@ def content_key(df: DataFrame) -> DataFrame:
 # extract_image_meta). A NULL payload gives NULL values, as md5(NULL) does.
 
 
-def resize_images(binary_df: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
+#: the thumbnail edge of ``resize_images``, in pixels
+THUMB_SIZE = 32
+
+
+def resize_images(binary_df: DataFrame) -> DataFrame:
     """Image resize: ``(path, content)`` in, ``(path, width, height,
-    thumb)`` out. The thumbnail is the digest-slice stub: ``md5(content)``
-    repeated and cut to ``width*height`` bytes, cut in hex space (two
-    hex digits per byte)."""
-    n = width * height
+    thumb)`` out at ``THUMB_SIZE``×``THUMB_SIZE``. The thumbnail is the
+    digest-slice stub: ``md5(content)`` repeated and cut to one byte per
+    pixel, cut in hex space (two hex digits per byte)."""
+    n = THUMB_SIZE * THUMB_SIZE
     thumb = F.unhex(F.substring(F.repeat(F.md5("content"), n // 16 + 1), 1, 2 * n))
     return binary_df.select(
-        "path", F.lit(width).alias("width"), F.lit(height).alias("height"), thumb.alias("thumb")
+        "path",
+        F.lit(THUMB_SIZE).alias("width"),
+        F.lit(THUMB_SIZE).alias("height"),
+        thumb.alias("thumb"),
     )
 
 

@@ -12,9 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def dedup_within_watermark(events: DataFrame, watermark_minutes: int = 30) -> DataFrame:
+def dedup_within_watermark(events: DataFrame) -> DataFrame:
     """Late/duplicate event guard: dropDuplicatesWithinWatermark on event_id
-    (the reference's unguarded double-insert risk, SURVEY §2.9)."""
-    return events.withWatermark("ts", f"{watermark_minutes} minutes").dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
+    within a 60-minute watermark (the reference's unguarded double-insert
+    risk, SURVEY §2.9)."""
+    return events.withWatermark("ts", "60 minutes").dropDuplicatesWithinWatermark(["event_id"])

@@ -93,31 +93,35 @@ def test_mode_is_argmax(spark):
         assert n == best[seg]
 
 
+def _spread(i: int) -> int:
+    """Offset ``i`` of a 4-wide bucket as an id of the operator's
+    2^13-wide buckets: bucket ``i >> 2`` keeps its number, and position
+    ``i & 3`` its order within it."""
+    return ((i >> 2) << 13) + (i & 3)
+
+
 def test_bucket_stitched_gaps_matches_global_window(spark):
     """bucket_stitched_gaps must equal the naive global lead() window on
     an id set engineered to hit every stitch case: in-bucket gaps, a gap
     that spans a bucket boundary, and a gap that spans ENTIRELY EMPTY
-    buckets (with 4-wide buckets, ids jump from bucket 2 to bucket 30)."""
+    buckets. Ids are offsets of 4-wide buckets spread to the operator's
+    2^13-wide ones (``_spread``): ids jump from bucket 2 to bucket 30."""
     from datalake_imagenes_georreferenciadas_spark.plans.q09_north_star import (
         bucket_stitched_gaps,
     )
 
-    ids = [1, 2, 5, 6, 7, 8, 11, 120, 121, 200]
-    df = spark.createDataFrame([(i,) for i in ids], "k long")
-    got = sorted(
-        tuple(r)
-        for r in bucket_stitched_gaps(df, key="k", bucket_bits=2).collect()
-    )
+    ids = [_spread(i) for i in (1, 2, 5, 6, 7, 8, 11, 120, 121, 200)]
+    df = spark.createDataFrame([(i,) for i in ids], "o_orderkey long")
+    got = sorted(tuple(r) for r in bucket_stitched_gaps(df).collect())
     want = sorted(
         (a + 1, b - 1, b - a - 1)
         for a, b in zip(ids, ids[1:])
         if b - a > 1
     )
     assert got == want
-    # sanity on the engineered cases: an in-bucket gap (2→5 within the
-    # 4-wide buckets only if split — 2 is bucket 0, 5 bucket 1, so it's a
-    # boundary gap), and the empty-bucket jump 11→120 (buckets 2→30)
-    assert (12, 119, 108) in got
+    # sanity on the engineered cases: a boundary gap (2 is bucket 0, 5
+    # bucket 1), and the empty-bucket jump 11→120 (buckets 2→30)
+    assert (_spread(11) + 1, _spread(120) - 1, _spread(120) - _spread(11) - 1) in got
 
 
 def test_bucket_stitched_gaps_dense_ids_yield_none(spark):
@@ -125,5 +129,7 @@ def test_bucket_stitched_gaps_dense_ids_yield_none(spark):
         bucket_stitched_gaps,
     )
 
-    df = spark.createDataFrame([(i,) for i in range(1, 50)], "k long")
-    assert bucket_stitched_gaps(df, key="k", bucket_bits=2).count() == 0
+    # dense across two bucket boundaries
+    ids = range((1 << 13) - 2, (2 << 13) + 3)
+    df = spark.createDataFrame([(i,) for i in ids], "o_orderkey long")
+    assert bucket_stitched_gaps(df).count() == 0

@@ -109,10 +109,11 @@ def test_auto_operators_equal_explicit_at_derived_setting(spark):
 # the duplication-aware BUDGET dial (dedup_simhash_pairs_auto2) — the
 # law is min{w: C(w) <= tau*n} over MEASURED collision mass, so the
 # tests pin (1) the integer selection law itself, (2) the probe
-# family's prefix consistency (one pass serves every width), and
+# family's per-bit votes (one pass serves every width), and
 # (3) the budget invariant + duplication response on real data.
 
 from datalake_imagenes_georreferenciadas_spark.operators.dedup import (
+    _AUTO2_BANDS,
     _AUTO2_LO,
     _AUTO2_TAU,
     _AUTO2_W_PROBE,
@@ -176,23 +177,32 @@ def test_budget_dial_duckdb_twin_integer_agreement():
 
 @pytest.mark.usefixtures("spark")
 def test_banded_probe_prefix_consistency(spark):
-    """Key bit j depends only on hash bit j, never on the width — so
-    the width-12 table must equal the width-24 table masked to 12 bits,
+    """Key bit j of band b is the sign of the token votes on bit j of
+    ``hash64(token, seed=b)`` and depends on nothing else, the width
+    included — so the key at width w is the probe key masked to w bits,
     which is what lets ONE probe pass serve the dial measurement, the
-    band join, and the hamming verify."""
+    band join, and the hamming verify. Checked against a pure-Python
+    twin at the probe width."""
+    import hashlib
+
     docs = spark.read.parquet(f"{SF0001}/documents.parquet").limit(200)
-    wide = {
-        r["doc_id"]: r["ks"]
-        for r in simhash_banded_table(docs, band_bits=24).collect()
-    }
-    narrow = {
-        r["doc_id"]: r["ks"]
-        for r in simhash_banded_table(docs, band_bits=12).collect()
-    }
-    assert set(wide) == set(narrow) and len(wide) == 200
-    mask = (1 << 12) - 1
-    for d, ks in narrow.items():
-        assert ks == [k & mask for k in wide[d]]
+    rows = docs.select("doc_id", "text").collect()
+    got = {r["doc_id"]: r["ks"] for r in simhash_banded_table(docs).collect()}
+
+    def key(text, b):
+        hs = [
+            int(hashlib.md5(f"{b}:{t}".encode()).hexdigest()[:15], 16)
+            for t in (text or "").lower().split()
+        ]
+        return sum(
+            1 << j
+            for j in range(_AUTO2_W_PROBE)
+            if sum(1 if (h >> j) & 1 else -1 for h in hs) > 0
+        )
+
+    assert len(got) == 200
+    for r in rows:
+        assert got[r["doc_id"]] == [key(r["text"], b) for b in range(_AUTO2_BANDS)]
 
 
 @pytest.mark.usefixtures("spark")

@@ -81,8 +81,8 @@ def test_start_run_and_last_id_run_no_spark_job(spark, tmp_path):
 def test_insert_allocates_ids_and_lineage(spark, tmp_path):
     store = CatalogStore(spark, str(tmp_path))
     run = store.start_run(PROCESO_INGEST)
-    inserted = store.insert_catalog(_rows(spark), run)
-    ids = sorted(r["id"] for r in inserted.select("id").collect())
+    assert store.insert_catalog(_rows(spark), run) == 0  # the first version
+    ids = sorted(r["id"] for r in store.catalog().select("id").collect())
     assert ids == [1, 2, 3, 4]  # dense, deterministic
     lin = store.lineage().collect()
     assert {r["id_imagen_fuente"] for r in lin} == {1, 2, 3, 4}
@@ -106,12 +106,13 @@ def test_empty_insert_commits_no_version(spark, tmp_path):
     history out of ``expire_snapshots``."""
     store = CatalogStore(spark, str(tmp_path))
     empty = _rows(spark).limit(0)
-    assert store.insert_catalog(empty, store.start_run(PROCESO_INGEST)).count() == 0
+    store.insert_catalog(empty, store.start_run(PROCESO_INGEST))
+    assert store.catalog().count() == 0
     assert store.catalog_versions() == [] and store.last_id() == 0
     store.insert_catalog(_rows(spark), store.start_run(PROCESO_INGEST))
     store.update_processed_img(10, [1])
     for _ in range(2):
-        store.insert_catalog(empty, store.start_run(PROCESO_INGEST))
+        assert store.insert_catalog(empty, store.start_run(PROCESO_INGEST)) == 1
     assert store.catalog_versions() == [0, 1]
     assert store.expire_snapshots(keep_last=2) == []
     assert store.last_id() == 4 and store.lineage().count() == 4

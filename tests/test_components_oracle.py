@@ -76,18 +76,18 @@ def test_empty_edge_list():
 
 
 def test_nonconvergence_raises_not_silently_wrong():
-    """ADVICE r08: the round bound must be ENFORCED. With n_rounds=1 a
-    long descending path cannot converge; the companion ``nonconv``
-    check must raise DuckDB's error() instead of emitting unconverged
-    labels that would surface only as an engine-vs-oracle mismatch."""
-    edges = [(i, i + 1) for i in range(1, 60)]
+    """ADVICE r08: the round bound must be ENFORCED. A 10,000-node
+    descending path cannot converge in the CTE's 12 rounds; the
+    companion ``nonconv`` check must raise DuckDB's error() instead of
+    emitting unconverged labels that would surface only as an
+    engine-vs-oracle mismatch."""
     con = duckdb.connect()
     con.sql("CREATE TABLE e (src BIGINT, dst BIGINT)")
-    con.executemany("INSERT INTO e VALUES (?, ?)", edges)
+    con.sql("INSERT INTO e SELECT i, i + 1 FROM range(1, 10000) t(i)")
     sql = (
         "WITH edges AS MATERIALIZED ("
         "  SELECT src, dst FROM e UNION ALL SELECT dst, src FROM e),\n"
-        + _min_label_components_cte(n_rounds=1)
+        + _min_label_components_cte()
         + "\nSELECT id, component FROM comp"
     )
     with pytest.raises(duckdb.Error, match="not converged"):

@@ -8,6 +8,7 @@ import re
 from pyspark.sql import functions as F
 
 from datalake_imagenes_georreferenciadas_spark.operators.dedup import (
+    NUM_HASHES,
     band_pairs,
     exact_dedup,
     minhash_lsh_pairs,
@@ -59,15 +60,15 @@ def _py_minhash(sh, num_hashes):
 def test_minhash_signature_matches_naive(spark):
     text = "the quick brown fox jumps over the lazy dog"
     df = _docs(spark, [(1, text)])
-    sig = minhash_signatures(df, num_hashes=4).collect()[0]["__sig"]
-    assert sig == _py_minhash(_py_shingles(text), 4)
+    sig = minhash_signatures(df, keep_shingles=True).collect()[0]["__sig"]
+    assert sig == _py_minhash(_py_shingles(text), NUM_HASHES)
 
 
 def test_minhash_short_doc_null_sig(spark):
     df = _docs(spark, [(1, "too short")])  # < 3 tokens → no shingles
-    row = minhash_signatures(df).collect()[0]
+    row = minhash_signatures(df, keep_shingles=True).collect()[0]
     assert row["__sig"] is None
-    bands = with_minhash(df).collect()[0]["__bands"]
+    bands = with_minhash(df, keep_shingles=True).collect()[0]["__bands"]
     assert bands is None
 
 
@@ -95,7 +96,7 @@ def test_simhash_identical_equal_distinct_differ(spark):
             (3, "epsilon zeta eta theta iota kappa"),
         ],
     )
-    fps = {r["doc_id"]: r["fp"] for r in simhash_table(df).collect()}
+    fps = {r["doc_id"]: r["fp"] for r in simhash_table(df, 32).collect()}
     assert fps[1] == fps[2]
     assert fps[1] != fps[3]
     assert all(0 <= v < 2**32 for v in fps.values())
@@ -103,7 +104,7 @@ def test_simhash_identical_equal_distinct_differ(spark):
 
 def test_simhash_empty_text_is_zero(spark):
     df = _docs(spark, [(1, "")])
-    assert simhash_table(df).collect()[0]["fp"] == 0
+    assert simhash_table(df, 32).collect()[0]["fp"] == 0
 
 
 def test_ngram_jaccard_hot_shingle_cap(spark):
@@ -118,11 +119,10 @@ def test_ngram_jaccard_hot_shingle_cap(spark):
     rows += [(100, f"{stop} same same same"), (101, f"{stop} same same same")]
     df = _docs(spark, rows)
 
-    uncapped = ngram_jaccard_pairs(df, jaccard_threshold=0.01).collect()
-    capped = ngram_jaccard_pairs(
-        df, jaccard_threshold=0.01, max_doc_freq=3
-    ).collect()
-    # uncapped: every pair shares the stop shingle → C(10,2)=45 candidates
+    uncapped = ngram_jaccard_pairs(df, max_doc_freq=None).collect()
+    capped = ngram_jaccard_pairs(df, max_doc_freq=3).collect()
+    # uncapped: every pair shares the stop shingle (jaccard 1/7 or more)
+    # → C(10,2)=45 pairs
     assert len(uncapped) == 45
     # capped: only the true near-dup pair survives, at full similarity
     assert len(capped) == 1
@@ -135,10 +135,19 @@ def test_ngram_jaccard_cap_keeps_moderate_shingles(spark):
     from datalake_imagenes_georreferenciadas_spark.operators.dedup import ngram_jaccard_pairs
 
     rows = [(1, "a b c x y z"), (2, "a b c p q r")]  # share shingle 'a b c', df=2
-    out = ngram_jaccard_pairs(
-        _docs(spark, rows), jaccard_threshold=0.0, max_doc_freq=2
-    ).collect()
+    out = ngram_jaccard_pairs(_docs(spark, rows), max_doc_freq=2).collect()
     assert len(out) == 1 and out[0]["jaccard"] == round(1 / 7, 6)
+
+
+#: a chain: 1~2 and 2~3 band-collide under the md5 hash family at
+#: jaccard 0.5, while 1 and 3 share no band (checked against the
+#: pure-Python replica below) — so 1 and 3 connect ONLY through 2
+_CHAIN = [
+    (1, "nu tau pi delta epsilon omicron rho sigma alpha psi xi ups mu gamma"),
+    (2, "nu tau pi delta epsilon omicron rho sigma alpha psi kappa lam omega beta"),
+    (3, "iota theta eta phi epsilon omicron rho sigma alpha psi kappa lam omega beta"),
+    (9, "totally unrelated words only here now"),
+]
 
 
 def test_dedup_components_transitive_closure(spark):
@@ -147,22 +156,9 @@ def test_dedup_components_transitive_closure(spark):
     output can't express."""
     from datalake_imagenes_georreferenciadas_spark.operators.dedup import dedup_components
 
-    # chain fixture chosen so BOTH adjacent pairs band-collide under the
-    # deterministic md5 hash family (verified against a pure-python
-    # replica) with jaccard 0.6, while the 1-3 overlap (0.333) falls
-    # below the 0.45 verify threshold — so 1 and 3 connect ONLY through 2
-    rows = [
-        (1, "beta gamma psi mu zeta kappa iota eta omega tau lam chi rho xi"),
-        (2, "beta gamma psi mu zeta kappa iota eta omega tau lam pi ups omicron"),
-        (3, "nu theta phi mu zeta kappa iota eta omega tau lam pi ups omicron"),
-        (9, "totally unrelated words only here now"),
-    ]
-    out = {
-        r["doc_id"]: r["component"]
-        for r in dedup_components(
-            _docs(spark, rows), k=3, num_hashes=16, bands=8, jaccard_threshold=0.45
-        ).collect()
-    }
+    rows = _CHAIN
+    assert set(_py_lsh_pairs(rows, 0.1)) == {(1, 2), (2, 3)}
+    out = {r["doc_id"]: r["component"] for r in dedup_components(_docs(spark, rows)).collect()}
     assert out[1] == out[2] == out[3] == 1  # one cluster, min-id label
     assert out[9] == 9  # isolated doc is its own component
 
@@ -173,22 +169,12 @@ def test_dedup_components_paths_agree(spark):
     produce identical components."""
     from datalake_imagenes_georreferenciadas_spark.operators.dedup import dedup_components
 
-    rows = [
-        (1, "beta gamma psi mu zeta kappa iota eta omega tau lam chi rho xi"),
-        (2, "beta gamma psi mu zeta kappa iota eta omega tau lam pi ups omicron"),
-        (3, "nu theta phi mu zeta kappa iota eta omega tau lam pi ups omicron"),
-        (9, "totally unrelated words only here now"),
-    ]
-    kw = dict(k=3, num_hashes=16, bands=8, jaccard_threshold=0.45)
     small = {
-        r["doc_id"]: r["component"]
-        for r in dedup_components(_docs(spark, rows), **kw).collect()
+        r["doc_id"]: r["component"] for r in dedup_components(_docs(spark, _CHAIN)).collect()
     }
     dist = {
         r["doc_id"]: r["component"]
-        for r in dedup_components(
-            _docs(spark, rows), small_graph_threshold=0, **kw
-        ).collect()
+        for r in dedup_components(_docs(spark, _CHAIN), small_graph_threshold=0).collect()
     }
     assert small == dist == {1: 1, 2: 1, 3: 1, 9: 9}
 
@@ -333,26 +319,26 @@ def test_containment_catches_subset_that_jaccard_misses(spark):
     )
     cont = {
         (r["a_id"], r["b_id"]): (r["cont_a"], r["cont_b"])
-        for r in containment_pairs(df, threshold=0.8).collect()
+        for r in containment_pairs(df, threshold=0.8, max_doc_freq=None).collect()
     }
     assert (1, 2) in cont and len(cont) == 1
     ca, cb = cont[(1, 2)]
     # the excerpt (b, smaller) is fully contained; the source is not
     assert cb == 1.0 and ca < 0.2
-    # symmetric Jaccard at the same bar finds nothing
-    assert ngram_jaccard_pairs(df, jaccard_threshold=0.8).count() == 0
+    # symmetric Jaccard (18/198 < 0.1) finds nothing
+    assert ngram_jaccard_pairs(df, max_doc_freq=None).count() == 0
 
 
 def test_simhash_pairs_parameter_validation(spark):
     """simhash_pairs enforces the pigeonhole precondition (bands >
-    max_hamming), divisibility, and the 63-bit BIGINT-lane cap."""
+    MAX_HAMMING), divisibility, and the 63-bit BIGINT-lane cap."""
     import pytest
 
     from datalake_imagenes_georreferenciadas_spark.operators import dedup as D
 
     df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     with pytest.raises(ValueError):
-        D.simhash_pairs(df, num_bits=32, band_bits=8, max_hamming=4)  # 4 bands !> 4
+        D.simhash_pairs(df, num_bits=24, band_bits=8)  # 3 bands !> 3
     with pytest.raises(ValueError):
         D.simhash_pairs(df, num_bits=32, band_bits=7)  # not divisible
     with pytest.raises(ValueError):

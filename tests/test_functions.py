@@ -128,10 +128,13 @@ def test_argmin_deterministic_ties(spark):
 
 
 def _emb(spark, n=20, dim=8):
+    """``n`` random ``dim``-dimensional vectors zero-padded to the 64
+    dims of every vector table: a plane's components depend only on
+    (plane, i), so padding changes no signature and no cosine."""
     import random
 
     rng = random.Random(7)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(n)]
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(dim)] + [0.0] * (64 - dim)) for i in range(n)]
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
@@ -151,7 +154,7 @@ def test_lsh_ann_recall_contains_self(spark):
     q = data.filter(F.col("vec_id").isin(0, 5)).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    top = lsh_ann_topk(data, q, num_planes=2, dim=8).collect()
+    top = lsh_ann_topk(data, q).collect()
     by_q = {}
     for r in top:
         by_q.setdefault(r["q_id"], []).append(r["vec_id"])
@@ -161,8 +164,8 @@ def test_lsh_ann_recall_contains_self(spark):
 
 def test_hyperplane_signature_deterministic(spark):
     data = _emb(spark, n=5, dim=8)
-    a = [r["b"] for r in data.select(hyperplane_signature("embedding", 4, 8).alias("b")).collect()]
-    b = [r["b"] for r in data.select(hyperplane_signature("embedding", 4, 8).alias("b")).collect()]
+    a = [r["b"] for r in data.select(hyperplane_signature("embedding", 4).alias("b")).collect()]
+    b = [r["b"] for r in data.select(hyperplane_signature("embedding", 4).alias("b")).collect()]
     assert a == b
     assert all(0 <= v < 16 for v in a)
 
@@ -170,4 +173,4 @@ def test_hyperplane_signature_deterministic(spark):
 def test_hyperplane_signature_rejects_non_identifier_names():
     for bad in ("1embedding", "emb-1", "emb`)", "a..b", ""):
         with pytest.raises(ValueError):
-            hyperplane_signature(bad, 4, 8)
+            hyperplane_signature(bad, 4)

@@ -42,7 +42,7 @@ def test_asof_join_equal_ts_matches(spark):
 
 def test_range_join_window(spark):
     errors = spark.createDataFrame(
-        [(1, 5, _t(0))], "e_id long, user_id long, e_ts timestamp"
+        [(1, 5, _t(0)), (2, 7, _t(0))], "e_id long, user_id long, e_ts timestamp"
     )
     purchases = spark.createDataFrame(
         [(10, 5, _t(10)), (11, 5, _t(29)), (12, 5, _t(31)), (13, 6, _t(5))],
@@ -56,7 +56,8 @@ def test_range_join_window(spark):
         F.expr("INTERVAL 0 MINUTES"),
         F.expr("INTERVAL 30 MINUTES"),
     ).collect()
-    assert sorted(r["p_id"] for r in out) == [10, 11]  # 31min out; user 6 out
+    # 31min out; user 6 out; error 2 has no purchase and keeps a NULL one
+    assert sorted((r["e_id"], r["p_id"] or 0) for r in out) == [(1, 10), (1, 11), (2, 0)]
 
 
 def test_ngram_jaccard_identical_and_disjoint(spark):
@@ -64,7 +65,7 @@ def test_ngram_jaccard_identical_and_disjoint(spark):
     df = spark.createDataFrame(
         [(1, t), (2, t), (3, "aaa bbb ccc ddd eee")], ["doc_id", "text"]
     )
-    pairs = ngram_jaccard_pairs(df, jaccard_threshold=0.5).collect()
+    pairs = ngram_jaccard_pairs(df, max_doc_freq=None).collect()
     assert len(pairs) == 1
     assert (pairs[0]["a_id"], pairs[0]["b_id"], pairs[0]["jaccard"]) == (1, 2, 1.0)
 
@@ -72,21 +73,26 @@ def test_ngram_jaccard_identical_and_disjoint(spark):
 def test_ngram_jaccard_partial_overlap(spark):
     # docs share shingle "b c d" only: A={a b c, b c d}, B={b c d, c d e}
     df = spark.createDataFrame([(1, "a b c d"), (2, "b c d e")], ["doc_id", "text"])
-    p = ngram_jaccard_pairs(df, jaccard_threshold=0.0).collect()[0]
+    p = ngram_jaccard_pairs(df, max_doc_freq=None).collect()[0]
     assert p["jaccard"] == round(1 / 3, 6)
+
+
+def _pad(v: list[float]) -> list[float]:
+    """``v`` zero-padded to the 64 dims of every vector table: a plane's
+    components depend only on (plane, i), so padding changes no
+    signature and no cosine."""
+    return v + [0.0] * (64 - len(v))
 
 
 def test_cosine_near_pairs_detects_duplicates(spark):
     import random
 
     rng = random.Random(3)
-    v = [rng.uniform(-1, 1) for _ in range(8)]
-    w = [rng.uniform(-1, 1) for _ in range(8)]
+    v = _pad([rng.uniform(-1, 1) for _ in range(8)])
+    w = [-x for x in v]  # cosine -1 with v
     rows = [(1, v), (2, v), (3, w)]  # 1 and 2 identical
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    pairs = cosine_near_pairs(
-        df, threshold=0.99, num_bands=2, planes_per_band=2, dim=8
-    ).collect()
+    pairs = cosine_near_pairs(df, planes_per_band=2, num_bands=2).collect()
     assert len(pairs) == 1
     assert (pairs[0]["a_id"], pairs[0]["b_id"], pairs[0]["cos"]) == (1, 2, 1.0)
 
@@ -94,13 +100,11 @@ def test_cosine_near_pairs_detects_duplicates(spark):
 def test_cosine_near_pairs_multi_band_collisions_dedup(spark):
     """An identical pair collides in EVERY band (same signature per band)
     — the output must still carry it exactly once."""
-    v = [float(i) for i in range(8)]
+    v = _pad([float(i) for i in range(8)])
     df = spark.createDataFrame(
         [(1, v), (2, v)], "vec_id long, embedding array<double>"
     )
-    pairs = cosine_near_pairs(
-        df, threshold=0.5, num_bands=4, planes_per_band=3, dim=8
-    ).collect()
+    pairs = cosine_near_pairs(df, planes_per_band=3).collect()
     assert len(pairs) == 1 and pairs[0]["cos"] == 1.0
 
 
@@ -116,14 +120,12 @@ def test_banded_lsh_bucket_occupancy_bounded(spark):
     from datalake_imagenes_georreferenciadas_spark.operators.similarity import hyperplane_signature
 
     rng = random.Random(11)
-    rows = [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(200)]
+    rows = [(i, _pad([rng.gauss(0, 1) for _ in range(16)])) for i in range(200)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     for band in range(4):
         occ = (
             df.select(
-                hyperplane_signature(
-                    "embedding", 5, 16, plane_offset=band * 5
-                ).alias("b")
+                hyperplane_signature("embedding", 5, plane_offset=band * 5).alias("b")
             )
             .groupBy("b")
             .count()

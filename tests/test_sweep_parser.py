@@ -17,6 +17,7 @@ formatted mode under AQE prints bare operator names).
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import sys
@@ -502,3 +503,27 @@ def test_split_top_level_clamps_negative_depth_on_stray_closer():
     assert parts == ["substr(s, '')", "')'", "a#1", "b#2"]
     # balanced input is unaffected by the clamp
     assert _split_top_level("f(a, b), c") == ["f(a, b)", " c"]
+
+
+def test_stream_python_time_needs_an_allowlist_entry(monkeypatch):
+    """A stream's audited plan is its sink read-back, so its Python
+    kernels show only as Python-worker time in the ledger. Against the
+    allowlist before ``streaming_stateful_totals`` was reviewed, the
+    committed sf0.1 ledger flags exactly that stream; batch queries and
+    allowlisted streams are never flagged by it."""
+    with open(os.path.join(REPO, "LEDGER_sf0.1.json")) as fh:
+        ledger = json.load(fh)
+
+    def flagged():
+        return {
+            name
+            for name, row in ledger.items()
+            if plan_audit.stream_python(name, row.get("exec.python_worker_s", 0))
+        }
+
+    assert flagged() == set()
+    before = {k: v for k, v in plan_audit.ALLOWED_PYTHON.items() if k != "streaming_stateful_totals"}
+    monkeypatch.setattr(plan_audit, "ALLOWED_PYTHON", before)
+    assert flagged() == {"streaming_stateful_totals"}
+    # the plan sweep leaves a stream's read-back plan to that check
+    assert plan_audit.sweep("streaming_stateful_totals", "MapInPandas") == []

@@ -13,7 +13,7 @@ from datalake_imagenes_georreferenciadas_spark.operators import tdigest as TD
 def test_merge_bounds_centroid_count():
     rng = np.random.default_rng(7)
     v = np.sort(rng.normal(size=50_000))
-    m, w = TD.merge_centroids(v, np.ones(v.size), delta=200)
+    m, w = TD.merge_centroids(v, np.ones(v.size))
     assert m.size <= 200
     assert w.sum() == pytest.approx(50_000)
     assert np.all(np.diff(m) >= 0)  # means stay sorted
@@ -22,7 +22,7 @@ def test_merge_bounds_centroid_count():
 def test_rank_error_within_published_bound():
     rng = np.random.default_rng(11)
     v = np.sort(rng.exponential(size=100_000))  # skewed on purpose
-    m, w = TD.merge_centroids(v, np.ones(v.size), delta=200)
+    m, w = TD.merge_centroids(v, np.ones(v.size))
     for q in (0.01, 0.25, 0.5, 0.75, 0.99):
         est = TD.digest_quantile(m, w, q)
         midrank = (np.sum(v < est) + np.sum(v <= est)) / (2 * v.size)
@@ -39,13 +39,13 @@ def test_merge_of_merges_matches_single_digest_error():
     ms, ws = [], []
     for p in parts:
         p = np.sort(p)
-        m, w = TD.merge_centroids(p, np.ones(p.size), delta=200)
+        m, w = TD.merge_centroids(p, np.ones(p.size))
         ms.append(m)
         ws.append(w)
     cm = np.concatenate(ms)
     cw = np.concatenate(ws)
     order = np.argsort(cm, kind="stable")
-    m2, w2 = TD.merge_centroids(cm[order], cw[order], delta=200)
+    m2, w2 = TD.merge_centroids(cm[order], cw[order])
     assert m2.size <= 200
     sv = np.sort(v)
     for q in (0.1, 0.5, 0.9):

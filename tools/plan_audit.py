@@ -509,8 +509,8 @@ AUDITS: dict[str, tuple[int, int, int, dict[str, int], list[str]]] = {
     "w5_range_frame": (3, 1, 0, {"events": 1}, ["Window", "hashpartitioning", "!SinglePartition", "!CartesianProduct"]),
     "w7_gap_fill": (3, 1, 0, {"events": 1}, ["Window", "hashpartitioning", "!SinglePartition", "!CartesianProduct"]),
     "ts_ewma": (3, 1, 0, {"events": 1}, ["Window", "hashpartitioning", "!SinglePartition", "!CartesianProduct"]),
-    # 3-tier spatial classify: broadcast polygon join + tier Union
-    "geo_classify": (3, 1, 0, {}, ["BroadcastNestedLoopJoin", "Union", "!CartesianProduct"]),
+    # 3-tier spatial classify: one broadcast left join of points x polygons
+    "geo_classify": (3, 1, 0, {}, ["BroadcastNestedLoopJoin LeftOuter", "!CartesianProduct"]),
     "geo_classify_bulk": (2, 0, 0, {}, ["BroadcastNestedLoopJoin", "!CartesianProduct"]),
     # four embarrassingly-parallel kernels; the single exchange is the
     # DELIBERATE spread() rebalance of a single-split scan
@@ -828,6 +828,9 @@ ALLOWED_PYTHON = {
     # sketches with no closed form: merge logic is the operator
     "a19_tdigest_quantile": "t-digest centroid merge (no closed form)",
     "streaming_tdigest": "t-digest merge inside foreachBatch",
+    # arbitrary per-key state: the GroupState update function is the
+    # operator (applyInPandasWithState has no built-in twin)
+    "streaming_stateful_totals": "applyInPandasWithState running totals held in GroupState",
     # custom merge kernel over cogrouped frames
     "g2_cogroup_merge": "cogrouped reconciliation kernel",
     # deliberate API-surface twins (each has a JVM-side counterpart
@@ -1041,13 +1044,16 @@ def counts(view: str) -> tuple[int, int, dict[str, int]]:
 
 def sweep(name: str, plan: str) -> list[str]:
     """Scale-shape problems of ``plan``: an unreviewed shape, or an
-    allowlist entry whose shape is gone."""
+    allowlist entry whose shape is gone. A stream's audited plan is its
+    sink read-back, so its Python check is ``stream_python``'s, on the
+    time its micro-batches spent in Python workers."""
     shapes = (
         ("fact-level SinglePartition exchange", ALLOWED, fact_level_singlepartition(plan)),
         ("CartesianProduct", ALLOWED_CARTESIAN, "CartesianProduct" in plan),
-        ("Python eval node", ALLOWED_PYTHON, [n for n in PY_NODES if n in plan]),
         ("wide aggregate buffer", ALLOWED_WIDE, wide_agg_results(plan)),
     )
+    if name not in STREAM_JOBS:
+        shapes += (("Python eval node", ALLOWED_PYTHON, [n for n in PY_NODES if n in plan]),)
     probs = []
     for what, allowed, hits in shapes:
         if hits and name not in allowed:
@@ -1059,6 +1065,15 @@ def sweep(name: str, plan: str) -> list[str]:
         viol = wide_agg_key_violations(plan, pat)
         probs += [f"wide aggregate keyed on {viol} (waiver: keys ~ /{pat}/)"] if viol else []
     return probs
+
+
+def stream_python(name: str, python_worker_s: float) -> list[str]:
+    """The Python check of a ``STREAM_JOBS`` query: time its jobs spent
+    in Python workers (the ledger's ``exec.python_worker_s``) needs an
+    ``ALLOWED_PYTHON`` entry, as a Python-eval node does in a plan."""
+    if name in STREAM_JOBS and python_worker_s > 0 and name not in ALLOWED_PYTHON:
+        return [f"unreviewed Python worker time {python_worker_s}s in its micro-batches"]
+    return []
 
 
 def audit(

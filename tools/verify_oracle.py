@@ -12,7 +12,9 @@ Usage: python tools/verify_oracle.py [--json OUT.json] [--allowlist AXIS]
                   query the audit checked also gets its layer ledger
                   (plans.*, exec.*, streaming.* columns; the verify
                   skill lists them), for which the run keeps a Spark
-                  event log
+                  event log; a streaming query whose micro-batches ran
+                  Python workers then fails the audit unless
+                  plan_audit.ALLOWED_PYTHON lists it
 --allowlist AXIS  after the run, diff the failing-name set against
                   tools/fuzz_allowlist.json[AXIS]; exit 0 iff they are
                   EQUAL (the fuzz-residue contract: a new divergence OR
@@ -99,6 +101,7 @@ class Audit(StreamingQueryListener):
         import plan_audit  # beside this script: importable when it runs as one
 
         self.check = plan_audit.audit
+        self.stream_python = plan_audit.stream_python
         self.sc = spark.sparkContext
         self.explain = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         self.parallelism = self.sc.defaultParallelism
@@ -341,6 +344,12 @@ def run_pass(sf_dir: str, qs: dict, audited: bool, log_dir: str | None = None) -
         for name, cols in executor_ledger(log_dir, audit.owner).items():
             row = {**audit.ledger[name], **cols}
             results[name].update((k, round(v, 4) if isinstance(v, float) else v) for k, v in row.items())
+            # a stream's Python kernels show in its worker time, not in
+            # the read-back plan the audit saw
+            probs = audit.stream_python(name, results[name]["exec.python_worker_s"])
+            if probs and results[name]["status"] == "pass":
+                print(f"FAIL {name}: audit: {'; '.join(probs)}")
+                results[name].update(status="fail", kind="audit")
     return results
 
 
